@@ -103,10 +103,13 @@ object BinanceSource {
   }
 
   /** S1 for a single spec: fetch on the driver, parallelize into a
-    * DataFrame with the declared kline schema.
+    * one-partition DataFrame with the declared kline schema. The
+    * empty-input guard (S6) runs here, on the fetched rows, before
+    * anything reaches Spark.
     */
   def fetchDay(spark: SparkSession, fetcher: Fetcher, spec: FetchSpec): DataFrame = {
     val rows = fetcher.fetch(spec).map(Row.fromTuple)
+    require(rows.nonEmpty, s"empty input: klines ${spec.asset} ${spec.day}")
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), Schemas.klineSchema)
   }
 

@@ -1,6 +1,6 @@
 package graft.quality
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Data-quality assertions — the reference's `quality_checks` task
@@ -46,19 +46,52 @@ object Checks {
     * assets: row_number per asset ≥ 31 (vol30 lags one row, SURVEY.md
     * §2.5 W4) with NULL ma30/vol30 is a violation.
     */
-  def indicatorGaps(metrics: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("asset").orderBy("date")
-    metrics
-      .withColumn("_rn", row_number().over(w))
-      .filter((col("_rn") >= 30 && col("ma30").isNull) ||
-              (col("_rn") >= 31 && col("vol30").isNull))
-      .drop("_rn")
-  }
+  def indicatorGaps(metrics: DataFrame): DataFrame =
+    withRowNumber(metrics).filter(isGap).drop("_rn")
+
+  private def withRowNumber(metrics: DataFrame): DataFrame =
+    metrics.withColumn("_rn", row_number().over(
+      org.apache.spark.sql.expressions.Window.partitionBy("asset").orderBy("date")))
+
+  private val isGap: Column =
+    (col("_rn") >= 30 && col("ma30").isNull) || (col("_rn") >= 31 && col("vol30").isNull)
 
   def requireIndicatorsWarm(metrics: DataFrame): Unit = {
     val bad = indicatorGaps(metrics)
     if (!bad.isEmpty) fail(s"indicator gaps past warm-up: ${bad.limit(5).collect().mkString(", ")}")
+  }
+
+  /** The daily quality gate (dag:398-435) as ONE job: the same checks,
+    * failures and messages, in the same order, as
+    * [[requireDailyCompleteness]] over `prices`, [[requireOhlcPresent]]
+    * over `metrics`, then — once `asset` has ≥ 30 rows —
+    * [[requireIndicatorsWarm]] over its rows. Both inputs are read as
+    * single partitions (one day of prices, one asset's daily rows), so
+    * the grouped count, the window and the summary aggregate plan
+    * without an exchange; their two result branches are collected
+    * together. Each `require*` alone costs 1-3 jobs.
+    */
+  def requireDay(prices: DataFrame, metrics: DataFrame, date: String, asset: String,
+                 minRows: Long = 20): Unit = {
+    val thin = underfilledDays(prices.coalesce(1), minRows).select(struct(col("*")).as("thin"))
+    val mine = metrics.filter(col("asset") === lit(asset)).coalesce(1)
+    val isDay = col("date") === lit(date)
+    val summary = withRowNumber(mine).agg(
+      count(lit(1)).as("rows"),
+      count(when(isDay, lit(1))).as("day_rows"),
+      count(when(isDay && Seq("open", "high", "low", "close").map(col(_).isNull).reduce(_ || _),
+        lit(1))).as("day_null_ohlc"),
+      slice(array_sort(collect_list(when(isGap, struct(mine.columns.map(col).toIndexedSeq: _*)))),
+        1, 5).as("gaps"))
+    val found = thin.unionByName(summary, allowMissingColumns = true).collect()
+    val (thinRows, Array(s)) = found.partition(r => !r.isNullAt(r.fieldIndex("thin")))
+    if (thinRows.nonEmpty)
+      fail(s"days with < $minRows rows: ${thinRows.take(5).map(_.getAs[Row]("thin")).mkString(", ")}")
+    if (s.getAs[Long]("day_rows") == 0) fail(s"daily_metrics missing ($date, $asset)")
+    if (s.getAs[Long]("day_null_ohlc") > 0) fail(s"NULL OHLC for ($date, $asset)")
+    val gaps = s.getSeq[Row](s.fieldIndex("gaps"))
+    if (s.getAs[Long]("rows") >= 30 && gaps.nonEmpty)
+      fail(s"indicator gaps past warm-up: ${gaps.mkString(", ")}")
   }
 
   /** Expectation-suite validation with quarantine — the dead-letter

@@ -548,28 +548,95 @@ object Warehouse {
   }
 
   /** Read-modify-write rewrite of a LIVE path (`df` still reads from
-    * `path`): write to a staging dir first, then swap via directory
-    * rename — the parquet analog of the reference's BEGIN/DELETE/
-    * INSERT transaction (dag_btc_daily.py:287-295). The overwrite-in-
-    * place alternative (cache + count as a barrier) is not durable:
-    * block eviction or executor loss after the old files are deleted
-    * forces recomputation from a half-rewritten source. Rename is
-    * atomic on HDFS/POSIX; on object stores swap the table POINTER
-    * (catalog/manifest) instead — same two-phase shape.
+    * `path`): write to a `path.staging-<tag>` sibling first, then swap
+    * it in by two renames (retire the live dir, promote the staged one)
+    * — the parquet analog of the reference's BEGIN/DELETE/INSERT
+    * transaction (dag_btc_daily.py:287-295). The overwrite-in-place
+    * alternative (cache + count as a barrier) is not durable: block
+    * eviction or executor loss after the old files are deleted forces
+    * recomputation from a half-rewritten source.
+    *
+    * `check` runs after the staged write and before the swap — the
+    * place for a guard read from metrics observed during that write
+    * ([[observeCount]]): if it throws, the live table is untouched.
+    * When the write or `check` throws, the staging dir is deleted and
+    * the original exception rethrown.
+    *
+    * Each rename is atomic on HDFS/POSIX, the swap as a whole is not:
+    * between retire and promote `path` does not exist, and a crash in
+    * that window leaves the table's only data in `path.retired-<tag>`,
+    * which [[vacuumTable]] renames back. (The append publish of
+    * [[appendAtomic]] is a single rename and has no such window.) On
+    * object stores swap the table POINTER (catalog/manifest) instead —
+    * same two-phase shape.
     */
-  def rewriteAtomic(df: DataFrame, path: String): Unit = {
+  def rewriteAtomic(df: DataFrame, path: String, check: () => Unit = () => ()): Unit = {
     val spark = df.sparkSession
     val dest = new org.apache.hadoop.fs.Path(path)
     val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tag = java.util.UUID.randomUUID().toString.take(8)
     val staging = new org.apache.hadoop.fs.Path(s"$path.staging-$tag")
     val retired = new org.apache.hadoop.fs.Path(s"$path.retired-$tag")
-    df.write.mode(SaveMode.Overwrite).parquet(staging.toString)
+    try {
+      df.write.mode(SaveMode.Overwrite).parquet(staging.toString)
+      check()
+    } catch {
+      case e: Throwable =>
+        try fs.delete(staging, true) catch { case d: Throwable => e.addSuppressed(d) }
+        throw e
+    }
     val existed = fs.exists(dest)
     if (existed) require(fs.rename(dest, retired), s"cannot retire $dest")
     require(fs.rename(staging, dest), s"cannot promote $staging")
     if (existed) fs.delete(retired, true)
     SchemaCache.invalidate(path) // a full rewrite may change the schema
+  }
+
+  /** Append-only landing of a batch into the parquet table at `path`,
+    * writing O(batch) bytes instead of [[rewriteAtomic]]'s O(table):
+    * the batch is staged in a `path.staging-<tag>` sibling (crash
+    * debris [[vacuumTable]] reaps), its rows counted by a metric
+    * observed on that same write (no job of its own), then each staged
+    * data file is renamed into `path` — a batch written as one
+    * partition publishes with a single rename, so readers see all of
+    * it or none of it. The first batch of a new table renames the
+    * staged dir itself into place. A zero-row batch publishes nothing.
+    * The staging dir is gone when this returns or throws. Returns the
+    * rows appended. Single writer per table, like rewriteAtomic.
+    */
+  def appendAtomic(df: DataFrame, path: String): Long = {
+    val dest = new org.apache.hadoop.fs.Path(path)
+    val fs = dest.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val staging = new org.apache.hadoop.fs.Path(
+      s"$path.staging-${java.util.UUID.randomUUID().toString.take(8)}")
+    val (counted, rows) = observeCount(df)
+    try {
+      counted.write.parquet(staging.toString)
+      val n = rows()
+      if (n > 0) {
+        if (!fs.exists(dest)) require(fs.rename(staging, dest), s"cannot promote $staging")
+        else fs.listStatus(staging).map(_.getPath)
+          .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
+          .foreach(f => require(fs.rename(f, new org.apache.hadoop.fs.Path(dest, f.getName)),
+            s"cannot publish $f"))
+      }
+      n
+    } finally fs.delete(staging, true)
+  }
+
+  /** `df` plus a row counter that rides on whichever action next runs
+    * it — a `Dataset.observe` metric, so the count costs no job of its
+    * own. Read the count only after that action; a count whose metrics
+    * never arrive fails loudly instead of blocking. The metrics row is
+    * empty when adaptive execution found the observed branch empty and
+    * dropped it from the final plan; that reads as 0.
+    */
+  def observeCount(df: DataFrame): (DataFrame, () => Long) = {
+    val seen = org.apache.spark.sql.Observation()
+    (df.observe(seen, count(lit(1)).as("rows")), () => {
+      val row = scala.concurrent.Await.result(seen.future, scala.concurrent.duration.Duration(60, "s"))
+      if (row.length == 0) 0L else row.getLong(0)
+    })
   }
 
   /** Versioned snapshot write — time travel for the single-writer

@@ -1,7 +1,9 @@
 package graft
 
 import graft.ingest.BinanceSource
-import graft.ingest.BinanceSource.{FetchSpec, FixtureFetcher}
+import graft.ingest.BinanceSource.{FetchSpec, Fetcher, FixtureFetcher}
+import graft.model.Schemas
+import graft.store.Warehouse
 
 /** Golden end-to-end: the whole DAG over a synthetic fixture, including
   * re-run idempotency (SURVEY.md §5).
@@ -46,10 +48,103 @@ class PipelineSpec extends SparkSpec {
     assert(a === b)
   }
 
+  test("backfillAll of a second asset keeps the first asset's metrics") {
+    val days = (1 to 4).map(d => f"2024-01-0$d")
+    val root = java.nio.file.Files.createTempDirectory("graft_wh_two").toString
+    val p = new Pipeline(spark, root, new FixtureFetcher())
+    def rows(asset: String) = spark.read.parquet(s"$root/daily_metrics")
+      .filter(s"asset = '$asset'").orderBy("date").collect().toSeq
+    p.backfillAll("BTC-USD", days)
+    val btc = rows("BTC-USD")
+    assert(btc.size === 4)
+    p.backfillAll("ETH-USD", days)
+    assert(rows("BTC-USD") === btc)
+    val alone = java.nio.file.Files.createTempDirectory("graft_wh_eth").toString
+    new Pipeline(spark, alone, new FixtureFetcher()).backfillAll("ETH-USD", days)
+    assert(rows("ETH-USD") === spark.read.parquet(s"$alone/daily_metrics").orderBy("date").collect().toSeq)
+    assert(spark.read.parquet(s"$root/daily_metrics").count() === 8)
+  }
+
   test("quality checks pass on the golden warehouse and catch a thin day") {
     val root = java.nio.file.Files.createTempDirectory("graft_wh2").toString
     val p = new Pipeline(spark, root, new FixtureFetcher())
     p.runDay("BTC-USD", "2024-02-01") // includes qualityChecks — must not throw
+    // a day with 19 hourly rows: every task before the gate succeeds,
+    // the completeness check (≥ 20 rows, dag:409) fails it
+    val thin = new Pipeline(spark, root, new Fetcher {
+      def fetch(spec: FetchSpec) = new FixtureFetcher().fetch(spec).take(19)
+    })
+    val e = intercept[quality.Checks.CheckFailure] { thin.runDay("BTC-USD", "2024-02-02") }
+    assert(e.getMessage === "days with < 20 rows: [2024-02-02,BTC-USD,19]")
+  }
+
+  /** Every file and dir directly under `root` (name, size), and under
+    * its table dirs — the state a failed or replayed task must leave
+    * untouched. */
+  private def state(root: String): Seq[(String, Long)] =
+    Seq("", "raw_prices", "daily_metrics").flatMap { t =>
+      val d = new java.io.File(s"$root/$t")
+      if (!d.exists()) Nil
+      else d.listFiles().map { f =>
+        s"$t/${f.getName}".stripPrefix("/") -> (if (f.isDirectory) -1L else f.length())
+      }.toSeq
+    }.sorted
+
+  private def staging(root: String): Seq[String] =
+    state(root).map(_._1).filter(_.contains(".staging-"))
+
+  test("guard failures leave the live tables as they were and no staging dirs") {
+    val root = java.nio.file.Files.createTempDirectory("graft_guard").toString
+    val p = new Pipeline(spark, root, new FixtureFetcher())
+    p.runRange("BTC-USD", "2024-01-01", "2024-01-02")
+    val before = state(root)
+
+    // an empty fetch: extract throws before anything reaches Spark, no CSV
+    val empty = new Pipeline(spark, root, new Fetcher { def fetch(spec: FetchSpec) = Seq.empty })
+    val e1 = intercept[IllegalArgumentException] { empty.extract("BTC-USD", "2024-01-05") }
+    assert(e1.getMessage === "requirement failed: empty input: klines BTC-USD 2024-01-05")
+    assert(!new java.io.File(s"$root/csv/BTC-USD_prices_2024-01-05").exists())
+
+    // loadRaw of an empty CSV
+    val csv = java.nio.file.Files.createTempDirectory("graft_guard_csv").toString + "/empty"
+    Warehouse.writeCsv(spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.rawCsvSchema), csv, singleFile = true)
+    val e2 = intercept[IllegalArgumentException] { p.loadRaw("BTC-USD", csv) }
+    assert(e2.getMessage === s"requirement failed: empty input: csv $csv")
+
+    // computeDailyMetrics for a day with no raw rows: the observed count
+    // fails the staged write before the swap
+    val e3 = intercept[IllegalArgumentException] { p.computeDailyMetrics("BTC-USD", "2024-01-09") }
+    assert(e3.getMessage === "requirement failed: empty input: raw_prices BTC-USD 2024-01-09")
+
+    assert(state(root) === before)
+    assert(staging(root).isEmpty)
+
+    // enrichIndicators over a daily_metrics table with no rows
+    val bare = java.nio.file.Files.createTempDirectory("graft_guard_bare").toString
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.dailyMetricsSchema)
+      .write.parquet(s"$bare/daily_metrics")
+    val bareBefore = state(bare)
+    val e4 = intercept[IllegalArgumentException] {
+      new Pipeline(spark, bare, new FixtureFetcher()).enrichIndicators()
+    }
+    assert(e4.getMessage === "requirement failed: empty input: daily_metrics")
+    assert(state(bare) === bareBefore)
+  }
+
+  test("a replayed tick appends nothing: raw_prices file listing and both tables unchanged") {
+    val root = java.nio.file.Files.createTempDirectory("graft_replay").toString
+    val p = new Pipeline(spark, root, new FixtureFetcher())
+    p.runRange("BTC-USD", "2024-01-01", "2024-01-03")
+    def raw = state(root).filter(_._1.startsWith("raw_prices/"))
+    def content(t: String) = spark.read.parquet(s"$root/$t").collect().map(_.toString).sorted.toSeq
+    val (rawBefore, rowsBefore, metricsBefore) = (raw, content("raw_prices"), content("daily_metrics"))
+    assert(rawBefore.count(_._1.startsWith("raw_prices/part-")) === 3) // one file per loaded day
+    p.runDay("BTC-USD", "2024-01-02")
+    assert(raw === rawBefore)
+    assert(content("raw_prices") === rowsBefore)
+    assert(content("daily_metrics") === metricsBefore)
+    assert(staging(root).isEmpty)
   }
 
   test("renderReport writes PNG (reference savefig parity) and SVG chart artifacts (S11/S12)") {

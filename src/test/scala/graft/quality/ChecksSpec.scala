@@ -33,6 +33,39 @@ class ChecksSpec extends SparkSpec {
     assert(bad.map(_.getDate(0).toString).toSeq === Seq("2024-02-01")) // day 32 only
   }
 
+  test("requireDay fails with the same message as the matching require* check") {
+    def msg(body: => Unit): String = intercept[Checks.CheckFailure](body).getMessage
+    val prices = (0 until 24).map(h => (Timestamp.valueOf(f"2024-01-31 $h%02d:00:00"), "BTC", 1.0))
+      .toDF("ts_utc", "asset", "price")
+    // 32 days of BTC; ETH rows must not count toward BTC's ≥ 30
+    def metrics(day: Int => Option[Double], ma30: Int => Option[Double]) = ((0 until 32).map { i =>
+      (Date.valueOf(java.time.LocalDate.of(2024, 1, 1).plusDays(i)), "BTC",
+        day(i), Some(2.0), Some(0.5), Some(1.5), ma30(i), if (i >= 30) Some(0.1) else None)
+    } :+ ((Date.valueOf("2024-01-01"), "ETH", Some(1.0), Some(1.0), Some(1.0), Some(1.0),
+      None: Option[Double], None: Option[Double])))
+      .toDF("date", "asset", "open", "high", "low", "close", "ma30", "vol30")
+    val warm = (i: Int) => if (i >= 29) Some(1.0) else None
+    val good = metrics(_ => Some(1.0), warm)
+    Checks.requireDay(prices, good, "2024-01-31", "BTC") // passes
+
+    // missing (date, asset) row
+    assert(msg(Checks.requireDay(prices, good, "2024-02-05", "BTC")) ===
+      msg(Checks.requireOhlcPresent(good, "2024-02-05", "BTC")))
+    // NULL OHLC on the day
+    val nullOpen = metrics(i => if (i == 30) None else Some(1.0), warm)
+    assert(msg(Checks.requireDay(prices, nullOpen, "2024-01-31", "BTC")) ===
+      msg(Checks.requireOhlcPresent(nullOpen, "2024-01-31", "BTC")))
+    // indicator gap past row 30
+    val gap = metrics(_ => Some(1.0), i => if (i >= 29 && i != 30) Some(1.0) else None)
+    val gapMsg = msg(Checks.requireDay(prices, gap, "2024-01-31", "BTC"))
+    assert(gapMsg.startsWith("indicator gaps past warm-up: [2024-01-31,BTC,"))
+    assert(gapMsg === msg(Checks.requireIndicatorsWarm(gap.filter("asset = 'BTC'"))))
+    // a thin day, and the check order: completeness fails first
+    val thin = prices.limit(19)
+    assert(msg(Checks.requireDay(thin, gap, "2024-01-31", "BTC")) ===
+      msg(Checks.requireDailyCompleteness(thin, 20)))
+  }
+
   test("quarantine: first failing rule names the reason; NULL predicate is a failure") {
     import org.apache.spark.sql.functions.col
     val rows = Seq(

@@ -137,6 +137,49 @@ class WarehouseSpec extends SparkSpec {
     assert(spark.read.parquet(fresh).count() === 1)
   }
 
+  private def listing(dir: String): Seq[(String, Long)] = {
+    val f = new java.io.File(dir)
+    if (!f.exists()) Seq.empty else f.listFiles().map(c => c.getName -> c.length()).toSeq.sorted
+  }
+
+  test("rewriteAtomic: a throwing write or check leaves the live table and no staging dir") {
+    import org.apache.spark.sql.functions._
+    val dir = java.nio.file.Files.createTempDirectory("graft_rewrite_fail").toString + "/t"
+    Warehouse.overwrite(Seq((1L, "a")).toDF("id", "v"), dir)
+    val before = listing(dir)
+    val boom = spark.range(3).select(expr("assert_true(id < 2)").cast("long").as("id"), lit("x").as("v"))
+    intercept[Exception] { Warehouse.rewriteAtomic(boom, dir) }
+    assert(listing(dir) === before)
+    val guard = intercept[IllegalArgumentException] {
+      Warehouse.rewriteAtomic(Seq((2L, "b")).toDF("id", "v"), dir, check = () => require(false, "guard"))
+    }
+    assert(guard.getMessage === "requirement failed: guard")
+    assert(listing(dir) === before)
+    val siblings = new java.io.File(dir).getParentFile.listFiles().map(_.getName)
+    assert(siblings.toSeq === Seq("t"), s"staging dirs left behind: ${siblings.mkString(",")}")
+    assert(spark.read.parquet(dir).as[(Long, String)].collect().toSeq === Seq((1L, "a")))
+  }
+
+  test("appendAtomic: one published file per batch, zero rows publish nothing, no staging left") {
+    import org.apache.spark.sql.functions._
+    val dir = java.nio.file.Files.createTempDirectory("graft_append").toString + "/t"
+    def dataFiles = listing(dir).map(_._1).filter(_.startsWith("part-"))
+    assert(Warehouse.appendAtomic(Seq((1L, "a"), (2L, "b")).toDF("id", "v").coalesce(1), dir) === 2L)
+    assert(dataFiles.size === 1)
+    assert(Warehouse.appendAtomic(Seq((3L, "c")).toDF("id", "v").coalesce(1), dir) === 1L)
+    assert(dataFiles.size === 2)
+    val before = listing(dir)
+    assert(Warehouse.appendAtomic(Seq((4L, "d")).toDF("id", "v").filter(col("id") < 0), dir) === 0L)
+    assert(listing(dir) === before)
+    val boom = spark.range(3).select(expr("assert_true(id < 2)").cast("long").as("id"), lit("x").as("v"))
+    intercept[Exception] { Warehouse.appendAtomic(boom, dir) }
+    assert(listing(dir) === before)
+    val siblings = new java.io.File(dir).getParentFile.listFiles().map(_.getName)
+    assert(siblings.toSeq === Seq("t"), s"staging dirs left behind: ${siblings.mkString(",")}")
+    assert(spark.read.parquet(dir).as[(Long, String)].collect().sorted.toSeq ===
+      Seq((1L, "a"), (2L, "b"), (3L, "c")))
+  }
+
   test("compact: bin-packs small files to the byte target, identical data, atomic") {
     val dir = java.nio.file.Files.createTempDirectory("graft_compact").toString + "/t"
     // 16 tasks -> 16 small files, the accretion pattern compaction fixes

@@ -303,13 +303,8 @@ object CorpusPipeline {
                     jaccard: Double = 0.8, cosine: Double = 0.95,
                     nprobe: Int = 4, screenK: Int = 8)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val spark = source.sparkSession
-    require(graft.store.Warehouse.snapshots(spark,
-        ShingleIndex.metaPath(shingleIdxPath)).nonEmpty,
-      s"frontDoorSink: no shingle index at $shingleIdxPath — buildShingleIndex first")
-    require(graft.store.Warehouse.snapshots(spark,
-        VectorIndex.centroidsPath(vectorIdxPath)).nonEmpty,
-      s"frontDoorSink: no vector index at $vectorIdxPath — buildIvfIndex first")
+    ShingleIndex.lifecycle.requireBuilt(source.sparkSession, shingleIdxPath)
+    VectorIndex.lifecycle.requireBuilt(source.sparkSession, vectorIdxPath)
     // keyed on the CHECKPOINT, not the corpus table (r16 review): two
     // distinct streams feeding one corpus are two exactly-once
     // domains — a shared table-derived appId would make each stream's

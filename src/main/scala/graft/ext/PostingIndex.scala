@@ -32,7 +32,7 @@ import org.apache.spark.sql.functions._
   *    lesson);
   *  - the META table at `path + "_meta"`: `(n, nb, stamp)` — the
   *    shingle width every probe must reproduce, plus the torn-build
-  *    stamp ([[ShingleIndex]]'s protocol verbatim).
+  *    stamp ([[PersistedIndex]]).
   *
   * [[containmentAgainstIndex]] emits, per (indexed doc a, probe doc
   * b) sharing ≥1 surviving shingle, both containment directions
@@ -53,13 +53,19 @@ import org.apache.spark.sql.functions._
   * join), and aggregates at candidate grain. Refresh appends new
   * docs' postings at increment cost ([[refreshPostingIndex]]);
   * df for new postings is exact immediately (it is counted from the
-  * probed read, never stored).
+  * probed read, never stored). Build commit, torn-build check,
+  * layout-forcing maintenance and the streaming sink are
+  * [[lifecycle]]'s.
   */
 object PostingIndex {
 
   private val P60Chars = 15 // 60-bit md5 prefix, the Dedup md5-family base hash
 
-  def metaPath(path: String): String = s"${path}_meta"
+  /** Build commit, torn-build check, maintenance and sink ([[PersistedIndex]]). */
+  val lifecycle: PersistedIndex = PersistedIndex("PostingIndex", "_meta",
+    "bucket", "buildPostingIndex", refreshPostingIndex)
+
+  def metaPath(path: String): String = lifecycle.sidePath(path)
 
   /** (bucket, h, doc_id, n_sh) + the h-NULL presence sentinel for
     * shingle-less docs. n_sh = |distinct h| (the containment
@@ -92,8 +98,7 @@ object PostingIndex {
   }
 
   /** Build (or rebuild) the posting index for `docs` (`doc_id` long,
-    * `text`). Meta commits first, stamped with the predicted postings
-    * version — a torn rebuild refuses loudly at every later probe.
+    * `text`) — [[PersistedIndex.commitBuild]]: meta first, stamped.
     */
   def buildPostingIndex(docs: DataFrame, path: String, n: Int = 3,
                         bucketCount: Int = 64): Long = {
@@ -101,32 +106,18 @@ object PostingIndex {
     require(bucketCount >= 1, s"bucketCount must be >= 1, got $bucketCount")
     val spark = docs.sparkSession
     import spark.implicits._
-    val predicted = Warehouse.currentSnapshot(spark, path) + 1
-    val metaRows = Seq((n, bucketCount, predicted)).toDF("n", "nb", "stamp")
-    Warehouse.snapshots(spark, metaPath(path)) match {
-      case Seq() => Warehouse.writeSnapshot(metaRows, metaPath(path))
-      case vs => Warehouse.commitSnapshot(metaRows, metaPath(path), vs.last)
-    }
-    val laid = layout(spark, postingRows(docs, n, bucketCount), bucketCount)
-    Warehouse.snapshots(spark, path) match {
-      case Seq() => Warehouse.writeSnapshot(laid, path)
-      case vs => Warehouse.commitSnapshot(laid, path, vs.last)
-    }
+    lifecycle.commitBuild(layout(spark, postingRows(docs, n, bucketCount), bucketCount),
+      path) { stamp => Seq((n, bucketCount, stamp)).toDF("n", "nb", "stamp") }
   }
 
   private case class Meta(n: Int, nb: Int, stamp: Long)
 
   private def readMeta(spark: SparkSession, path: String): Meta = {
-    val side = metaPath(path)
-    require(Warehouse.snapshots(spark, side).nonEmpty,
-      s"PostingIndex($path): no meta table — buildPostingIndex first")
-    val r = Warehouse.readSnapshot(spark, side).select("n", "nb", "stamp").head()
-    val meta = Meta(r.getInt(0), r.getInt(1), r.getLong(2))
-    val cur = Warehouse.currentSnapshot(spark, path)
-    require(meta.stamp <= cur,
-      s"PostingIndex($path): meta stamp ${meta.stamp} is ahead of the postings " +
-        s"table (v=$cur) — a rebuild crashed between its meta and postings " +
-        "commits; re-run buildPostingIndex before probing")
+    lazy val meta = {
+      val r = Warehouse.readSnapshot(spark, metaPath(path)).select("n", "nb", "stamp").head()
+      Meta(r.getInt(0), r.getInt(1), r.getLong(2))
+    }
+    lifecycle.requireBuilt(spark, path, meta.stamp)
     meta
   }
 
@@ -220,48 +211,5 @@ object PostingIndex {
       .withColumn("c_ba", col("inter") / col("nb"))
       .filter(greatest(col("c_ab"), col("c_ba")) >= threshold)
       .select("a", "b", "c_ab", "c_ba")
-  }
-
-  /** Maintenance tick with the bucket clustering FORCED — the shared
-    * index-family rationale: compaction must never kill probe pruning.
-    */
-  def maintainPostingIndex(spark: SparkSession, path: String,
-                           policy: Warehouse.MaintenancePolicy = Warehouse.MaintenancePolicy())
-      : Warehouse.MaintenanceReport =
-    Warehouse.maintainSnapshot(spark, path,
-      policy.copy(clusterCols = Seq("bucket")))
-
-  /** STREAMING index maintenance (r16) — the fourth index family gets
-    * the same sink shape as the other three ([[VectorIndex
-    * .vectorIndexSink]] / shingle / text): each micro-batch of
-    * `(doc_id, text)` rows refreshes the persisted postings.
-    * Exactly-once WITHOUT an epoch gate: [[refreshPostingIndex]]
-    * anti-joins on `doc_id` (presence sentinels make shingle-less docs
-    * visible to it), so a replayed batch no-ops — idempotence is the
-    * operator's own semantics. `maintainEvery` epochs run
-    * [[maintainPostingIndex]] best-effort (bucket clustering forced;
-    * a transient failure logs and re-fires on a later epoch).
-    */
-  def postingIndexSink(source: DataFrame, path: String, checkpoint: String,
-                       maintainEvery: Int = 0,
-                       maintainPolicy: Warehouse.MaintenancePolicy =
-                         Warehouse.MaintenancePolicy())
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val spark = source.sparkSession
-    require(Warehouse.snapshots(spark, metaPath(path)).nonEmpty,
-      s"postingIndexSink($path): no index — buildPostingIndex first")
-    source.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        refreshPostingIndex(batch, path)
-        if (maintainEvery > 0 && epoch % maintainEvery == maintainEvery - 1)
-          try { maintainPostingIndex(batch.sparkSession, path, maintainPolicy); () }
-          catch {
-            case scala.util.control.NonFatal(e) =>
-              System.err.println(s"[graft] posting-index maintenance at epoch " +
-                s"$epoch on $path failed (will retry on a later epoch): ${e.getMessage}")
-          }
-        ()
-      }
   }
 }

@@ -29,12 +29,8 @@ import org.apache.spark.sql.functions._
   *    standard index trade: storage for probe locality);
   *  - the META table at `path + "_meta"`: one row
   *    `(mode, n, nb, bands, stamp)` fixing the construction every
-  *    probe and refresh must reproduce. `stamp` is the index version
-  *    the build pairs with — a rebuild that crashes between its two
-  *    commits leaves `stamp` ahead of the index table, and probes
-  *    REFUSE loudly instead of screening against signatures built
-  *    under different parameters (the r14 VectorIndex review's
-  *    torn-build hazard, closed here by construction).
+  *    probe and refresh must reproduce, plus the torn-build `stamp`
+  *    ([[PersistedIndex]]).
   *
   * Two modes, the [[Dedup]] family's own split:
   *  - `"md5"` (default, engine-portable): the q_dedup_minhash_md5
@@ -64,12 +60,9 @@ import org.apache.spark.sql.functions._
   * INCREMENTAL growth rides the X200 refresh discipline:
   * [[refreshShingleIndex]] signs ONLY docs not yet indexed (anti-join
   * on doc_id) under the STORED meta and appends — the steady-state
-  * tick costs the new docs' bytes. [[shingleIndexSink]] streams the
-  * same refresh exactly-once by the anti-join's own idempotence
-  * (the X248 argument), and [[maintainShingleIndex]] bin-packs the
-  * per-epoch small files with the bucket clustering FORCED so
-  * compaction can never silently kill probe pruning (the r14
-  * VectorIndex lesson).
+  * tick costs the new docs' bytes. Build commit, torn-build check,
+  * layout-forcing maintenance and the streaming sink are
+  * [[lifecycle]]'s.
   *
   * 100 TB shape: a crawl-cycle screen prices at
   * increment-shingling + (hit buckets / (bands·nb)) of the index
@@ -87,7 +80,11 @@ object ShingleIndex {
   private val XxhNumHashes = 128
   private val XxhBands = 16
 
-  def metaPath(path: String): String = s"${path}_meta"
+  /** Build commit, torn-build check, maintenance and sink ([[PersistedIndex]]). */
+  val lifecycle: PersistedIndex = PersistedIndex("ShingleIndex", "_meta",
+    "bucket", "buildShingleIndex", refreshShingleIndex)
+
+  def metaPath(path: String): String = lifecycle.sidePath(path)
 
   private def bandsOf(mode: String): Int =
     if (mode == Md5Mode) 4 else XxhBands
@@ -175,11 +172,7 @@ object ShingleIndex {
 
   /** Build (or rebuild) the index for the catalog `docs`
     * (`doc_id` long, `text`). Returns the index table's committed
-    * version. Meta commits FIRST carrying the predicted index version
-    * as `stamp`; a crash before the index commit leaves
-    * stamp > current, which every reader refuses loudly — a torn
-    * rebuild can decay into a refusal, never into a silent screen
-    * under mismatched parameters.
+    * version ([[PersistedIndex.commitBuild]]: meta first, stamped).
     */
   def buildShingleIndex(docs: DataFrame, path: String, n: Int = 3,
                         bucketsPerBand: Int = 64, mode: String = Md5Mode): Long = {
@@ -189,18 +182,11 @@ object ShingleIndex {
     require(bucketsPerBand >= 1, s"bucketsPerBand must be >= 1, got $bucketsPerBand")
     val spark = docs.sparkSession
     import spark.implicits._
-    val predicted = Warehouse.currentSnapshot(spark, path) + 1
-    val metaRows = Seq((mode, n, bucketsPerBand, bandsOf(mode), predicted))
-      .toDF("mode", "n", "nb", "bands", "stamp")
-    Warehouse.snapshots(spark, metaPath(path)) match {
-      case Seq() => Warehouse.writeSnapshot(metaRows, metaPath(path))
-      case vs => Warehouse.commitSnapshot(metaRows, metaPath(path), vs.last)
-    }
     val laid = layout(spark, signatureRows(docs, mode, n, bucketsPerBand),
       bandsOf(mode) * bucketsPerBand)
-    Warehouse.snapshots(spark, path) match {
-      case Seq() => Warehouse.writeSnapshot(laid, path)
-      case vs => Warehouse.commitSnapshot(laid, path, vs.last)
+    lifecycle.commitBuild(laid, path) { stamp =>
+      Seq((mode, n, bucketsPerBand, bandsOf(mode), stamp))
+        .toDF("mode", "n", "nb", "bands", "stamp")
     }
   }
 
@@ -217,17 +203,12 @@ object ShingleIndex {
   }
 
   private def readMeta(spark: SparkSession, path: String): Meta = {
-    val side = metaPath(path)
-    require(Warehouse.snapshots(spark, side).nonEmpty,
-      s"ShingleIndex($path): no meta table — buildShingleIndex first")
-    val r = Warehouse.readSnapshot(spark, side)
-      .select("mode", "n", "nb", "bands", "stamp").head()
-    val meta = Meta(r.getString(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getLong(4))
-    val cur = Warehouse.currentSnapshot(spark, path)
-    require(meta.stamp <= cur,
-      s"ShingleIndex($path): meta stamp ${meta.stamp} is ahead of the index " +
-        s"table (v=$cur) — a rebuild crashed between its meta and index " +
-        "commits; re-run buildShingleIndex before probing")
+    lazy val meta = {
+      val r = Warehouse.readSnapshot(spark, metaPath(path))
+        .select("mode", "n", "nb", "bands", "stamp").head()
+      Meta(r.getString(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getLong(4))
+    }
+    lifecycle.requireBuilt(spark, path, meta.stamp)
     meta
   }
 
@@ -387,52 +368,5 @@ object ShingleIndex {
     val meta = readMeta(spark, path)
     IndexHealth.bucketIndexAdvice(spark, path, "bucket", meta.bands * meta.nb,
       minBytes, probeFractionBound, hotShareBound)
-  }
-
-  /** Maintenance tick with the bucket clustering FORCED — a plain
-    * OPTIMIZE would bin-pack the streaming sink's small append files
-    * with no layout, mixing buckets inside every output file and
-    * silently killing probe pruning (file min/max would span the
-    * domain) — the exact decay [[VectorIndex.maintainIvfIndex]]
-    * prevents for cells. The caller's policy applies otherwise;
-    * `clusterCols` is overridden, not merged.
-    */
-  def maintainShingleIndex(spark: SparkSession, path: String,
-                           policy: Warehouse.MaintenancePolicy = Warehouse.MaintenancePolicy())
-      : Warehouse.MaintenanceReport =
-    Warehouse.maintainSnapshot(spark, path,
-      policy.copy(clusterCols = Seq("bucket")))
-
-  /** STREAMING index maintenance: each micro-batch of (doc_id, text)
-    * rows refreshes the persisted index. Exactly-once WITHOUT an epoch
-    * gate, by construction: [[refreshShingleIndex]] anti-joins on
-    * doc_id before signing, so a replayed batch's docs are already
-    * indexed and the refresh no-ops — the X248 argument verbatim.
-    * `maintainEvery` > 0 runs [[maintainShingleIndex]] every N epochs,
-    * best-effort (the epoch's refresh already landed; a transient
-    * maintenance failure logs and re-fires later).
-    */
-  def shingleIndexSink(source: DataFrame, path: String, checkpoint: String,
-                       maintainEvery: Int = 0,
-                       maintainPolicy: Warehouse.MaintenancePolicy =
-                         Warehouse.MaintenancePolicy())
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val spark = source.sparkSession
-    require(Warehouse.snapshots(spark, metaPath(path)).nonEmpty,
-      s"shingleIndexSink($path): no index — buildShingleIndex first (the " +
-        "construction is a build decision, not an ingest one)")
-    source.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        refreshShingleIndex(batch, path)
-        if (maintainEvery > 0 && epoch % maintainEvery == maintainEvery - 1)
-          try { maintainShingleIndex(batch.sparkSession, path, maintainPolicy); () }
-          catch {
-            case scala.util.control.NonFatal(e) =>
-              System.err.println(s"[graft] shingle-index maintenance at epoch " +
-                s"$epoch on $path failed (will retry on a later epoch): ${e.getMessage}")
-          }
-        ()
-      }
   }
 }

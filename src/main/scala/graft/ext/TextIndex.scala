@@ -28,11 +28,8 @@ import org.apache.spark.sql.functions._
   *    needs (N = n_docs; avg dl = sum_dl / n_dl, null-length docs
   *    excluded exactly as the inline avg() skips them — all integers
   *    maintained EXACTLY by the refresh, re-derivable from the
-  *    postings by [[repairTextIndexMeta]]), plus the
-  *    [[ShingleIndex]]-style torn-build stamp: a rebuild that crashes
-  *    between its two commits leaves `stamp` ahead of the postings
-  *    table, and probes REFUSE loudly instead of scoring new postings
-  *    under stale corpus stats.
+  *    postings by [[repairTextIndexMeta]]), plus the torn-build
+  *    stamp ([[PersistedIndex]]).
   *
   * A probe ([[bm25TopKIndexed]]) then costs: one driver-side bucket
   * computation over the query's terms (the same xxhash64 the build
@@ -49,11 +46,9 @@ import org.apache.spark.sql.functions._
   * [[refreshTextIndex]] tokenizes ONLY docs not yet indexed
   * (anti-join on doc_id) and appends their postings; the meta scalars
   * fold the increment's (count, Σdl) exactly — integer algebra, no
-  * approximation, no refit. [[textIndexSink]] streams the same
-  * refresh exactly-once by the anti-join's idempotence (the X248
-  * argument), and [[maintainTextIndex]] bin-packs small append files
-  * with the bucket clustering FORCED so compaction never kills probe
-  * pruning.
+  * approximation, no refit. Build commit, torn-build check,
+  * layout-forcing maintenance and the streaming sink are
+  * [[lifecycle]]'s.
   *
   * 100 TB shape: the index is one corpus tokenization amortized over
   * every later query; a query batch reads probed buckets only (df
@@ -62,7 +57,11 @@ import org.apache.spark.sql.functions._
   */
 object TextIndex {
 
-  def metaPath(path: String): String = s"${path}_meta"
+  /** Build commit, torn-build check, maintenance and sink ([[PersistedIndex]]). */
+  val lifecycle: PersistedIndex = PersistedIndex("TextIndex", "_meta",
+    "bucket", "buildTextIndex", refreshTextIndex)
+
+  def metaPath(path: String): String = lifecycle.sidePath(path)
 
   /** The txnApp id every refresh stamps into its postings-append
     * manifest — the detection vehicle for the refresh crash window
@@ -145,10 +144,8 @@ object TextIndex {
   }
 
   /** Build (or rebuild) the index for `docs` (`doc_id` long, `text`).
-    * Returns the postings table's committed version. Same commit
-    * protocol as [[ShingleIndex.buildShingleIndex]]: meta first,
-    * stamped with the predicted postings version — a torn rebuild
-    * refuses loudly at every later probe.
+    * Returns the postings table's committed version
+    * ([[PersistedIndex.commitBuild]]: meta first, stamped).
     */
   def buildTextIndex(docs: DataFrame, path: String, bucketCount: Int = 64): Long = {
     require(bucketCount >= 1, s"bucketCount must be >= 1, got $bucketCount")
@@ -192,41 +189,30 @@ object TextIndex {
       (s.getLong(0), s.getLong(1), if (s.isNullAt(2)) 0L else s.getLong(2))
     val bucketCounts = Array.tabulate(bucketCount)(i =>
       if (s.isNullAt(3 + i)) 0L else s.getLong(3 + i))
-    val predicted = Warehouse.currentSnapshot(spark, path) + 1
     // a REBUILD inherits prior refresh stamps in the retained history:
     // record them as already-synced (the rebuild's scalars cover the
     // whole corpus by construction)
     val synced = Warehouse.lastCommittedEpoch(spark, path, RefreshApp).getOrElse(0L)
-    val metaRows = Seq((nDocs, nDl, sumDl, bucketCount, predicted, synced))
-      .toDF("n_docs", "n_dl", "sum_dl", "nb", "stamp", "synced_seq")
-    Warehouse.snapshots(spark, metaPath(path)) match {
-      case Seq() => Warehouse.writeSnapshot(metaRows, metaPath(path))
-      case vs => Warehouse.commitSnapshot(metaRows, metaPath(path), vs.last)
-    }
     val laid = layout(spark, postingRows(docs, bucketCount), bucketCount,
       Some(bucketCounts))
-    Warehouse.snapshots(spark, path) match {
-      case Seq() => Warehouse.writeSnapshot(laid, path)
-      case vs => Warehouse.commitSnapshot(laid, path, vs.last)
+    lifecycle.commitBuild(laid, path) { stamp =>
+      Seq((nDocs, nDl, sumDl, bucketCount, stamp, synced))
+        .toDF("n_docs", "n_dl", "sum_dl", "nb", "stamp", "synced_seq")
     }
   }
 
   private case class Meta(nDocs: Long, nDl: Long, sumDl: Long, nb: Int,
                           stamp: Long, syncedSeq: Long)
 
+  /** The meta row, read through the torn-build check. */
   private def readMetaRow(spark: SparkSession, path: String): Meta = {
-    val side = metaPath(path)
-    require(Warehouse.snapshots(spark, side).nonEmpty,
-      s"TextIndex($path): no meta table — buildTextIndex first")
-    val r = Warehouse.readSnapshot(spark, side)
-      .select("n_docs", "n_dl", "sum_dl", "nb", "stamp", "synced_seq").head()
-    val meta = Meta(r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3),
-      r.getLong(4), r.getLong(5))
-    val cur = Warehouse.currentSnapshot(spark, path)
-    require(meta.stamp <= cur,
-      s"TextIndex($path): meta stamp ${meta.stamp} is ahead of the postings " +
-        s"table (v=$cur) — a rebuild crashed between its meta and postings " +
-        "commits; re-run buildTextIndex before probing")
+    lazy val meta = {
+      val r = Warehouse.readSnapshot(spark, metaPath(path))
+        .select("n_docs", "n_dl", "sum_dl", "nb", "stamp", "synced_seq").head()
+      Meta(r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3),
+        r.getLong(4), r.getLong(5))
+    }
+    lifecycle.requireBuilt(spark, path, meta.stamp)
     meta
   }
 
@@ -477,44 +463,5 @@ object TextIndex {
     val meta = readMetaRow(spark, path)
     IndexHealth.bucketIndexAdvice(spark, path, "bucket", meta.nb,
       minBytes, probeFractionBound, hotShareBound)
-  }
-
-  /** Maintenance tick with the bucket clustering FORCED — the
-    * [[ShingleIndex.maintainShingleIndex]] rationale verbatim: a
-    * layout-less OPTIMIZE would mix buckets inside every output file
-    * and silently kill probe pruning.
-    */
-  def maintainTextIndex(spark: SparkSession, path: String,
-                        policy: Warehouse.MaintenancePolicy = Warehouse.MaintenancePolicy())
-      : Warehouse.MaintenanceReport =
-    Warehouse.maintainSnapshot(spark, path,
-      policy.copy(clusterCols = Seq("bucket")))
-
-  /** STREAMING index maintenance: each micro-batch of (doc_id, text)
-    * rows refreshes the index — exactly-once by [[refreshTextIndex]]'s
-    * anti-join (the X248 argument); `maintainEvery` epochs run the
-    * layout-preserving tick, best-effort.
-    */
-  def textIndexSink(source: DataFrame, path: String, checkpoint: String,
-                    maintainEvery: Int = 0,
-                    maintainPolicy: Warehouse.MaintenancePolicy =
-                      Warehouse.MaintenancePolicy())
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val spark = source.sparkSession
-    require(Warehouse.snapshots(spark, metaPath(path)).nonEmpty,
-      s"textIndexSink($path): no index — buildTextIndex first")
-    source.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        refreshTextIndex(batch, path)
-        if (maintainEvery > 0 && epoch % maintainEvery == maintainEvery - 1)
-          try { maintainTextIndex(batch.sparkSession, path, maintainPolicy); () }
-          catch {
-            case scala.util.control.NonFatal(e) =>
-              System.err.println(s"[graft] text-index maintenance at epoch " +
-                s"$epoch on $path failed (will retry on a later epoch): ${e.getMessage}")
-          }
-        ()
-      }
   }
 }

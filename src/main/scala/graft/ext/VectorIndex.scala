@@ -26,15 +26,14 @@ import org.apache.spark.sql.functions._
   *    `(cell, centroid, mode, stamp, base_n, base_resid, inc_n,
   *    inc_resid)`, read and collected at probe time (bounded:
   *    nlist × dim doubles, the same driver-scalar budget the inline
-  *    fit already used). `stamp` is the index version the build pairs
-  *    with: a rebuild that crashes between its two commits leaves
-  *    `stamp` ahead of the index table, and every reader REFUSES
-  *    loudly instead of probing new centroids against old assignments
-  *    (the r14 review's torn-build hazard, closed by construction).
-  *    The `base_*`/`inc_*` columns are the DRIFT LEDGER (r15, below).
+  *    fit already used). `stamp` is the build's torn-build stamp
+  *    ([[PersistedIndex]]). The `base_*`/`inc_*` columns are the
+  *    DRIFT LEDGER (r15, below).
   *
   * Both tables get full snapshot semantics for free: versioned commits,
-  * time travel, retention, OPTIMIZE, and the maintenance tick.
+  * time travel, retention, OPTIMIZE, and the maintenance tick. Build
+  * commit, torn-build check, layout-forcing maintenance and the
+  * streaming sink are [[lifecycle]]'s.
   *
   * INCREMENTAL growth rides the X200 refresh discipline:
   * [[refreshIvfIndex]] assigns ONLY vectors not yet in the index
@@ -68,7 +67,11 @@ object VectorIndex {
   private val KmeansMode = "kmeans"
   private val BucketedMode = "bucketed"
 
-  def centroidsPath(path: String): String = s"${path}_centroids"
+  /** Build commit, torn-build check, maintenance and sink ([[PersistedIndex]]). */
+  val lifecycle: PersistedIndex = PersistedIndex("VectorIndex", "_centroids",
+    "cell", "buildIvfIndex", refreshIvfIndex)
+
+  def centroidsPath(path: String): String = lifecycle.sidePath(path)
 
   /** Attribute columns riding the index rows (r16): every corpus
     * column beyond the two the index requires (`vec_id`, `embedding`)
@@ -98,12 +101,8 @@ object VectorIndex {
     * plus any ATTRIBUTE columns — persisted with the rows for filtered
     * probes, see [[attrCols]]; refreshes must then carry the same
     * attrs, enforced by the warehouse schema gate).
-    * Returns the index table's committed version. Commit protocol
-    * (r15): centroids commit FIRST, stamped with the PREDICTED index
-    * version; the index commits second. A crash in between leaves
-    * stamp > current index version — deterministically detected and
-    * refused by every subsequent probe/refresh instead of silently
-    * mis-routing probes (new centroids over old assignments).
+    * Returns the index table's committed version
+    * ([[PersistedIndex.commitBuild]]: centroids first, stamped).
     */
   def buildIvfIndex(corpus: DataFrame, path: String, nlist: Int = 16,
                     fitSample: Int = 50, bucketed: Boolean = false): Long = {
@@ -131,16 +130,6 @@ object VectorIndex {
       .groupBy("cell").agg(count(lit(1)).as("n"), avg(col("resid")).as("r"))
       .collect().map(r => r.getInt(0) ->
         (r.getLong(1), if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toMap
-    val predicted = Warehouse.currentSnapshot(spark, path) + 1
-    val centRows = (0 until nlist).map { i =>
-      val (n, resid) = baseStats.getOrElse(i, (0L, None))
-      (i, cents(i).toSeq, mode, predicted, n, resid, 0L, None: Option[Double])
-    }.toDF("cell", "centroid", "mode", "stamp",
-      "base_n", "base_resid", "inc_n", "inc_resid")
-    Warehouse.snapshots(spark, centroidsPath(path)) match {
-      case Seq() => Warehouse.writeSnapshot(centRows, centroidsPath(path))
-      case vs => Warehouse.commitSnapshot(centRows, centroidsPath(path), vs.last)
-    }
     // Contiguous cell range per data file — the property that makes
     // the manifest min/max stats prune probes at file grain (hash
     // partitioning on the raw cell would spread every cell across
@@ -155,36 +144,31 @@ object VectorIndex {
       baseStats.get(i).map(_._1).getOrElse(0L))
     val laid = BucketLayout.exchange(assigned, col("cell"),
       xxhash64(col("vec_id")), cellCounts, layoutParts(spark, nlist))
-    Warehouse.snapshots(spark, path) match {
-      case Seq() => Warehouse.writeSnapshot(laid, path)
-      case vs => Warehouse.commitSnapshot(laid, path, vs.last)
+    lifecycle.commitBuild(laid, path) { stamp =>
+      (0 until nlist).map { i =>
+        val (n, resid) = baseStats.getOrElse(i, (0L, None))
+        (i, cents(i).toSeq, mode, stamp, n, resid, 0L, None: Option[Double])
+      }.toDF("cell", "centroid", "mode", "stamp",
+        "base_n", "base_resid", "inc_n", "inc_resid")
     }
   }
 
   private def layoutParts(spark: SparkSession, nlist: Int): Int =
     math.max(1, math.min(nlist, spark.sessionState.conf.numShufflePartitions))
 
-  /** The stored centroids, cell-ordered, plus the index mode — and the
-    * torn-build check: a centroids stamp AHEAD of the index table
-    * means the paired index commit never landed (refreshes only move
-    * the index version UP, so stamp ≤ current always holds for a
-    * completed build, at any later refresh count).
+  /** The stored centroids, cell-ordered, plus the index mode — read
+    * through the torn-build check ([[PersistedIndex.requireBuilt]]).
     */
   private def readCentroids(spark: SparkSession, path: String)
       : (Array[Array[Double]], String, Int) = {
-    val side = centroidsPath(path)
-    require(Warehouse.snapshots(spark, side).nonEmpty,
-      s"VectorIndex($path): no centroids table — buildIvfIndex first")
-    val rows = Warehouse.readSnapshot(spark, side)
-      .select("cell", "centroid", "mode", "stamp").collect()
-      .sortBy(_.getInt(0))
-    require(rows.nonEmpty, s"VectorIndex($path): centroids table is empty")
-    val stamp = rows.head.getLong(3)
-    val cur = Warehouse.currentSnapshot(spark, path)
-    require(stamp <= cur,
-      s"VectorIndex($path): centroids stamp $stamp is ahead of the index " +
-        s"table (v=$cur) — a rebuild crashed between its centroids and index " +
-        "commits; re-run buildIvfIndex before probing")
+    lazy val rows = {
+      val rs = Warehouse.readSnapshot(spark, centroidsPath(path))
+        .select("cell", "centroid", "mode", "stamp").collect()
+        .sortBy(_.getInt(0))
+      require(rs.nonEmpty, s"VectorIndex($path): centroids table is empty")
+      rs
+    }
+    lifecycle.requireBuilt(spark, path, rows.head.getLong(3))
     val mode = rows.head.getString(2)
     (rows.map(_.getSeq[Double](1).toArray), mode, rows.length)
   }
@@ -355,8 +339,8 @@ object VectorIndex {
     * probed cells only, and flag rows whose best indexed neighbor
     * reaches `threshold`. Returns the increment plus
     * (`dup_of`, `dup_sim`) — NULL when the row is novel — so the
-    * caller routes novel rows to [[refreshIvfIndex]] (or the
-    * streaming sink) and drops/links the near-dups: the
+    * caller routes novel rows to [[refreshIvfIndex]] (or
+    * `lifecycle.sink`) and drops/links the near-dups: the
     * dedup-then-index loop of a growing corpus, priced at the
     * increment's bytes + the probed cells. Approximate exactly as IVF
     * retrieval is (a near-dup hiding in an unprobed cell is missed —
@@ -383,70 +367,6 @@ object VectorIndex {
       .select(col("query_id").as("vec_id"), col("neighbor_id").as("dup_of"),
         col("sim").as("dup_sim"))
     increment.join(best, Seq("vec_id"), "left")
-  }
-
-  /** Maintenance tick for the index table — [[Warehouse.maintainSnapshot]]
-    * with the cell clustering FORCED (r14): a plain OPTIMIZE would
-    * bin-pack the streaming sink's small append files with no layout,
-    * mixing cells inside every output file — each file's cell min/max
-    * then spans the domain and probe pruning silently dies, the exact
-    * decay this wrapper exists to prevent. The caller's policy applies
-    * otherwise (analyze columns, retention, dv purge); `clusterCols`
-    * is overridden, not merged — the index has exactly one layout key.
-    * Known decay edge, correct-by-stats either way: a DV PURGE inside
-    * the tick (vectors erased via deleteWhereDv crossing the policy
-    * threshold) rewrites the touched files WITHOUT the cell sort, so
-    * those files' cell ranges widen and their pruning decays until a
-    * later tick's clustered OPTIMIZE re-packs them — reads stay exact
-    * throughout (file stats remain valid bounds; pruning is never a
-    * correctness gate).
-    */
-  def maintainIvfIndex(spark: SparkSession, path: String,
-                       policy: Warehouse.MaintenancePolicy = Warehouse.MaintenancePolicy())
-      : Warehouse.MaintenanceReport =
-    Warehouse.maintainSnapshot(spark, path,
-      policy.copy(clusterCols = Seq("cell")))
-
-  /** STREAMING index maintenance (X248): each micro-batch of
-    * (vec_id, embedding) rows refreshes the persisted index — the
-    * embedding-ingest half of a retrieval pipeline as one sink. The
-    * index must exist ([[buildIvfIndex]] seeds centroids + layout;
-    * which rule the index follows is a build decision, not an ingest
-    * one). Exactly-once WITHOUT an epoch gate, by construction:
-    * [[refreshIvfIndex]] anti-joins on `vec_id` before assigning, so
-    * a replayed batch's vectors are already indexed and the refresh
-    * no-ops — idempotence is the operator's own semantics, the same
-    * argument as the X91 incremental-dedup sink. (An epoch gate would
-    * add nothing: the anti-join IS the dedup.)
-    *
-    * `maintainEvery` (r14, the X241 composition): every N epochs the
-    * sink runs [[maintainIvfIndex]] — cell-clustered OPTIMIZE, so the
-    * per-epoch small append files re-pack WITHOUT losing probe
-    * pruning — best-effort (the epoch's refresh already landed; a
-    * transient maintenance failure logs and re-fires later).
-    */
-  def vectorIndexSink(source: DataFrame, path: String, checkpoint: String,
-                      maintainEvery: Int = 0,
-                      maintainPolicy: Warehouse.MaintenancePolicy =
-                        Warehouse.MaintenancePolicy())
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val spark = source.sparkSession
-    require(Warehouse.snapshots(spark, centroidsPath(path)).nonEmpty,
-      s"vectorIndexSink($path): no index — buildIvfIndex first (the cell rule " +
-        "is a build decision, not an ingest one)")
-    source.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        refreshIvfIndex(batch, path)
-        if (maintainEvery > 0 && epoch % maintainEvery == maintainEvery - 1)
-          try { maintainIvfIndex(batch.sparkSession, path, maintainPolicy); () }
-          catch {
-            case scala.util.control.NonFatal(e) =>
-              System.err.println(s"[graft] vector-index maintenance at epoch " +
-                s"$epoch on $path failed (will retry on a later epoch): ${e.getMessage}")
-          }
-        ()
-      }
   }
 
   /** Probe the persisted index: per query the `nprobe` nearest cells
@@ -607,11 +527,8 @@ object VectorIndex {
     val enc = BucketLayout.exchange(encodePqRows(idx, m, kc, dims.head.getInt(0)),
       col("cell"), xxhash64(col("vec_id")), cellCounts, layoutParts(spark, nlist))
     val side = codesPath(path)
-    val cur = Warehouse.currentSnapshot(spark, path)
-    Warehouse.snapshots(spark, side) match {
-      case Seq() => Warehouse.writeSnapshot(enc, side, txn = Some((PqApp, cur)))
-      case vs => Warehouse.commitSnapshot(enc, side, vs.last, txn = Some((PqApp, cur)))
-    }
+    Warehouse.replaceSnapshot(enc, side,
+      txn = Some((PqApp, Warehouse.currentSnapshot(spark, path))))
   }
 
   /** Encode ONLY index rows with no code yet and append — the X200

@@ -99,11 +99,7 @@ object GraphView {
     // land fails the tick LOUDLY here instead (r15 review); the error
     // names the repair (re-seed) rather than silently double-counting
     def stamp(df: org.apache.spark.sql.DataFrame, path: String): Unit = {
-      Warehouse.snapshots(spark, path) match {
-        case Seq() => Warehouse.writeSnapshot(df, path, txn = Some((AppId, cur)))
-        case vs => Warehouse.commitSnapshot(df, path, vs.last,
-          txn = Some((AppId, cur)))
-      }
+      Warehouse.replaceSnapshot(df, path, txn = Some((AppId, cur)))
       require(Warehouse.lastCommittedEpoch(spark, path, AppId).contains(cur),
         s"maintainGraphView($path): the view committed but its cursor record " +
           s"(txnEpoch=$cur) did not publish — a later tick would re-fold this " +

@@ -1369,12 +1369,22 @@ object Warehouse {
     val (g, flushQuarantine, expMetrics) = expectationGate(
       generatedAlign(idd, path, "writeSnapshot"), path, "writeSnapshot")
     expMetrics.arm()
+    val dir = new org.apache.hadoop.fs.Path(s"$path/v=$next")
+    val preexisting = fs.exists(dir)
     val expCounts =
       try {
         constraintGuard(g, path, "writeSnapshot")
-          .write.mode(SaveMode.ErrorIfExists).parquet(s"$path/v=$next")
+          .write.mode(SaveMode.ErrorIfExists).parquet(dir.toString)
         expMetrics.collect()
-      } catch { case t: Throwable => expMetrics.disarm(); throw t }
+      } catch {
+        // a write that dies mid-job leaves its version dir behind, which
+        // [[snapshots]] would list as committed: remove the dir this
+        // write created (never one that existed before it)
+        case t: Throwable =>
+          expMetrics.disarm()
+          if (!preexisting) fs.delete(dir, true)
+          throw t
+      }
     publishManifestBestEffort(fs, spark, path, next, g.schema.json,
       expectations = expCounts, txn = txn)
     val tmp = new org.apache.hadoop.fs.Path(s"$path/_latest.tmp")
@@ -1386,6 +1396,17 @@ object Warehouse {
     flushQuarantine()
     next
   }
+
+  /** Commit `df` as the table's whole next version: [[writeSnapshot]]
+    * on a table with no versions yet, else [[commitSnapshot]] against
+    * the newest one. Returns the committed version.
+    */
+  def replaceSnapshot(df: DataFrame, path: String,
+                      txn: Option[(String, Long)] = None): Long =
+    snapshots(df.sparkSession, path) match {
+      case Seq() => writeSnapshot(df, path, txn)
+      case vs => commitSnapshot(df, path, vs.last, txn = txn)
+    }
 
   /** Thrown by [[commitSnapshot]] when another writer claimed the
     * version first — the retry-able half of optimistic concurrency:
@@ -1950,39 +1971,44 @@ object Warehouse {
                           maintainEvery: Int = 0,
                           maintainPolicy: MaintenancePolicy = MaintenancePolicy())
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    batchSink(source, path, checkpoint, maintainEvery, maintainPolicy) { (batch, epoch) =>
+      commitStreamBatch(batch, path, appId, epoch, changeFeed); ()
+    }
+
+  /** The `foreachBatch` loop every snapshot sink shares: `commit` lands
+    * each micro-batch, then every `maintainEvery` epochs (0 = never) the
+    * in-loop maintenance tick (r13) runs [[maintainSnapshot]] with
+    * `maintainPolicy`, so a streaming-ingest table never drifts into the
+    * small-file/stale-stats state that needed a separate job. Safe under
+    * epoch replay: every maintenance component is idempotent and no-ops
+    * when clean.
+    *
+    * The tick is BEST-EFFORT (r13 ADVICE): the epoch's commit has already
+    * succeeded by the time it runs, and a skipped tick re-fires on a later
+    * epoch — so a transient hygiene failure (e.g. a
+    * SnapshotConflictException escaping the sidecar sweep's bounded CAS
+    * retry under a concurrent analyzer) logs and continues instead of
+    * killing the streaming query. Ingestion availability is not coupled
+    * to maintenance success.
+    */
+  def batchSink(source: DataFrame, path: String, checkpoint: String,
+                maintainEvery: Int, maintainPolicy: MaintenancePolicy)
+               (commit: (DataFrame, Long) => Unit)
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     source.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        commitStreamBatch(batch, path, appId, epoch, changeFeed)
-        // r13: the in-loop maintenance tick — every `maintainEvery`
-        // epochs the sink runs [[maintainSnapshot]] after its commit,
-        // so a streaming-ingest table never drifts into the
-        // small-file/stale-stats state that needed a separate job.
-        // Safe under epoch replay: every component is idempotent and
-        // no-ops when clean.
+        commit(batch, epoch)
         if (maintainEvery > 0 && epoch % maintainEvery == maintainEvery - 1)
-          maintainTickBestEffort(batch.sparkSession, path, maintainPolicy, epoch)
+          try { maintainSnapshot(batch.sparkSession, path, maintainPolicy); () }
+          catch {
+            case scala.util.control.NonFatal(e) =>
+              System.err.println(
+                s"[graft] maintenance tick at epoch $epoch on $path failed " +
+                  s"(will retry on a later epoch): ${e.getMessage}")
+          }
         ()
       }
-
-  /** Best-effort wrapper for the in-sink maintenance tick (r13 ADVICE):
-    * the epoch's DATA commit has already succeeded by the time the
-    * tick runs, and every maintenance component is idempotent and
-    * re-fires on a later epoch — so a transient hygiene failure (e.g.
-    * a SnapshotConflictException escaping the sidecar sweep's bounded
-    * CAS retry under a concurrent analyzer) must not kill the whole
-    * streaming query. Log and continue; ingestion availability is not
-    * coupled to maintenance success.
-    */
-  private def maintainTickBestEffort(spark: SparkSession, path: String,
-                                     policy: MaintenancePolicy, epoch: Long): Unit =
-    try { maintainSnapshot(spark, path, policy); () }
-    catch {
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(
-          s"[graft] maintenance tick at epoch $epoch on $path failed " +
-            s"(will retry on a later epoch): ${e.getMessage}")
-    }
 
   /** One exactly-once streaming MERGE micro-batch — [[commitStreamBatch]]'s
     * upsert-shaped sibling, and why the txn gate matters MORE here: a
@@ -2030,14 +2056,9 @@ object Warehouse {
                                maintainEvery: Int = 0,
                                maintainPolicy: MaintenancePolicy = MaintenancePolicy())
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    source.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        commitStreamMerge(batch, path, appId, epoch, keys, clauses, changeFeed)
-        if (maintainEvery > 0 && epoch % maintainEvery == maintainEvery - 1)
-          maintainTickBestEffort(batch.sparkSession, path, maintainPolicy, epoch)
-        ()
-      }
+    batchSink(source, path, checkpoint, maintainEvery, maintainPolicy) { (batch, epoch) =>
+      commitStreamMerge(batch, path, appId, epoch, keys, clauses, changeFeed); ()
+    }
 
   /** REPLICA APPLY — close the CDC loop: take the recorded change feed
     * of `src` for versions `fromVersion..toVersion` and apply it to

@@ -130,10 +130,16 @@ class PostingIndexSpec extends SparkSpec {
     val torn = Seq((3, 64, Warehouse.currentSnapshot(spark, root) + 5))
       .toDF("n", "nb", "stamp")
     Warehouse.commitSnapshot(torn, side, Warehouse.currentSnapshot(spark, side))
-    val e = intercept[IllegalArgumentException] {
-      PostingIndex.containmentAgainstIndex(docs, root)
+    // probes AND refreshes refuse, and the refusal writes nothing
+    val vTorn = Warehouse.currentSnapshot(spark, root)
+    Seq[() => Any](
+      () => PostingIndex.containmentAgainstIndex(docs, root),
+      () => PostingIndex.refreshPostingIndex(Seq((10L, "r s t u v")).toDF("doc_id", "text"), root)
+    ).foreach { op =>
+      val e = intercept[IllegalArgumentException](op())
+      assert(e.getMessage.contains("crashed between"))
+      assert(Warehouse.currentSnapshot(spark, root) === vTorn)
     }
-    assert(e.getMessage.contains("crashed between"))
     val e2 = intercept[IllegalArgumentException] {
       PostingIndex.containmentAgainstIndex(docs, freshRoot("pidx_none"))
     }
@@ -151,7 +157,7 @@ class PostingIndexSpec extends SparkSpec {
     val mem = MemoryStream[Long]
     val src = mem.toDF().withColumnRenamed("value", "doc_id").join(docs, Seq("doc_id"))
     def drain(tag: String): Unit = {
-      val q = PostingIndex.postingIndexSink(src, root, s"$ck/$tag")
+      val q = PostingIndex.lifecycle.sink(src, root, s"$ck/$tag")
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
     }

@@ -172,10 +172,16 @@ class ShingleIndexSpec extends SparkSpec {
     val torn = Seq(("md5", 3, 64, 4, Warehouse.currentSnapshot(spark, root) + 5))
       .toDF("mode", "n", "nb", "bands", "stamp")
     Warehouse.commitSnapshot(torn, metaSide, Warehouse.currentSnapshot(spark, metaSide))
-    val e = intercept[IllegalArgumentException] {
-      ShingleIndex.nearDupAgainstShingleIndex(docs, root)
+    // probes AND refreshes refuse, and the refusal writes nothing
+    val vTorn = Warehouse.currentSnapshot(spark, root)
+    Seq[() => Any](
+      () => ShingleIndex.nearDupAgainstShingleIndex(docs, root),
+      () => ShingleIndex.refreshShingleIndex(Seq((10L, "p q r s t")).toDF("doc_id", "text"), root)
+    ).foreach { op =>
+      val e = intercept[IllegalArgumentException](op())
+      assert(e.getMessage.contains("crashed between"))
+      assert(Warehouse.currentSnapshot(spark, root) === vTorn)
     }
-    assert(e.getMessage.contains("crashed between"))
     // unbuilt path refuses loudly, naming the fix
     val e2 = intercept[IllegalArgumentException] {
       ShingleIndex.nearDupAgainstShingleIndex(docs, freshRoot("shidx_none"))
@@ -195,7 +201,7 @@ class ShingleIndexSpec extends SparkSpec {
     val mem = MemoryStream[Long]
     val src = mem.toDF().withColumnRenamed("value", "doc_id").join(docs, Seq("doc_id"))
     def drain(tag: String): Unit = {
-      val q = ShingleIndex.shingleIndexSink(src, root, s"$ck/$tag")
+      val q = ShingleIndex.lifecycle.sink(src, root, s"$ck/$tag")
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
     }
@@ -208,7 +214,7 @@ class ShingleIndexSpec extends SparkSpec {
       "replayed docs must not index twice")
     // an unbuilt path refuses at sink CONSTRUCTION, not mid-stream
     val e = intercept[IllegalArgumentException] {
-      ShingleIndex.shingleIndexSink(src, freshRoot("shidx_nosink"), s"$ck/none")
+      ShingleIndex.lifecycle.sink(src, freshRoot("shidx_nosink"), s"$ck/none")
     }
     assert(e.getMessage.contains("buildShingleIndex"))
   }
@@ -298,7 +304,7 @@ class ShingleIndexSpec extends SparkSpec {
     val expected = ShingleIndex.nearDupAgainstShingleIndex(inc, root, threshold = 0.3)
       .collect().toSeq
     val filesBefore = Warehouse.readSnapshot(spark, root).inputFiles.length
-    val rep = ShingleIndex.maintainShingleIndex(spark, root,
+    val rep = ShingleIndex.lifecycle.maintain(spark, root,
       Warehouse.MaintenancePolicy(targetFileBytes = 1L << 16))
     assert(rep.optimized.nonEmpty, "small append files must bin-pack")
     val all = Warehouse.readSnapshot(spark, root).inputFiles.toSet

@@ -93,7 +93,7 @@ class TextIndexSpec extends SparkSpec {
     val mem = MemoryStream[Long]
     val src = mem.toDF().withColumnRenamed("value", "doc_id").join(docs, Seq("doc_id"))
     def drain(tag: String): Unit = {
-      val q = TextIndex.textIndexSink(src, root, s"$ck/$tag")
+      val q = TextIndex.lifecycle.sink(src, root, s"$ck/$tag")
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
     }
@@ -112,10 +112,16 @@ class TextIndexSpec extends SparkSpec {
     val torn = Seq((1L, 1L, 1L, 64, Warehouse.currentSnapshot(spark, root) + 5, 0L))
       .toDF("n_docs", "n_dl", "sum_dl", "nb", "stamp", "synced_seq")
     Warehouse.commitSnapshot(torn, side, Warehouse.currentSnapshot(spark, side))
-    val e = intercept[IllegalArgumentException] {
-      TextIndex.bm25TopKIndexed(spark, root, queries, k = 5)
+    // probes AND refreshes refuse, and the refusal writes nothing
+    val vTorn = Warehouse.currentSnapshot(spark, root)
+    Seq[() => Any](
+      () => TextIndex.bm25TopKIndexed(spark, root, queries, k = 5),
+      () => TextIndex.refreshTextIndex(docs.filter($"doc_id" >= 41), root)
+    ).foreach { op =>
+      val e = intercept[IllegalArgumentException](op())
+      assert(e.getMessage.contains("crashed between"))
+      assert(Warehouse.currentSnapshot(spark, root) === vTorn)
     }
-    assert(e.getMessage.contains("crashed between"))
     // unbuilt path refuses loudly
     val e2 = intercept[IllegalArgumentException] {
       TextIndex.bm25TopKIndexed(spark, freshRoot("tidx_none"), queries, k = 5)
@@ -163,7 +169,7 @@ class TextIndexSpec extends SparkSpec {
     val filesBefore = Warehouse.readSnapshot(spark, root).inputFiles.length
     // a tiny target keeps SEVERAL output files at this toy size — one
     // giant file could never skip anything (the VectorIndexSpec trick)
-    val rep = TextIndex.maintainTextIndex(spark, root,
+    val rep = TextIndex.lifecycle.maintain(spark, root,
       Warehouse.MaintenancePolicy(targetFileBytes = 8192))
     assert(rep.optimized.nonEmpty, "small append files must bin-pack")
     val all = Warehouse.readSnapshot(spark, root).inputFiles.toSet

@@ -257,7 +257,7 @@ class VectorIndexSpec extends SparkSpec {
     val src = mem.toDF().withColumnRenamed("value", "vec_id")
       .join(vecs(0 until 400), Seq("vec_id"))
     def drain(ck: String): Unit = {
-      val q = VectorIndex.vectorIndexSink(src, root, s"$dir/$ck")
+      val q = VectorIndex.lifecycle.sink(src, root, s"$dir/$ck")
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
     }
@@ -280,37 +280,42 @@ class VectorIndexSpec extends SparkSpec {
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
     // an unbuilt index path refuses at sink CONSTRUCTION, not mid-stream
     val e = intercept[IllegalArgumentException] {
-      VectorIndex.vectorIndexSink(src, freshRoot("vidx_nosink"), s"$dir/ck_no")
+      VectorIndex.lifecycle.sink(src, freshRoot("vidx_nosink"), s"$dir/ck_no")
     }
     assert(e.getMessage.contains("buildIvfIndex"))
   }
 
   test("index maintenance keeps the cell layout: compaction never kills probe pruning (r14)") {
-    val root = freshRoot("vidx_maint")
-    val dir = java.nio.file.Files.createTempDirectory("graft_vidx_mck").toString
-    VectorIndex.buildIvfIndex(vecs(10 until 60), root, nlist = 8, bucketed = true)
-    // several small streamed appends: the decay scenario — per-epoch
-    // files, each spanning few rows
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.streaming.Trigger
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = MemoryStream[Long]
-    val src = mem.toDF().withColumnRenamed("value", "vec_id")
-      .join(vecs(0 until 400), Seq("vec_id"))
-    def drain(): Unit = {
-      val q = VectorIndex.vectorIndexSink(src, root, s"$dir/ck")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+    val dir = java.nio.file.Files.createTempDirectory("graft_vidx_mck").toString
+    // several small streamed appends: the decay scenario — per-epoch
+    // files, each spanning few rows. `drain(j, every, policy)` streams
+    // epoch j's 30 vectors through the lifecycle sink.
+    def streamed(tag: String, maintainEvery: Int, policy: Warehouse.MaintenancePolicy)
+        : (String, (Int, Int, Warehouse.MaintenancePolicy) => Unit) = {
+      val root = freshRoot(tag)
+      VectorIndex.buildIvfIndex(vecs(10 until 60), root, nlist = 8, bucketed = true)
+      val mem = MemoryStream[Long]
+      val src = mem.toDF().withColumnRenamed("value", "vec_id")
+        .join(vecs(0 until 400), Seq("vec_id"))
+      def drain(j: Int, every: Int, p: Warehouse.MaintenancePolicy): Unit = {
+        mem.addData((60L + j * 30) until (90L + j * 30): _*)
+        val q = VectorIndex.lifecycle.sink(src, root, s"$dir/$tag", every, p)
+          .trigger(Trigger.AvailableNow()).start()
+        q.awaitTermination()
+      }
+      (0 until 4).foreach(drain(_, maintainEvery, policy))
+      (root, drain)
     }
-    (0 until 4).foreach { j =>
-      mem.addData((60L + j * 30) until (90L + j * 30): _*); drain()
-    }
+    val (root, _) = streamed("vidx_maint", 0, Warehouse.MaintenancePolicy())
     val filesBefore = Warehouse.readSnapshot(spark, root).inputFiles.length
     // the index-aware tick bin-packs WITH the cell layout forced; a
     // tiny target keeps SEVERAL output files at this toy size, so the
     // post-compaction pruning claim is testable (one giant file could
     // never skip anything)
-    val r = VectorIndex.maintainIvfIndex(spark, root,
+    val r = VectorIndex.lifecycle.maintain(spark, root,
       Warehouse.MaintenancePolicy(targetFileBytes = 8192))
     assert(r.optimized.nonEmpty, "small per-epoch files must bin-pack")
     val all = Warehouse.readSnapshot(spark, root).inputFiles.toSet
@@ -324,6 +329,27 @@ class VectorIndexSpec extends SparkSpec {
     val want = Similarity.ivfTopKBucketed(q1, vecs(10 until 180), k = 5,
       nlist = 8, nprobe = 2)
     assert(probe.exceptAll(want).isEmpty && want.exceptAll(probe).isEmpty)
+    // the same appends through the sink's in-loop tick (every 2nd
+    // epoch) bin-pack with the cell layout forced just the same
+    val (ticked, drain) = streamed("vidx_maint_tick", 2,
+      Warehouse.MaintenancePolicy(targetFileBytes = 8192))
+    val tickedFiles = Warehouse.readSnapshot(spark, ticked).inputFiles.toSet
+    assert(tickedFiles.size < filesBefore, s"$filesBefore -> ${tickedFiles.size}")
+    val tickedProbe = VectorIndex.ivfTopKIndexed(q1, ticked, k = 5, nprobe = 2)
+    assert(tickedProbe.inputFiles.toSet.size < tickedFiles.size,
+      s"in-loop ticks must keep probes skipping files: " +
+        s"${tickedProbe.inputFiles.length}/${tickedFiles.size}")
+    assert(tickedProbe.exceptAll(want).isEmpty && want.exceptAll(tickedProbe).isEmpty)
+    // a tick that throws never fails the stream: each epoch's refresh
+    // has already landed when its tick runs
+    val failing = Warehouse.MaintenancePolicy(analyzeColumns = Seq("no_such_column"))
+    val e = intercept[IllegalArgumentException] {
+      VectorIndex.lifecycle.maintain(spark, ticked, failing)
+    }
+    assert(e.getMessage.contains("not in snapshot schema"))
+    (4 until 6).foreach(drain(_, 1, failing))
+    assert(Warehouse.readSnapshot(spark, ticked).count() === 50 + 6 * 30,
+      "every epoch's vectors must be indexed")
   }
 
   test("drift ledger: drifted increments trip indexAdvice, stationary ones don't (r15)") {
@@ -383,10 +409,16 @@ class VectorIndexSpec extends SparkSpec {
       .toDF("cell", "centroid", "mode", "stamp",
         "base_n", "base_resid", "inc_n", "inc_resid")
     Warehouse.commitSnapshot(torn, side, Warehouse.currentSnapshot(spark, side))
-    val e = intercept[IllegalArgumentException] {
-      VectorIndex.ivfTopKIndexed(vecs(0 until 2), root, k = 5)
+    // probes AND refreshes refuse, and the refusal writes nothing
+    val vTorn = Warehouse.currentSnapshot(spark, root)
+    Seq[() => Any](
+      () => VectorIndex.ivfTopKIndexed(vecs(0 until 2), root, k = 5),
+      () => VectorIndex.refreshIvfIndex(vecs(60 until 70), root)
+    ).foreach { op =>
+      val e = intercept[IllegalArgumentException](op())
+      assert(e.getMessage.contains("crashed between"))
+      assert(Warehouse.currentSnapshot(spark, root) === vTorn)
     }
-    assert(e.getMessage.contains("crashed between"))
   }
 
   test("kmeans production mode: recall floor vs brute force; centroids persist and reload") {

@@ -107,7 +107,7 @@ class ConflictRetrySpec extends SparkSpec {
       // maintenance tick losing the CAS to the sink re-derives and
       // re-packs (idempotent — it reads current state per attempt)
       { Warehouse.retryOnConflict() {
-          TextIndex.maintainTextIndex(spark, troot,
+          TextIndex.lifecycle.maintain(spark, troot,
             Warehouse.MaintenancePolicy(targetFileBytes = 1L << 16))
         }; () })
     assert(Warehouse.readSnapshot(spark, troot)

@@ -2,7 +2,6 @@ package graft.ext
 
 import graft.store.Warehouse
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.max
 import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** The lifecycle the four persisted index families share —
@@ -14,7 +13,11 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * tables: the DATA table at `path`, clustered on one probe key
   * (`clusterCol`), and a small SIDE table at `path + sideSuffix` holding
   * the construction every probe and refresh must reproduce, with a
-  * `stamp` column.
+  * `stamp` column. Probes and refreshes read the side rows through
+  * [[sideRows]]: one driver collect per committed side version
+  * ([[Warehouse.collectSnapshot]]), so a probe against an index whose
+  * side table has not changed since the last call runs no Spark job for
+  * it.
   *
   * Stamp protocol. [[commitBuild]] commits the side table FIRST, stamped
   * with the PREDICTED data version, then the data table. A build that
@@ -70,9 +73,17 @@ final case class PersistedIndex(
     Warehouse.replaceSnapshot(data, path)
   }
 
+  /** The side table's rows at `version` (default: the current one),
+    * memoized per committed side version ([[Warehouse.collectSnapshot]]).
+    */
+  def sideRows(spark: SparkSession, path: String,
+               version: Option[Long] = None): IndexedSeq[Row] =
+    Warehouse.collectSnapshot(spark, sidePath(path), version)
+
   /** Refuse an index that was never built, or whose last build tore
     * between its two commits. `stamp` (the side table's) is evaluated
-    * only once the side table is known to exist.
+    * only once the side table is known to exist. Both checks list the
+    * tables on every call; only the stamp may come from memoized rows.
     */
   def requireBuilt(spark: SparkSession, path: String, stamp: => Long): Unit = {
     require(Warehouse.snapshots(spark, sidePath(path)).nonEmpty,
@@ -88,8 +99,8 @@ final case class PersistedIndex(
   /** [[requireBuilt]] reading the stored stamp itself — for callers that
     * do not read the side table anyway. */
   def requireBuilt(spark: SparkSession, path: String): Unit =
-    requireBuilt(spark, path, Warehouse.readSnapshot(spark, sidePath(path))
-      .agg(max("stamp")).head().getLong(0))
+    requireBuilt(spark, path,
+      sideRows(spark, path).map(_.getAs[Long]("stamp")).max)
 
   /** [[Warehouse.maintainSnapshot]] with the layout key forced. */
   def maintain(spark: SparkSession, path: String,

@@ -114,8 +114,8 @@ object PostingIndex {
 
   private def readMeta(spark: SparkSession, path: String): Meta = {
     lazy val meta = {
-      val r = Warehouse.readSnapshot(spark, metaPath(path)).select("n", "nb", "stamp").head()
-      Meta(r.getInt(0), r.getInt(1), r.getLong(2))
+      val r = lifecycle.sideRows(spark, path).head
+      Meta(r.getAs[Int]("n"), r.getAs[Int]("nb"), r.getAs[Long]("stamp"))
     }
     lifecycle.requireBuilt(spark, path, meta.stamp)
     meta

@@ -25,6 +25,14 @@ import org.apache.spark.sql.functions._
   * the probed postings/cells. The fusion input frames never exceed
   * 2 × queries × depth rows.
   *
+  * Per batch that is two Spark queries: the probe-frame collect that
+  * plans the vector side's read set, and the fused result. The indexes'
+  * side rows (text meta, centroids) are re-read only when their side
+  * table commits a new version ([[PersistedIndex.sideRows]]); the
+  * probed postings are scanned once, df included; and both ranked lists
+  * arrive hash-partitioned on the same `bigint` query_id, so the fuse's
+  * group-by and rank add no exchange.
+  *
   * Scoring parity is inherited, not re-derived: the indexed BM25 probe
   * is score-for-score [[TextAnalysis.bm25TopK]] (TextIndexSpec), the
   * indexed IVF probe is plan-for-plan [[Similarity.ivfTopK]]'s probe
@@ -91,7 +99,7 @@ object Retrieval {
       "pqShortlist and allowedDocs don't compose: the PQ probe cannot apply " +
         "the allow set, and fusing a filtered lexical list with an unfiltered " +
         "semantic one would silently re-admit disallowed docs")
-    val lex = TextIndex.bm25TopKIndexed(spark, textIdxPath, queries, depth,
+    val lex = TextIndex.bm25Probe(spark, textIdxPath, queries, depth,
         allowed = allowedDocs)
       .select(col("query_id"), col("doc_id"), col("rank"))
     val sem = pqShortlist match {

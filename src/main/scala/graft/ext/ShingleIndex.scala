@@ -204,9 +204,9 @@ object ShingleIndex {
 
   private def readMeta(spark: SparkSession, path: String): Meta = {
     lazy val meta = {
-      val r = Warehouse.readSnapshot(spark, metaPath(path))
-        .select("mode", "n", "nb", "bands", "stamp").head()
-      Meta(r.getString(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getLong(4))
+      val r = lifecycle.sideRows(spark, path).head
+      Meta(r.getAs[String]("mode"), r.getAs[Int]("n"), r.getAs[Int]("nb"),
+        r.getAs[Int]("bands"), r.getAs[Long]("stamp"))
     }
     lifecycle.requireBuilt(spark, path, meta.stamp)
     meta

@@ -1,7 +1,7 @@
 package graft.ext
 
 import graft.store.Warehouse
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** PERSISTED LEXICAL (BM25) INDEX (X253, r15) — the X250 move applied
@@ -204,14 +204,13 @@ object TextIndex {
   private case class Meta(nDocs: Long, nDl: Long, sumDl: Long, nb: Int,
                           stamp: Long, syncedSeq: Long)
 
+  private def metaOf(r: Row): Meta =
+    Meta(r.getAs[Long]("n_docs"), r.getAs[Long]("n_dl"), r.getAs[Long]("sum_dl"),
+      r.getAs[Int]("nb"), r.getAs[Long]("stamp"), r.getAs[Long]("synced_seq"))
+
   /** The meta row, read through the torn-build check. */
   private def readMetaRow(spark: SparkSession, path: String): Meta = {
-    lazy val meta = {
-      val r = Warehouse.readSnapshot(spark, metaPath(path))
-        .select("n_docs", "n_dl", "sum_dl", "nb", "stamp", "synced_seq").head()
-      Meta(r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3),
-        r.getLong(4), r.getLong(5))
-    }
+    lazy val meta = metaOf(lifecycle.sideRows(spark, path).head)
     lifecycle.requireBuilt(spark, path, meta.stamp)
     meta
   }
@@ -318,9 +317,8 @@ object TextIndex {
       val side = metaPath(path)
       Warehouse.retryOnConflict() {
         val curSide = Warehouse.currentSnapshot(spark, side)
-        val m = Warehouse.readSnapshot(spark, side, Some(curSide))
-          .select("n_docs", "n_dl", "sum_dl", "nb", "stamp", "synced_seq").head()
-        val pin = m.getLong(5)
+        val m = metaOf(lifecycle.sideRows(spark, path, Some(curSide)).head)
+        val pin = m.syncedSeq
         val folded = Warehouse.committedEpochs(spark, side, FoldApp)
         // idempotent per version (r16 review): if a racing
         // repairTextIndexMeta already pinned past v (its re-derivation
@@ -338,8 +336,7 @@ object TextIndex {
           val newPin = stamped.filter(_ > pin).toSeq.sorted
             .iterator.takeWhile(covered).foldLeft(pin)((_, s) => s)
           Warehouse.commitSnapshot(
-            Seq((m.getLong(0) + dn, m.getLong(1) + dndl, m.getLong(2) + dsl,
-              m.getInt(3), m.getLong(4), newPin))
+            Seq((m.nDocs + dn, m.nDl + dndl, m.sumDl + dsl, m.nb, m.stamp, newPin))
               .toDF("n_docs", "n_dl", "sum_dl", "nb", "stamp", "synced_seq"),
             side, curSide, txn = Some((FoldApp, v)))
         }
@@ -382,8 +379,9 @@ object TextIndex {
     * ranking with the corpus scan replaced by a driver-planned pruned
     * read — the query terms' buckets are computed driver-side (the
     * build's own hash), the read opens only those buckets' files, df
-    * per term is exact from the probed postings, and the scoring
-    * formula/rounding is the inline ranking's verbatim.
+    * per term is exact from the probed postings (one read serves df
+    * and scoring), and the scoring formula/rounding is the inline
+    * ranking's verbatim.
     *
     * `allowed` (r16) is FILTERED retrieval: a one-column (`doc_id`)
     * frame semi-joined into the CANDIDATES before the rank cut —
@@ -401,43 +399,53 @@ object TextIndex {
   def bm25TopKIndexed(spark: SparkSession, path: String,
                       queries: Seq[(Int, Seq[String])], k: Int,
                       k1: Double = 1.2, b: Double = 0.75,
-                      allowed: Option[DataFrame] = None): DataFrame = {
+                      allowed: Option[DataFrame] = None): DataFrame =
+    bm25Probe(spark, path, queries, k, k1, b, allowed)
+      .select(col("query_id").cast("int").as("query_id"), col("rank"), col("doc_id"),
+        col("bm25"))
+
+  /** [[bm25TopKIndexed]] with a `bigint` query_id, the type the ranked
+    * list is hash-partitioned on by its rank window — the form
+    * [[Retrieval.retrieveFused]] fuses, so the fuse's group-by and rank
+    * reuse that partitioning instead of adding exchanges.
+    */
+  private[ext] def bm25Probe(spark: SparkSession, path: String,
+                             queries: Seq[(Int, Seq[String])], k: Int,
+                             k1: Double = 1.2, b: Double = 0.75,
+                             allowed: Option[DataFrame] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(queries.nonEmpty && k >= 1)
     val meta = readMeta(spark, path)
     import spark.implicits._
     val qterms = queries
-      .flatMap { case (qid, ts) => ts.map(t => (qid, t.toLowerCase)) }
+      .flatMap { case (qid, ts) => ts.map(t => (qid.toLong, t.toLowerCase)) }
       .toDF("query_id", "token")
     val terms = queries.flatMap(_._2.map(_.toLowerCase)).distinct
     // all-empty term lists: the inline ranking returns empty, so must
     // the indexed probe (r15 review — the runs read would otherwise
     // refuse its empty id set)
     if (terms.isEmpty)
-      return spark.emptyDataset[(Int, Int, Long, Double)]
+      return spark.emptyDataset[(Long, Int, Long, Double)]
         .toDF("query_id", "rank", "doc_id", "bm25")
     // driver-planned read set: the terms' buckets, no scan decides it.
-    // Consumed twice (dfreq + the scoring join) WITHOUT a checkpoint:
-    // unlike the inline bm25TopK — whose double-consumed subtree is
-    // the corpus tokenization — this subtree is already the pruned
-    // bucket read, so re-scanning probed buckets costs less than an
-    // eager materialization job, and the plan keeps its file lineage
-    // (the probed-files poison pin reads it)
+    // Read ONCE: df per term is a count over a token window on the same
+    // read (all postings of a term share its bucket, so the probed read
+    // holds every one of them), taken BEFORE the allow-set semi-join so
+    // collection statistics stay global. Trade-off: each probed term's
+    // postings are counted in one task — a term's window is one
+    // partition, so a term with a huge posting list is one long task.
     val hit = terms.map(t => bucketOf(t, meta.nb)).distinct
     val idx = Warehouse.readSnapshotRuns(spark, path, "bucket", hit)
       .filter(col("token").isin(terms: _*))
       .select(col("token"), col("doc_id"),
-        col("tf").cast("double").as("tf"), col("dl").cast("double").as("dl"))
-    val dfreq = idx.groupBy("token").agg(count(lit(1)).cast("double").as("df_t"))
+        col("tf").cast("double").as("tf"), col("dl").cast("double").as("dl"),
+        count(lit(1)).over(Window.partitionBy("token")).cast("double").as("df_t"))
     val nDocs = meta.nDocs.toDouble
     // avg over docs WITH a length, the inline avg()'s null-skipping
     val avgDl = if (meta.nDl > 0) meta.sumDl.toDouble / meta.nDl.toDouble else 0.0
-    // df above comes from the UNFILTERED probed postings — global
-    // stats; the allow set only prunes candidates below
     val cand = allowed.fold(idx)(a =>
       idx.join(a.select(col("doc_id")), Seq("doc_id"), "left_semi"))
     cand.join(broadcast(qterms), Seq("token"))
-      .join(broadcast(dfreq), Seq("token"))
       .withColumn("contrib",
         log(lit(1.0) + (lit(nDocs) - col("df_t") + 0.5) / (col("df_t") + 0.5)) *
           (col("tf") * (k1 + 1.0)) /

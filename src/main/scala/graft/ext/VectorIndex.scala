@@ -1,7 +1,7 @@
 package graft.ext
 
 import graft.store.Warehouse
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -156,21 +156,25 @@ object VectorIndex {
   private def layoutParts(spark: SparkSession, nlist: Int): Int =
     math.max(1, math.min(nlist, spark.sessionState.conf.numShufflePartitions))
 
-  /** The stored centroids, cell-ordered, plus the index mode — read
-    * through the torn-build check ([[PersistedIndex.requireBuilt]]).
+  /** The centroids table's rows, cell-ordered — read through the
+    * torn-build check ([[PersistedIndex.requireBuilt]]).
     */
-  private def readCentroids(spark: SparkSession, path: String)
-      : (Array[Array[Double]], String, Int) = {
+  private def centroidRows(spark: SparkSession, path: String): IndexedSeq[Row] = {
     lazy val rows = {
-      val rs = Warehouse.readSnapshot(spark, centroidsPath(path))
-        .select("cell", "centroid", "mode", "stamp").collect()
-        .sortBy(_.getInt(0))
+      val rs = lifecycle.sideRows(spark, path).sortBy(_.getAs[Int]("cell"))
       require(rs.nonEmpty, s"VectorIndex($path): centroids table is empty")
       rs
     }
-    lifecycle.requireBuilt(spark, path, rows.head.getLong(3))
-    val mode = rows.head.getString(2)
-    (rows.map(_.getSeq[Double](1).toArray), mode, rows.length)
+    lifecycle.requireBuilt(spark, path, rows.head.getAs[Long]("stamp"))
+    rows
+  }
+
+  /** The stored centroids, cell-ordered, plus the index mode and nlist. */
+  private def readCentroids(spark: SparkSession, path: String)
+      : (Array[Array[Double]], String, Int) = {
+    val rows = centroidRows(spark, path)
+    (rows.map(_.getAs[Seq[Double]]("centroid").toArray).toArray,
+      rows.head.getAs[String]("mode"), rows.length)
   }
 
   /** Assign the incremental `corpus` rows NOT yet indexed to the
@@ -244,7 +248,7 @@ object VectorIndex {
         (r.getLong(1), if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toMap
     val side = centroidsPath(path)
     val cur = Warehouse.currentSnapshot(spark, side)
-    val rows = Warehouse.readSnapshot(spark, side, Some(cur)).collect()
+    val rows = lifecycle.sideRows(spark, path, Some(cur))
     import spark.implicits._
     val merged = rows.map { r =>
       val cell = r.getInt(0)
@@ -296,18 +300,19 @@ object VectorIndex {
                   minIncrementRows: Long = 1000L,
                   shareDriftBound: Double = 0.25,
                   residualGrowthBound: Double = 1.5): IndexAdvice = {
-    readCentroids(spark, path) // torn-build check rides the read
-    val rows = Warehouse.readSnapshot(spark, centroidsPath(path))
-      .select("cell", "base_n", "base_resid", "inc_n", "inc_resid").collect()
-    val baseTot = rows.map(_.getLong(1)).sum
-    val incTot = rows.map(_.getLong(3)).sum
+    val rows = centroidRows(spark, path)
+    val at = rows.head.fieldIndex _
+    val (baseN, baseR, incN, incR) =
+      (at("base_n"), at("base_resid"), at("inc_n"), at("inc_resid"))
+    val baseTot = rows.map(_.getLong(baseN)).sum
+    val incTot = rows.map(_.getLong(incN)).sum
     if (incTot < minIncrementRows)
       return IndexAdvice(rebuildAdvised = false, None, None, incTot,
         s"only $incTot post-build rows (< $minIncrementRows) — not enough signal")
     val shareDrift =
       if (baseTot == 0L) None
       else Some(rows.map { r =>
-        math.abs(r.getLong(1).toDouble / baseTot - r.getLong(3).toDouble / incTot)
+        math.abs(r.getLong(baseN).toDouble / baseTot - r.getLong(incN).toDouble / incTot)
       }.sum / 2.0)
     def wMean(nAt: Int, rAt: Int): Option[Double] = {
       val wr = rows.collect { case r if !r.isNullAt(rAt) && r.getLong(nAt) > 0 =>
@@ -316,8 +321,8 @@ object VectorIndex {
       if (n == 0) None else Some(wr.map { case (w, x) => w * x }.sum / n)
     }
     val residualRatio = for {
-      b <- wMean(1, 2) if b > 0.0
-      i <- wMean(3, 4)
+      b <- wMean(baseN, baseR) if b > 0.0
+      i <- wMean(incN, incR)
     } yield i / b
     val driftHit = shareDrift.exists(_ >= shareDriftBound)
     val residHit = residualRatio.exists(_ >= residualGrowthBound)
@@ -369,6 +374,58 @@ object VectorIndex {
     increment.join(best, Seq("vec_id"), "left")
   }
 
+  /** One probe batch, planned: `probes` holds one row
+    * (query_id, qv, qn, cell) per (query, probed cell), `cells` the
+    * sorted distinct probed cells (bounded by nlist, a driver scalar by
+    * the same budget as the centroid read; contiguous runs collapse into
+    * one pruned range read each), `dim` the query dimension.
+    */
+  private case class ProbePlan(probes: DataFrame, cells: IndexedSeq[Int], dim: Int)
+
+  /** Plan a probe batch against the stored `centroids` (as
+    * [[readCentroids]] returns them): per query the `nprobe` nearest
+    * cells (stored-centroid distance in kmeans mode; the X220 rule in
+    * bucketed mode), with `qv` as the query vector column. With `broadcastProbes` the probe frame is evaluated ONCE:
+    * its rows are collected, the cell set and dimension come from them
+    * on the driver, and the rows re-enter the plan as a broadcast local
+    * relation. Without it the frame stays distributed and the cell set
+    * and dimension are one aggregate over it. None when nothing is
+    * probed (an empty batch).
+    */
+  private def probePlan(queries: DataFrame, qv: Column,
+                        centroids: (Array[Array[Double]], String, Int),
+                        nprobe: Int, broadcastProbes: Boolean): Option[ProbePlan] = {
+    val (cents, mode, nlist) = centroids
+    val np = math.min(nprobe, nlist)
+    val base = queries.select(col("vec_id").as("query_id"), qv.as("qv"),
+      Similarity.l2norm(col("embedding")).as("qn"), col("embedding"))
+    val probes =
+      if (mode == BucketedMode)
+        base.select(col("query_id"), col("qv"), col("qn"),
+            explode(sequence(lit(0), lit(np - 1))).as("i"))
+          .select(col("query_id"), col("qv"), col("qn"),
+            pmod(col("query_id") + col("i"), lit(nlist)).cast("int").as("cell"))
+      else
+        base.select(col("query_id"), col("qv"), col("qn"),
+          explode(graft.functions.native.centroidProbes(col("embedding"), cents, np))
+            .as("cell"))
+    if (broadcastProbes) {
+      val rows = probes.collect()
+      if (rows.isEmpty) None
+      else Some(ProbePlan(
+        broadcast(queries.sparkSession.createDataFrame(
+          java.util.Arrays.asList(rows: _*), probes.schema)),
+        rows.map(_.getInt(3)).distinct.sorted.toIndexedSeq,
+        rows.iterator.map(_.get(1)).collectFirst { case v: collection.Seq[_] => v.size }
+          .getOrElse(-1)))
+    } else {
+      val r = probes.agg(sort_array(collect_set(col("cell"))), max(size(col("qv")))).head()
+      val cells = r.getSeq[Int](0).toIndexedSeq
+      if (cells.isEmpty) None
+      else Some(ProbePlan(probes, cells, if (r.isNullAt(1)) -1 else r.getInt(1)))
+    }
+  }
+
   /** Probe the persisted index: per query the `nprobe` nearest cells
     * (stored-centroid distance in kmeans mode; the X220 rule in
     * bucketed mode), a PRUNED read of exactly the probed cells' files,
@@ -379,11 +436,12 @@ object VectorIndex {
     * An EMPTY query frame returns an empty result with the right
     * schema — probing nothing is a no-op, not an error (r15: a
     * screen-before-ingest loop may legitimately see empty
-    * micro-batches). `broadcastProbes` (default true) hints the
-    * probe side into the cell join — the right call for the typical
-    * bounded query batch; a CORPUS-SIZED probe frame (a full re-screen
-    * of one table against another) should pass false and let the
-    * planner/AQE pick the join (the probe side is not bounded by
+    * micro-batches). `broadcastProbes` (default true) collects the
+    * probe rows once and broadcasts them into the cell join — the
+    * right call for the typical bounded query batch (one probe job,
+    * then the probe itself); a CORPUS-SIZED probe frame (a full
+    * re-screen of one table against another) should pass false and let
+    * the planner/AQE pick the join (the probe side is not bounded by
     * construction here, unlike the centroid read — r15, the r14
     * review).
     *
@@ -416,39 +474,18 @@ object VectorIndex {
                      allowed: Option[DataFrame] = None): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val spark = queries.sparkSession
-    val (cents, mode, nlist) = readCentroids(spark, path)
-    val np = math.min(nprobe, nlist)
-    val probes =
-      if (mode == BucketedMode)
-        queries.select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-            Similarity.l2norm(col("embedding")).as("qn"),
-            explode(sequence(lit(0), lit(np - 1))).as("i"))
-          .select(col("query_id"), col("qv"), col("qn"),
-            pmod(col("query_id") + col("i"), lit(nlist)).cast("int").as("cell"))
-      else
-        queries.select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-          Similarity.l2norm(col("embedding")).as("qn"),
-          explode(graft.functions.native.centroidProbes(col("embedding"), cents, np))
-            .as("cell"))
-    // the distinct probed-cell set is bounded by nlist (a driver
-    // scalar by the same budget as the centroid read); contiguous
-    // runs collapse into one pruned range read each, so the file
-    // planning stays one manifest pass per run
-    val cellsHit = probes.select("cell").distinct()
-      .collect().map(_.getInt(0)).sorted
-    if (cellsHit.isEmpty) {
+    val plan = probePlan(queries, col("embedding"), readCentroids(spark, path), nprobe,
+      broadcastProbes).getOrElse {
       import spark.implicits._
       return spark.emptyDataset[(Long, Long, Long, Double)]
         .toDF("query_id", "rank", "neighbor_id", "sim")
     }
-    val pruned = Warehouse
-      .readSnapshotRuns(spark, path, "cell", cellsHit.toIndexedSeq)
+    val pruned = Warehouse.readSnapshotRuns(spark, path, "cell", plan.cells)
     val withAttr = where.fold(pruned)(pruned.filter)
     val corpusIdx = allowed.fold(withAttr)(a =>
         withAttr.join(a.select(col("vec_id")), Seq("vec_id"), "left_semi"))
       .select(col("vec_id").as("neighbor_id"), col("embedding").as("cv"), col("cell"))
-    val probeSide = if (broadcastProbes) broadcast(probes) else probes
-    val scored = probeSide.join(corpusIdx, Seq("cell"))
+    val scored = plan.probes.join(corpusIdx, Seq("cell"))
       .select(col("query_id"), col("neighbor_id"),
         (Similarity.dot(col("qv"), col("cv"))
           / (col("qn") * Similarity.l2norm(col("cv")))).as("sim"))
@@ -507,7 +544,8 @@ object VectorIndex {
     */
   def buildPqCodes(spark: SparkSession, path: String, m: Int = 8,
                    kc: Int = 16): Long = {
-    val (_, _, nlist) = readCentroids(spark, path) // torn-build check rides
+    val ledger = centroidRows(spark, path) // torn-build check rides
+    val nlist = ledger.length
     val idx = Warehouse.readSnapshot(spark, path)
       .select("cell", "vec_id", "embedding")
     val dims = idx.select(size(col("embedding")).as("d")).limit(1).collect()
@@ -519,9 +557,8 @@ object VectorIndex {
     // (stale after a failed ledger fold): that shifts file sizing
     // only — placement stays contiguous-by-cell either way.
     val cellCounts = {
-      val rows = Warehouse.readSnapshot(spark, centroidsPath(path))
-        .select("cell", "base_n", "inc_n").collect()
-      val byCell = rows.map(r => r.getInt(0) -> (r.getLong(1) + r.getLong(2))).toMap
+      val byCell = ledger.map(r => r.getAs[Int]("cell") ->
+        (r.getAs[Long]("base_n") + r.getAs[Long]("inc_n"))).toMap
       Array.tabulate(nlist)(i => byCell.getOrElse(i, 0L))
     }
     val enc = BucketLayout.exchange(encodePqRows(idx, m, kc, dims.head.getInt(0)),
@@ -590,7 +627,7 @@ object VectorIndex {
     require(k >= 1, s"k must be >= 1, got $k")
     require(shortlist >= k, s"shortlist $shortlist must be >= k $k")
     val spark = queries.sparkSession
-    val (cents, mode, nlist) = readCentroids(spark, path)
+    val centroids = readCentroids(spark, path)
     val side = codesPath(path)
     require(Warehouse.snapshots(spark, side).nonEmpty,
       s"pqTopKIndexedCodes($path): no codes table — buildPqCodes first")
@@ -627,9 +664,9 @@ object VectorIndex {
     import spark.implicits._
     def emptyResult = spark.emptyDataset[(Long, Long, Long, Double, Double)]
       .toDF("query_id", "rank", "neighbor_id", "sim", "adc")
-    val qdims = queries.select(size(col("embedding")).as("d")).limit(1).collect()
-    if (qdims.isEmpty) return emptyResult
-    val dim = qdims.head.getInt(0)
+    val plan = probePlan(queries, col("embedding").cast("array<double>"), centroids,
+      nprobe, broadcastProbes).getOrElse(return emptyResult)
+    val dim = plan.dim
     val pRow = Warehouse.readSnapshot(spark, side).select("m", "kc").head()
     val (m, kc) = (pRow.getInt(0), pRow.getInt(1))
     require(dim % m == 0,
@@ -637,23 +674,6 @@ object VectorIndex {
         s"codes' m=$m subspaces — wrong index for these queries")
     val subDim = dim / m
     val cb = Similarity.md5PqCodebooks(m, kc, subDim)
-    val probes =
-      if (mode == BucketedMode)
-        queries.select(col("vec_id").as("query_id"),
-            col("embedding").cast("array<double>").as("qv"),
-            Similarity.l2norm(col("embedding")).as("qn"),
-            explode(sequence(lit(0), lit(math.min(nprobe, nlist) - 1))).as("i"))
-          .select(col("query_id"), col("qv"), col("qn"),
-            pmod(col("query_id") + col("i"), lit(nlist)).cast("int").as("cell"))
-      else
-        queries.select(col("vec_id").as("query_id"),
-          col("embedding").cast("array<double>").as("qv"),
-          Similarity.l2norm(col("embedding")).as("qn"),
-          explode(graft.functions.native.centroidProbes(col("embedding"), cents,
-            math.min(nprobe, nlist))).as("cell"))
-    val cellsHit = probes.select("cell").distinct()
-      .collect().map(_.getInt(0)).sorted
-    if (cellsHit.isEmpty) return emptyResult
     // PQ-decode from the STORED code: chosen codewords looked up from
     // the codebooks, concatenated — Σⱼ qⱼ·c_codeⱼ then evaluates as
     // pqTopKPortable's ONE sequential dot (pinned order). r16: one
@@ -661,11 +681,10 @@ object VectorIndex {
     // m-way concat-of-typedlit-lookups — exact codebook copies, so the
     // downstream dot is bit-identical.
     val dec = graft.functions.native.pqDecode(col("code"), cb)
-    val codesRead = Warehouse.readSnapshotRuns(spark, side, "cell", cellsHit.toIndexedSeq)
+    val codesRead = Warehouse.readSnapshotRuns(spark, side, "cell", plan.cells)
       .select(col("cell"), col("vec_id").as("neighbor_id"), dec.as("dec"))
-    val probeSide = if (broadcastProbes) broadcast(probes) else probes
     val wS = Window.partitionBy("query_id").orderBy(desc("adc"), asc("neighbor_id"))
-    val short = probeSide.join(codesRead, Seq("cell"))
+    val short = plan.probes.join(codesRead, Seq("cell"))
       .select(col("query_id"), col("qv"), col("qn"), col("neighbor_id"),
         Similarity.dot(col("qv"), col("dec")).as("adc"))
       .withColumn("__srn", row_number().over(wS))
@@ -676,7 +695,7 @@ object VectorIndex {
     // (the same driver-scalar budget as the probe plan itself)
     val ids = short.select("neighbor_id").distinct().collect().map(_.getLong(0))
     if (ids.isEmpty) return emptyResult
-    val raw = Warehouse.readSnapshotRuns(spark, path, "cell", cellsHit.toIndexedSeq)
+    val raw = Warehouse.readSnapshotRuns(spark, path, "cell", plan.cells)
       .filter(col("vec_id").isin(ids: _*))
       .select(col("vec_id").as("neighbor_id"),
         col("embedding").cast("array<double>").as("cv"))

@@ -1,6 +1,6 @@
 package graft.store
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -578,7 +578,7 @@ object Warehouse {
     val staging = new org.apache.hadoop.fs.Path(s"$path.staging-$tag")
     val retired = new org.apache.hadoop.fs.Path(s"$path.retired-$tag")
     try {
-      df.write.mode(SaveMode.Overwrite).parquet(staging.toString)
+      stagedWrite(spark)(df.write.mode(SaveMode.Overwrite).parquet(staging.toString))
       check()
     } catch {
       case e: Throwable =>
@@ -590,6 +590,28 @@ object Warehouse {
     require(fs.rename(staging, dest), s"cannot promote $staging")
     if (existed) fs.delete(retired, true)
     SchemaCache.invalidate(path) // a full rewrite may change the schema
+  }
+
+  /** Run a write into a staging dir. When the write's job fails, its
+    * other tasks keep running after the abort and can still create
+    * dirs or files under the staging dir, so on failure this waits, up
+    * to 30 s, until no task of the write's jobs is active: the caller's
+    * delete of the staging dir then leaves nothing behind.
+    */
+  private def stagedWrite(spark: SparkSession)(write: => Unit): Unit = {
+    val sc = spark.sparkContext
+    val tag = s"graft-staged-write-${java.util.UUID.randomUUID()}"
+    sc.addJobTag(tag)
+    try write
+    catch {
+      case e: Throwable =>
+        val st = sc.statusTracker
+        def active = st.getJobIdsForTag(tag).iterator.flatMap(st.getJobInfo(_))
+          .flatMap(_.stageIds).flatMap(st.getStageInfo(_)).exists(_.numActiveTasks > 0)
+        val deadline = System.nanoTime() + java.util.concurrent.TimeUnit.SECONDS.toNanos(30)
+        while (active && System.nanoTime() < deadline) Thread.sleep(10)
+        throw e
+    } finally sc.removeJobTag(tag)
   }
 
   /** Append-only landing of a batch into the parquet table at `path`,
@@ -611,7 +633,7 @@ object Warehouse {
       s"$path.staging-${java.util.UUID.randomUUID().toString.take(8)}")
     val (counted, rows) = observeCount(df)
     try {
-      counted.write.parquet(staging.toString)
+      stagedWrite(df.sparkSession)(counted.write.parquet(staging.toString))
       val n = rows()
       if (n > 0) {
         if (!fs.exists(dest)) require(fs.rename(staging, dest), s"cannot promote $staging")
@@ -3388,6 +3410,44 @@ object Warehouse {
             "missing/unreadable manifest; a listing read would silently drop its " +
             "carried-forward rows — restore the manifest or vacuum the partial version")
         spark.read.parquet(s"$path/v=$v")
+    }
+  }
+
+  /** [[collectSnapshot]]'s memo: path -> (version, manifest text, rows),
+    * one entry per path. */
+  private val collectCache =
+    new java.util.concurrent.ConcurrentHashMap[String, (Long, String, IndexedSeq[Row])]()
+
+  /** A SMALL snapshot's rows on the driver (immutable: callers share
+    * them) — the pinned `version` or the current one — memoized per
+    * path. The memo key is the resolved version together with that
+    * version's manifest text, never the version number alone: the
+    * manifest names the committed data files, so a table deleted and
+    * rebuilt at the same version misses. A hit costs the `_latest` and
+    * manifest reads and no Spark job. A manifest-less version (pre-
+    * manifest, or a crash between promote and manifest publish) is read
+    * uncached. Meant for side tables of a few rows (index meta,
+    * centroids) that probes read on every call but that change only
+    * when a build or refresh commits.
+    */
+  def collectSnapshot(spark: SparkSession, path: String,
+                      version: Option[Long] = None): IndexedSeq[Row] = {
+    def rows(df: DataFrame) = scala.collection.immutable.ArraySeq.unsafeWrapArray(df.collect())
+    val v = resolveVersion(spark, path, version)
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    readManifest(fs, path, v) match {
+      case None => rows(readSnapshot(spark, path, Some(v)))
+      case Some(m) =>
+        val key = new org.apache.hadoop.fs.Path(path).toString
+        val text = m.toString
+        Option(collectCache.get(key)) match {
+          case Some((cv, ct, cached)) if cv == v && ct == text => cached
+          case _ =>
+            val read = rows(manifestPlannedRead(spark, path, v, m))
+            collectCache.put(key, (v, text, read))
+            read
+        }
     }
   }
 

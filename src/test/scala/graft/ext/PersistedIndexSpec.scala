@@ -51,4 +51,19 @@ class PersistedIndexSpec extends SparkSpec {
       assert(Warehouse.readSnapshot(spark, root).count() === 30)
     }
   }
+
+  test("side rows are re-read when a deleted index is rebuilt at the same version") {
+    val root = freshRoot("pidx_rebuilt")
+    lifecycle.commitBuild(rows(20), root)(meta)
+    assert(lifecycle.sideRows(spark, root).map(_.getAs[Int]("nb")).toSeq === Seq(4))
+    Seq(root, lifecycle.sidePath(root)).foreach { p =>
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(p))
+    }
+    lifecycle.commitBuild(rows(20), root) { stamp => Seq((8, stamp)).toDF("nb", "stamp") }
+    assert(Warehouse.snapshots(spark, lifecycle.sidePath(root)) === Seq(1L),
+      "the rebuilt side table reuses v=1")
+    assert(lifecycle.sideRows(spark, root).map(_.getAs[Int]("nb")).toSeq === Seq(8),
+      "a memo keyed on the version number alone would serve the deleted table's row")
+    lifecycle.requireBuilt(spark, root)
+  }
 }

@@ -83,6 +83,33 @@ class RetrievalSpec extends SparkSpec {
     assert(rows(fused) === rows(Similarity.rrfFuse(Seq(lexInline, semInline), k = 10)))
   }
 
+  test("a warm fused batch is two SQL executions: the probe-frame collect and the result") {
+    val (troot, vroot) = builtIndexes()
+    // a session of its own: its listener hears only this test's queries
+    val session = spark.newSession()
+    val qv = graft.Tables.embeddings(session, dir).filter(col("vec_id").isin(qids: _*))
+    def batch() = Retrieval.retrieveFused(session, troot, vroot, queries, qv,
+      k = 10, depth = 20, nprobe = 4).collect()
+    val first = batch() // reads the side rows of both indexes
+    val executions = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    ns: Long): Unit = executions.incrementAndGet()
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    e: Exception): Unit = executions.incrementAndGet()
+    }
+    session.listenerManager.register(listener)
+    try {
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+      executions.set(0)
+      val second = batch()
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+      assert(executions.get() === 2,
+        "side rows come from the memo; the probe frame is evaluated once")
+      assert(second.toSet === first.toSet)
+    } finally session.listenerManager.unregister(listener)
+  }
+
   test("the fused probe reads ONLY probed buckets/cells across BOTH indexes (poison pin)") {
     val (troot, vroot) = builtIndexes()
     val e = graft.Tables.embeddings(spark, dir)

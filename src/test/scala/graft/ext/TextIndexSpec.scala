@@ -48,6 +48,9 @@ class TextIndexSpec extends SparkSpec {
     // n_docs/avg_dl fold exactly, df reads exactly from the postings
     val root2 = freshRoot("tidx_grow")
     TextIndex.buildTextIndex(docs.filter($"doc_id" % 2 === 0), root2)
+    // probed before the refresh: its meta row is memoized at the old
+    // scalars, and the refreshed probe below must not see them
+    assert(rows(TextIndex.bm25TopKIndexed(spark, root2, queries, k = 10)).nonEmpty)
     assert(TextIndex.refreshTextIndex(docs, root2).nonEmpty)
     val got2 = rows(TextIndex.bm25TopKIndexed(spark, root2, queries, k = 10))
     assert(got2 === want,

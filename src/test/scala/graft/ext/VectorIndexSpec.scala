@@ -33,11 +33,15 @@ class VectorIndexSpec extends SparkSpec {
     val corpus = vecs(10 until 150)
     val queries = vecs(0 until 10)
     VectorIndex.buildIvfIndex(corpus, root, nlist = 16, bucketed = true)
-    val got = VectorIndex.ivfTopKIndexed(queries, root, k = 10, nprobe = 4)
     val want = Similarity.ivfTopKBucketed(queries, corpus, k = 10,
       nlist = 16, nprobe = 4)
-    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
-      "the persisted probe must reproduce the inline twin exactly")
+    // broadcast (collected once) and distributed probe frames answer alike
+    Seq(true, false).foreach { bp =>
+      val got = VectorIndex.ivfTopKIndexed(queries, root, k = 10, nprobe = 4,
+        broadcastProbes = bp)
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+        s"the persisted probe must reproduce the inline twin exactly (broadcastProbes=$bp)")
+    }
     // covered corpus -> refresh no-op, no new version
     val vBefore = Warehouse.currentSnapshot(spark, root)
     assert(VectorIndex.refreshIvfIndex(corpus, root).isEmpty)
@@ -129,6 +133,10 @@ class VectorIndexSpec extends SparkSpec {
     val got = probe()
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
       "the persisted ADC probe must be score-for-score the portable twin")
+    val distributed = VectorIndex.pqTopKIndexedCodes(queries, root, k = 10,
+      nprobe = 4, shortlist = 30, broadcastProbes = false)
+    assert(distributed.exceptAll(want).isEmpty && want.exceptAll(distributed).isEmpty,
+      "a distributed probe frame must answer like the broadcast one")
     // codes refresh is a no-op on a covered index
     assert(VectorIndex.refreshPqCodes(spark, root).isEmpty)
     // index grows -> the count gate refuses until the codes re-cover
@@ -399,6 +407,9 @@ class VectorIndexSpec extends SparkSpec {
     assert(empty.columns.toSeq === Seq("query_id", "rank", "neighbor_id", "sim")
       && empty.isEmpty)
     assert(VectorIndex.nearDupAgainstIndex(vecs(0 until 0), root).isEmpty)
+    // a real probe first, so the refusal below is checked with the
+    // centroid rows already memoized
+    assert(VectorIndex.ivfTopKIndexed(vecs(0 until 2), root, k = 5).count() === 10)
     // simulate the torn rebuild: centroids advance (stamp ahead), the
     // paired index commit never lands
     import spark.implicits._

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark harness (driver contract): runs every `SparkEntry.queries`
   * entry on `SPARK_GRAFT_SF_DIR`, prints ONE JSON line with per-query
   * and total seconds.
@@ -25,58 +23,15 @@ object Bench {
     // give the per-query MIN a fighting chance against cross-query GC/
     // JIT noise (r3 saw 0.3-0.6s phantom regressions that vanished in
     // isolation — min-of-2 kept exactly one noisy sample per query)
-    val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Raise the object-hash-agg fallback threshold (default 128
-      // in-memory keys!) so collect_list/collect_set aggregations — the
-      // posting-list build in the dedup family — stay hash-based
-      // instead of degenerating to a per-partition sort (measured
-      // −0.5 s on q_dedup_ngram at sf0.1). Memory-safe here because
-      // posting lists are bounded by dfCap; the sort fallback remains
-      // available past 1M groups per task.
-      // NOTE (r4): byte-based AQE coalesce tuning (parallelismFirst=
-      // false + small advisory size) was measured and REJECTED: it
-      // cut 10-20% off tiny 150-row shuffles but cost 2x on the
-      // CPU-heavy explode/agg queries whose shuffles are small in
-      // bytes but large in work (36.4 s vs 30.9 s full-suite).
-      // NOTE (r6): two more floor levers measured and REJECTED for the
-      // same reason — they help the 25-query floor subset ~1.1 s but
-      // cost the 15 byte-heavy queries the same 1.1 s back:
-      // spark.shuffle.compress=false (posting-list/pair shuffles are
-      // LZ4-friendly; raw blocks cost more IO than the codec saves)
-      // and spark.sql.autoBroadcastJoinThreshold=64m (20 MB build
-      // sides broadcast fine for dim joins but serialize the big
-      // dedup/cluster join builds into every task).
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OBJAGG", "1000000"))
-      // r16 (guide §4, codegen): Spark's whole-stage/expression codegen
-      // compile cache holds only 100 classes by default — a 237-query
-      // suite evicts EVERYTHING between passes, so min-of-passes was
-      // measuring Janino RE-compilation on every pass of every query,
-      // not the queries. Sized to hold the suite's distinct codegen
-      // units, pass 2+ reuses pass 1's compiled classes. Measured
-      // (15-key subset, 3 passes, min-of-passes): 37.8 s → 23.5 s
-      // (−38%), every key faster (q_graph_pagerank 2.96 → 1.18,
-      // q_update_dv 4.40 → 2.51, q_ma7 0.54 → 0.24), floor 0.112 →
-      // 0.099. NOT a local-mode trick: cache pressure is per-driver
-      // JVM and core-count-independent, and a production service
-      // re-planning the same query shapes wants exactly this. Caches
-      // compiled BYTECODE keyed on generated source — never data, so
-      // every invocation still computes from the parquet inputs.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000"))
-      // dev aid: SPARK_GRAFT_CONF="k=v;k2=v2" overlays arbitrary confs
-      // for A/B runs (the driver never sets it)
-      .config(sys.env.get("SPARK_GRAFT_CONF").toSeq
-        .flatMap(_.split(";")).map(_.split("=", 2)).collect {
-          case Array(k, v) => k -> v
-        }.toMap)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val defaultPasses = 3
+    val passes = sys.env.get("SPARK_GRAFT_BENCH_PASSES").map(_.toInt).getOrElse(defaultPasses)
+    // dev aid: SPARK_GRAFT_CONF="k=v;k2=v2" overlays arbitrary confs
+    // for A/B runs (the driver never sets it)
+    val overlay = sys.env.get("SPARK_GRAFT_CONF").toSeq
+      .flatMap(_.split(";")).map(_.split("=", 2)).collect {
+        case Array(k, v) => k -> v
+      }
+    val spark = GraftSession.local(cpus.toInt, overlay)
     // warm the JVM/codegen/scheduler path once so startup cost isn't
     // attributed to whichever query happens to run first
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -97,50 +52,12 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
-    // The heap-heavy keys whose in-suite numbers carry single-JVM
-    // contention noise (measured r8/r9: up to +35% from 167 neighbors'
-    // GC/JIT churn — SCALE.md "In-suite vs isolated"). An ISOLATED
-    // min-of-3 for each is measured FIRST, on the still-fresh JVM —
-    // the same state a SPARK_GRAFT_BENCH_ONLY run sees — and reported
-    // as a separate "isolated" map so real regressions on these keys
-    // stop hiding inside suite-contention drift (r9 verdict #5);
-    // tools/bench_diff.py diffs both maps.
-    // r13 additions: the r12 verdict's heavy keys (q_pca_power is a
-    // declared verification twin; the two graph keys carry the r12
-    // perf-weak marks, fixed this round — in-suite r12 baselines
-    // 5.33 / 3.49 / 3.16 s) so the in-suite vs isolated delta stays
-    // on record for them too
-    // r14 additions: the r13 verdict's two remaining heavy keys, so the
-    // one-pass CM build and the adamic wedge join have a clean
-    // before/after record (r13 in-suite baselines 2.82 / 2.07 s)
-    val isolatedKeys = Seq("q_corpus_prepare", "q_bpe_encode", "q_dedup_keep",
-      "q_dedup_cluster", "q_stream_ohlc",
-      "q_pca_power", "q_graph_ppr", "q_graph_pagerank",
-      "q_heavy_hitters_cm", "q_graph_adamic",
-      // r14 newcomers whose in-suite numbers carry scenario
-      // choreography (two edge builds + diff / an index build): the
-      // isolated record keeps their real cost on file from day one —
-      // plus the remaining graph walk not yet in the map (its in-suite
-      // 1.70 s vs DuckDB 0.45 reads 3.8×; the steady-state number is
-      // what the weighted-PPR plan actually costs)
-      "q_incr_degrees_cdf", "q_ann_ivf_indexed", "q_graph_ppr_weighted",
-      // r15: the r14 verdict's two remaining >2x-proxy keys without a
-      // measured floor (jaccard's posting-pair build; fusion's two
-      // retrievers + rrf — decomposed in RetrievalFloorProbe), plus
-      // the round's new index-build keys (both build a persisted
-      // index inside the timed region by design)
-      "q_graph_jaccard", "q_rrf_fusion",
-      "q_dedup_shingle_indexed", "q_graph_view_tick", "q_bm25_indexed",
-      "q_decontam_indexed",
-      // r16: the indexed serving loop builds BOTH persisted indexes in
-      // its timed region (the indexed-key precedent); the steady-state
-      // probe floor is on RetrievalFloorProbe's record
-      "q_rrf_indexed",
-      // r16 second batch: all three build persisted structures in
-      // their timed regions (q_rrf_filtered two indexes, q_ann_filtered
-      // an attr-carrying index, q_ann_pq_indexed an index + its codes)
-      "q_rrf_filtered", "q_ann_filtered", "q_ann_pq_indexed", "q_rrf_pq")
-      .filter(SparkEntry.queries.contains)
+    // The QuerySpec.isolated keys get an ISOLATED min-of-5, measured
+    // FIRST on the still-fresh JVM — the same state a
+    // SPARK_GRAFT_BENCH_ONLY run sees — and reported as a separate
+    // "isolated" map so real regressions on them stop hiding inside
+    // suite-contention drift; tools/bench_diff.py diffs both maps.
+    val isolatedKeys = SparkEntry.specs.collect { case (k, q) if q.isolated => k }.toSeq.sorted
     // Stage the cross-key shared tables OUTSIDE the timed region: the
     // packed-documents stage table feeds both q_pack_sequences and
     // q_pack_util, and without this the FIRST of the two to run pays
@@ -156,7 +73,10 @@ object Bench {
         try {
           SparkEntry.queries(name)(spark, sfDir).write.mode("overwrite").format("noop").save()
           true
-        } catch { case _: Throwable => false }
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          false
+        }
       val dt = (System.nanoTime() - t0) / 1e9
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
       spark.sharedState.cacheManager.clearCache()
@@ -197,6 +117,11 @@ object Bench {
         else prev
     }
 
+    // a failed key reads -1 in its map and stays out of the total;
+    // "failed" names it up front, where the compact line's cut of the
+    // slowest-first map cannot drop it
+    val failed = (best.toSeq ++ isolated).collect { case (k, v) if v < 0 => k }.distinct.sorted
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val qs = best.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
     val total = best.values.filter(_ >= 0).sum
     val iso =
@@ -205,7 +130,7 @@ object Bench {
         .map { case (k, v) => s"\"" + k + "\":" + v }
         .mkString(""","isolated":{""", ",", "}")
     val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs$iso,"floor":$floor,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","failed":$failedJson,"queries":$qs$iso,"floor":$floor,"sf":"$sfDir"}"""
     // Full per-query line first, for humans reading the whole log.
     println(fullLine)
     // ALSO persist the complete map to a repo file: the driver's
@@ -214,9 +139,10 @@ object Bench {
     // of the suite (VERDICT r7 #3). A committed bench_queries.json is
     // the durable full record; tools/bench_diff.py prefers it.
     // ONLY for full default-config runs: a SPARK_GRAFT_BENCH_ONLY
-    // subset or a SPARK_GRAFT_CONF A/B overlay would clobber the
-    // committed full record with a partial/incomparable map.
-    if (only.isEmpty && sys.env.get("SPARK_GRAFT_CONF").isEmpty)
+    // subset, a SPARK_GRAFT_CONF A/B overlay or a non-default pass
+    // count would clobber the committed full record with a
+    // partial/incomparable map.
+    if (only.isEmpty && sys.env.get("SPARK_GRAFT_CONF").isEmpty && passes == defaultPasses)
       try {
         java.nio.file.Files.write(
           java.nio.file.Paths.get("bench_queries.json"),
@@ -227,13 +153,13 @@ object Bench {
     // recorded parsed:null because the full per-query line is ~4.5 KB
     // and arrived truncated). Emit a compact summary line that is
     // guaranteed to fit with room for the build tool's trailing
-    // "[success] ..." line: same metric/value/floor/sf, plus as many
+    // "[success] ..." line: same metric/value/floor/sf/failed, plus as many
     // per-query entries as fit, slowest first (the informative ones).
     def f3(v: Double) = java.lang.String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val slowestFirst = best.toSeq.sortBy { case (_, v) => -v }
       .map { case (k, v) => "\"" + k + "\":" + f3(v) }
     val budget = 1500
-    val head = s"""{"metric":"total","value":${f3(total)},"unit":"sec","nqueries":${best.size},"floor":${f3(floor)},"sf":"$sfDir","queries":{"""
+    val head = s"""{"metric":"total","value":${f3(total)},"unit":"sec","nqueries":${best.size},"floor":${f3(floor)},"sf":"$sfDir","failed":$failedJson,"queries":{"""
     val sb = new StringBuilder(head)
     var first = true
     for (e <- slowestFirst if sb.length + e.length + 2 < budget) {

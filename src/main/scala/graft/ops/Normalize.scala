@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Normalization operators — the reference's `extract` dataflow chain
@@ -45,16 +44,6 @@ object Normalize {
     df.groupBy(keys.map(col): _*)
       .agg(min_by(struct(payload.map(col): _*), ordKey).as("_first"))
       .select(df.columns.map(c => if (keys.contains(c)) col(c) else col(s"_first.$c").as(c)): _*)
-  }
-
-  /** D1 alternative via row_number — used where the full row (keys
-    * included) must survive and for ties on the order key.
-    */
-  def dedupKeepFirstRn(df: DataFrame, keys: Seq[String], order: Seq[Column]): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)
-    df.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .drop("_rn")
   }
 
   /** D2 (dag:94): total sort. A global sort is a range-partitioned

@@ -55,14 +55,7 @@ object SchemaCache {
     */
   def read(spark: SparkSession, path: String): DataFrame = {
     val schema = cache.computeIfAbsent(path, p => spark.read.parquet(p).schema)
-    val df = spark.read.schema(schema).parquet(path)
-    // dev probe (never set in committed query code): fan every table
-    // read out to cluster parallelism, to measure which queries are
-    // starved by single-row-group input files — readWide is the
-    // production form, applied per call site on measured winners
-    if (spark.conf.get("graft.probe.fanout", "false") == "true")
-      df.repartition(spark.sparkContext.defaultParallelism)
-    else df
+    spark.read.schema(schema).parquet(path)
   }
 
   /** [[read]], fanned out to cluster parallelism when — and only

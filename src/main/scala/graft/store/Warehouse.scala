@@ -1130,22 +1130,12 @@ object Warehouse {
         val qTxn = txn.map { case (app, epoch) => (s"$app#q", epoch) }
         val replayed = qTxn.exists { case (app, epoch) =>
           lastCommittedEpoch(spark, q, app).exists(_ >= epoch) }
-        if (!replayed && !bad.isEmpty) {
-          var attempts = 0
-          var done = false
-          while (!done) {
-            try {
-              appendSnapshot(bad, q,
-                snapshots(spark, q).lastOption.getOrElse(0L),
-                evolveSchema = true, txn = qTxn)
-              done = true
-            } catch {
-              case e: SnapshotConflictException =>
-                attempts += 1
-                if (attempts >= 20) throw e
-            }
+        if (!replayed && !bad.isEmpty)
+          retryOnConflict(19) {
+            appendSnapshot(bad, q,
+              snapshots(spark, q).lastOption.getOrElse(0L),
+              evolveSchema = true, txn = qTxn)
           }
-        }
       }
     (kept, flush, metrics)
   }
@@ -1941,34 +1931,30 @@ object Warehouse {
     val spark = batch.sparkSession
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // bounded CAS retry: each loss means a foreign commit advanced the
-    // version, so progress is global even when this writer spins
-    var attempts = 0
-    while (true) {
+    // bounded CAS retry (20 attempts): each loss means a foreign
+    // commit advanced the version, so progress is global even when
+    // this writer spins
+    retryOnConflict(19) {
       // the epoch gate re-checks INSIDE the retry loop (review r11): a
       // zombie driver that loses the CAS to its replacement must see
       // the replacement's epoch stamp — a single pre-loop check would
       // let the zombie re-append an already-committed epoch
       if (lastCommittedEpoch(spark, path, appId).exists(_ >= epoch))
-        return mainWriteBase(spark, path)
-      // content base = the MAIN lineage (review r11: currentSnapshot
-      // includes unpublished branch heads — a stream basing itself on
-      // one would silently publish it); version number allocated above
-      // every live version
-      val base = mainWriteBase(spark, path)
-      val next = nextVersionAbove(spark, path, base)
-      try return appendVersionFrom(batch, path, base, next, orphanGraceMs,
-        changeFeed, txn = Some((appId, epoch))) match {
-        case None => base // empty batch: no commit
-        case Some(v) => advancePointer(fs, path, v); v
-      }
-      catch {
-        case e: SnapshotConflictException =>
-          attempts += 1
-          if (attempts >= 20) throw e
+        mainWriteBase(spark, path)
+      else {
+        // content base = the MAIN lineage (review r11: currentSnapshot
+        // includes unpublished branch heads — a stream basing itself on
+        // one would silently publish it); version number allocated above
+        // every live version
+        val base = mainWriteBase(spark, path)
+        val next = nextVersionAbove(spark, path, base)
+        appendVersionFrom(batch, path, base, next, orphanGraceMs,
+          changeFeed, txn = Some((appId, epoch))) match {
+          case None => base // empty batch: no commit
+          case Some(v) => advancePointer(fs, path, v); v
+        }
       }
     }
-    sys.error("unreachable")
   }
 
   /** STREAMING SINK into the snapshot warehouse — [[readSnapshotStream]]'s
@@ -2046,20 +2032,13 @@ object Warehouse {
                         changeFeed: Boolean = false,
                         orphanGraceMs: Long = 600000L): Long = {
     val spark = batch.sparkSession
-    var attempts = 0
-    while (true) {
+    retryOnConflict(19) {
       // epoch gate inside the retry loop — see [[commitStreamBatch]]
       if (lastCommittedEpoch(spark, path, appId).exists(_ >= epoch))
-        return mainWriteBase(spark, path)
-      try return mergeIntoSnapshot(spark, path, batch, keys, clauses,
+        mainWriteBase(spark, path)
+      else mergeIntoSnapshot(spark, path, batch, keys, clauses,
         orphanGraceMs, changeFeed = changeFeed, txn = Some((appId, epoch)))
-      catch {
-        case e: SnapshotConflictException =>
-          attempts += 1
-          if (attempts >= 20) throw e
-      }
     }
-    sys.error("unreachable")
   }
 
   /** STREAMING UPSERT SINK — the Delta "streaming MERGE via

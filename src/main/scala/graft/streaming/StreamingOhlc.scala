@@ -91,10 +91,6 @@ object StreamingOhlc {
         col("open"), col("high"), col("low"), col("close"))
   }
 
-  /** Dev/profiling hook: the raw windowed stream with no sink wiring. */
-  def debugStream(spark: SparkSession, eventsPath: String, queryName: String): DataFrame =
-    ohlcStream(spark, eventsPath, queryName)
-
   /** Bounded replay into an in-memory table: complete output mode so
     * the memory sink holds every window.
     */

@@ -1,8 +1,8 @@
 package graft.tools
 
+import graft.GraftSession
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** r16 optimization round: dump `.explain("formatted")` for declared
@@ -20,15 +20,7 @@ object DumpPlans {
     val keysArg = args.lift(1).getOrElse("all")
     val suffix = args.lift(2).getOrElse("before")
     val outDir = args.lift(3).getOrElse("plans/r16")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     val keys =
       if (keysArg == "all") graft.SparkEntry.queries.keys.toSeq.sorted
       else keysArg.split(",").toSeq

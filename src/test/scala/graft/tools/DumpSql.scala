@@ -1,25 +1,12 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths}
-
 /** Dev aid: dump SparkEntry.oracleSql as JSON without running the full
   * Verify materialization — feeds the local DuckDB proxy timing loop.
   */
 object DumpSql {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/oracle_sql.json")
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = graft.SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(out), json)
+    graft.Verify.writeOracleSql(out)
     println(s"wrote ${graft.SparkEntry.oracleSql.size} entries to $out")
   }
 }

@@ -1,7 +1,7 @@
 package graft.tools
 
-import graft.{SparkEntry, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.{GraftSession, SparkEntry, Tables}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Ad-hoc floor attribution main — not part of the driver contract.
@@ -23,12 +23,7 @@ object Floor {
   def noop(df: DataFrame): Unit = df.write.mode("overwrite").format("noop").save()
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     val dir = "/root/testdata/sf0.1"
     spark.range(1000).selectExpr("sum(id)").collect()
 

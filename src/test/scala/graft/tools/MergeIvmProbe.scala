@@ -1,7 +1,7 @@
 package graft.tools
 
+import graft.GraftSession
 import graft.store.{Ivm, Warehouse}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** 10× scale probe for the r11 write paths — ad-hoc main, companion
@@ -31,12 +31,7 @@ object MergeIvmProbe {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     val k = args.headOption.map(_.toInt).getOrElse(10)
     spark.range(1000).selectExpr("sum(id)").collect()
 

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.GraftSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
@@ -22,15 +23,7 @@ object QueryProf {
     val keys = args.lift(1).map(_.split(",").toSeq)
       .getOrElse(Seq("q_update_dv"))
     val runs = args.lift(2).map(_.toInt).getOrElse(3)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     spark.range(1000).selectExpr("sum(id)").collect()
 
     // JOB wall time attributed by the job's first stage's call site

@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.Tables
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, Tables}
 import org.apache.spark.sql.functions._
 
 /** Ad-hoc decomposition of q_rrf_fusion's wall time at sf0.1 (r15 —
@@ -20,12 +19,7 @@ import org.apache.spark.sql.functions._
   */
 object RetrievalFloorProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     val dir = "/root/testdata/sf0.1"
     spark.range(1000).selectExpr("sum(id)").collect()
 

@@ -1,7 +1,7 @@
 package graft.tools
 
-import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.{GraftSession, Tables}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** 10× scale probe — ad-hoc main, not part of the driver contract.
@@ -29,13 +29,7 @@ object ScaleProbe {
     if (sys.env.get("GRAFT_PROBE_ONLY").forall(_ == name)) body
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     val dir = "/root/testdata/sf0.1"
     val k = args.headOption.map(_.toInt).getOrElse(10)
     spark.range(1000).selectExpr("sum(id)").collect()

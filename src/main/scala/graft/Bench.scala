@@ -64,8 +64,14 @@ object Bench {
     // pack+write while the second measures only a parquet scan —
     // which key "looks slow" would depend on sort order, not work
     // (ADVICE r7). Eager staging makes both keys measure the same
-    // thing: a scan of the checkpointed packing assignment.
-    SparkEntry.prestage(spark, sfDir)
+    // thing: a scan of the checkpointed packing assignment. A failed
+    // stage (an sf dir without documents) is reported and the run goes
+    // on: the keys that need the table then fail on their own and are
+    // listed under "failed".
+    try SparkEntry.prestage(spark, sfDir)
+    catch { case e: Exception =>
+      System.err.println(s"[bench] prestage failed: ${e.getMessage}")
+    }
     def runOnce(name: String): Double = {
       System.gc()
       val t0 = System.nanoTime()

@@ -661,19 +661,6 @@ object Warehouse {
     })
   }
 
-  /** Versioned snapshot write — time travel for the single-writer
-    * warehouse: each write lands a complete immutable version under
-    * `path/v=<n>/`, then the `_latest` pointer file is swapped via
-    * write-to-temp + atomic rename. Readers resolve the pointer (or an
-    * explicit version) and scan exactly one version directory — old
-    * versions stay readable until [[expireSnapshots]] drops them.
-    * This is the two-phase POINTER-swap shape that object stores need
-    * (directory rename is not atomic there; a one-line manifest swap
-    * is) — the same trade documented on [[rewriteAtomic]], flipped:
-    * rewriteAtomic moves the data dir, this moves only the pointer.
-    * Snapshot isolation for free: a reader holding version n is
-    * unaffected by writer progress to n+1.
-    */
   /** Delta-style CHECK constraints on a snapshot table — declared
     * once, enforced on every row-writing commit path
     * ([[writeSnapshot]]/[[commitSnapshot]]/[[appendSnapshot]] and the
@@ -1368,57 +1355,21 @@ object Warehouse {
         to_json(struct(d.columns.map(col).toIndexedSeq: _*)))))
       .otherwise(lit(true)))
 
+  /** Commit `df` as the table's whole next version, against the newest
+    * one — [[commitSnapshot]] for a writer that derived `df` from no
+    * version in particular. Returns the committed version.
+    */
   def writeSnapshot(df: DataFrame, path: String,
                     txn: Option[(String, Long)] = None): Long = {
-    val spark = df.sparkSession
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val next = snapshots(spark, path).lastOption.getOrElse(0L) + 1
-    val idd = identityAlign(df, path, "writeSnapshot", {
-      val (c, st) = identityRule(fs, path).get
-      identityHwmAt(spark, fs, path, next - 1, c, st)
-    })
-    val (g, flushQuarantine, expMetrics) = expectationGate(
-      generatedAlign(idd, path, "writeSnapshot"), path, "writeSnapshot")
-    expMetrics.arm()
-    val dir = new org.apache.hadoop.fs.Path(s"$path/v=$next")
-    val preexisting = fs.exists(dir)
-    val expCounts =
-      try {
-        constraintGuard(g, path, "writeSnapshot")
-          .write.mode(SaveMode.ErrorIfExists).parquet(dir.toString)
-        expMetrics.collect()
-      } catch {
-        // a write that dies mid-job leaves its version dir behind, which
-        // [[snapshots]] would list as committed: remove the dir this
-        // write created (never one that existed before it)
-        case t: Throwable =>
-          expMetrics.disarm()
-          if (!preexisting) fs.delete(dir, true)
-          throw t
-      }
-    publishManifestBestEffort(fs, spark, path, next, g.schema.json,
-      expectations = expCounts, txn = txn)
-    val tmp = new org.apache.hadoop.fs.Path(s"$path/_latest.tmp")
-    val out = fs.create(tmp, true)
-    out.write(next.toString.getBytes("UTF-8")); out.close()
-    val ptr = new org.apache.hadoop.fs.Path(s"$path/_latest")
-    fs.delete(ptr, false)
-    require(fs.rename(tmp, ptr), s"cannot swap pointer for $path")
-    flushQuarantine()
-    next
+    val base = currentSnapshot(df.sparkSession, path)
+    commitFull(df, path, base, base + 1, "writeSnapshot", 600000L,
+      Commit.MainRef, txn = txn)
   }
 
-  /** Commit `df` as the table's whole next version: [[writeSnapshot]]
-    * on a table with no versions yet, else [[commitSnapshot]] against
-    * the newest one. Returns the committed version.
-    */
+  /** [[commitSnapshot]] against the newest version. */
   def replaceSnapshot(df: DataFrame, path: String,
                       txn: Option[(String, Long)] = None): Long =
-    snapshots(df.sparkSession, path) match {
-      case Seq() => writeSnapshot(df, path, txn)
-      case vs => commitSnapshot(df, path, vs.last, txn = txn)
-    }
+    commitSnapshot(df, path, currentSnapshot(df.sparkSession, path), txn = txn)
 
   /** Thrown by [[commitSnapshot]] when another writer claimed the
     * version first — the retry-able half of optimistic concurrency:
@@ -1477,7 +1428,7 @@ object Warehouse {
   private def mainWriteBase(spark: SparkSession, path: String): Long = {
     val ptr = new org.apache.hadoop.fs.Path(s"$path/_latest")
     val fs = ptr.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    readPointerFile(fs, ptr)
+    Commit.readPointerFile(fs, ptr)
       .orElse(snapshots(spark, path).lastOption)
       .getOrElse(0L)
   }
@@ -1490,88 +1441,61 @@ object Warehouse {
   private def nextVersionAbove(spark: SparkSession, path: String, base: Long): Long =
     math.max(base, currentSnapshot(spark, path)) + 1
 
-  /** Optimistic-concurrency snapshot commit — the minimal
-    * Delta/Iceberg-style multi-writer protocol over the [[writeSnapshot]]
-    * layout (verdict r7 #4): MULTIPLE writers may prepare concurrently;
-    * exactly one wins each version; the loser fails with a retry-able
-    * [[SnapshotConflictException]] and NO lost update is possible.
-    *
-    *  1. The writer reads `expectedVersion` (via [[currentSnapshot]])
-    *     before deriving `df`, and commits against it.
-    *  2. Data lands in a UNIQUE staging dir — concurrent writers never
-    *     touch the same files (a direct `v=<n>` write would interleave
-    *     two Spark committers' `_temporary` trees).
-    *  3. The COMMIT POINT is one atomic exclusive create of the
-    *     `_commit-v<n+1>` marker: the compare-and-swap. On a `file://`
-    *     path this goes through NIO `Files.createFile` (O_EXCL —
-    *     Hadoop's RawLocalFileSystem implements `create(overwrite =
-    *     false)` as a non-atomic exists-then-create); on HDFS,
-    *     `FileSystem.create(overwrite=false)` is namenode-atomic; on
-    *     S3 substitute a conditional PUT. A stale writer — someone
-    *     else already claimed n+1 — deletes its staging and throws.
-    *  4. Only the claim winner renames staging → `v=<n+1>` (no name
-    *     contention by construction, belt-and-braces-checked anyway),
-    *     publishes the version's [[writeManifest manifest]] (file
-    *     list + row count + schema — listing-free reads), and
-    *     advances `_latest`, guarded so a slow v=n winner never
-    *     regresses the pointer past a faster v=n+1 commit.
-    *
-    * Readers keep snapshot isolation exactly as under single-writer
-    * [[writeSnapshot]] (which remains the uncontended fast path — same
-    * layout, so the two can be mixed as long as single-writer runs are
-    * actually single-writer). Crash recovery: a writer that dies
-    * between claim and promote leaves an orphan `_commit-v<n>` marker
-    * with no `v=<n>` data. Retrying writers treat a marker older than
-    * `orphanGraceMs` whose data dir never appeared as abandoned —
-    * delete it and re-claim (a lease by modification time, the
-    * standard crash-recovery trade: a LIVE writer stalled past the
-    * grace loses its claim and fails its promote; it retries like any
-    * conflict loser). Within the grace the version stays reserved and
-    * retriers conflict onwards normally.
+  /** Optimistic-concurrency full-content commit: `df` becomes version
+    * `expectedVersion + 1`, the version the writer read before deriving
+    * `df`. A concurrent commit of that number makes this one fail with
+    * a retry-able [[SnapshotConflictException]]; see [[Commit]] for the
+    * protocol, its crash windows and the orphan-claim lease
+    * (`orphanGraceMs`). `triage = false` skips the expectation gate.
     */
   def commitSnapshot(df: DataFrame, path: String, expectedVersion: Long,
                      orphanGraceMs: Long = 600000L,
                      triage: Boolean = true,
-                     txn: Option[(String, Long)] = None): Long = {
+                     txn: Option[(String, Long)] = None): Long =
+    commitFull(df, path, expectedVersion, expectedVersion + 1, "commitSnapshot",
+      orphanGraceMs, Commit.MainRef, triage, txn)
+
+  /** The gated full-content write and its commit, shared by
+    * [[writeSnapshot]], [[commitSnapshot]] and [[commitToBranch]]:
+    * identity mint-or-guard (high-water mark at `hwmBase`, the content
+    * lineage the write extends), generated fill-or-validate, the
+    * expectation triage, the CHECK guard, then one observed write into
+    * a fresh staging dir, committed as version `next` with a
+    * best-effort manifest. A write that dies mid-job deletes its
+    * staging dir, so it leaves nothing behind.
+    */
+  private def commitFull(df: DataFrame, path: String, hwmBase: Long, next: Long,
+                         op: String, orphanGraceMs: Long, ref: Commit.Ref,
+                         triage: Boolean = true,
+                         txn: Option[(String, Long)] = None): Long = {
     val spark = df.sparkSession
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val next = expectedVersion + 1
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tag = java.util.UUID.randomUUID().toString.take(8)
     val staging = new org.apache.hadoop.fs.Path(s"$path/_staging-$tag")
-    val idd = identityAlign(df, path, "commitSnapshot", {
+    val idd = identityAlign(df, path, op, {
       val (c, st) = identityRule(fs, path).get
-      identityHwmAt(spark, fs, path, expectedVersion, c, st)
+      identityHwmAt(spark, fs, path, hwmBase, c, st)
     })
     val (g, flushQuarantine, expMetrics) =
-      if (triage) expectationGate(generatedAlign(idd, path, "commitSnapshot"),
-        path, "commitSnapshot")
-      else (generatedAlign(idd, path, "commitSnapshot"), () => (), NoExpectationMetrics)
+      if (triage) expectationGate(generatedAlign(idd, path, op), path, op)
+      else (generatedAlign(idd, path, op), () => (), NoExpectationMetrics)
     expMetrics.arm()
     val expCounts =
       try {
-        constraintGuard(g, path, "commitSnapshot")
+        constraintGuard(g, path, op)
           .write.mode(SaveMode.ErrorIfExists).parquet(staging.toString)
         expMetrics.collect() // right after the observed write: a later
         // CAS conflict throw must not leave the listener armed
-      } catch { case t: Throwable => expMetrics.disarm(); throw t }
-    val dest = new org.apache.hadoop.fs.Path(s"$path/v=$next")
-    if (!claimVersion(fs, path, next, orphanGraceMs)) {
-      fs.delete(staging, true)
-      throw new SnapshotConflictException(path, next)
-    }
-    // defense in depth for the lease-break race: if a stalled original
-    // writer already promoted while we were breaking its "orphan"
-    // lease, back off rather than letting a rename target an existing
-    // dir (Hadoop's local-FS rename fallback would nest into it)
-    if (fs.exists(dest)) {
-      fs.delete(staging, true)
-      throw new SnapshotConflictException(path, next)
-    }
-    promoteStaging(fs, staging, dest, path, next)
-    publishManifestBestEffort(fs, spark, path, next, g.schema.json,
-      expectations = expCounts, txn = txn)
-    advancePointer(fs, path, next)
+      } catch {
+        case t: Throwable =>
+          expMetrics.disarm()
+          fs.delete(staging, true)
+          throw t
+      }
+    commitStagedVersion(spark, fs, path, staging, next, g.schema.json, Nil, None,
+      op = op, orphanGraceMs = orphanGraceMs, txn = txn, expectations = expCounts,
+      policy = Commit.BestEffort, ref = ref)
     flushQuarantine()
     next
   }
@@ -1608,27 +1532,21 @@ object Warehouse {
                      orphanGraceMs: Long = 600000L,
                      changeFeed: Boolean = false,
                      txn: Option[(String, Long)] = None,
-                     evolveSchema: Boolean = false): Long = {
-    val spark = df.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    appendVersionFrom(df, path, base = expectedVersion,
-      next = expectedVersion + 1, orphanGraceMs, changeFeed, txn, evolveSchema) match {
-      case None => currentSnapshot(spark, path) // empty batch: no commit
-      case Some(v) => advancePointer(fs, path, v); v
-    }
-  }
+                     evolveSchema: Boolean = false): Long =
+    appendVersionFrom(df, path, base = expectedVersion, next = expectedVersion + 1,
+      orphanGraceMs, Commit.MainRef, changeFeed, txn, evolveSchema)
+      .getOrElse(currentSnapshot(df.sparkSession, path)) // empty batch: no commit
 
-  /** Shared core of [[appendSnapshot]]/[[appendToBranch]]: commit
-    * version `next` whose content is version `base`'s rows plus
-    * `df`'s, new files only, base carried by manifest reference. The
-    * two numbers are decoupled because a branch append extends the
-    * BRANCH head while the number is allocated globally. Returns None
-    * for an empty batch (no commit), the committed version otherwise;
-    * no pointer is touched — that's the caller's half.
+  /** Shared core of [[appendSnapshot]]/[[commitStreamBatch]]/
+    * [[appendToBranch]]: commit version `next` whose content is version
+    * `base`'s rows plus `df`'s, new files only, base carried by
+    * manifest reference, and advance `ref`. The two numbers are
+    * decoupled because a branch append extends the BRANCH head while
+    * the number is allocated globally. Returns None for an empty batch
+    * (no commit), the committed version otherwise.
     */
   private def appendVersionFrom(dfIn: DataFrame, path: String, base: Long,
-                                next: Long, orphanGraceMs: Long,
+                                next: Long, orphanGraceMs: Long, ref: Commit.Ref,
                                 changeFeed: Boolean = false,
                                 txn: Option[(String, Long)] = None,
                                 evolveSchema: Boolean = false,
@@ -1779,8 +1697,7 @@ object Warehouse {
       orphanGraceMs = orphanGraceMs, txn = txn,
       dv = reuse.flatMap { case (m, _) => readDvState(m) },
       columnMap = if (minted.isEmpty) None else Some(cmap),
-      cdfStaging = cdfStaging, advance = false,
-      expectations = expCounts)
+      cdfStaging = cdfStaging, expectations = expCounts, ref = ref)
     flushQuarantine()
     Some(next)
   }
@@ -1929,8 +1846,6 @@ object Warehouse {
                         changeFeed: Boolean = false,
                         orphanGraceMs: Long = 600000L): Long = {
     val spark = batch.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // bounded CAS retry (20 attempts): each loss means a foreign
     // commit advanced the version, so progress is global even when
     // this writer spins
@@ -1947,12 +1862,9 @@ object Warehouse {
         // one would silently publish it); version number allocated above
         // every live version
         val base = mainWriteBase(spark, path)
-        val next = nextVersionAbove(spark, path, base)
-        appendVersionFrom(batch, path, base, next, orphanGraceMs,
-          changeFeed, txn = Some((appId, epoch))) match {
-          case None => base // empty batch: no commit
-          case Some(v) => advancePointer(fs, path, v); v
-        }
+        appendVersionFrom(batch, path, base, nextVersionAbove(spark, path, base),
+          orphanGraceMs, Commit.MainRef, changeFeed, txn = Some((appId, epoch)))
+          .getOrElse(base) // empty batch: no commit
       }
     }
   }
@@ -2041,26 +1953,6 @@ object Warehouse {
     }
   }
 
-  /** STREAMING UPSERT SINK — the Delta "streaming MERGE via
-    * foreachBatch" pattern as a first-class sink: each micro-batch
-    * (e.g. a CDC feed, a dedup-keyed event stream) MERGEs into the
-    * table file-grain ([[mergeIntoSnapshot]]: only files holding the
-    * batch's keys rewrite), exactly-once via the same manifest-carried
-    * (appId, epoch) gate as [[writeSnapshotStream]]. The standard
-    * clause set for at-least-once upsert streams is update-all +
-    * insert-all; pass a delete clause for tombstone-bearing feeds.
-    */
-  def writeSnapshotMergeStream(source: DataFrame, path: String, checkpoint: String,
-                               appId: String, keys: Seq[String],
-                               clauses: Seq[MergeClause],
-                               changeFeed: Boolean = false,
-                               maintainEvery: Int = 0,
-                               maintainPolicy: MaintenancePolicy = MaintenancePolicy())
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    batchSink(source, path, checkpoint, maintainEvery, maintainPolicy) { (batch, epoch) =>
-      commitStreamMerge(batch, path, appId, epoch, keys, clauses, changeFeed); ()
-    }
-
   /** REPLICA APPLY — close the CDC loop: take the recorded change feed
     * of `src` for versions `fromVersion..toVersion` and apply it to
     * `dst` as ONE file-grain merge, so a downstream replica catches up
@@ -2099,65 +1991,6 @@ object Warehouse {
       orphanGraceMs)
   }
 
-  /** The CAS claim of [[commitSnapshot]] step 3, shared with
-    * [[deleteWhere]]: one atomic exclusive create of `_commit-v<next>`,
-    * with the orphan-lease break for a marker whose data never landed.
-    */
-  private def claimVersion(fs: org.apache.hadoop.fs.FileSystem, path: String,
-                           next: Long, orphanGraceMs: Long): Boolean = {
-    val marker = new org.apache.hadoop.fs.Path(s"$path/_commit-v$next")
-    val dest = new org.apache.hadoop.fs.Path(s"$path/v=$next")
-    def atomicClaim(): Boolean =
-      if (marker.toUri.getScheme == null || marker.toUri.getScheme == "file")
-        try {
-          java.nio.file.Files.createFile(java.nio.file.Paths.get(
-            marker.toUri.getPath)); true
-        } catch { case _: java.nio.file.FileAlreadyExistsException => false }
-      else
-        try { fs.create(marker, false).close(); true }
-        catch { case _: java.io.IOException => false }
-    var claimed = atomicClaim()
-    if (!claimed && !fs.exists(dest)) {
-      // claim is held but its data never landed: crashed writer if the
-      // marker has outlived the grace — break its lease and re-claim
-      val st = try Some(fs.getFileStatus(marker)) catch {
-        case _: java.io.FileNotFoundException => None
-      }
-      val abandoned = st.forall(s =>
-        System.currentTimeMillis() - s.getModificationTime > orphanGraceMs)
-      if (abandoned) {
-        fs.delete(marker, false)
-        claimed = atomicClaim()
-      }
-    }
-    claimed
-  }
-
-  /** Advance `_latest` to `next`, FORWARD ONLY: a slower v=n winner
-    * must not clobber a faster v=n+1 writer's already-swapped pointer.
-    * The read-then-swap window is benign — the pointer is a cache of
-    * max(v=*), monotone except for that window, and self-heals on the
-    * next commit; readers needing exactness can pin a version.
-    */
-  private def advancePointer(fs: org.apache.hadoop.fs.FileSystem,
-                             path: String, next: Long): Unit = {
-    val ptr = new org.apache.hadoop.fs.Path(s"$path/_latest")
-    val current =
-      if (!fs.exists(ptr)) 0L
-      else {
-        val in = fs.open(ptr)
-        val s = scala.io.Source.fromInputStream(in).mkString.trim
-        in.close(); s.toLong
-      }
-    if (next > current) {
-      val tag = java.util.UUID.randomUUID().toString.take(8)
-      val tmp = new org.apache.hadoop.fs.Path(s"$path/_latest.tmp-$tag")
-      val out = fs.create(tmp, true)
-      out.write(next.toString.getBytes("UTF-8")); out.close()
-      overwriteRename(fs, tmp, ptr, s"cannot swap pointer for $path")
-    }
-  }
-
   /** Publish a pointer file by OVERWRITING rename — the destination is
     * never absent, so concurrent readers see old-or-new, not a
     * FileNotFoundException window (advice r10: the delete-then-rename
@@ -2169,10 +2002,10 @@ object Warehouse {
     * re-creating the destination between the loser's delete and rename
     * degrades to last-wins instead of an abort.
     */
-  private def overwriteRename(fs: org.apache.hadoop.fs.FileSystem,
-                              tmp: org.apache.hadoop.fs.Path,
-                              dest: org.apache.hadoop.fs.Path,
-                              errMsg: => String): Unit = {
+  private[store] def overwriteRename(fs: org.apache.hadoop.fs.FileSystem,
+                                     tmp: org.apache.hadoop.fs.Path,
+                                     dest: org.apache.hadoop.fs.Path,
+                                     errMsg: => String): Unit = {
     val scheme = dest.toUri.getScheme
     if (scheme == null || scheme == "file") {
       // the NIO move bypasses ChecksumFileSystem, so its `.crc`
@@ -2203,35 +2036,6 @@ object Warehouse {
     }
   }
 
-  /** The promote step of [[commitSnapshot]]: staging → `v=<n>`. A
-    * failed rename AFTER a successful claim is the LEASE-LOSS case,
-    * not a programming error: a writer stalled past the grace has had
-    * its "orphan" staging vacuumed and/or its marker lease broken by a
-    * retrier — the commitSnapshot contract says it "retries like any
-    * conflict loser", so this throws the RETRYABLE
-    * [[SnapshotConflictException]] (SnapshotMerge.upsertBatch loops on
-    * exactly that type; the pre-r9 bare `require` propagated an
-    * IllegalArgumentException and killed the retry loop). The marker
-    * is left in place: it may no longer be ours (a lease-breaker can
-    * hold it now), and if it IS ours and orphaned, the grace mechanism
-    * reclaims it.
-    */
-  private[store] def promoteStaging(fs: org.apache.hadoop.fs.FileSystem,
-                                    staging: org.apache.hadoop.fs.Path,
-                                    dest: org.apache.hadoop.fs.Path,
-                                    path: String, next: Long): Unit = {
-    // rename on a vacuumed staging THROWS (FileNotFoundException on
-    // the local FS, IOException variants elsewhere) rather than
-    // returning false — both forms are the same lease-loss outcome
-    val ok =
-      try fs.rename(staging, dest)
-      catch { case _: java.io.IOException => false }
-    if (!ok) {
-      try fs.delete(staging, true) catch { case _: java.io.IOException => () }
-      throw new SnapshotConflictException(path, next)
-    }
-  }
-
   /** Per-version MANIFEST — the file-level commit record that makes
     * snapshot reads LISTING-FREE (VERDICT r8 #1): a one-file JSON next
     * to the version dir holding the data file list, per-file bytes,
@@ -2244,13 +2048,12 @@ object Warehouse {
     * data. Row count comes from parquet footers at commit time
     * (driver-side metadata reads, O(files), no Spark job), so
     * downstream `count()`-style checks can answer from the manifest.
-    * Written AFTER promote via write-to-tmp + rename, and BEST-EFFORT
-    * by contract: the version's data is already durable when the
-    * manifest is published, so a manifest failure (quota, transient
-    * IO) must never fail the commit — the publish is wrapped at the
-    * call sites and a manifest-less version simply reads through the
-    * directory-listing fallback, exactly like a writer that died in
-    * the gap or a pre-manifest table.
+    * Written AFTER promote via write-to-tmp + rename, under the
+    * commit's [[Commit.ManifestPolicy]]: a self-contained version's
+    * manifest is best-effort (a manifest-less version reads through
+    * the directory-listing fallback, exactly like a writer that died in
+    * the gap or a pre-manifest table), a file-sharing version's is
+    * load-bearing.
     */
   private def manifestPath(path: String, v: Long) =
     new org.apache.hadoop.fs.Path(s"$path/_manifest-v$v")
@@ -2862,10 +2665,16 @@ object Warehouse {
       node.put("idxRef", s.ref)
       val ia = node.putArray("idxFiles"); s.files.foreach(ia.add)
     }
+    publishManifest(fs, path, v, mapper.writeValueAsBytes(node))
+  }
+
+  /** Publish manifest bytes for version `v` by tmp + rename. */
+  private def publishManifest(fs: org.apache.hadoop.fs.FileSystem, path: String,
+                              v: Long, bytes: Array[Byte]): Unit = {
     val tag = java.util.UUID.randomUUID().toString.take(8)
     val tmp = new org.apache.hadoop.fs.Path(s"$path/_latest.tmp-mf$tag")
     val out = fs.create(tmp, true)
-    out.write(mapper.writeValueAsBytes(node)); out.close()
+    out.write(bytes); out.close()
     // clean the tmp up on a failed publish (r9 advice): the random tag
     // means leaked tmps accrue per failure and nothing else reaps them
     val ok =
@@ -2876,23 +2685,6 @@ object Warehouse {
       throw new java.io.IOException(s"cannot publish manifest for v=$v under $path")
     }
   }
-
-  /** [[writeManifest]] wrapped per its best-effort contract: the data
-    * is durable before the manifest publishes, so a failed publish
-    * logs and returns — the version reads via the listing fallback.
-    */
-  private def publishManifestBestEffort(fs: org.apache.hadoop.fs.FileSystem,
-                                        spark: SparkSession, path: String,
-                                        v: Long, schemaJson: String,
-                                        expectations: Option[Map[String, (String, Long)]] = None,
-                                        txn: Option[(String, Long)] = None): Unit =
-    try writeManifest(fs, spark.sparkContext.hadoopConfiguration, path, v, schemaJson,
-      expectations = expectations, txn = txn)
-    catch {
-      case e @ (_: java.io.IOException | _: IllegalArgumentException) =>
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"manifest publish failed for v=$v under $path (reads fall back to listing)", e)
-    }
 
   /** Reader features THIS build understands — the gate below refuses
     * manifests demanding more, because "degrade to listing" on an
@@ -3336,29 +3128,20 @@ object Warehouse {
       .filterNot(expired).sorted
   }
 
-  /** Read a snapshot: the pinned `version`, or the `_latest` pointer's
-    * target when absent. The pointer swap is delete-then-rename, so an
-    * unpinned reader racing a committer can catch the gap where no
-    * `_latest` exists — fall back to max(v=*) then (never newer than
-    * the pointer would have been by more than the in-flight commit,
-    * and monotone, so snapshot isolation still holds for the reader's
-    * own scan: it resolves ONE concrete version directory either way).
+  /** Read a snapshot: the pinned `version`, or the main ref's target
+    * ([[mainWriteBase]]) when absent. `_latest` is swapped by an
+    * overwriting rename, so once written it is never absent; the
+    * listing fallback to max(v=*) serves a table whose first commit
+    * died between its promote and its pointer write (and a table from
+    * before the pointer), where the newest version dir is the only
+    * candidate — and a reader still resolves ONE concrete version.
     */
   private def resolveVersion(spark: SparkSession, path: String,
                              version: Option[Long]): Long =
     version.getOrElse {
-      val ptr = new org.apache.hadoop.fs.Path(s"$path/_latest")
-      val fs = ptr.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val fromPtr =
-        if (!fs.exists(ptr)) None
-        else
-          try {
-            val in = fs.open(ptr)
-            val s = scala.io.Source.fromInputStream(in).mkString.trim
-            in.close(); Some(s.toLong)
-          } catch { case _: java.io.FileNotFoundException => None }
-      fromPtr.orElse(snapshots(spark, path).lastOption)
-        .getOrElse(sys.error(s"no _latest pointer or v=* versions under $path"))
+      val v = mainWriteBase(spark, path)
+      if (v == 0L) sys.error(s"no _latest pointer or v=* versions under $path")
+      v
     }
 
   def readSnapshot(spark: SparkSession, path: String, version: Option[Long] = None): DataFrame = {
@@ -3645,15 +3428,11 @@ object Warehouse {
     val v = version.getOrElse(currentSnapshot(spark, path))
     require(snapshots(spark, path).contains(v),
       s"tagSnapshot($path): no live snapshot v=$v to tag")
-    val tag = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = new org.apache.hadoop.fs.Path(s"$path/_latest.tmp-tag$tag")
-    val out = fs.create(tmp, true)
-    out.write(v.toString.getBytes("UTF-8")); out.close()
-    val dest = new org.apache.hadoop.fs.Path(s"$path/_tag-$name")
     // overwriting publish (advice r10): a retag must never leave the
     // tag absent mid-swap, and two concurrent retags must both land
     // (last wins), not abort the loser
-    overwriteRename(fs, tmp, dest, s"cannot publish tag '$name' for $path")
+    Commit.writePointerFile(fs, path, new org.apache.hadoop.fs.Path(s"$path/_tag-$name"), v,
+      s"cannot publish tag '$name' for $path")
     v
   }
 
@@ -3667,16 +3446,10 @@ object Warehouse {
     val live = snapshots(spark, path).toSet
     fs.listStatus(root).toSeq.map(_.getPath.getName)
       .filter(_.startsWith("_tag-")).sorted.flatMap { n =>
-        val name = n.stripPrefix("_tag-")
-        // a concurrent retag/drop deletes-then-renames: a tag listed a
-        // moment ago may be mid-swap — skip it, don't crash the listing
-        // (the same FNFE window resolveVersion handles for _latest)
-        try {
-          val in = fs.open(new org.apache.hadoop.fs.Path(root, n))
-          val v = scala.io.Source.fromInputStream(in).mkString.trim.toLong
-          in.close()
-          Some((name, v, live.contains(v)))
-        } catch { case _: java.io.FileNotFoundException => None }
+        // a tag listed a moment ago may have been dropped since — skip
+        // it, don't crash the listing
+        Commit.readPointerFile(fs, new org.apache.hadoop.fs.Path(root, n))
+          .map(v => (n.stripPrefix("_tag-"), v, live.contains(v)))
       }
   }
 
@@ -3687,25 +3460,13 @@ object Warehouse {
     requireTagName(name)
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def readOnce(): Long = {
-      val in = fs.open(new org.apache.hadoop.fs.Path(s"$path/_tag-$name"))
-      val s = scala.io.Source.fromInputStream(in).mkString.trim
-      in.close(); s.toLong
-    }
-    // one retry on FNFE (advice r10): publishes are overwriting-atomic
+    val tag = new org.apache.hadoop.fs.Path(s"$path/_tag-$name")
+    // one retry on absent (advice r10): publishes are overwriting-atomic
     // on local FS/HDFS, but the last-resort delete+rename fallback (and
     // any pre-r11 writer) has a brief absent window — re-read once
     // before concluding the tag does not exist
-    val v =
-      try readOnce()
-      catch {
-        case _: java.io.FileNotFoundException =>
-          try readOnce()
-          catch {
-            case _: java.io.FileNotFoundException =>
-              sys.error(s"no tag '$name' under $path")
-          }
-      }
+    val v = Commit.readPointerFile(fs, tag).orElse(Commit.readPointerFile(fs, tag))
+      .getOrElse(sys.error(s"no tag '$name' under $path"))
     readSnapshot(spark, path, Some(v))
   }
 
@@ -3726,7 +3487,7 @@ object Warehouse {
   //
   // The version history is ONE global sequence (every commit — main,
   // branch, restore — claims the next number through the same
-  // [[claimVersion]] CAS, so no two commits ever share a number or a
+  // [[Commit]] claim, so no two commits ever share a number or a
   // file path); `_latest` and `_branch-<name>` are NAMED REFS into
   // that sequence, exactly git refs over one object store. A branch
   // commit is therefore a full first-class version — manifest,
@@ -3763,28 +3524,15 @@ object Warehouse {
     new org.apache.hadoop.fs.Path(s"$path/_branchbase-$name")
 
   private def writeBranchBase(fs: org.apache.hadoop.fs.FileSystem, path: String,
-                              name: String, v: Long): Unit = {
-    val tag = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = new org.apache.hadoop.fs.Path(s"$path/_latest.tmp-bb$tag")
-    val out = fs.create(tmp, true)
-    out.write(v.toString.getBytes("UTF-8")); out.close()
-    overwriteRename(fs, tmp, branchBaseFile(path, name),
+                              name: String, v: Long): Unit =
+    Commit.writePointerFile(fs, path, branchBaseFile(path, name), v,
       s"cannot record base for branch '$name' under $path")
-  }
-
-  private def readPointerFile(fs: org.apache.hadoop.fs.FileSystem,
-                              p: org.apache.hadoop.fs.Path): Option[Long] =
-    try {
-      val in = fs.open(p)
-      val s = scala.io.Source.fromInputStream(in).mkString.trim
-      in.close(); Some(s.toLong)
-    } catch { case _: java.io.FileNotFoundException => None }
 
   /** Create branch `name` at `fromVersion` (default: the `_latest`
     * target). Fails if the branch already exists — a branch is a
     * lineage, not a tag; re-pointing it silently would orphan
     * in-flight audit work. Exclusive create (O_EXCL through the same
-    * local-FS path [[claimVersion]] uses) so two concurrent creates
+    * local-FS path the [[Commit]] claim uses) so two concurrent creates
     * cannot both win.
     */
   def createBranch(spark: SparkSession, path: String, name: String,
@@ -3830,8 +3578,8 @@ object Warehouse {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // same one-retry-on-absent as readSnapshotTag: the advance swap is
     // overwriting-atomic, but tolerate a last-resort-fallback window
-    readPointerFile(fs, branchFile(path, name))
-      .orElse(readPointerFile(fs, branchFile(path, name)))
+    Commit.readPointerFile(fs, branchFile(path, name))
+      .orElse(Commit.readPointerFile(fs, branchFile(path, name)))
       .getOrElse(sys.error(s"no branch '$name' under $path"))
   }
 
@@ -3843,7 +3591,7 @@ object Warehouse {
     val live = snapshots(spark, path).toSet
     fs.listStatus(root).toSeq.map(_.getPath.getName)
       .filter(_.startsWith("_branch-")).sorted.flatMap { n =>
-        readPointerFile(fs, new org.apache.hadoop.fs.Path(root, n))
+        Commit.readPointerFile(fs, new org.apache.hadoop.fs.Path(root, n))
           .map(v => (n.stripPrefix("_branch-"), v, live.contains(v)))
       }
   }
@@ -3854,7 +3602,7 @@ object Warehouse {
 
   /** Full-content commit onto a branch: `df` becomes the branch's new
     * head, `_latest` untouched. Optimistic concurrency at TWO levels:
-    * the global [[claimVersion]] CAS allocates the version number
+    * the global [[Commit]] claim allocates the version number
     * (loser → retryable conflict, like every commit), and
     * `expectedBranchVersion` is the branch-lineage CAS — the head the
     * writer read before deriving `df`; a branch that moved since
@@ -3867,51 +3615,17 @@ object Warehouse {
                      expectedBranchVersion: Long,
                      orphanGraceMs: Long = 600000L): Long = {
     val spark = df.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val head = branchHead(spark, path, name)
     if (head != expectedBranchVersion)
       throw new SnapshotConflictException(path, head)
-    val next = currentSnapshot(spark, path) + 1
-    val tag = java.util.UUID.randomUUID().toString.take(8)
-    val staging = new org.apache.hadoop.fs.Path(s"$path/_staging-$tag")
     // branch commits validate like EVERY row-writing path (review
     // r11): the WAP stage is where validation is supposed to happen —
     // skipping the CHECK/generated gates here would let publishBranch
     // promote unvalidated rows to main. Identity alignment included
-    // (review r12): a branch full-commit on an identity table must
-    // mint-or-NULL-guard like commitSnapshot, or publishBranch would
-    // promote rows with missing/NULL ids that every other row-writing
-    // path refuses. The mint's high-water mark reads the BRANCH head
+    // (review r12): the mint's high-water mark reads the BRANCH head
     // (the content lineage this commit extends).
-    val idd = identityAlign(df, path, "commitToBranch", {
-      val (c, st) = identityRule(fs, path).get
-      identityHwmAt(spark, fs, path, head, c, st)
-    })
-    val (g, flushQuarantine, expMetrics) = expectationGate(
-      generatedAlign(idd, path, "commitToBranch"), path, "commitToBranch")
-    expMetrics.arm()
-    val expCounts =
-      try {
-        constraintGuard(g, path, "commitToBranch")
-          .write.mode(SaveMode.ErrorIfExists).parquet(staging.toString)
-        expMetrics.collect()
-      } catch { case t: Throwable => expMetrics.disarm(); throw t }
-    if (!claimVersion(fs, path, next, orphanGraceMs)) {
-      fs.delete(staging, true)
-      throw new SnapshotConflictException(path, next)
-    }
-    val dest = new org.apache.hadoop.fs.Path(s"$path/v=$next")
-    if (fs.exists(dest)) {
-      fs.delete(staging, true)
-      throw new SnapshotConflictException(path, next)
-    }
-    promoteStaging(fs, staging, dest, path, next)
-    publishManifestBestEffort(fs, spark, path, next, g.schema.json,
-      expectations = expCounts)
-    advanceBranch(fs, path, name, expectedBranchVersion, next)
-    flushQuarantine()
-    next
+    commitFull(df, path, head, currentSnapshot(spark, path) + 1, "commitToBranch",
+      orphanGraceMs, Commit.BranchRef(name, expectedBranchVersion))
   }
 
   /** [[appendSnapshot]] onto a branch: content extends the BRANCH
@@ -3926,41 +3640,13 @@ object Warehouse {
                      expectedBranchVersion: Long,
                      orphanGraceMs: Long = 600000L): Long = {
     val spark = df.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val head = branchHead(spark, path, name)
     if (head != expectedBranchVersion)
       throw new SnapshotConflictException(path, head)
-    val next = currentSnapshot(spark, path) + 1
-    appendVersionFrom(df, path, base = head, next = next, orphanGraceMs,
-      gateOp = "appendToBranch") match {
-      case None => head // empty batch: branch unchanged
-      case Some(v) =>
-        advanceBranch(fs, path, name, expectedBranchVersion, v); v
-    }
-  }
-
-  /** Branch-pointer CAS-advance: re-read, unwind the freshly promoted
-    * version and conflict if the branch moved since the caller's read,
-    * else swap the pointer (overwriting-atomic — no absent window).
-    * The unwound version was never referenced by any pointer, so no
-    * reader can have planned from it.
-    */
-  private def advanceBranch(fs: org.apache.hadoop.fs.FileSystem, path: String,
-                            name: String, expected: Long, next: Long): Unit = {
-    val nowHead = readPointerFile(fs, branchFile(path, name))
-    if (!nowHead.contains(expected)) {
-      fs.delete(manifestPath(path, next), false)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/v=$next"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/_commit-v$next"), false)
-      throw new SnapshotConflictException(path, nowHead.getOrElse(-1L))
-    }
-    val tag = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = new org.apache.hadoop.fs.Path(s"$path/_latest.tmp-br$tag")
-    val out = fs.create(tmp, true)
-    out.write(next.toString.getBytes("UTF-8")); out.close()
-    overwriteRename(fs, tmp, branchFile(path, name),
-      s"cannot advance branch '$name' for $path")
+    appendVersionFrom(df, path, base = head, next = currentSnapshot(spark, path) + 1,
+      orphanGraceMs, Commit.BranchRef(name, expectedBranchVersion),
+      gateOp = "appendToBranch")
+      .getOrElse(head) // empty batch: branch unchanged
   }
 
   /** PUBLISH — the one-pointer-write promote that completes
@@ -3971,7 +3657,7 @@ object Warehouse {
     * loudly if `_latest` is AHEAD of the branch head — someone wrote
     * main directly since the branch point; re-branch from latest and
     * replay rather than silently un-publishing their commit
-    * ([[advancePointer]] is forward-only, so the swap would no-op).
+    * (`_latest` advances forward only, so the swap would no-op).
     */
   def publishBranch(spark: SparkSession, path: String, name: String): Long = {
     val fs = new org.apache.hadoop.fs.Path(path)
@@ -3983,7 +3669,7 @@ object Warehouse {
     // regardless of the version NUMBERS involved — fast-forwarding
     // would silently un-publish main's commit. Legacy branches without
     // a base record fall back to the numeric check.
-    readPointerFile(fs, branchBaseFile(path, name)) match {
+    Commit.readPointerFile(fs, branchBaseFile(path, name)) match {
       case Some(base) =>
         require(mainV == base || mainV == head,
           s"publishBranch($path): main moved to v=$mainV since branch '$name' " +
@@ -3994,7 +3680,7 @@ object Warehouse {
           s"publishBranch($path): _latest is at v=$mainV, ahead of branch '$name' " +
             s"head v=$head — re-branch from latest and replay the branch's changes")
     }
-    advancePointer(fs, path, head)
+    Commit.advancePointer(fs, path, head)
     // future publishes of this branch extend from the published head
     writeBranchBase(fs, path, name, head)
     head
@@ -4056,28 +3742,25 @@ object Warehouse {
     val staging = new org.apache.hadoop.fs.Path(s"$path/_staging-$tag")
     fs.mkdirs(staging)
     fs.create(new org.apache.hadoop.fs.Path(staging, "_partial"), true).close()
-    // a restore references the target's files verbatim, so its
-    // deletion-vector state (X189) must restore with them
-    commitStagedVersion(spark, fs, path, staging, next, schemaJson,
-      entries, reuse, op = "rollbackSnapshot",
-      orphanGraceMs = orphanGraceMs,
-      dv = reuse.flatMap { case (m, _) => readDvState(m) },
-      advance = false)
-    val dest = new org.apache.hadoop.fs.Path(s"$path/v=$next")
-    // POST-PUBLISH expiry fence (advice r10): the manifest-present path
+    // PRE-ADVANCE expiry fence (advice r10): the manifest-present path
     // reuses per-file bytes/rows/stats from the target manifest, so
     // writeManifest never stats the referenced files — a concurrent
     // expireSnapshots dropping toVersion between the liveness check
-    // above and this point would let the restore commit a current
+    // above and the manifest publish would let the restore commit a current
     // version whose manifest points at files the sweep just deleted,
     // silent until scans fail. From the manifest-publish instant the
     // new version's references are visible to expire's reachability
     // pass, so a clean re-check here (expire stamps `_expired-v` FIRST,
     // before touching any file) means the referenced files survive.
     // The manifest-less fallback re-checks the same marker before
-    // listing; this closes the asymmetry on the reuse path.
-    fenceRestoreAgainstExpiry(fs, path, toVersion, next, dest)
-    advancePointer(fs, path, next)
+    // listing; this closes the asymmetry on the reuse path. A restore
+    // references the target's files verbatim, so its deletion-vector
+    // state (X189) restores with them.
+    commitStagedVersion(spark, fs, path, staging, next, schemaJson,
+      entries, reuse, op = "rollbackSnapshot",
+      orphanGraceMs = orphanGraceMs,
+      dv = reuse.flatMap { case (m, _) => readDvState(m) },
+      preAdvance = () => fenceRestoreAgainstExpiry(fs, path, toVersion, next))
     next
   }
 
@@ -4092,12 +3775,10 @@ object Warehouse {
     */
   private[store] def fenceRestoreAgainstExpiry(
       fs: org.apache.hadoop.fs.FileSystem, path: String,
-      toVersion: Long, next: Long, dest: org.apache.hadoop.fs.Path): Unit = {
+      toVersion: Long, next: Long): Unit = {
     if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/_expired-v$toVersion")) ||
         !fs.exists(new org.apache.hadoop.fs.Path(s"$path/v=$toVersion"))) {
-      fs.delete(manifestPath(path, next), false)
-      fs.delete(dest, true)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/_commit-v$next"), false)
+      Commit.unwindVersion(fs, path, next)
       sys.error(s"rollbackSnapshot($path): v=$toVersion was expired mid-call; " +
         s"restore v=$next unwound")
     }
@@ -4106,7 +3787,7 @@ object Warehouse {
   /** Table history — the DESCRIBE HISTORY analog, one row per LIVE
     * version, ascending: (version, committed_at, row_count, bytes,
     * n_files, file_sharing). Driver-side from commit markers (the CAS
-    * claim instant; dir mtime for single-writer versions) and
+    * claim instant; dir mtime for marker-less versions) and
     * manifests — zero data I/O, zero Spark jobs beyond the local-frame
     * build. NULL metrics for manifest-less (pre-manifest / crash-gap)
     * versions; `file_sharing` marks [[deleteWhere]]/[[updateWhere]]
@@ -4153,7 +3834,7 @@ object Warehouse {
   /** Age-based retention — the Delta `delta.logRetentionDuration` /
     * Iceberg `expire_snapshots(older_than)` shape: expire versions
     * whose COMMIT INSTANT (CAS-marker mtime; dir mtime for
-    * single-writer versions) is older than `maxAgeMs`, always keeping
+    * marker-less versions) is older than `maxAgeMs`, always keeping
     * at least `keepLast`. The call reduces to [[expireSnapshots]]
     * with a suffix length — inheriting every fence (branch-head
     * roots, reachability, unreadable-manifest hard stop) rather than
@@ -4714,17 +4395,10 @@ object Warehouse {
       .reduce(_ unionAll _)
   }
 
-  /** The shared tail of every LOAD-BEARING-manifest commit (review
-    * r11: this choreography existed in nine hand-copies with visible
-    * drift): CAS-claim `next`, back off if the dest exists (lease-
-    * break defense), promote the prepared staging dir, publish the
-    * staged change files, write the manifest — entries = the promoted
-    * dir's fresh data files + `carried` references — and on a
-    * manifest failure unwind the half-version (it IS the commit
-    * record; a lost one must leave nothing readable or claimable),
-    * then advance the pointer. The staging dir arrives complete:
-    * data/sidecar content and the `_partial` marker when sharing.
-    * Returns the fresh file names.
+  /** [[Commit]] with a [[writeManifest]] manifest: entries = the
+    * promoted dir's fresh data files + `carried` references, per-file
+    * accounting reused from `reuseFrom`. Load-bearing and advancing
+    * `_latest` unless told otherwise. Returns the fresh file names.
     */
   private def commitStagedVersion(spark: SparkSession,
                                   fs: org.apache.hadoop.fs.FileSystem,
@@ -4741,42 +4415,17 @@ object Warehouse {
                                   columnMap: Option[Map[String, String]] = None,
                                   droppedColumns: Option[Seq[String]] = None,
                                   cdfStaging: Option[org.apache.hadoop.fs.Path] = None,
-                                  advance: Boolean = true,
-                                  expectations: Option[Map[String, (String, Long)]] = None): Seq[String] = {
-    def unwindStaging(): Unit = {
-      fs.delete(staging, true)
-      cdfStaging.foreach(fs.delete(_, true))
+                                  expectations: Option[Map[String, (String, Long)]] = None,
+                                  policy: Commit.ManifestPolicy = Commit.LoadBearing,
+                                  ref: Commit.Ref = Commit.MainRef,
+                                  preAdvance: () => Unit = () => ()): Seq[String] =
+    Commit(fs, path, staging, next, op, orphanGraceMs, policy, ref, cdfStaging, preAdvance) {
+      fresh =>
+        writeManifest(fs, spark.sparkContext.hadoopConfiguration, path, next,
+          schemaJson, Some(fresh ++ carried), reuseFrom = reuseFrom, txn = txn,
+          dv = dv, idx = idx, idxDrop = idxDrop, columnMap = columnMap,
+          droppedColumns = droppedColumns, expectations = expectations)
     }
-    if (!claimVersion(fs, path, next, orphanGraceMs)) {
-      unwindStaging()
-      throw new SnapshotConflictException(path, next)
-    }
-    val dest = new org.apache.hadoop.fs.Path(s"$path/v=$next")
-    if (fs.exists(dest)) {
-      unwindStaging()
-      throw new SnapshotConflictException(path, next)
-    }
-    promoteStaging(fs, staging, dest, path, next)
-    cdfStaging.foreach(st => publishChangeFiles(fs, path, next, st))
-    val fresh = fs.listStatus(dest).toSeq
-      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith("."))
-      .map(_.getPath.getName)
-    try writeManifest(fs, spark.sparkContext.hadoopConfiguration, path, next,
-      schemaJson, Some(fresh ++ carried), reuseFrom = reuseFrom, txn = txn,
-      dv = dv, idx = idx, idxDrop = idxDrop, columnMap = columnMap,
-      droppedColumns = droppedColumns, expectations = expectations)
-    catch {
-      case e: Throwable =>
-        fs.delete(dest, true)
-        fs.delete(cdfDir(path, next), true)
-        fs.delete(new org.apache.hadoop.fs.Path(s"$path/_commit-v$next"), false)
-        throw new java.io.IOException(
-          s"$op($path): manifest publish failed for v=$next; version unwound", e)
-    }
-    if (advance) advancePointer(fs, path, next)
-    fresh
-  }
 
   /** Merge-on-read row-level DELETE — deletion vectors (X189), the
     * Delta-DV / Iceberg-positional-delete shape and [[deleteWhere]]'s
@@ -6209,16 +5858,6 @@ object Warehouse {
   private def cdfDir(path: String, v: Long) =
     new org.apache.hadoop.fs.Path(s"$path/_cdf/v=$v")
 
-  private def publishChangeFiles(fs: org.apache.hadoop.fs.FileSystem,
-                                 path: String, v: Long,
-                                 staged: org.apache.hadoop.fs.Path): Unit = {
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$path/_cdf"))
-    val dest = cdfDir(path, v)
-    fs.delete(dest, true) // claim exclusivity makes live contention impossible; clear debris
-    require(fs.rename(staged, dest),
-      s"cannot publish change files for v=$v under $path")
-  }
-
   /** Versions with recorded change files, ascending. */
   def changeFeedVersions(spark: SparkSession, path: String): Seq[Long] = {
     val dir = new org.apache.hadoop.fs.Path(s"$path/_cdf")
@@ -7139,28 +6778,18 @@ object Warehouse {
     def absolutize(e: String): String =
       srcFs.makeQualified(new org.apache.hadoop.fs.Path(resolveEntry(src, v, e)))
         .toUri.getPath
+    val srcManifest = readManifest(srcFs, src, v)
+    // a manifest-less source version must be self-contained to be
+    // cloneable (same rule as every reader of the listing fallback)
+    require(srcManifest.isDefined ||
+        !srcFs.exists(new org.apache.hadoop.fs.Path(s"$src/v=$v/_partial")),
+      s"cloneSnapshot($src): v=$v is a file-sharing version with no readable manifest")
     val tag = java.util.UUID.randomUUID().toString.take(8)
     val staging = new org.apache.hadoop.fs.Path(s"$dst/_staging-$tag")
     fs.mkdirs(staging)
     fs.create(new org.apache.hadoop.fs.Path(staging, "_partial"), true).close()
-    if (!claimVersion(fs, dst, 1L, orphanGraceMs)) {
-      fs.delete(staging, true)
-      throw new SnapshotConflictException(dst, 1L)
-    }
-    val dest = new org.apache.hadoop.fs.Path(s"$dst/v=1")
-    if (fs.exists(dest)) {
-      fs.delete(staging, true)
-      throw new SnapshotConflictException(dst, 1L)
-    }
-    promoteStaging(fs, staging, dest, dst, 1L)
-    def unwind(e: Throwable): Nothing = {
-      fs.delete(manifestPath(dst, 1L), false)
-      fs.delete(dest, true)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dst/_commit-v1"), false)
-      throw new java.io.IOException(
-        s"cloneSnapshot($dst): manifest publish failed; clone unwound", e)
-    }
-    readManifest(srcFs, src, v) match {
+    Commit(fs, dst, staging, 1L, "cloneSnapshot", orphanGraceMs, Commit.LoadBearing,
+      Commit.MainRef) { _ => srcManifest match {
       case Some(m) =>
         // copy the source manifest VERBATIM — files absolutized in
         // committed order so the stats/fileBytes/fileRows arrays stay
@@ -7193,32 +6822,15 @@ object Warehouse {
           d.files.foreach { case (f, _) => fa.add(absolutize(f)) }
           node.set[com.fasterxml.jackson.databind.JsonNode]("dvFiles", fa)
         }
-        try {
-          val tmp = new org.apache.hadoop.fs.Path(s"$dst/_latest.tmp-mf$tag")
-          val out = fs.create(tmp, true)
-          out.write(mapper.writeValueAsBytes(node)); out.close()
-          val ok =
-            try fs.rename(tmp, manifestPath(dst, 1L))
-            catch { case e: java.io.IOException => fs.delete(tmp, false); throw e }
-          if (!ok) {
-            fs.delete(tmp, false)
-            throw new java.io.IOException(s"cannot publish manifest for v=1 under $dst")
-          }
-        } catch { case e: Throwable => unwind(e) }
+        publishManifest(fs, dst, 1L, mapper.writeValueAsBytes(node))
       case None =>
-        // a manifest-less source version must be self-contained to be
-        // cloneable (same rule as every reader of the listing fallback)
-        require(!srcFs.exists(new org.apache.hadoop.fs.Path(s"$src/v=$v/_partial")),
-          s"cloneSnapshot($src): v=$v is a file-sharing version with no readable manifest")
         val names = srcFs.listStatus(new org.apache.hadoop.fs.Path(s"$src/v=$v")).toSeq
           .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
             !st.getPath.getName.startsWith("."))
           .map(st => s"v=$v/${st.getPath.getName}").sorted
-        try writeManifest(fs, conf, dst, 1L,
+        writeManifest(fs, conf, dst, 1L,
           spark.read.parquet(s"$src/v=$v").schema.json, Some(names.map(absolutize)))
-        catch { case e: Throwable => unwind(e) }
-    }
-    advancePointer(fs, dst, 1L)
+    }}
     1L
   }
 

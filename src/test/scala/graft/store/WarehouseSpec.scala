@@ -530,7 +530,7 @@ class WarehouseSpec extends SparkSpec {
     val goneStaging = new org.apache.hadoop.fs.Path(s"$root/_staging-dead")
     val dest = new org.apache.hadoop.fs.Path(s"$root/v=2")
     intercept[Warehouse.SnapshotConflictException] {
-      Warehouse.promoteStaging(fs, goneStaging, dest, root, 2L)
+      Commit.promoteStaging(fs, goneStaging, dest, root, 2L)
     }
   }
 
@@ -1242,7 +1242,7 @@ class WarehouseSpec extends SparkSpec {
     mOut.write("{}".getBytes("UTF-8")); mOut.close()
     fs.create(new Path(s"$root/_expired-v1"), true).close()
     val e = intercept[RuntimeException] {
-      Warehouse.fenceRestoreAgainstExpiry(fs, root, 1L, 3L, new Path(s"$root/v=3"))
+      Warehouse.fenceRestoreAgainstExpiry(fs, root, 1L, 3L)
     }
     assert(e.getMessage.contains("expired mid-call"))
     // unwound completely: no manifest pointing at dead files, no dir,
@@ -1254,7 +1254,7 @@ class WarehouseSpec extends SparkSpec {
     assert(Warehouse.readSnapshot(spark, root).count() === 20)
     // and when the target is alive, the fence is a no-op
     fs.delete(new Path(s"$root/_expired-v1"), false)
-    Warehouse.fenceRestoreAgainstExpiry(fs, root, 1L, 3L, new Path(s"$root/v=3"))
+    Warehouse.fenceRestoreAgainstExpiry(fs, root, 1L, 3L)
     assert(Warehouse.currentSnapshot(spark, root) === 2L)
   }
 

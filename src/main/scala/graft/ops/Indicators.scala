@@ -48,16 +48,38 @@ object Indicators {
   private def guarded(value: Column, cnt: Column, minPeriods: Int): Column =
     when(cnt >= minPeriods, value)
 
+  /** Rows of history per asset that make an in-order enrich exact:
+    * a new row's ma30/vol30 frame spans 29 prior rows, and the oldest
+    * of those needs ITS predecessor for `ret`.
+    */
+  val TailRows = 31
+
+  /** The in-order step of incremental maintenance: enrich each
+    * asset's last [[TailRows]] rows of `history` together with
+    * `fresh`, and keep only `fresh`'s rows. With every `fresh` row
+    * after its asset's history, each window over a fresh row sees
+    * precisely the rows the full recompute would, so the output is
+    * bit-identical to it; assets with shorter history keep all their
+    * rows, reproducing the min_periods NULL warm-up. The caller owns
+    * that precondition. The fresh rows are told apart by a marker
+    * column, not a join, so the step adds no exchange of its own.
+    */
+  def enrichFromTail(history: DataFrame, fresh: DataFrame): DataFrame = {
+    val recent = Window.partitionBy("asset").orderBy(desc("date"))
+    val tail = history.withColumn("__rn", row_number().over(recent))
+      .filter(col("__rn") <= TailRows)
+      .select(fresh.columns.map(col).toIndexedSeq: _*)
+    enrich(tail.withColumn("__fresh", lit(false)).unionByName(fresh.withColumn("__fresh", lit(true))))
+      .filter(col("__fresh"))
+      .drop("__fresh")
+  }
+
   /** Incremental daily indicator refresh — the at-scale form of the
     * reference's nightly full recompute (dag_btc_daily.py:254-267):
-    * enrich ONLY the new day(s) from each asset's trailing 31 rows of
-    * history, never the whole table. 31 is exact, not a heuristic:
-    * today's ma30/vol30 frame spans 29 prior rows, and the oldest of
-    * those needs ITS predecessor for `ret` — so a 31-row tail makes
-    * every window over the new rows see precisely the rows the full
-    * recompute would, and the output is bit-identical (oracle-checked
-    * against the full-table window). Assets with shorter history keep
-    * all their rows, reproducing the min_periods NULL warm-up.
+    * enrich ONLY the new day(s) from each asset's trailing
+    * [[TailRows]] rows of history ([[enrichFromTail]]), never the whole
+    * table; the output is bit-identical to the full recompute
+    * (oracle-checked against the full-table window).
     *
     * `newDaily` must be strictly AFTER `history` per asset (the normal
     * append cadence; multi-day catch-up batches are fine — later new
@@ -66,30 +88,22 @@ object Indicators {
     * would put duplicate (date, asset) rows in the union and the
     * windows would silently return wrong indicators — the one failure
     * mode worse than failing. The guard compares per-asset
-    * max(tail.date) to min(newDaily.date) and is fused INTO the
+    * max(history.date) to min(newDaily.date) and is fused INTO the
     * returned plan as a broadcast one-row scalar probed by
-    * `raise_error` — zero extra jobs, zero extra passes (an eager
-    * pre-check was measured at +0.5 s/call of pure job-floor
-    * overhead), but any action on the result fails with the offending
-    * asset named before a single wrong row can be consumed — the same
-    * fail-fast outcome as [[graft.store.Warehouse.mergeInto]]'s check.
-    * Compose with [[graft.store.Warehouse.upsert]]/mergeInto to land
-    * the result.
+    * `raise_error` — zero extra passes (an eager pre-check was
+    * measured at +0.5 s/call of pure job-floor overhead), but any
+    * action on the result fails with the offending asset named before
+    * a single wrong row can be consumed — the same fail-fast outcome
+    * as [[graft.store.Warehouse.mergeInto]]'s check. Compose with
+    * [[graft.store.Warehouse.upsert]]/mergeInto to land the result.
     *
     * Scale: the tail is one per-asset window rank over the DAILY table
     * (already tiny relative to raw data) and the enrich runs over
-    * |assets| × ≤31 + |new| rows — per-day cost is O(assets), not
-    * O(history).
+    * |assets| × ≤[[TailRows]] + |new| rows — per-day cost is
+    * O(assets), not O(history).
     */
   def enrichIncremental(history: DataFrame, newDaily: DataFrame): DataFrame = {
-    val recent = Window.partitionBy("asset").orderBy(desc("date"))
-    val tail = history.withColumn("__rn", row_number().over(recent))
-      .filter(col("__rn") <= 31)
-      .select(newDaily.columns.map(col).toIndexedSeq: _*)
-    // one row, always: count of precondition violations + a witness.
-    // max(date) comes from a plain aggregate over history — same value
-    // as max over the 31-row tail, without re-running the tail's
-    // row_number window a second time
+    // one row, always: count of precondition violations + a witness
     val guard = broadcast(
       history.groupBy("asset").agg(max(col("date")).as("__hmax"))
         .join(newDaily.groupBy("asset").agg(min(col("date")).as("__nmin")), Seq("asset"))
@@ -97,8 +111,7 @@ object Indicators {
         .agg(count(lit(1)).as("__viol"),
           first(col("asset")).as("__va"), first(col("__hmax")).as("__vh"),
           first(col("__nmin")).as("__vn")))
-    enrich(tail.unionByName(newDaily))
-      .join(newDaily.select("date", "asset"), Seq("date", "asset"), "left_semi")
+    enrichFromTail(history, newDaily)
       .crossJoin(guard)
       .filter(when(col("__viol") > 0, raise_error(concat(
         lit("enrichIncremental: newDaily must be strictly after history per asset, but asset "),
@@ -116,11 +129,11 @@ object Indicators {
     * touches ma7/ma30 of rows [r, r+29] and, through ret's one-row
     * ripple, vol30 of rows [r, r+30]; everything else is provably
     * unchanged and never recomputed. The enrich runs over each
-    * asset's contiguous [first−31, last+30] row envelope (windows
-    * inside a contiguous slice see the same trailing rows as over the
-    * full table, so the output is bit-identical to a full recompute —
-    * oracle-checked), and the output keeps only rows within 30 rows at
-    * or after a restated mark.
+    * asset's contiguous [first − TailRows, last + 30] row envelope
+    * (windows inside a contiguous slice see the same trailing rows as
+    * over the full table, so the output is bit-identical to a full
+    * recompute — oracle-checked), and the output keeps only rows
+    * within 30 rows at or after a restated mark.
     *
     * `restated`: the already-corrected daily table; `restatedKeys`:
     * the (date, asset) rows that changed. Compose with
@@ -134,7 +147,7 @@ object Indicators {
     val marks = withRn.join(restatedKeys.select("date", "asset"), Seq("date", "asset"), "left_semi")
       .select(col("asset").as("__m_asset"), col("__rn").as("__m_rn"))
     val env = marks.groupBy("__m_asset")
-      .agg((min(col("__m_rn")) - 31).as("__lo"), (max(col("__m_rn")) + 30).as("__hi"))
+      .agg((min(col("__m_rn")) - TailRows).as("__lo"), (max(col("__m_rn")) + 30).as("__hi"))
     val slice = withRn.join(broadcast(env),
       col("asset") === col("__m_asset") && col("__rn").between(col("__lo"), col("__hi")))
       .drop("__m_asset", "__lo", "__hi")

@@ -1841,6 +1841,16 @@ object Warehouse {
     * so the retry re-reads nothing but the number. Returns the version
     * holding the batch's rows (current version for a skip/empty
     * batch).
+    *
+    * A skipped epoch first rolls `_latest` forward to the writer's
+    * newest stamped version ([[rollForwardStamped]]): a commit that
+    * died between its manifest and its pointer advance is complete but
+    * unpublished, and the next epoch bases itself on `_latest`, so
+    * without the roll-forward it would commit above that version
+    * without its rows. Rolling forward, rather than making the epoch
+    * gate ignore unpublished stamps, keeps [[lastCommittedEpoch]]'s
+    * answer the one every txn protocol reads (a retry that re-appended
+    * on the newest version would duplicate the batch).
     */
   def commitStreamBatch(batch: DataFrame, path: String, appId: String, epoch: Long,
                         changeFeed: Boolean = false,
@@ -1854,9 +1864,10 @@ object Warehouse {
       // zombie driver that loses the CAS to its replacement must see
       // the replacement's epoch stamp — a single pre-loop check would
       // let the zombie re-append an already-committed epoch
-      if (lastCommittedEpoch(spark, path, appId).exists(_ >= epoch))
+      if (lastCommittedEpoch(spark, path, appId).exists(_ >= epoch)) {
+        rollForwardStamped(spark, path, appId)
         mainWriteBase(spark, path)
-      else {
+      } else {
         // content base = the MAIN lineage (review r11: currentSnapshot
         // includes unpublished branch heads — a stream basing itself on
         // one would silently publish it); version number allocated above
@@ -1867,6 +1878,22 @@ object Warehouse {
           .getOrElse(base) // empty batch: no commit
       }
     }
+  }
+
+  /** Publish `appId`'s newest stamped version if it sits above the main
+    * pointer: its commit died after the manifest and before the
+    * advance. Only versions above `_latest` are read, so a table whose
+    * last commit completed costs no manifest read. The advance is
+    * forward-only: when a foreign main commit has already moved
+    * `_latest` past that version, the pointer stays where it is.
+    */
+  private def rollForwardStamped(spark: SparkSession, path: String, appId: String): Unit = {
+    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val base = mainWriteBase(spark, path)
+    snapshots(spark, path).reverseIterator.takeWhile(_ > base)
+      .find(v => readManifest(fs, path, v).exists(m =>
+        m.has("txnApp") && m.get("txnApp").asText == appId))
+      .foreach(Commit.advancePointer(fs, path, _))
   }
 
   /** STREAMING SINK into the snapshot warehouse — [[readSnapshotStream]]'s
@@ -1945,10 +1972,12 @@ object Warehouse {
                         orphanGraceMs: Long = 600000L): Long = {
     val spark = batch.sparkSession
     retryOnConflict(19) {
-      // epoch gate inside the retry loop — see [[commitStreamBatch]]
-      if (lastCommittedEpoch(spark, path, appId).exists(_ >= epoch))
+      // epoch gate inside the retry loop, with the roll-forward of a
+      // stamped but unpublished version — see [[commitStreamBatch]]
+      if (lastCommittedEpoch(spark, path, appId).exists(_ >= epoch)) {
+        rollForwardStamped(spark, path, appId)
         mainWriteBase(spark, path)
-      else mergeIntoSnapshot(spark, path, batch, keys, clauses,
+      } else mergeIntoSnapshot(spark, path, batch, keys, clauses,
         orphanGraceMs, changeFeed = changeFeed, txn = Some((appId, epoch)))
     }
   }

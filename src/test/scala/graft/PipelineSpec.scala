@@ -132,6 +132,9 @@ class PipelineSpec extends SparkSpec {
     assert(state(bare) === bareBefore)
   }
 
+  private def dataFiles(root: String, table: String): Seq[(String, Long)] =
+    state(root).filter(_._1.startsWith(s"$table/part-"))
+
   test("a replayed tick appends nothing: raw_prices file listing and both tables unchanged") {
     val root = java.nio.file.Files.createTempDirectory("graft_replay").toString
     val p = new Pipeline(spark, root, new FixtureFetcher())
@@ -139,12 +142,99 @@ class PipelineSpec extends SparkSpec {
     def raw = state(root).filter(_._1.startsWith("raw_prices/"))
     def content(t: String) = spark.read.parquet(s"$root/$t").collect().map(_.toString).sorted.toSeq
     val (rawBefore, rowsBefore, metricsBefore) = (raw, content("raw_prices"), content("daily_metrics"))
+    val metricsFilesBefore = dataFiles(root, "daily_metrics")
     assert(rawBefore.count(_._1.startsWith("raw_prices/part-")) === 3) // one file per loaded day
     p.runDay("BTC-USD", "2024-01-02")
     assert(raw === rawBefore)
+    assert(dataFiles(root, "daily_metrics") === metricsFilesBefore)
     assert(content("raw_prices") === rowsBefore)
     assert(content("daily_metrics") === metricsBefore)
     assert(staging(root).isEmpty)
+  }
+
+  test("an in-order tick appends one daily_metrics file and leaves every existing file as it was") {
+    val root = java.nio.file.Files.createTempDirectory("graft_inorder").toString
+    val p = new Pipeline(spark, root, new FixtureFetcher())
+    p.runRange("BTC-USD", "2024-01-01", "2024-01-03")
+    val before = dataFiles(root, "daily_metrics")
+    p.runDay("BTC-USD", "2024-01-04")
+    val after = dataFiles(root, "daily_metrics")
+    assert(before.forall(after.contains))
+    assert(after.size === before.size + 1)
+    assert(spark.read.parquet(s"$root/daily_metrics").count() === 4)
+    assert(staging(root).isEmpty)
+  }
+
+  /** The `daily_metrics` of a fresh root that `backfillAll` filled
+    * with `days` from `fetcher`: the full-recompute table. */
+  private def fullRecompute(fetcher: Fetcher, days: Seq[String]): Seq[org.apache.spark.sql.Row] = {
+    val fresh = java.nio.file.Files.createTempDirectory("graft_full").toString
+    new Pipeline(spark, fresh, fetcher).backfillAll("BTC-USD", days)
+    spark.read.parquet(s"$fresh/daily_metrics").orderBy("date").collect().toSeq
+  }
+
+  test("ticks equal the full recompute after in-order days, a replay, an out-of-order day and a restated day") {
+    val root = java.nio.file.Files.createTempDirectory("graft_equiv").toString
+    def metrics = spark.read.parquet(s"$root/daily_metrics").orderBy("date").collect().toSeq
+    val full = new FixtureFetcher()
+    val late = "2024-01-11"
+    // the late day first arrives without its last 3 hours (21 rows: the
+    // quality gate's 20-row floor still passes)
+    val thin = new Fetcher {
+      def fetch(spec: FetchSpec) = if (spec.day == late) full.fetch(spec).take(21) else full.fetch(spec)
+    }
+    val p = new Pipeline(spark, root, full)
+    val inOrder = ((1 to 4) ++ (6 to 10)).map(d => f"2024-01-$d%02d") // 2024-01-05 comes later
+    inOrder.foreach(p.runDay("BTC-USD", _))
+    assert(metrics === fullRecompute(full, inOrder))
+
+    p.runDay("BTC-USD", "2024-01-07") // replay
+    assert(metrics === fullRecompute(full, inOrder))
+
+    p.runDay("BTC-USD", "2024-01-05") // out of order
+    val days = (1 to 10).map(d => f"2024-01-$d%02d")
+    assert(metrics === fullRecompute(full, days))
+
+    new Pipeline(spark, root, thin).runDay("BTC-USD", late) // in order, thin
+    assert(metrics === fullRecompute(thin, days :+ late))
+    // the source now has every hour: re-extract and re-tick, which
+    // restates the day's OHLC (loadRaw is first-wins per hour)
+    val thinClose = metrics.last.getAs[Double]("close")
+    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(s"$root/csv/BTC-USD_prices_$late"))
+    p.runDay("BTC-USD", late)
+    assert(metrics.last.getAs[Double]("close") !== thinClose)
+    assert(metrics === fullRecompute(full, days :+ late))
+    assert(staging(root).isEmpty)
+  }
+
+  test("an in-order tick writes as many daily_metrics bytes at 40 days of history as at 4") {
+    def day(i: Int) = java.time.LocalDate.parse("2024-01-01").plusDays(i.toLong).toString
+    /** Bytes of the daily_metrics files each tick creates or resizes,
+      * ticking days `from until to` after a backfill of the days before
+      * `from`. A table rewrite counts every file; an append only its own.
+      */
+    def bytesWritten(from: Int, to: Int): Seq[Long] = {
+      val root = java.nio.file.Files.createTempDirectory("graft_hist").toString
+      val p = new Pipeline(spark, root, new FixtureFetcher())
+      p.backfillAll("BTC-USD", (0 until from).map(day))
+      def files = state(root).filter(_._1.startsWith("daily_metrics/"))
+      (from until to).map { i =>
+        val before = files.toSet
+        p.runDay("BTC-USD", day(i))
+        files.filterNot(before).map(_._2).sum
+      }
+    }
+    // the first tick after a backfill rewrites the table (the backfill
+    // leaves it unstamped); every later tick is an in-order append
+    val short = bytesWritten(3, 5).last // at 4 days of history
+    val long = bytesWritten(33, 41).tail // at 34 to 40 days
+    assert(long.max - long.min <= 8, s"bytes written at 34 to 40 days of history: $long")
+    // the row at 4 days holds three NULL indicators, which parquet
+    // stores with no value and no min/max statistics: that, not the
+    // history, is the gap to the 40-day row (a rewrite at 40 days would
+    // write 36 more rows)
+    assert(short < long.last && long.last - short <= 256,
+      s"bytes written: $short at 4 days of history, ${long.last} at 40")
   }
 
   test("renderReport writes PNG (reference savefig parity) and SVG chart artifacts (S11/S12)") {

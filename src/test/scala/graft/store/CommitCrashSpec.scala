@@ -79,4 +79,17 @@ class CommitCrashSpec extends SparkSpec {
       }
     }
   }
+
+  test("commitStreamBatch: an epoch that died after its manifest is replayed, and the next epoch keeps its rows") {
+    val root = java.nio.file.Files.createTempDirectory("graft_crash_stream").toString + "/t"
+    Warehouse.commitSnapshot(spark.range(0, 10).toDF("id"), root, 0L)
+    def epoch(n: Long) = spark.range(100 * (n + 1), 100 * (n + 1) + 10).toDF("id")
+    Commit.afterStep = (p, s) => if (p == root && s == Commit.Step.Manifest) throw new Crash(s)
+    try intercept[Crash](Warehouse.commitStreamBatch(epoch(0), root, "stream", 0L))
+    finally Commit.afterStep = (_, _) => ()
+    assert(rows(root) == (0L until 10L)) // the pointer did not move
+    Warehouse.commitStreamBatch(epoch(0), root, "stream", 0L) // the replay
+    Warehouse.commitStreamBatch(epoch(1), root, "stream", 1L)
+    assert(rows(root) == (0L until 10L) ++ (100L until 110L) ++ (200L until 210L))
+  }
 }

@@ -2092,14 +2092,15 @@ object SparkEntry {
         |FROM n a JOIN n b ON a.vec_id < b.vec_id
         |WHERE list_dot_product(a.v, b.v) / (a.nm * b.nm) >= 0.4""".stripMargin)),
     "q_embed_neardup_lsh" -> QuerySpec((s, dir) => // approximate (banded-signature candidates): rows-only
-      Similarity.embeddingNearDupsApprox(Tables.embeddings(s, dir), threshold = 0.45, bands = 16), None),
+      Similarity.embeddingNearDupsApprox(Tables.embeddings(s, dir), threshold = 0.45,
+        Similarity.gaussianBands(16, 64)), None),
     "q_embed_neardup_lsh_md5" -> QuerySpec((s, dir) => // r13 FULL oracle: md5 ±1
       // plane bands make the banded candidate generation, the exact-
       // cosine verify and the pair set all engine-recomposable — the
-      // embedding-LSH family's portable pin (the Gaussian-plane
-      // production path stays q_embed_neardup_lsh)
-      Similarity.embeddingNearDupsApproxPortable(Tables.embeddings(s, dir),
-        threshold = 0.45, bands = 16),
+      // embedding-LSH family's portable pin: q_embed_neardup_lsh runs
+      // the same plan over Gaussian planes
+      Similarity.embeddingNearDupsApprox(Tables.embeddings(s, dir),
+        threshold = 0.45, Similarity.md5SignPlanes(16, 4, 64)),
       // r13 portable embedding-LSH near-dup: 16 md5 ±1 plane bands of 4
       // bits, bucket-equijoin candidates, exact-cosine verify at 0.45 —
       // the q_ann_lsh_md5 signature CTE at band grain
@@ -2286,11 +2287,11 @@ object SparkEntry {
         |SELECT vec_id, cluster FROM a2""".stripMargin)),
     "q_ann_lsh_md5" -> QuerySpec((s, dir) => { // X230 FULL oracle: md5-derived
       // ±1 hyperplanes make signature, bucket, multiprobe and rerank
-      // all engine-recomposable — the LSH probe logic's portable pin
-      // (the fitted-Gaussian production path stays q_ann_lsh)
+      // all engine-recomposable — the LSH probe logic's portable pin:
+      // q_ann_lsh runs the same plan over Gaussian planes
       val e = Tables.embeddings(s, dir)
-      Similarity.lshTopKPortable(e.filter(col("vec_id") < 10),
-        e.filter(col("vec_id") >= 10), k = 10, bits = 8, tables = 4)
+      Similarity.lshTopK(e.filter(col("vec_id") < 10),
+        e.filter(col("vec_id") >= 10), k = 10, Similarity.md5SignPlanes(4, 8, 64))
     },
       // X230 portable LSH: planes rebuilt from md5 parity (±1 entries),
       // signature = sign of the same sequential float64 dot product

@@ -92,6 +92,12 @@ object Contamination {
     * the per-shingle all-4 count and doc rollup are two slim
     * hash-aggs. [[flagBloom]] (zero-explode codegen probe) stays the
     * performance path.
+    *
+    * Why the two screens stay two plans (unlike the LSH, SimHash and
+    * MinHash families, whose md5 keys run the production plan with the
+    * md5 source passed in): [[flagBloom]]'s bit layout and probe belong
+    * to Spark's `BloomFilter`, so no plan of ours is left for this
+    * key's oracle to pin there.
     */
   def flagBloomMd5(corpus: DataFrame, benchmark: DataFrame, n: Int = 5,
                    minShared: Int = 1, mBits: Long = 1L << 20): DataFrame = {

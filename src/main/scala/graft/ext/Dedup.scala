@@ -437,6 +437,13 @@ object Dedup {
     * probability at j=0.9 is 1-(1-0.9⁸)¹⁶ ≈ 0.9999 and false
     * candidates at j=0.1 are ~0 — and every candidate is verified
     * against the true shingle sets anyway, so precision is exact.
+    *
+    * The MinHash family is one plan behind two signature sources:
+    * band keys → [[bandCandidates]] → [[verifyJaccard]]. This lane's
+    * source is the xxhash64 codegen kernel (rows-only: xxhash64's
+    * seed/variant is engine-specific); [[minhashNearDupsMd5]]'s is the
+    * md5 construction, whose oracle (q_dedup_minhash_md5) therefore
+    * pins the candidate join and the verify this lane runs too.
     */
   def minhashNearDups(docs: DataFrame, n: Int = 3, numHashes: Int = 128,
                       bands: Int = 16, threshold: Double = 0.8): DataFrame = {
@@ -450,12 +457,20 @@ object Dedup {
       col("doc_id"),
       explode(graft.functions.native.minhashBandKeys(
         shingles(col("text"), n), as, bs, bands)).as("bk"))
-    val candidates = banded.as("x").join(banded.as("y"),
-        col("x.bk") === col("y.bk") && col("x.doc_id") < col("y.doc_id"))
+    verifyJaccard(docs, bandCandidates(banded, "bk"), n, threshold)
+  }
+
+  /** The LSH candidate rule of both MinHash lanes: every doc pair
+    * (a < b) of `banded` (doc_id + the band-key columns `keys`) that
+    * agrees on all `keys` in some row — a pair colliding in several
+    * bands is emitted once.
+    */
+  private def bandCandidates(banded: DataFrame, keys: String*): DataFrame =
+    banded.as("x").join(banded.as("y"),
+        keys.map(k => col(s"x.$k") === col(s"y.$k")).reduce(_ && _) &&
+          col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
       .distinct()
-    verifyJaccard(docs, candidates, n, threshold)
-  }
 
   /** Exact Jaccard for a candidate pair set: the pair list joins the
     * per-doc shingle ARRAYS (two plain doc_id equi-joins — the corpus
@@ -478,26 +493,9 @@ object Dedup {
       .select("a", "b", "jaccard")
   }
 
-  /** The ENGINE-PORTABLE MinHash companion (VERDICT r8 #6): same
-    * banding/bucket/verify logic as [[minhashNearDups]], but the base
-    * shingle hash is derived from md5 — computable bit-identically by
-    * any engine (md5 is specified; xxhash64's seed/variant is not), so
-    * this variant's output hash-matches a DuckDB recomposition and
-    * pins the LSH construction cross-engine. Construction, fixed by
-    * contract with the q_dedup_minhash_md5 oracle:
-    * base h = toLong(first 15 hex chars of md5(shingle)) mod P,
-    * P = 2^31−1; 8 universal hashes m_i = min((a_i·h + b_i) mod P)
-    * (params in [[Md5MinhashParams]] — all < P, so products stay under
-    * 2^62 and overflow semantics never diverge between engines);
-    * 4 bands × 2 rows, band key = "m_{2k},m_{2k+1}"; candidates from
-    * band-key equality, then exact-Jaccard verified like every other
-    * pair source (precision 1.0 — only recall is probabilistic, and
-    * at j=0.8 detection is 1−(1−0.64)⁴ ≈ 0.983 per true pair).
-    *
-    * Scale note: one corpus explode + one groupBy — the same
-    * Σ-bounded shape as the xxhash64 kernel path, minus the
-    * zero-shuffle signature expression; keep [[minhashNearDups]] as
-    * the performance path and this as the cross-engine-verifiable one.
+  /** Universal-hash parameters of the md5 MinHash construction
+    * ([[md5MinhashSigs]]) — all < P, so products stay under 2^62 and
+    * overflow semantics never diverge between engines.
     */
   val Md5MinhashParams: Seq[(Long, Long)] = Seq(
     (1103515245L, 12345L), (1588635695L, 179426549L),
@@ -505,82 +503,61 @@ object Dedup {
     (982451653L, 32452843L), (472882027L, 86028121L),
     (1500450271L, 694847539L), (198491317L, 15485863L))
 
-  def minhashNearDupsMd5(docs: DataFrame, n: Int = 3, threshold: Double = 0.8): DataFrame = {
-    val P = 2147483647L
-    val ex = docs.filter(hasShingles(n))
-      .select(col("doc_id"), explode(shingles(col("text"), n)).as("s"))
-    val h = conv(substring(md5(col("s")), 1, 15), 16, 10).cast("long") % P
-    val hashed = ex.select(col("doc_id"), h.as("h"))
-    val sigCols = Md5MinhashParams.zipWithIndex.map { case ((a, b), i) =>
-      min((col("h") * a + b) % P).as(s"m$i")
+  private val Md5P = 2147483647L // 2^31 - 1, the md5-family universal-hash modulus
+  private val Md5Pack = 2147483648L // 2^31: bk = m_even * Md5Pack + m_odd (both < P, fits a long)
+
+  /** The md5 families' base shingle hash: the first 15 hex chars of
+    * md5(s) as a 60-bit long — every shift of it stays inside a signed
+    * long in any engine.
+    */
+  private def md5Hash60(s: Column): Column = conv(substring(md5(s), 1, 15), 16, 10).cast("long")
+
+  /** The md5 MinHash signature source, fixed by contract with the
+    * q_dedup_minhash_md5 and q_dedup_shingle_indexed oracles: base
+    * h = [[md5Hash60]](shingle); 8 universal hashes
+    * m_i = min(((h mod P)·a_i + b_i) mod P), P = 2^31−1, params
+    * [[Md5MinhashParams]]. md5 is specified, so any engine computes
+    * it bit-identically. `withSh` is (doc_id, sh: shingle array); the
+    * result is one row per doc: doc_id, m0..m7, then the `extra`
+    * aggregates, which may read the base hash column `h`.
+    */
+  private[ext] def md5MinhashSigs(withSh: DataFrame, extra: Column*): DataFrame = {
+    val hashed = withSh.select(col("doc_id"), explode(col("sh")).as("s"))
+      .select(col("doc_id"), md5Hash60(col("s")).as("h"))
+    val mins = Md5MinhashParams.zipWithIndex.map { case ((a, b), i) =>
+      min(((col("h") % Md5P) * a + b) % Md5P).as(s"m$i")
     }
-    val sig = hashed.groupBy("doc_id").agg(sigCols.head, sigCols.tail: _*)
-    val bandCols = (0 until 4).map { k =>
-      struct(lit(k).as("band"),
-        concat_ws(",", col(s"m${2 * k}"), col(s"m${2 * k + 1}")).as("bk"))
-    }
-    val banded = sig.select(col("doc_id"), explode(array(bandCols: _*)).as("bb"))
-      .select(col("doc_id"), col("bb.band").as("band"), col("bb.bk").as("bk"))
-    val candidates = banded.as("x").join(banded.as("y"),
-        col("x.band") === col("y.band") && col("x.bk") === col("y.bk") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-      .distinct()
-    verifyJaccard(docs, candidates, n, threshold)
+    hashed.groupBy("doc_id").agg(mins.head, mins.tail ++ extra: _*)
   }
 
-  /** The ENGINE-PORTABLE SimHash companion — [[minhashNearDupsMd5]]'s
-    * move applied to the SimHash family: same pigeonhole banding and
-    * exact hamming verify as [[simhashNearDups]], but the fingerprint
-    * construction is fixed by md5 so any engine recomposes it
-    * bit-identically and the full pipeline hash-matches a DuckDB
-    * recomposition (q_dedup_simhash_md5), leaving the xxhash64 kernel
-    * path as the performance variant. Construction, by contract with
-    * the oracle: base h = toLong(first 15 hex chars of md5(shingle)) —
-    * a 60-bit value, so every shift stays inside a signed long in both
-    * engines; vote_j = Σ over the doc's DISTINCT shingles of ±1 on
-    * hash bit j; fingerprint bit j = 1 iff vote_j > 0 (tie → 0);
-    * 4 bands × 15 bits — pigeonhole-EXACT for hamming ≤ 3 (a pair
-    * within 3 flips agrees on ≥1 of 4 bands), so unlike the MinHash
-    * LSH this variant's recall is 1.0 at the default threshold, not
-    * probabilistic.
-    *
-    * Shape: one corpus explode → ONE doc-grain hash-agg carrying 60
-    * codegen'd ±1 sums (the fingerprint never leaves the aggregate as
-    * per-bit rows) → 4 thin band rows per doc → band-bucket equi-join
-    * → exact `bit_count(xor)` verify on the fingerprint pairs.
+  /** The 4 band rows of an [[md5MinhashSigs]] row, exploded: struct
+    * (band k, bk = m_{2k}·2^31 + m_{2k+1}). The packing is injective
+    * (both mins < 2^31), so bk equality is band-row equality.
     */
-  def simhashNearDupsMd5(docs: DataFrame, n: Int = 3, maxHamming: Int = 3): DataFrame = {
-    require(maxHamming <= 3, "4x15-bit banding is pigeonhole-exact only for maxHamming <= 3")
-    val ex = docs.filter(hasShingles(n))
-      .select(col("doc_id"), explode(shingles(col("text"), n)).as("s"))
-    val h = conv(substring(md5(col("s")), 1, 15), 16, 10).cast("long")
-    val hashed = ex.select(col("doc_id"), h.as("h"))
-    val voteCols = (0 until 60).map { j =>
-      sum(when(shiftright(col("h"), j).bitwiseAND(lit(1L)) === 1L, 1L)
-        .otherwise(-1L)).as(s"v$j")
-    }
-    val votes = hashed.groupBy("doc_id").agg(voteCols.head, voteCols.tail: _*)
-    val fp = (0 until 60).map { j =>
-      when(col(s"v$j") > 0, lit(1L << j)).otherwise(lit(0L))
-    }.reduce(_ + _)
-    val fps = votes.select(col("doc_id"), fp.as("f"))
-    val bandCols = (0 until 4).map { k =>
-      struct(lit(k).as("band"),
-        shiftright(col("f"), k * 15).bitwiseAND(lit(32767L)).as("bk"))
-    }
-    val banded = fps.select(col("doc_id"), explode(array(bandCols: _*)).as("bb"))
+  private[ext] def md5Bands: Column =
+    explode(array((0 until 4).map { k =>
+      struct(lit(k).as("band"), (col(s"m${2 * k}") * Md5Pack + col(s"m${2 * k + 1}")).as("bk"))
+    }: _*))
+
+  /** [[minhashNearDups]]'s plan under the md5 signature source
+    * ([[md5MinhashSigs]]: 8 hashes, 4 bands × 2 rows) — the
+    * ENGINE-PORTABLE lane (VERDICT r8 #6): its output hash-matches a
+    * DuckDB recomposition (q_dedup_minhash_md5), which pins the band
+    * candidate join and the exact-Jaccard verify both lanes share.
+    * Precision is 1.0; recall at j=0.8 is 1−(1−0.64)⁴ ≈ 0.983 per
+    * true pair.
+    *
+    * Scale note: one corpus explode + one groupBy for the signature —
+    * the same Σ-bounded shape as the xxhash64 kernel lane, minus the
+    * zero-shuffle signature expression; [[minhashNearDups]] stays the
+    * performance lane.
+    */
+  def minhashNearDupsMd5(docs: DataFrame, n: Int = 3, threshold: Double = 0.8): DataFrame = {
+    val banded = md5MinhashSigs(
+        docs.filter(hasShingles(n)).select(col("doc_id"), shingles(col("text"), n).as("sh")))
+      .select(col("doc_id"), md5Bands.as("bb"))
       .select(col("doc_id"), col("bb.band").as("band"), col("bb.bk").as("bk"))
-    val candidates = banded.as("x").join(banded.as("y"),
-        col("x.band") === col("y.band") && col("x.bk") === col("y.bk") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b")).distinct()
-    candidates
-      .join(fps.select(col("doc_id").as("a"), col("f").as("fa")), Seq("a"))
-      .join(fps.select(col("doc_id").as("b"), col("f").as("fb")), Seq("b"))
-      .withColumn("hamming", bit_count(col("fa").bitwiseXOR(col("fb"))).cast("long"))
-      .filter(col("hamming") <= maxHamming)
-      .select("a", "b", "hamming")
+    verifyJaccard(docs, bandCandidates(banded, "band", "bk"), n, threshold)
   }
 
   // ---- SimHash ----
@@ -595,10 +572,20 @@ object Dedup {
       .select(col("doc_id"),
         graft.functions.native.simhash64(shingles(col("text"), n)).as("simhash"))
 
-  /** SimHash near-dups: hamming(a,b) ≤ maxHamming. Candidates via the
-    * pigeonhole trick — split the 64-bit fingerprint into
-    * maxHamming+1 chunks; any pair within distance maxHamming agrees
-    * on ≥1 chunk.
+  /** SimHash near-dups: hamming(a,b) ≤ maxHamming, over the xxhash64
+    * fingerprints of [[simhash]] (rows-only: xxhash64's seed/variant is
+    * engine-specific). [[simhashNearDupsMd5]] runs the same pair stage
+    * ([[simhashPairs]]) over md5 fingerprints, so its oracle
+    * (q_dedup_simhash_md5) pins this lane's candidate and verify logic.
+    */
+  def simhashNearDups(docs: DataFrame, n: Int = 3, maxHamming: Int = 3): DataFrame =
+    simhashPairs(simhash(docs, n), maxHamming)
+
+  /** The SimHash pair stage over (doc_id, simhash) fingerprints.
+    * Candidates via the pigeonhole trick — split the 64-bit
+    * fingerprint into maxHamming+1 chunks; any pair within distance
+    * maxHamming agrees on ≥1 chunk, so the pair set is EXACTLY the
+    * hamming ≤ maxHamming set (recall 1.0, not probabilistic).
     *
     * Shape (group-pairs, round-6 — the same rework the ngram family
     * got in round 4): one chunk explode (maxHamming+1 thin rows per
@@ -615,10 +602,9 @@ object Dedup {
     * pair work is still Σ bucket² (pigeonhole cost at any scale), but
     * no candidate row ever crosses the wire.
     */
-  def simhashNearDups(docs: DataFrame, n: Int = 3, maxHamming: Int = 3): DataFrame = {
+  private def simhashPairs(fps: DataFrame, maxHamming: Int): DataFrame = {
     val chunks = maxHamming + 1
     val width = 64 / chunks
-    val fps = simhash(docs, n)
     fps.select(
         col("doc_id"), col("simhash"),
         explode(array((0 until chunks).map { j =>
@@ -632,6 +618,38 @@ object Dedup {
       .select(explode(graft.functions.native.simhashBucketPairs(
         col("ids"), col("ck"), width, maxHamming)).as("p"))
       .select(col("p.a").as("a"), col("p.b").as("b"), col("p.hamming").as("hamming"))
+  }
+
+  /** [[simhashNearDups]]'s pair stage over md5 fingerprints — the
+    * ENGINE-PORTABLE SimHash lane: the fingerprint construction is
+    * fixed by md5, so any engine recomposes it bit-identically and the
+    * whole key hash-matches a DuckDB recomposition
+    * (q_dedup_simhash_md5). Construction, by contract with the oracle:
+    * base h = [[md5Hash60]](shingle); vote_j = Σ over the doc's
+    * DISTINCT shingles of ±1 on hash bit j; fingerprint bit j = 1 iff
+    * vote_j > 0 (tie → 0). The key's oracle bands the 60 bits 4 × 15
+    * where the pair stage chunks 64 bits 4 × 16 (maxHamming 3): both
+    * are pigeonhole-exact, so the pair sets are equal. `hamming` is a
+    * long here (the oracle's BIGINT).
+    *
+    * Shape: one corpus explode → ONE doc-grain hash-agg carrying 60
+    * codegen'd ±1 sums (the fingerprint never leaves the aggregate as
+    * per-bit rows) → [[simhashPairs]].
+    */
+  def simhashNearDupsMd5(docs: DataFrame, n: Int = 3, maxHamming: Int = 3): DataFrame = {
+    val hashed = docs.filter(hasShingles(n))
+      .select(col("doc_id"), explode(shingles(col("text"), n)).as("s"))
+      .select(col("doc_id"), md5Hash60(col("s")).as("h"))
+    val voteCols = (0 until 60).map { j =>
+      sum(when(shiftright(col("h"), j).bitwiseAND(lit(1L)) === 1L, 1L)
+        .otherwise(-1L)).as(s"v$j")
+    }
+    val fp = (0 until 60).map { j =>
+      when(col(s"v$j") > 0, lit(1L << j)).otherwise(lit(0L))
+    }.reduce(_ + _)
+    val fps = hashed.groupBy("doc_id").agg(voteCols.head, voteCols.tail: _*)
+      .select(col("doc_id"), fp.as("simhash"))
+    simhashPairs(fps, maxHamming).withColumn("hamming", col("hamming").cast("long"))
   }
 
   /** Substring-level duplication profile (Lee et al. '22,

@@ -75,8 +75,6 @@ object ShingleIndex {
 
   private val Md5Mode = "md5"
   private val XxhMode = "xxh"
-  private val P = 2147483647L // 2^31 - 1, the md5-family universal-hash modulus
-  private val Pack = 2147483648L // 2^31: bk = m_even * Pack + m_odd (both < P, fits a long)
   private val XxhNumHashes = 128
   private val XxhBands = 16
 
@@ -128,24 +126,11 @@ object ShingleIndex {
       .filter(col("text").isNotNull && size(split(col("text"), " ")) >= n)
       .select(col("doc_id"), Dedup.shingles(col("text"), n).as("sh"))
     val signed = if (mode == Md5Mode) {
-      // the q_dedup_minhash_md5 construction verbatim (see Dedup.
-      // minhashNearDupsMd5): h = 60-bit md5 prefix, sig mins over
-      // h mod P; shh keeps the FULL 60-bit h for the Jaccard verify
-      val ex = withSh.select(col("doc_id"), explode(col("sh")).as("s"))
-      val h = conv(substring(md5(col("s")), 1, 15), 16, 10).cast("long")
-      val hashed = ex.select(col("doc_id"), h.as("h"))
-      val sigCols = Dedup.Md5MinhashParams.zipWithIndex.map { case ((a, b), i) =>
-        min(((col("h") % P) * a + b) % P).as(s"m$i")
-      }
-      val agg = hashed.groupBy("doc_id")
-        .agg(sigCols.head, (sigCols.tail :+
-          sort_array(collect_set(col("h"))).as("shh")): _*)
-      val bandCols = (0 until 4).map { k =>
-        struct(lit(k).as("band"),
-          (col(s"m${2 * k}") * Pack + col(s"m${2 * k + 1}")).as("bk"))
-      }
-      agg.select(col("doc_id"), size(col("shh")).cast("long").as("n_sh"), col("shh"),
-          explode(array(bandCols: _*)).as("bb"))
+      // the q_dedup_minhash_md5 construction (Dedup.md5MinhashSigs);
+      // shh keeps the FULL 60-bit base hash h for the Jaccard verify
+      Dedup.md5MinhashSigs(withSh, sort_array(collect_set(col("h"))).as("shh"))
+        .select(col("doc_id"), size(col("shh")).cast("long").as("n_sh"), col("shh"),
+          Dedup.md5Bands.as("bb"))
         .select(
           (col("bb.band") * nb + pmod(col("bb.bk"), lit(nb.toLong))).cast("int").as("bucket"),
           col("bb.band").cast("int").as("band"), col("bb.bk").as("bk"),

@@ -129,33 +129,68 @@ object Similarity {
     Array.fill(bits)(Array.fill(dim)(rnd.nextGaussian()))
   }
 
-  /** Sign-bit signature of an embedding under the hyperplanes —
-    * one codegen'd pass over all planes
-    * ([[graft.functions.HyperplaneSigExpr]]).
+  /** The production plane source of [[lshTopK]]: `tables` independent
+    * Gaussian draws of `bits` planes each (table t seeded 42 + t).
     */
-  private def signature(v: Column, planes: Array[Array[Double]]): Column =
-    graft.functions.native.hyperplaneSig(v, planes)
+  def gaussianPlanes(tables: Int, bits: Int, dim: Int): Array[Array[Array[Double]]] =
+    Array.tabulate(tables)(t => hyperplanes(bits, dim, seed = 42L + t))
+
+  /** The production plane source of [[embeddingNearDupsApprox]]: ONE
+    * Gaussian draw of 64 planes (seed 42), split into `bands` tables of
+    * 64/bands consecutive planes — table b's signature is bits
+    * [b·64/bands, (b+1)·64/bands) of the 64-bit signature. A `bands`
+    * that does not divide 64 leaves a short last table, which
+    * [[embeddingNearDupsApprox]] refuses.
+    */
+  def gaussianBands(bands: Int, dim: Int): Array[Array[Array[Double]]] =
+    hyperplanes(64, dim).grouped(64 / bands).toArray
+
+  /** md5-derived ±1 hyperplanes — the engine-portable plane source of
+    * the sign-LSH family: component (t, p, i) is +1 when the first hex
+    * digit of md5("lsh:t:p:i") is even, −1 otherwise. Rademacher (±1)
+    * entries are a standard random-projection family (sign-LSH only
+    * needs symmetric zero-mean directions), and every entry is
+    * reproducible from the MD5 standard alone — no RNG stream, no
+    * library, any engine derives the identical planes.
+    */
+  def md5SignPlanes(tables: Int, bits: Int, dim: Int): Array[Array[Array[Double]]] =
+    Array.tabulate(tables, bits, dim) { (t, p, i) =>
+      val d = java.security.MessageDigest.getInstance("MD5")
+        .digest(s"lsh:$t:$p:$i".getBytes("UTF-8"))
+      if (((d(0) >> 4) & 1) == 0) 1.0 else -1.0
+    }
 
   /** Approximate top-k via multi-table LSH + exact rerank. One hash
     * table has vanishing recall for moderate-angle neighbors, so the
     * standard construction is L independent tables of `bits`
-    * hyperplanes each: a pair is a candidate if it collides in ANY
-    * table (own bucket or a hamming-1 multiprobe bucket); candidates
-    * are deduped, then scored exactly. With 8×8-bit tables this scores
-    * ~25% of the corpus per query on isotropic random vectors (≈4×
-    * pruning) at recall ~0.75 — on real clustered embeddings the
-    * bucket skew works in our favor and pruning is far stronger.
+    * hyperplanes each (`planes`: tables × bits × dim): a pair is a
+    * candidate if it collides in ANY table (own bucket or a hamming-1
+    * multiprobe bucket); candidates are deduped, then scored exactly.
+    * With the default 8×8-bit Gaussian tables this scores ~25% of the
+    * corpus per query on isotropic random vectors (≈4× pruning) at
+    * recall ~0.75 — on real clustered embeddings the bucket skew works
+    * in our favor and pruning is far stronger.
+    *
+    * The plane source is the family's only randomness, so it is the
+    * parameter: q_ann_lsh runs the [[gaussianPlanes]] default
+    * (rows-only — no other engine replays scala.util.Random), and
+    * q_ann_lsh_md5 runs THIS plan with [[md5SignPlanes]]`(4, 8, 64)`,
+    * under which every stage recomposes in SQL (X230): the signature
+    * bit is the sign of a sequential float64 dot product (Spark's
+    * kernel ≡ DuckDB's list_dot_product), the bucket key is Σ bit·2^p,
+    * multiprobe is bucket XOR 2^p, and the rerank is the exact-cosine
+    * contract — so the md5 key's oracle pins candidate generation,
+    * probing, dedup and ranking of the production key too.
     */
   def lshTopK(queries: DataFrame, corpus: DataFrame, k: Int = 10,
-              bits: Int = 8, tables: Int = 8, dim: Int = 64): DataFrame = {
-    val allPlanes = (0 until tables).map(t => hyperplanes(bits, dim, seed = 42L + t)).toArray
+              planes: Array[Array[Array[Double]]] = gaussianPlanes(8, 8, 64)): DataFrame = {
     // corpus row → one packed (table<<32 | bucket) key per table
     val c = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("cv"),
-      explode(graft.functions.native.lshKeys(col("embedding"), allPlanes, multiprobe = false)).as("tb"))
+      explode(graft.functions.native.lshKeys(col("embedding"), planes, multiprobe = false)).as("tb"))
     // query row → own bucket + hamming-1 probes, per table
     val probes = queries.select(col("vec_id").as("query_id"), col("embedding").as("qv"),
       l2norm(col("embedding")).as("qn"),
-      explode(graft.functions.native.lshKeys(col("embedding"), allPlanes, multiprobe = true)).as("tb"))
+      explode(graft.functions.native.lshKeys(col("embedding"), planes, multiprobe = true)).as("tb"))
     val candidates = broadcast(probes).join(c, Seq("tb"))
     // score first (cheap native dot), dedupe after — the dedup shuffle
     // then moves 3 scalar columns instead of two 64-float arrays
@@ -168,66 +203,6 @@ object Similarity {
       .select("query_id", "rank", "neighbor_id", "sim")
   }
 
-  /** md5-derived ±1 hyperplanes — the engine-portable plane family for
-    * [[lshTopKPortable]]: component (t, p, i) is +1 when the first hex
-    * digit of md5("lsh:t:p:i") is even, −1 otherwise. Rademacher (±1)
-    * entries are a standard random-projection family (sign-LSH only
-    * needs symmetric zero-mean directions), and every entry is
-    * reproducible from the MD5 standard alone — no RNG stream, no
-    * library, any engine derives the identical planes.
-    */
-  private[ext] def md5SignPlanes(tables: Int, bits: Int, dim: Int): Array[Array[Array[Double]]] =
-    Array.tabulate(tables, bits, dim) { (t, p, i) =>
-      val d = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"lsh:$t:$p:$i".getBytes("UTF-8"))
-      if (((d(0) >> 4) & 1) == 0) 1.0 else -1.0
-    }
-
-  /** [[lshTopK]] with [[md5SignPlanes]] — the ENGINE-PORTABLE oracle
-    * twin of the hyperplane-LSH family (X230, the X163/X220 move, and
-    * the ANN family's last unpinned probe logic after the IVF twin):
-    * the production path draws Gaussian planes from a seeded RNG
-    * (rows-only forever — no other engine replays scala.util.Random),
-    * but with md5-derived ±1 planes EVERY stage recomposes in ANSI-ish
-    * SQL: the signature bit is a sign of a sequential float64 dot
-    * product (Spark's kernel ≡ DuckDB's list_dot_product, the
-    * q_topk_cosine bit-exactness precedent) against planes any engine
-    * rebuilds from MD5, the bucket key is Σ bit·2^p, multiprobe is
-    * bucket XOR 2^p, and the rerank is the exact-cosine contract —
-    * so candidate generation, probing, dedup and ranking all
-    * hash-match cross-engine, leaving nothing in the LSH decision
-    * path unverified. Same plan shape as the production path: one
-    * signature pass per side, bucket equi-join (broadcast query
-    * side), scalar-column dedup, windowed top-k.
-    */
-  def lshTopKPortable(queries: DataFrame, corpus: DataFrame, k: Int = 10,
-                      bits: Int = 8, tables: Int = 4, dim: Int = 64): DataFrame = {
-    val allPlanes = md5SignPlanes(tables, bits, dim)
-    val c = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("cv"),
-      explode(graft.functions.native.lshKeys(col("embedding"), allPlanes, multiprobe = false)).as("tb"))
-    val probes = queries.select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-      l2norm(col("embedding")).as("qn"),
-      explode(graft.functions.native.lshKeys(col("embedding"), allPlanes, multiprobe = true)).as("tb"))
-    val candidates = broadcast(probes).join(c, Seq("tb"))
-    val scored = candidates.select(col("query_id"), col("neighbor_id"),
-      (dot(col("qv"), col("cv")) / (col("qn") * l2norm(col("cv")))).as("sim"))
-      .dropDuplicates("query_id", "neighbor_id")
-    val w = Window.partitionBy("query_id").orderBy(desc("sim"), asc("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "sim")
-  }
-
-  /** Approximate top-k via IVF (inverted-file) coarse quantization:
-    * corpus vectors are bucketed by nearest centroid; each query
-    * probes its `nprobe` nearest cells and reranks exactly. Scored
-    * work drops to ~nprobe/nlist of the corpus per query. Centroids:
-    * deterministic seeds (lowest vec_ids) + one Lloyd refinement pass
-    * over a deterministic ~`fitSample × nlist`-row sample (hash-mod on
-    * vec_id, so the fit is partitioning-invariant). The refinement
-    * shuffle is sample × dim cells, never corpus × dim; the full
-    * corpus is only ever scanned once, for assignment.
-    */
   /** Fit the IVF coarse quantizer: `nlist` unit-normalized centroids
     * from deterministic seeds (lowest vec_ids) + one Lloyd refinement
     * pass over a bounded deterministic ~`fitSample × nlist`-row sample
@@ -267,6 +242,16 @@ object Similarity {
     normalize(refined)
   }
 
+  /** Approximate top-k via IVF (inverted-file) coarse quantization:
+    * corpus vectors are bucketed by nearest centroid; each query
+    * probes its `nprobe` nearest cells and reranks exactly. Scored
+    * work drops to ~nprobe/nlist of the corpus per query. Centroids:
+    * deterministic seeds (lowest vec_ids) + one Lloyd refinement pass
+    * over a deterministic ~`fitSample × nlist`-row sample (hash-mod on
+    * vec_id, so the fit is partitioning-invariant). The refinement
+    * shuffle is sample × dim cells, never corpus × dim; the full
+    * corpus is only ever scanned once, for assignment.
+    */
   def ivfTopK(queries: DataFrame, corpus: DataFrame, k: Int = 10,
               nlist: Int = 16, nprobe: Int = 4, fitSample: Int = 50): DataFrame = {
     val cents = coarseCentroids(corpus, nlist, fitSample)
@@ -352,6 +337,16 @@ object Similarity {
     *
     * Output carries both the exact sim and the ADC score, pinning the
     * sweep arithmetic directly, not just through the shortlist cut.
+    *
+    * Why this stays a separate plan rather than [[pqTopK]] with the
+    * codebooks passed in (the move [[lshTopK]] and
+    * [[embeddingNearDupsApprox]] made): the two lanes differ beyond
+    * their randomness source — in cell assignment (fitted coarse
+    * centroids vs `vec_id mod nlist`), in ADC arithmetic order (an
+    * m-term table-lookup sum vs one sequential 64-dim dot with the
+    * decoded vector, the order the oracle can replay) and in output
+    * schema (the `adc` column). One plan would have to branch on all
+    * three, so neither key's rows would stay the same.
     */
   def pqTopKPortable(queries: DataFrame, corpus: DataFrame, k: Int = 10,
                      nlist: Int = 16, nprobe: Int = 4, m: Int = 8,
@@ -440,14 +435,6 @@ object Similarity {
       .filter(col("sim") >= threshold)
   }
 
-  /** Per-vector int8 scalar quantization: scale = 127 / max|xᵢ|, then
-    * qᵢ = round(xᵢ·scale) ∈ [−127, 127] — the standard symmetric
-    * scheme vector stores use to cut embedding storage 4× before ANN
-    * indexing. Pure expressions, zero shuffle. Emits the quantized
-    * array plus audit scalars (scale, Σq, saturation count); the
-    * reconstruction-error bound is property-tested (|xᵢ − qᵢ/scale| ≤
-    * 1/(2·scale) by construction).
-    */
   /** PCA projection of the embedding column to `k` dimensions —
     * the standard pre-ANN reduction (project, then IVF/LSH the short
     * vectors). Distributed shape: the dim×dim Gramian is one
@@ -655,6 +642,14 @@ object Similarity {
       .toDF("pos", "loading")
   }
 
+  /** Per-vector int8 scalar quantization: scale = 127 / max|xᵢ|, then
+    * qᵢ = round(xᵢ·scale) ∈ [−127, 127] — the standard symmetric
+    * scheme vector stores use to cut embedding storage 4× before ANN
+    * indexing. Pure expressions, zero shuffle. Emits the quantized
+    * array plus audit scalars (scale, Σq, saturation count); the
+    * reconstruction-error bound is property-tested (|xᵢ − qᵢ/scale| ≤
+    * 1/(2·scale) by construction).
+    */
   def quantizeInt8(embeddings: DataFrame, vecCol: String = "embedding"): DataFrame = {
     val v = col(vecCol)
     val amax = array_max(transform(v, x => abs(x.cast("double"))))
@@ -714,16 +709,6 @@ object Similarity {
           lit(0.0), (acc, x) => acc + x) / (col("a.nm") * col("b.nm")), 6).as("cosine"))
   }
 
-  /** Approximate near-duplicate pairs via banded sign-bit signatures +
-    * exact verify — the scale path when the threshold is high enough
-    * for LSH to separate (cos ≥ ~0.7). The 64-bit hyperplane signature
-    * is split into `bands`; any equal band makes the pair a candidate
-    * (pigeonhole: every pair within hamming distance `bands − 1` of
-    * each other's signature is guaranteed found), candidates are then
-    * scored exactly and filtered at the true threshold — so precision
-    * is 1.0 and only recall is approximate. Candidate volume is an
-    * equi-join on (band, value): Σ bucket² work, not n².
-    */
   /** Approximate top-k via product quantization (Jégou et al. '11,
     * "Product Quantization for Nearest Neighbor Search"): the corpus
     * vector is replaced by `m` centroid indices (one per dim/m-wide
@@ -943,49 +928,37 @@ object Similarity {
         col("dup_of").isNull.as("keep"), col("dup_of"))
   }
 
-  def embeddingNearDupsApprox(embeddings: DataFrame, threshold: Double,
-                              bands: Int = 8, dim: Int = 64): DataFrame = {
-    val planes = hyperplanes(64, dim)
-    val bits = 64 / bands
-    val sigd = embeddings.select(col("vec_id"), col("embedding"),
-      l2norm(col("embedding")).as("nm"), signature(col("embedding"), planes).as("sig"))
-    // band b value = bits-wide slice of the signature, packed with the
-    // band index so one join key column covers all bands
-    val banded = sigd.select(col("vec_id"), col("embedding"), col("nm"),
-      explode(array((0 until bands).map(bnd =>
-        lit(bnd.toLong << 58) + shiftrightunsigned(col("sig"), bnd * bits) % lit(1L << bits)): _*)).as("bk"))
-    val a = banded.select(col("vec_id").as("a"), col("embedding").as("va"), col("nm").as("na"), col("bk"))
-    val b = banded.select(col("vec_id").as("b"), col("embedding").as("vb"), col("nm").as("nb"), col("bk"))
-    a.hint("shuffle_hash").join(b, Seq("bk"))
-      .filter(col("a") < col("b"))
-      .select(col("a"), col("b"),
-        (dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("sim"))
-      .filter(col("sim") >= threshold)
-      .dropDuplicates("a", "b")
-  }
-
-  /** [[embeddingNearDupsApprox]] with [[md5SignPlanes]] — the
-    * ENGINE-PORTABLE oracle twin of the embedding-LSH near-dup path
-    * (r13, the X230 move on the family's last unpinned member; with
-    * this every rows-only key except libm-deflate has a cross-engine
-    * pin). The production path's banded 64-bit Gaussian signature is
-    * re-expressed as `bands` independent md5-derived ±1 plane tables
-    * of 64/bands bits each — the identical pigeonhole guarantee (a
-    * pair within hamming distance bands−1 collides in some band)
-    * with every stage ANSI-recomposable: the band value is a sum of
+  /** Approximate near-duplicate pairs via banded sign-bit signatures +
+    * exact verify — the scale path when the threshold is high enough
+    * for LSH to separate (cos ≥ ~0.7). The 64-bit hyperplane signature
+    * is split into `bands`; any equal band makes the pair a candidate
+    * (pigeonhole: every pair within hamming distance `bands − 1` of
+    * each other's signature is guaranteed found), candidates are then
+    * scored exactly and filtered at the true threshold — so precision
+    * is 1.0 and only recall is approximate. Candidate volume is an
+    * equi-join on (band, value): Σ bucket² work, not n².
+    *
+    * `planes` (bands × bits × dim) is the family's randomness source
+    * and a parameter: q_embed_neardup_lsh runs the [[gaussianBands]]
+    * default (one seeded Gaussian draw — rows-only, no other engine
+    * replays scala.util.Random), and q_embed_neardup_lsh_md5 runs THIS
+    * plan with [[md5SignPlanes]]`(bands, 64/bands, dim)` (r13), under
+    * which every stage recomposes in SQL: the band value is a sum of
     * sign-bits of sequential float64 dots (the q_topk_cosine
     * bit-exactness contract) against planes any engine rebuilds from
     * MD5 alone, candidates are a bucket equi-join, and the verify is
-    * the exact-cosine filter — so candidate generation, the
-    * threshold decision and the pair set all hash-match cross-engine.
-    * Same plan shape and Σ bucket² cost as the production path; the
-    * production path stays [[embeddingNearDupsApprox]] (rows-only).
+    * the exact-cosine filter — so the md5 key's oracle pins candidate
+    * generation, the threshold decision and the pair set of the
+    * production key's plan. The band key is
+    * [[graft.functions.native.lshKeys]]'s packed (band << 32 | band
+    * bits): equal bits in a band always mean equal keys, which is what
+    * the pigeonhole guarantee needs.
     */
-  def embeddingNearDupsApproxPortable(embeddings: DataFrame, threshold: Double,
-                                      bands: Int = 8, dim: Int = 64): DataFrame = {
-    require(64 % bands == 0, s"bands must divide 64, got $bands")
-    val bits = 64 / bands
-    val planes = md5SignPlanes(bands, bits, dim)
+  def embeddingNearDupsApprox(embeddings: DataFrame, threshold: Double,
+                              planes: Array[Array[Array[Double]]] = gaussianBands(8, 64)): DataFrame = {
+    require(planes.nonEmpty && planes.forall(_.length * planes.length == 64),
+      s"bands must divide 64: got ${planes.length} bands of " +
+        s"${planes.map(_.length).distinct.mkString("/")} planes")
     val banded = embeddings.select(col("vec_id"), col("embedding"),
       l2norm(col("embedding")).as("nm"),
       explode(graft.functions.native.lshKeys(col("embedding"), planes, multiprobe = false)).as("bk"))

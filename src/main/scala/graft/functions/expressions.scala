@@ -356,27 +356,6 @@ case class RankBucketExpr(child: Expression, boundaries: Array[Double])
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-/** Sign-bit LSH signature of an embedding under fixed hyperplanes. */
-case class HyperplaneSigExpr(child: Expression, planes: Array[Array[Double]])
-    extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "hyperplane_sig"
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    ExprHelpers.requireVector(prettyName, "v" -> child)
-
-  private def vF = ExprHelpers.isFloatArray(child)
-
-  override def nullSafeEval(v: Any): Any =
-    Kernels.hyperplaneSig(v.asInstanceOf[ArrayData], planes, vF)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val pRef = ctx.addReferenceObj("lshPlanes", planes, "double[][]")
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.hyperplaneSig($c, $pRef, $vF)")
-  }
-
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
 /** Packed LSH bucket keys ((table << 32) | bucket) across all tables;
   * query side sets `multiprobe` to add hamming-1 probe buckets.
   */
@@ -979,8 +958,6 @@ object native {
   def simhash64(shingles: Column): Column = c(SimHash64Expr(e(shingles)))
   def rankBucket(v: Column, boundaries: Array[Double]): Column =
     c(RankBucketExpr(e(v), boundaries))
-  def hyperplaneSig(v: Column, planes: Array[Array[Double]]): Column =
-    c(HyperplaneSigExpr(e(v), planes))
   def lshKeys(v: Column, planes: Array[Array[Array[Double]]], multiprobe: Boolean): Column =
     c(LshKeysExpr(e(v), planes, multiprobe))
   def centroidProbes(v: Column, cents: Array[Array[Double]], nprobe: Int): Column =

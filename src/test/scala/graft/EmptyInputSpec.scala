@@ -22,6 +22,9 @@ class EmptyInputSpec extends SparkSpec {
     assert(ext.Dedup.ngramJaccardPairs(emptyDocs, 3, 0.8).count() === 0L)
     assert(ext.Dedup.duplicateSpans(emptyDocs, w = 8).count() === 0L)
     assert(ext.Dedup.minhashNearDups(emptyDocs).count() === 0L)
+    assert(ext.Dedup.minhashNearDupsMd5(emptyDocs).count() === 0L)
+    assert(ext.Dedup.simhashNearDups(emptyDocs).count() === 0L)
+    assert(ext.Dedup.simhashNearDupsMd5(emptyDocs).count() === 0L)
     assert(ext.Dedup.shingleNovelty(emptyDocs).count() === 0L)
   }
 
@@ -65,7 +68,13 @@ class EmptyInputSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
     // pair ops: empty in → empty out
     assert(ext.Similarity.embeddingNearDups(emptyEmb, 0.5).count() === 0L)
-    assert(ext.Similarity.embeddingNearDupsApprox(emptyEmb, 0.7, dim = 4).count() === 0L)
+    assert(ext.Similarity.embeddingNearDupsApprox(emptyEmb, 0.7,
+      ext.Similarity.gaussianBands(8, 4)).count() === 0L)
+    assert(ext.Similarity.embeddingNearDupsApprox(emptyEmb, 0.7,
+      ext.Similarity.md5SignPlanes(8, 8, 4)).count() === 0L)
+    val md5Planes = ext.Similarity.md5SignPlanes(4, 8, 4)
+    assert(ext.Similarity.lshTopK(emptyEmb, someEmb, planes = md5Planes).count() === 0L)
+    assert(ext.Similarity.lshTopK(someEmb, emptyEmb, planes = md5Planes).count() === 0L)
     assert(ext.Similarity.bruteForceTopK(emptyEmb, someEmb).count() === 0L)
     assert(ext.Similarity.bruteForceTopK(someEmb, emptyEmb).count() === 0L)
     // index fits on an EMPTY corpus cannot produce an index: the

@@ -89,7 +89,7 @@ class SimilaritySpec extends SparkSpec {
     val c = e.filter($"vec_id" >= 10)
     val exact = Similarity.bruteForceTopK(q, c, 10).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
-    val approx = Similarity.lshTopKPortable(q, c, 10, bits = 8, tables = 4).collect()
+    val approx = Similarity.lshTopK(q, c, 10, Similarity.md5SignPlanes(4, 8, 64)).collect()
     val recall = (exact & approx.map(r => (r.getLong(0), r.getLong(2))).toSet).size.toDouble / exact.size
     assert(recall >= 0.3, s"recall $recall too low for ±1 random projections")
     val exactSims = Similarity.bruteForceTopK(q, c, Int.MaxValue).collect()
@@ -327,13 +327,43 @@ class SimilaritySpec extends SparkSpec {
     } ++ (1000L until 1100L).map(id => (id, unit(64).toSeq))
     val e = rows.toDF("vec_id", "embedding")
       .select($"vec_id", $"embedding".cast("array<float>").as("embedding"))
-    val out = Similarity.embeddingNearDupsApprox(e, threshold = 0.9, bands = 8).collect()
+    val out = Similarity.embeddingNearDupsApprox(e, threshold = 0.9, Similarity.gaussianBands(8, 64)).collect()
     val got = out.map(r => (r.getLong(0), r.getLong(1))).toSet
     val planted = (0 until 40).map(i => (i * 2L, i * 2L + 1)).toSet
     // recall: every planted pair found (cos≈0.98 ⇒ tiny hamming ⇒ some band collides)
     assert((planted -- got).isEmpty, s"missed planted pairs: ${planted -- got}")
     // precision: every returned pair truly ≥ threshold (exact verify)
     out.foreach(r => assert(r.getDouble(2) >= 0.9))
+  }
+
+  test("embeddingNearDupsApprox: a pair within bands - 1 bits is found when one differing bit is bit 63") {
+    // axis-aligned planes (plane i = e_i): signature bit i = (v_i >= 0);
+    // 16 bands of 4 bits
+    val planes = Array.tabulate(16, 4, 64)((t, p, i) => if (i == 4 * t + p) 1.0 else 0.0)
+    // u and v differ in bit 63 and in bit 4b of each band b = 1..14:
+    // hamming 15 = bands - 1, so the pigeonhole guarantee promises a
+    // colliding band, and band 0 (low bits 1111 on both) is the only
+    // one. The differing coordinates are +-0.01 against 1.0 elsewhere,
+    // so cos(u, v) = 48.9985 / 49.0015
+    val flips = (1 to 14).map(4 * _) :+ 63
+    val u = Array.tabulate(64)(i => if (flips.contains(i)) 0.01f else 1.0f)
+    val v = Array.tabulate(64)(i => if (flips.contains(i)) -0.01f else 1.0f)
+    val e = Seq((1L, u.toSeq), (2L, v.toSeq)).toDF("vec_id", "embedding")
+    val out = Similarity.embeddingNearDupsApprox(e, threshold = 0.99, planes).collect()
+    assert(out.map(r => (r.getLong(0), r.getLong(1))).toSeq === Seq((1L, 2L)))
+    assert(out.head.getDouble(2) >= 0.99)
+    // the band key this plan replaced, over the same 64-bit signature:
+    // Spark's % keeps the dividend's sign, so u's band 0 (bit 63 set,
+    // sig < 0) keys to -1 and v's to 15 — no band of the pair collides
+    def sig(x: Array[Float]): Long =
+      (0 until 64).foldLeft(0L)((s, i) => if (x(i) >= 0) s | (1L << i) else s)
+    assert((sig(u) & 15L) === (sig(v) & 15L) && (sig(u) & 15L) != 0L)
+    val oldKeys = Seq((1L, sig(u)), (2L, sig(v))).toDF("vec_id", "sig")
+      .select(col("vec_id"), explode(array((0 until 16).map(b =>
+        lit(b.toLong << 58) + shiftrightunsigned(col("sig"), b * 4) % lit(1L << 4)): _*)).as("bk"))
+      .collect().groupBy(_.getLong(0)).map { case (id, rows) => id -> rows.map(_.getLong(1)).toSet }
+    assert(oldKeys(1L).contains(-1L) && oldKeys(2L).contains(15L))
+    assert((oldKeys(1L) intersect oldKeys(2L)).isEmpty)
   }
 
   test("embeddingNearDupsApproxPortable: md5 bands — planted recall, exact verify, determinism (r13)") {
@@ -357,7 +387,7 @@ class SimilaritySpec extends SparkSpec {
     } ++ (1000L until 1100L).map(id => (id, unit(64).toSeq))
     val e = rows.toDF("vec_id", "embedding")
       .select($"vec_id", $"embedding".cast("array<float>").as("embedding"))
-    val out = Similarity.embeddingNearDupsApproxPortable(e, threshold = 0.9, bands = 8).collect()
+    val out = Similarity.embeddingNearDupsApprox(e, threshold = 0.9, Similarity.md5SignPlanes(8, 8, 64)).collect()
     val got = out.map(r => (r.getLong(0), r.getLong(1))).toSet
     val planted = (0 until 40).map(i => (i * 2L, i * 2L + 1)).toSet
     assert((planted -- got).isEmpty, s"missed planted pairs: ${planted -- got}")
@@ -366,12 +396,12 @@ class SimilaritySpec extends SparkSpec {
     }
     assert(got.size === got.toSeq.distinct.size)
     // bit-determinism across runs (no RNG stream anywhere)
-    val again = Similarity.embeddingNearDupsApproxPortable(e, threshold = 0.9, bands = 8)
+    val again = Similarity.embeddingNearDupsApprox(e, threshold = 0.9, Similarity.md5SignPlanes(8, 8, 64))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(again === out.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet)
     // bands must divide the 64-bit budget
     val err = intercept[IllegalArgumentException] {
-      Similarity.embeddingNearDupsApproxPortable(e, threshold = 0.9, bands = 7)
+      Similarity.embeddingNearDupsApprox(e, threshold = 0.9, Similarity.md5SignPlanes(7, 64 / 7, 64))
     }
     assert(err.getMessage.contains("bands"))
   }

@@ -517,12 +517,16 @@ object Dedup {
     * h = [[md5Hash60]](shingle); 8 universal hashes
     * m_i = min(((h mod P)·a_i + b_i) mod P), P = 2^31−1, params
     * [[Md5MinhashParams]]. md5 is specified, so any engine computes
-    * it bit-identically. `withSh` is (doc_id, sh: shingle array); the
-    * result is one row per doc: doc_id, m0..m7, then the `extra`
-    * aggregates, which may read the base hash column `h`.
+    * it bit-identically. `sh` is the shingle array of each `docs` row;
+    * the result is one row per doc: doc_id, m0..m7, then the `extra`
+    * aggregates, which may read the base hash column `h`. Pass the
+    * shingle EXPRESSION, not a projected column, when nothing else
+    * reads it: an explode over a column reference makes Catalyst
+    * infer a `size(sh) > 0` filter and substitute the shingle kernel
+    * into it, evaluating the kernel three times per row.
     */
-  private[ext] def md5MinhashSigs(withSh: DataFrame, extra: Column*): DataFrame = {
-    val hashed = withSh.select(col("doc_id"), explode(col("sh")).as("s"))
+  private[ext] def md5MinhashSigs(docs: DataFrame, sh: Column, extra: Column*): DataFrame = {
+    val hashed = docs.select(col("doc_id"), explode(sh).as("s"))
       .select(col("doc_id"), md5Hash60(col("s")).as("h"))
     val mins = Md5MinhashParams.zipWithIndex.map { case ((a, b), i) =>
       min(((col("h") % Md5P) * a + b) % Md5P).as(s"m$i")
@@ -553,8 +557,7 @@ object Dedup {
     * performance lane.
     */
   def minhashNearDupsMd5(docs: DataFrame, n: Int = 3, threshold: Double = 0.8): DataFrame = {
-    val banded = md5MinhashSigs(
-        docs.filter(hasShingles(n)).select(col("doc_id"), shingles(col("text"), n).as("sh")))
+    val banded = md5MinhashSigs(docs.filter(hasShingles(n)), shingles(col("text"), n))
       .select(col("doc_id"), md5Bands.as("bb"))
       .select(col("doc_id"), col("bb.band").as("band"), col("bb.bk").as("bk"))
     verifyJaccard(docs, bandCandidates(banded, "band", "bk"), n, threshold)

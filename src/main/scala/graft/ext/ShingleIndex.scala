@@ -128,7 +128,7 @@ object ShingleIndex {
     val signed = if (mode == Md5Mode) {
       // the q_dedup_minhash_md5 construction (Dedup.md5MinhashSigs);
       // shh keeps the FULL 60-bit base hash h for the Jaccard verify
-      Dedup.md5MinhashSigs(withSh, sort_array(collect_set(col("h"))).as("shh"))
+      Dedup.md5MinhashSigs(withSh, col("sh"), sort_array(collect_set(col("h"))).as("shh"))
         .select(col("doc_id"), size(col("shh")).cast("long").as("n_sh"), col("shh"),
           Dedup.md5Bands.as("bb"))
         .select(

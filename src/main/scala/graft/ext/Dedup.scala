@@ -510,7 +510,7 @@ object Dedup {
     * md5(s) as a 60-bit long — every shift of it stays inside a signed
     * long in any engine.
     */
-  private def md5Hash60(s: Column): Column = conv(substring(md5(s), 1, 15), 16, 10).cast("long")
+  private[ext] def md5Hash60(s: Column): Column = conv(substring(md5(s), 1, 15), 16, 10).cast("long")
 
   /** The md5 MinHash signature source, fixed by contract with the
     * q_dedup_minhash_md5 and q_dedup_shingle_indexed oracles: base

@@ -59,8 +59,6 @@ import org.apache.spark.sql.functions._
   */
 object PostingIndex {
 
-  private val P60Chars = 15 // 60-bit md5 prefix, the Dedup md5-family base hash
-
   /** Build commit, torn-build check, maintenance and sink ([[PersistedIndex]]). */
   val lifecycle: PersistedIndex = PersistedIndex("PostingIndex", "_meta",
     "bucket", "buildPostingIndex", refreshPostingIndex)
@@ -77,10 +75,9 @@ object PostingIndex {
     require(idType == org.apache.spark.sql.types.LongType,
       s"PostingIndex requires a LONG doc_id (got $idType); assign surrogate " +
         "long ids (TotalOrder.globalIndex) and join back after")
-    val h = conv(substring(md5(col("s")), 1, P60Chars), 16, 10).cast("long")
     docs.select(col("doc_id"),
         explode_outer(Dedup.shingles(col("text"), n)).as("s"))
-      .select(col("doc_id"), h.as("h"))
+      .select(col("doc_id"), Dedup.md5Hash60(col("s")).as("h"))
       .groupBy("doc_id")
       .agg(sort_array(collect_set(col("h"))).as("hs"))
       .select(col("doc_id"),

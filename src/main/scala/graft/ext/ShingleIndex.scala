@@ -122,13 +122,17 @@ object ShingleIndex {
         lit(null).cast("long").as("bk"), col("doc_id"),
         lit(0L).as("n_sh"),
         lit(Array.empty[Long]).as("shh"))
-    val withSh = docs
+    // each kernel is exploded as an EXPRESSION, never as a projected
+    // column: an explode over a column reference makes Catalyst infer
+    // a `size(c) > 0 AND isnotnull(c)` filter and substitute the kernel
+    // into it, evaluating the kernel three times per doc
+    val shingled = docs
       .filter(col("text").isNotNull && size(split(col("text"), " ")) >= n)
-      .select(col("doc_id"), Dedup.shingles(col("text"), n).as("sh"))
     val signed = if (mode == Md5Mode) {
       // the q_dedup_minhash_md5 construction (Dedup.md5MinhashSigs);
       // shh keeps the FULL 60-bit base hash h for the Jaccard verify
-      Dedup.md5MinhashSigs(withSh, col("sh"), sort_array(collect_set(col("h"))).as("shh"))
+      Dedup.md5MinhashSigs(shingled, Dedup.shingles(col("text"), n),
+          sort_array(collect_set(col("h"))).as("shh"))
         .select(col("doc_id"), size(col("shh")).cast("long").as("n_sh"), col("shh"),
           Dedup.md5Bands.as("bb"))
         .select(
@@ -140,11 +144,10 @@ object ShingleIndex {
       // (band index lives in the key's top 16 bits — see
       // Kernels.minhashBandKeys); shh = distinct xxhash64 per shingle
       val (as, bs) = graft.functions.Kernels.minhashParams(XxhNumHashes, 42L)
-      val base = withSh.select(col("doc_id"),
-        graft.functions.native.minhashBandKeys(col("sh"), as, bs, XxhBands).as("bks"),
-        sort_array(array_distinct(transform(col("sh"), s => xxhash64(s)))).as("shh"))
+      val base = shingled.select(col("doc_id"), Dedup.shingles(col("text"), n).as("sh"))
+        .withColumn("shh", sort_array(array_distinct(transform(col("sh"), s => xxhash64(s)))))
       base.select(col("doc_id"), size(col("shh")).cast("long").as("n_sh"), col("shh"),
-          explode(col("bks")).as("bk"))
+          explode(graft.functions.native.minhashBandKeys(col("sh"), as, bs, XxhBands)).as("bk"))
         .select(
           (shiftright(col("bk"), 48) * nb +
             pmod(col("bk").bitwiseAND(lit(0xffffffffffffL)), lit(nb.toLong)))

@@ -45,8 +45,6 @@ import graft.store.Warehouse
   *  - `graft_snapshot_where(path, col, lo, hi[, version])` —
   *    [[Warehouse.readSnapshotWhere]]: the stats-pruned data-skipping
   *    read (X182); NULL = open bound; the range is also the filter.
-  *  - `graft_snapshot_tag(path, tag)` / `graft_snapshot_branch(path,
-  *    branch)` — pinned reads at a named tag / WAP branch head.
   */
 object TableFunctions {
 
@@ -177,28 +175,12 @@ object TableFunctions {
       }),
     ("graft_describe", info("graft_describe",
       "graft_describe(path[, version]) - DESCRIBE TABLE: schema, accounting, column map, " +
-        "dv/index state, constraints, generated/identity rules, tags and branches"),
+        "dv/index state, expectations and generated-column rules"),
       (es: Seq[Expression]) => {
         require(es.size == 1 || es.size == 2,
           s"graft_describe(path[, version]) takes 1 or 2 arguments, got ${es.size}")
         val v = if (es.size > 1) Some(longLit(es(1), "version")) else None
         plan(Warehouse.describeSnapshot(SparkSession.active, strLit(es.head, "path"), v))
-      }),
-    ("graft_snapshot_tag", info("graft_snapshot_tag",
-      "graft_snapshot_tag(path, tag) - the snapshot a named tag pins"),
-      (es: Seq[Expression]) => {
-        require(es.size == 2,
-          s"graft_snapshot_tag(path, tag) takes 2 arguments, got ${es.size}")
-        plan(Warehouse.readSnapshotTag(SparkSession.active,
-          strLit(es.head, "path"), strLit(es(1), "tag")))
-      }),
-    ("graft_snapshot_branch", info("graft_snapshot_branch",
-      "graft_snapshot_branch(path, branch) - the snapshot at a branch head (WAP audit read)"),
-      (es: Seq[Expression]) => {
-        require(es.size == 2,
-          s"graft_snapshot_branch(path, branch) takes 2 arguments, got ${es.size}")
-        plan(Warehouse.readSnapshotBranch(SparkSession.active,
-          strLit(es.head, "path"), strLit(es(1), "branch")))
       }),
     ("graft_ndv", info("graft_ndv",
       "graft_ndv(path, column[, version]) - distinct-count estimate from the ANALYZE " +

@@ -4,14 +4,13 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** THE version commit of the snapshot warehouse: every path that
   * creates a `v=<n>` version (full writes, appends, row-level rewrites,
-  * deletion vectors, metadata-only commits, restores, index and
-  * optimize commits, branch commits, clones) prepares a staging dir and
-  * hands it to [[Commit.apply]], which runs the same named steps in
-  * order — the minimal Delta/Iceberg-style multi-writer protocol:
-  * MULTIPLE writers may prepare concurrently, exactly one wins each
-  * version, the loser fails with a retry-able
-  * [[Warehouse.SnapshotConflictException]], and no lost update is
-  * possible.
+  * deletion vectors, metadata-only commits, index and optimize
+  * commits) prepares a staging dir and hands it to [[Commit.apply]],
+  * which runs the same named steps in order — the minimal
+  * Delta/Iceberg-style multi-writer protocol: MULTIPLE writers may
+  * prepare concurrently, exactly one wins each version, the loser
+  * fails with a retry-able [[Warehouse.SnapshotConflictException]],
+  * and no lost update is possible.
   *
   *  1. '''Claim''' `_commit-v<n>` — the COMMIT POINT, one atomic
   *     exclusive create (the compare-and-swap). On a `file://` path it
@@ -40,10 +39,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *     commit record: a failed publish unwinds the version), or
   *     [[BestEffort]] for a self-contained one (its data is durable
   *     already: a failed publish logs, and reads fall back to listing).
-  *  1. '''PreAdvance''': the caller's last check before any ref moves
-  *     (a restore's expiry fence); it unwinds and throws to refuse.
-  *  1. '''Advance''' a [[Ref]]: `_latest` FORWARD ONLY ([[MainRef]]),
-  *     or a branch pointer under its lineage CAS ([[BranchRef]]).
+  *  1. '''Advance''' `_latest` to the new version, FORWARD ONLY
+  *     ([[advancePointer]]).
   *
   * Readers keep snapshot isolation throughout: an unpinned reader
   * resolves `_latest`, which names a complete version before and after
@@ -60,18 +57,13 @@ private[store] object Commit {
     case object Promote extends Step
     case object ChangeFiles extends Step
     case object Manifest extends Step
-    case object PreAdvance extends Step
     case object Advance extends Step
-    val all: Seq[Step] = Seq(Claim, Backoff, Promote, ChangeFiles, Manifest, PreAdvance, Advance)
+    val all: Seq[Step] = Seq(Claim, Backoff, Promote, ChangeFiles, Manifest, Advance)
   }
 
   sealed abstract class ManifestPolicy
   case object LoadBearing extends ManifestPolicy
   case object BestEffort extends ManifestPolicy
-
-  sealed abstract class Ref
-  case object MainRef extends Ref
-  final case class BranchRef(name: String, expected: Long) extends Ref
 
   /** Fault seam for the crash-window specs: called with (table path,
     * step) after each step completes. A no-op outside tests. */
@@ -83,9 +75,8 @@ private[store] object Commit {
     * publishes the version's manifest. Returns those names.
     */
   def apply(fs: FileSystem, path: String, staging: Path, next: Long, op: String,
-            orphanGraceMs: Long, policy: ManifestPolicy, ref: Ref,
-            cdfStaging: Option[Path] = None,
-            preAdvance: () => Unit = () => ())
+            orphanGraceMs: Long, policy: ManifestPolicy,
+            cdfStaging: Option[Path] = None)
            (manifest: Seq[String] => Unit): Seq[String] = {
     def step(s: Step): Unit = afterStep(path, s)
     def conflict(): Nothing = {
@@ -120,21 +111,17 @@ private[store] object Commit {
           Seq.empty
       }
     step(Step.Manifest)
-    preAdvance()
-    step(Step.PreAdvance)
-    ref match {
-      case MainRef => advancePointer(fs, path, next)
-      case BranchRef(name, expected) => advanceBranch(fs, path, name, expected, next)
-    }
+    advancePointer(fs, path, next)
     step(Step.Advance)
     fresh
   }
 
-  /** Remove a promoted version no ref points at: manifest first (a
-    * reader then gets the no-such-version error, never a scan of a dead
-    * file list), then its dir and change files, then the claim marker.
+  /** Remove a promoted version `_latest` never pointed at: manifest
+    * first (a reader then gets the no-such-version error, never a scan
+    * of a dead file list), then its dir and change files, then the
+    * claim marker.
     */
-  def unwindVersion(fs: FileSystem, path: String, v: Long): Unit = {
+  private def unwindVersion(fs: FileSystem, path: String, v: Long): Unit = {
     fs.delete(new Path(s"$path/_manifest-v$v"), false)
     fs.delete(new Path(s"$path/v=$v"), true)
     fs.delete(new Path(s"$path/_cdf/v=$v"), true)
@@ -194,8 +181,7 @@ private[store] object Commit {
     require(fs.rename(staged, dest), s"cannot publish change files for v=$v under $path")
   }
 
-  /** A one-number pointer file (`_latest`, a branch head or base, a
-    * tag); None when absent. */
+  /** A one-number pointer file (`_latest`); None when absent. */
   def readPointerFile(fs: FileSystem, p: Path): Option[Long] =
     try {
       val in = fs.open(p)
@@ -203,41 +189,21 @@ private[store] object Commit {
       Some(s.toLong)
     } catch { case _: java.io.FileNotFoundException => None }
 
-  /** Publish pointer file `dest` = `v` through a tagged temp and an
-    * overwriting rename, so readers never see it absent. */
-  def writePointerFile(fs: FileSystem, path: String, dest: Path, v: Long,
-                       errMsg: => String): Unit = {
-    val tmp = new Path(s"$path/_latest.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-    val out = fs.create(tmp, true)
-    out.write(v.toString.getBytes("UTF-8")); out.close()
-    Warehouse.overwriteRename(fs, tmp, dest, errMsg)
-  }
-
   /** Advance `_latest` to `next`, FORWARD ONLY: a slower v=n winner
     * must not clobber a faster v=n+1 writer's already-swapped pointer.
     * The read-then-swap window is benign — the pointer is a cache of
     * max(v=*), monotone except for that window, and self-heals on the
-    * next commit; readers needing exactness can pin a version.
+    * next commit; readers needing exactness can pin a version. The
+    * swap goes through a tagged temp and an overwriting rename, so
+    * readers never see the pointer absent.
     */
   def advancePointer(fs: FileSystem, path: String, next: Long): Unit = {
     val ptr = new Path(s"$path/_latest")
-    if (next > readPointerFile(fs, ptr).getOrElse(0L))
-      writePointerFile(fs, path, ptr, next, s"cannot swap pointer for $path")
-  }
-
-  /** Branch-pointer CAS-advance: re-read, unwind the freshly promoted
-    * version and conflict if the branch moved since the caller's read,
-    * else swap the pointer. The unwound version was never referenced by
-    * any pointer, so no reader can have planned from it.
-    */
-  private def advanceBranch(fs: FileSystem, path: String, name: String,
-                            expected: Long, next: Long): Unit = {
-    val branch = new Path(s"$path/_branch-$name")
-    val nowHead = readPointerFile(fs, branch)
-    if (!nowHead.contains(expected)) {
-      unwindVersion(fs, path, next)
-      throw new Warehouse.SnapshotConflictException(path, nowHead.getOrElse(-1L))
+    if (next > readPointerFile(fs, ptr).getOrElse(0L)) {
+      val tmp = new Path(s"$path/_latest.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
+      val out = fs.create(tmp, true)
+      out.write(next.toString.getBytes("UTF-8")); out.close()
+      Warehouse.overwriteRename(fs, tmp, ptr, s"cannot swap pointer for $path")
     }
-    writePointerFile(fs, path, branch, next, s"cannot advance branch '$name' for $path")
   }
 }

@@ -195,7 +195,7 @@ object Warehouse {
     // schema compatibility = same column NAMES and TYPES — deliberately
     // insensitive to nullability and field order, which routine
     // operators flip without changing the data (union and outer join
-    // widen nullability, readEvolving reorders); requiring StructType
+    // widen nullability, a select reorders); requiring StructType
     // equality rejected logically identical states spuriously (r8
     // advice). catalogString prints nested types without nullable
     // flags, so nested-struct nullability drift is tolerated too.
@@ -205,7 +205,7 @@ object Warehouse {
     // ambiguous-reference error instead of this message (r9 advice).
     def typeMap(df: DataFrame) = df.schema.map(f => f.name -> f.dataType.catalogString).sorted
     require(typeMap(oldDf) == typeMap(newDfIn),
-      s"diffFrames: column names/types differ (use appendEvolving/readEvolving conventions first): " +
+      s"diffFrames: column names/types differ: " +
         s"${oldDf.schema.simpleString} vs ${newDfIn.schema.simpleString}")
     val newDf = newDfIn.select(oldDf.columns.map(col).toIndexedSeq: _*)
     // the feed covers IDENTITY-BEARING rows only: a NULL merge key can
@@ -286,7 +286,7 @@ object Warehouse {
     *
     * MANIFEST-PRUNED (r10): a file both manifests reference under the
     * same root-relative identity is byte-identical in both versions
-    * ([[deleteWhere]]/[[updateWhere]]/[[rollbackSnapshot]] carry
+    * ([[deleteWhere]]/[[updateWhere]] carry
     * untouched files by reference), so its rows can never appear in
     * the feed — with per-version key uniqueness (the CDC contract
     * [[diffFrames]] already assumes), a key living in a shared file
@@ -509,38 +509,6 @@ object Warehouse {
     reaped.result()
   }
 
-  /** Schema-evolution append: land a batch whose schema ADDS columns
-    * to (or drops columns from) the table's, failing fast when a
-    * SHARED column changed type — the incompatibility parquet
-    * `mergeSchema` would otherwise surface as a read error much later,
-    * on whichever query first touches the drifted files. Widening is
-    * the normal corpus-pipeline motion (a new quality signal, a new
-    * provenance tag); silent type drift is the operator error.
-    * Read back through [[readEvolving]]; old files' missing columns
-    * surface as NULL.
-    */
-  def appendEvolving(df: DataFrame, path: String): Unit = {
-    val dest = new org.apache.hadoop.fs.Path(path)
-    val fs = dest.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    if (fs.exists(dest)) {
-      val existing = readEvolving(df.sparkSession, path).schema
-      val incoming = df.schema
-      val drift = existing.flatMap(e => incoming.find(_.name == e.name)
-        .filter(_.dataType != e.dataType).map(i => s"${e.name}: ${e.dataType} -> ${i.dataType}"))
-      require(drift.isEmpty,
-        s"appendEvolving($path): shared columns changed type (${drift.mkString("; ")})")
-    }
-    df.write.mode(SaveMode.Append).parquet(path)
-    SchemaCache.invalidate(path)
-  }
-
-  /** Union-schema read of an evolved table: per-file footers merged,
-    * absent columns NULL-filled. Costs a footer read per file instead
-    * of per table — pair with [[compact]] to keep file counts sane.
-    */
-  def readEvolving(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(path)
-
   /** S10: atomic full rewrite. */
   def overwrite(df: DataFrame, path: String): Unit = {
     df.write.mode(SaveMode.Overwrite).parquet(path)
@@ -661,24 +629,8 @@ object Warehouse {
     })
   }
 
-  /** Delta-style CHECK constraints on a snapshot table — declared
-    * once, enforced on every row-writing commit path
-    * ([[writeSnapshot]]/[[commitSnapshot]]/[[appendSnapshot]] and the
-    * [[deleteWhere]]/[[updateWhere]]/[[mergeIntoSnapshot]] rewrites)
-    * by a `raise_error` filter FUSED INTO the write plan — zero extra
-    * jobs, zero extra scans: the batch is validated by the same pass
-    * that writes it, and a violating row aborts the write before any
-    * commit with the constraint name and the row as JSON. SQL-standard
-    * NULL semantics: a constraint fails only when its predicate is
-    * FALSE (NULL passes). Stored as one root-level `_constraints`
-    * JSON, overwrite-renamed (last writer wins, never absent
-    * mid-swap); [[optimizeSnapshot]]/[[rollbackSnapshot]]/
-    * [[compactSnapshot]]'s inputs are already-committed rows, but the
-    * two rewriters route through [[commitSnapshot]] and revalidate —
-    * the belt Delta also wears.
-    */
   /** Serialize the read-modify-write of a root RULES file (review
-    * r11): `_constraints`/`_generated` are single gate files with no
+    * r11): `_generated`/`_expectations` are single gate files with no
     * CAS of their own, so two concurrent ALTERs would silently drop
     * one rule from the enforcement gate (last rename wins). Exclusive
     * create of `_ddl-lock`, bounded wait, stale locks broken past the
@@ -750,77 +702,6 @@ object Warehouse {
       s"cannot publish $fileName for $path")
   }
 
-  def setSnapshotConstraint(spark: SparkSession, path: String,
-                            name: String, predicateSql: String): Unit = {
-    requireTagName(name)
-    // parse eagerly: a typo'd expression must fail HERE, not inside
-    // someone else's write a week later
-    spark.sessionState.sqlParser.parseExpression(predicateSql)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(path))
-    withDdlLock(fs, path) {
-      writeRulesFile(fs, path, "_constraints",
-        snapshotConstraints(spark, path) + (name -> predicateSql))
-    }
-  }
-
-  /** Remove a named constraint; returns whether it existed. */
-  def dropSnapshotConstraint(spark: SparkSession, path: String, name: String): Boolean = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    withDdlLock(fs, path) {
-      val existing = snapshotConstraints(spark, path)
-      if (!existing.contains(name)) false
-      else {
-        val rest = existing - name
-        if (rest.isEmpty)
-          fs.delete(new org.apache.hadoop.fs.Path(s"$path/_constraints"), false)
-        else writeRulesFile(fs, path, "_constraints", rest)
-        true
-      }
-    }
-  }
-
-  /** The table's declared CHECK constraints, name -> predicate SQL. */
-  def snapshotConstraints(spark: SparkSession, path: String): Map[String, String] = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val f = new org.apache.hadoop.fs.Path(s"$path/_constraints")
-    if (!fs.exists(f)) return Map.empty
-    try {
-      val in = fs.open(f)
-      val node = try new com.fasterxml.jackson.databind.ObjectMapper().readTree(in)
-      finally in.close()
-      val it = node.fieldNames()
-      Iterator.continually(if (it.hasNext) Some(it.next()) else None)
-        .takeWhile(_.isDefined).flatten
-        .map(n => n -> node.get(n).asText()).toMap
-    } catch {
-      // an unreadable constraints file must FAIL writes, not silently
-      // skip enforcement — unlike manifests, this file is a gate
-      case e @ (_: java.io.IOException |
-                _: com.fasterxml.jackson.core.JacksonException) =>
-        throw new java.io.IOException(
-          s"unreadable _constraints under $path — refusing to write unvalidated", e)
-    }
-  }
-
-  /** The fused enforcement filter: per row, each constraint predicate
-    * evaluates inside the write's own plan; a FALSE aborts the pass
-    * via `raise_error` with the row as JSON. No-op when the table has
-    * no constraints.
-    */
-  private def constraintGuard(df: DataFrame, path: String, op: String): DataFrame =
-    snapshotConstraints(df.sparkSession, path).toSeq.sortBy(_._1)
-      .foldLeft(df) { case (d, (name, sql)) =>
-        d.filter(when(!coalesce(expr(sql), lit(true)),
-          raise_error(concat(
-            lit(s"$op($path): CHECK constraint '$name' ($sql) violated by row "),
-            to_json(struct(d.columns.map(col).toIndexedSeq: _*)))))
-          .otherwise(lit(true)))
-      }
-
   /** Declare `column` GENERATED AS `exprSql` (X205) — the Delta
     * generated-column shape: from now on every full write, append and
     * replaceWhere batch either FILLS the
@@ -838,8 +719,8 @@ object Warehouse {
     * a timestamp, cluster on it, and X162's stats prune date-ranged
     * reads without the writer ever computing the column. Declarations
     * ride a `_generated` root file under the same
-    * parse-eagerly/unreadable-fails-writes contract as CHECK
-    * constraints; expressions must be deterministic (enforced at
+    * parse-eagerly/unreadable-fails-writes contract as expectations;
+    * expressions must be deterministic (enforced at
     * declaration — a rand() fill would break replays and the
     * validate-vs-fill equivalence). Dropping the SOURCE column leaves
     * a declaration that fails analysis at the next write — drop the
@@ -891,14 +772,10 @@ object Warehouse {
   }
 
   /** Declare a named data-quality EXPECTATION (X215) — the DLT
-    * `expect / expect_or_drop / expect_or_fail` shape, the triage
-    * layer CHECK constraints (X186) deliberately aren't: a constraint
-    * is a hard table invariant (violation = abort, every write path,
-    * rewrites included), an expectation is an INGEST policy with a
-    * per-rule action —
+    * `expect / expect_or_drop / expect_or_fail` shape: an INGEST
+    * policy with a per-rule action —
     *
-    *  - `"abort"`: fail the write naming the rule and row (a CHECK
-    *    with expectation bookkeeping);
+    *  - `"abort"`: fail the write naming the rule and row;
     *  - `"drop"`: violating rows silently leave the batch (the
     *    boilerplate filter every corpus ingest runs);
     *  - `"quarantine"`: violating rows divert to the sibling snapshot
@@ -910,9 +787,8 @@ object Warehouse {
     * write `x IS NOT NULL` to reject nulls); rules apply abort → drop
     * → quarantine, name order within an action. Scope is ROW-LANDING
     * ingest (full writes, appends, streaming sinks, replaceWhere
-    * batches, branch commits); row-level REWRITES do not re-triage —
-    * dropping carried rows on an UPDATE would be silent data loss, so
-    * rewrites keep enforcing hard constraints only — and the
+    * batches); row-level REWRITES do not re-triage — dropping carried
+    * rows on an UPDATE would be silent data loss — and the
     * maintenance/merge full rewrites (compactSnapshot, the streaming
     * upsert sink) pass `triage = false` for the same reason: their
     * input is committed rows, not an ingest. Quarantine rows land
@@ -926,10 +802,14 @@ object Warehouse {
     * or neither). Declarations ride an `_expectations` root file
     * under the DDL-lock / unreadable-fails-writes contract.
     */
+  private def requireRuleName(name: String): Unit =
+    require(name.matches("[A-Za-z0-9._-]+"),
+      s"rule name must be [A-Za-z0-9._-]+, got '$name'")
+
   def setSnapshotExpectation(spark: SparkSession, path: String, name: String,
                              predicateSql: String,
                              onViolation: String = "abort"): Unit = {
-    requireTagName(name)
+    requireRuleName(name)
     require(Set("abort", "drop", "quarantine")(onViolation),
       s"setSnapshotExpectation($path): unknown action '$onViolation' " +
         "(abort | drop | quarantine)")
@@ -1001,21 +881,6 @@ object Warehouse {
   /** The quarantine side table of `path`. */
   def quarantinePath(path: String): String = s"$path/_quarantine"
 
-  /** Apply the declared expectations to an ingest batch. Returns the
-    * KEPT frame plus a quarantine FLUSH to invoke AFTER the main
-    * commit succeeds (review r11: an eager quarantine write would
-    * duplicate rows on every CAS retry, land rows for ingests a later
-    * abort rule then refused, and break the streaming epoch gate's
-    * exactly-once story — deferring it ties the side-table write to
-    * exactly the successful attempt). Abort rules fuse as
-    * `raise_error` (zero extra jobs), drop rules as filters,
-    * quarantine rules carry their rows into the flush and filter them
-    * from the batch. Rules apply abort → drop → quarantine, name
-    * order within an action — an aborting ingest never quarantines
-    * first. Quarantine delivery is AT-MOST-ONCE relative to the main
-    * commit (a crash between commit and flush loses the diverted
-    * rows, never phantoms them); audit-critical rules should abort.
-    */
   /** Arm-late capture of per-rule triage counts (X221): the gate's
     * `observe` nodes count each rule's violating rows INSIDE the write
     * plan (the DLT expectation-metrics shape — zero extra jobs, the
@@ -1051,8 +916,8 @@ object Warehouse {
     def arm(): Unit =
       if (ruleActions.nonEmpty) spark.listenerManager.register(listener)
     /** Unregister without collecting — the failure path's cleanup. An
-      * armed listener left behind by a throwing write (constraint
-      * violation, CAS conflict) would otherwise accumulate on the
+      * armed listener left behind by a throwing write (an abort rule,
+      * a CAS conflict) would otherwise accumulate on the
       * session forever. */
     def disarm(): Unit =
       if (ruleActions.nonEmpty) spark.listenerManager.unregister(listener)
@@ -1070,6 +935,21 @@ object Warehouse {
   private[store] val NoExpectationMetrics =
     new ExpectationMetricsHandle(null, "", Seq.empty)
 
+  /** Apply the declared expectations to an ingest batch. Returns the
+    * KEPT frame plus a quarantine FLUSH to invoke AFTER the main
+    * commit succeeds (review r11: an eager quarantine write would
+    * duplicate rows on every CAS retry, land rows for ingests a later
+    * abort rule then refused, and break the streaming epoch gate's
+    * exactly-once story — deferring it ties the side-table write to
+    * exactly the successful attempt). Abort rules fuse as
+    * `raise_error` (zero extra jobs), drop rules as filters,
+    * quarantine rules carry their rows into the flush and filter them
+    * from the batch. Rules apply abort → drop → quarantine, name
+    * order within an action — an aborting ingest never quarantines
+    * first. Quarantine delivery is AT-MOST-ONCE relative to the main
+    * commit (a crash between commit and flush loses the diverted
+    * rows, never phantoms them); audit-critical rules should abort.
+    */
   private def expectationGate(df: DataFrame, path: String, op: String,
                               txn: Option[(String, Long)] = None)
       : (DataFrame, () => Unit, ExpectationMetricsHandle) = {
@@ -1127,172 +1007,6 @@ object Warehouse {
     (kept, flush, metrics)
   }
 
-  /** Declare `column` as the table's IDENTITY column (X210, the Delta
-    * `GENERATED BY DEFAULT AS IDENTITY` shape): every full write and
-    * append whose frame LACKS the column mints each new row a unique
-    * ascending Long — the row id a training-data pipeline wants
-    * without a table-wide sort. A frame that SUPPLIES the column is
-    * trusted (BY DEFAULT semantics — this is what lets compaction,
-    * replaceWhere reloads and CDC replicas restate committed ids
-    * verbatim), with a fused NULL guard: an unset id in a supplied
-    * column aborts the write, because a NULL id silently breaks the
-    * uniqueness every downstream join on it assumes.
-    *
-    * The contract is Delta's: ids are UNIQUE and INCREASING per fill,
-    * GAPS ALLOWED. Minting is one projection in the write's own plan
-    * (`hwm + 1 + monotonically_increasing_id()` — per-partition id
-    * spaces, no shuffle, no count pass), and the new high-water mark
-    * costs ZERO extra jobs: the manifest's own footer pass already
-    * records each fresh file's column max, so `idHwm` = max over the
-    * committed stats — the next fill starts above everything actually
-    * written, whether minted or supplied. Within one commit the
-    * per-partition spacing leaves large gaps; across commits the hwm
-    * snaps back to the true max. One identity column per table.
-    * Declarations ride an `_identity` root file under the same
-    * DDL-lock / unreadable-fails-writes contract as constraints.
-    * Caveat (also Delta's): a task retry that reorders upstream rows
-    * can change WHICH row gets WHICH id within the failed partition —
-    * ids are stable once committed, not across speculative replays.
-    */
-  def setIdentityColumn(spark: SparkSession, path: String,
-                        column: String, startAt: Long = 1L): Unit = {
-    require(column.nonEmpty, "setIdentityColumn: empty column name")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // declaring over an EXISTING column validates it NULL-free once,
-    // here (one column-pruned count — a DDL-time cost): the write-path
-    // guards assume committed ids are non-null, so a legacy NULL would
-    // otherwise brick every later row-level rewrite touching its file
-    // (review r11) — refuse at the declaration, where the fix is clear
-    if (snapshots(spark, path).nonEmpty) {
-      val cur = readSnapshot(spark, path)
-      if (cur.columns.contains(column)) {
-        val nulls = cur.filter(col(column).isNull).limit(1).count()
-        require(nulls == 0L,
-          s"setIdentityColumn($path): committed column '$column' holds NULLs — " +
-            "backfill ids first (identity assumes committed ids are non-null and unique)")
-      }
-    }
-    fs.mkdirs(new org.apache.hadoop.fs.Path(path))
-    withDdlLock(fs, path) {
-      identityRule(fs, path).foreach { case (c, _) =>
-        require(c == column,
-          s"setIdentityColumn($path): '$c' is already the identity column — " +
-            "one per table; drop it first")
-      }
-      writeRulesFile(fs, path, "_identity", Map(column -> startAt.toString))
-    }
-  }
-
-  /** Remove the identity rule; returns whether it existed. Committed
-    * ids stay in the data — only minting stops. */
-  def dropIdentityColumn(spark: SparkSession, path: String): Boolean = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    withDdlLock(fs, path) {
-      val had = identityRule(fs, path).isDefined
-      if (had) fs.delete(new org.apache.hadoop.fs.Path(s"$path/_identity"), false)
-      had
-    }
-  }
-
-  /** The declared identity column and its start, if any. */
-  def snapshotIdentity(spark: SparkSession, path: String): Option[(String, Long)] =
-    identityRule(new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration), path)
-
-  private def identityRule(fs: org.apache.hadoop.fs.FileSystem,
-                           path: String): Option[(String, Long)] = {
-    val f = new org.apache.hadoop.fs.Path(s"$path/_identity")
-    if (!fs.exists(f)) return None
-    try {
-      val in = fs.open(f)
-      val node = try new com.fasterxml.jackson.databind.ObjectMapper().readTree(in)
-      finally in.close()
-      val it = node.fieldNames()
-      if (!it.hasNext) None
-      else { val c = it.next(); Some((c, node.get(c).asText().toLong)) }
-    } catch {
-      // like _constraints: a write gate, never best-effort
-      case e @ (_: java.io.IOException |
-                _: com.fasterxml.jackson.core.JacksonException) =>
-        throw new java.io.IOException(
-          s"unreadable _identity under $path — refusing to write unminted", e)
-    }
-  }
-
-  /** The id to mint ABOVE, when the manifest can answer: the recorded
-    * `idHwm`; else the stats-derived max of the identity column —
-    * trusted ONLY when EVERY file records a stat for it (a single
-    * stats-less file could hide the true max, and minting below it
-    * mints duplicates — review r11: a readable pre-stats manifest must
-    * fall to the scan, not to `startAt - 1`); a schema without the
-    * column, or an empty file list, answers `startAt - 1` exactly.
-    * None = the manifest cannot answer — callers scan.
-    */
-  private def identityHwm(m: Option[com.fasterxml.jackson.databind.JsonNode],
-                          column: String, startAt: Long): Option[Long] =
-    m.flatMap { mm =>
-      Option(mm.get("idHwm")).map(_.asLong).orElse {
-        val inSchema = scala.util.Try(org.apache.spark.sql.types.DataType
-          .fromJson(mm.get("schema").toString).asInstanceOf[StructType]
-          .fieldNames.contains(column)).getOrElse(true)
-        val n = Option(mm.get("files")).map(_.size).getOrElse(0)
-        if (!inSchema || n == 0) Some(startAt - 1L)
-        else {
-          val phys = physicalName(columnMapOf(mm), column)
-          val maxes = Option(mm.get("stats")).toSeq.flatMap(starr =>
-            (0 until starr.size).map(i =>
-              Option(starr.get(i).get(phys)).flatMap(s => Option(s.get("max")))
-                .map(_.asLong)))
-          if (maxes.size == n && maxes.forall(_.isDefined))
-            Some(math.max(startAt - 1L, maxes.flatten.max))
-          else None
-        }
-      }
-    }
-
-  /** [[identityHwm]] for a committed version: manifest when readable,
-    * else ONE column-pruned scan of the pinned version (a best-effort
-    * manifest may be lost — minting below the true max would mint
-    * duplicates, so the fallback pays the scan; a version whose schema
-    * predates the column reads as `startAt - 1`).
-    */
-  private def identityHwmAt(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
-                            path: String, v: Long, column: String,
-                            startAt: Long): Long =
-    if (v < 1) startAt - 1L
-    else identityHwm(readManifest(fs, path, v), column, startAt).getOrElse {
-      try {
-        val row = readSnapshot(spark, path, Some(v))
-          .agg(max(col(column).cast("long"))).head()
-        if (row.isNullAt(0)) startAt - 1L else math.max(startAt - 1L, row.getLong(0))
-      } catch { case _: org.apache.spark.sql.AnalysisException => startAt - 1L }
-    }
-
-  /** Mint-or-guard the identity column: a frame that lacks it gains
-    * `hwm + 1 + monotonically_increasing_id()` (one projection in the
-    * write plan); a frame that supplies it is trusted but NULL-guarded.
-    * `hwmOf` is by-name — only a frame that actually needs minting
-    * pays the manifest read behind it.
-    */
-  private def identityAlign(df: DataFrame, path: String, op: String,
-                            hwmOf: => Long): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    identityRule(fs, path) match {
-      case None => df
-      case Some((c, _)) if !df.columns.contains(c) =>
-        df.withColumn(c, (lit(hwmOf + 1L) + monotonically_increasing_id()).cast("long"))
-      case Some((c, _)) =>
-        df.filter(when(col(c).isNull,
-          raise_error(concat(
-            lit(s"$op($path): identity column '$c' supplied but NULL in row "),
-            to_json(struct(df.columns.map(col).toIndexedSeq: _*)))))
-          .otherwise(lit(true)))
-    }
-  }
-
   /** The table's declared generation rules, column -> expression SQL. */
   def snapshotGenerated(spark: SparkSession, path: String): Map[String, String] = {
     val fs = new org.apache.hadoop.fs.Path(path)
@@ -1308,7 +1022,7 @@ object Warehouse {
         .takeWhile(_.isDefined).flatten
         .map(n => n -> node.get(n).asText()).toMap
     } catch {
-      // like _constraints: this file is a write gate, never best-effort
+      // like _expectations: this file is a write gate, never best-effort
       case e @ (_: java.io.IOException |
                 _: com.fasterxml.jackson.core.JacksonException) =>
         throw new java.io.IOException(
@@ -1362,8 +1076,7 @@ object Warehouse {
   def writeSnapshot(df: DataFrame, path: String,
                     txn: Option[(String, Long)] = None): Long = {
     val base = currentSnapshot(df.sparkSession, path)
-    commitFull(df, path, base, base + 1, "writeSnapshot", 600000L,
-      Commit.MainRef, txn = txn)
+    commitFull(df, path, base + 1, "writeSnapshot", 600000L, txn = txn)
   }
 
   /** [[commitSnapshot]] against the newest version. */
@@ -1415,17 +1128,17 @@ object Warehouse {
   def currentSnapshot(spark: SparkSession, path: String): Long =
     snapshots(spark, path).lastOption.getOrElse(0L)
 
-  /** The MAIN lineage's write base: the `_latest` target when the
-    * pointer exists, else the newest live version (0 on an empty
-    * table). Deliberately NOT [[currentSnapshot]] — that is the
-    * highest live version NUMBER, which includes unpublished branch
-    * heads (X171): a main-side write that based itself on a branch
-    * head would adopt — and its pointer advance would silently
-    * PUBLISH — unaudited branch content (review r11). Every main-side
-    * write below reads its content base here and allocates its
-    * version number via [[nextVersionAbove]].
+  /** The `_latest` target, else the newest live version (0 on an
+    * empty table): what an unpinned reader resolves and what every
+    * row-level, metadata-only and maintenance write derives its content
+    * from. Deliberately NOT [[currentSnapshot]] (the highest version
+    * NUMBER): a commit that died after its promote leaves a version dir
+    * above `_latest` that may be unreadable (an append or rewrite whose
+    * manifest never landed, `_partial` and no manifest), and a live
+    * commit is briefly above `_latest` in the forward-only advance
+    * window — `_latest` names a finished commit in both cases.
     */
-  private def mainWriteBase(spark: SparkSession, path: String): Long = {
+  private def latestVersion(spark: SparkSession, path: String): Long = {
     val ptr = new org.apache.hadoop.fs.Path(s"$path/_latest")
     val fs = ptr.getFileSystem(spark.sparkContext.hadoopConfiguration)
     Commit.readPointerFile(fs, ptr)
@@ -1433,13 +1146,20 @@ object Warehouse {
       .getOrElse(0L)
   }
 
-  /** The next globally-free version number: versions are ONE sequence
-    * shared with branch heads, so a main-side commit allocates ABOVE
-    * every live version even when its content base is behind (a
-    * branch is ahead); the manifest's carried entries keep the
-    * content's lineage regardless of the number's gap. */
-  private def nextVersionAbove(spark: SparkSession, path: String, base: Long): Long =
-    math.max(base, currentSnapshot(spark, path)) + 1
+  /** The write base of a [[latestVersion]]-based write, read once
+    * before the write derives anything: (`base`, the version the write
+    * extends; `next`, the number it claims). `next` sits above EVERY
+    * version dir, not at `base + 1`: a crashed commit's version keeps
+    * its dir and its claim marker (vacuum reaps a manifest-less one only
+    * past its grace, and a complete one is never reaped), so claiming
+    * `base + 1` would conflict on that debris on every retry. A commit
+    * that lands after this read claims `next` first and this write
+    * loses its claim with the retry-able conflict.
+    */
+  private def writeBase(spark: SparkSession, path: String): (Long, Long) = {
+    val base = latestVersion(spark, path)
+    (base, math.max(base, currentSnapshot(spark, path)) + 1)
+  }
 
   /** Optimistic-concurrency full-content commit: `df` becomes version
     * `expectedVersion + 1`, the version the writer read before deriving
@@ -1452,20 +1172,18 @@ object Warehouse {
                      orphanGraceMs: Long = 600000L,
                      triage: Boolean = true,
                      txn: Option[(String, Long)] = None): Long =
-    commitFull(df, path, expectedVersion, expectedVersion + 1, "commitSnapshot",
-      orphanGraceMs, Commit.MainRef, triage, txn)
+    commitFull(df, path, expectedVersion + 1, "commitSnapshot",
+      orphanGraceMs, triage, txn)
 
   /** The gated full-content write and its commit, shared by
-    * [[writeSnapshot]], [[commitSnapshot]] and [[commitToBranch]]:
-    * identity mint-or-guard (high-water mark at `hwmBase`, the content
-    * lineage the write extends), generated fill-or-validate, the
-    * expectation triage, the CHECK guard, then one observed write into
+    * [[writeSnapshot]] and [[commitSnapshot]]: generated
+    * fill-or-validate, the expectation triage, then one observed write into
     * a fresh staging dir, committed as version `next` with a
     * best-effort manifest. A write that dies mid-job deletes its
     * staging dir, so it leaves nothing behind.
     */
-  private def commitFull(df: DataFrame, path: String, hwmBase: Long, next: Long,
-                         op: String, orphanGraceMs: Long, ref: Commit.Ref,
+  private def commitFull(df: DataFrame, path: String, next: Long,
+                         op: String, orphanGraceMs: Long,
                          triage: Boolean = true,
                          txn: Option[(String, Long)] = None): Long = {
     val spark = df.sparkSession
@@ -1473,18 +1191,13 @@ object Warehouse {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tag = java.util.UUID.randomUUID().toString.take(8)
     val staging = new org.apache.hadoop.fs.Path(s"$path/_staging-$tag")
-    val idd = identityAlign(df, path, op, {
-      val (c, st) = identityRule(fs, path).get
-      identityHwmAt(spark, fs, path, hwmBase, c, st)
-    })
     val (g, flushQuarantine, expMetrics) =
-      if (triage) expectationGate(generatedAlign(idd, path, op), path, op)
-      else (generatedAlign(idd, path, op), () => (), NoExpectationMetrics)
+      if (triage) expectationGate(generatedAlign(df, path, op), path, op)
+      else (generatedAlign(df, path, op), () => (), NoExpectationMetrics)
     expMetrics.arm()
     val expCounts =
       try {
-        constraintGuard(g, path, op)
-          .write.mode(SaveMode.ErrorIfExists).parquet(staging.toString)
+        g.write.mode(SaveMode.ErrorIfExists).parquet(staging.toString)
         expMetrics.collect() // right after the observed write: a later
         // CAS conflict throw must not leave the listener armed
       } catch {
@@ -1495,7 +1208,7 @@ object Warehouse {
       }
     commitStagedVersion(spark, fs, path, staging, next, g.schema.json, Nil, None,
       op = op, orphanGraceMs = orphanGraceMs, txn = txn, expectations = expCounts,
-      policy = Commit.BestEffort, ref = ref)
+      policy = Commit.BestEffort)
     flushQuarantine()
     next
   }
@@ -1509,8 +1222,7 @@ object Warehouse {
     * footer re-reads). Appending a day of data to a 100 TB table costs
     * the day's files plus one manifest write; [[writeSnapshot]] /
     * [[commitSnapshot]] would rewrite the table. This is the write
-    * path that makes the version history a LOG of arrivals — which is
-    * exactly what [[readSnapshotStream]] tails.
+    * path that makes the version history a LOG of arrivals.
     *
     * Same optimistic CAS as [[commitSnapshot]] (`expectedVersion`
     * read-before-write; a concurrent commit loses with a retryable
@@ -1534,27 +1246,26 @@ object Warehouse {
                      txn: Option[(String, Long)] = None,
                      evolveSchema: Boolean = false): Long =
     appendVersionFrom(df, path, base = expectedVersion, next = expectedVersion + 1,
-      orphanGraceMs, Commit.MainRef, changeFeed, txn, evolveSchema)
+      orphanGraceMs, changeFeed, txn, evolveSchema)
       .getOrElse(currentSnapshot(df.sparkSession, path)) // empty batch: no commit
 
-  /** Shared core of [[appendSnapshot]]/[[commitStreamBatch]]/
-    * [[appendToBranch]]: commit version `next` whose content is version
-    * `base`'s rows plus `df`'s, new files only, base carried by
-    * manifest reference, and advance `ref`. The two numbers are
-    * decoupled because a branch append extends the BRANCH head while
-    * the number is allocated globally. Returns None for an empty batch
-    * (no commit), the committed version otherwise.
+  /** Shared core of [[appendSnapshot]] and [[commitStreamBatch]]:
+    * commit version `next` whose content is version `base`'s rows plus
+    * `df`'s, new files only, base carried by manifest reference. The
+    * two numbers are decoupled because a stream epoch extends
+    * `_latest` while claiming above any crash debris ([[writeBase]]).
+    * Returns None for an empty batch (no commit), the committed
+    * version otherwise.
     */
   private def appendVersionFrom(dfIn: DataFrame, path: String, base: Long,
-                                next: Long, orphanGraceMs: Long, ref: Commit.Ref,
+                                next: Long, orphanGraceMs: Long,
                                 changeFeed: Boolean = false,
                                 txn: Option[(String, Long)] = None,
-                                evolveSchema: Boolean = false,
-                                gateOp: String = "appendSnapshot"): Option[Long] = {
+                                evolveSchema: Boolean = false): Option[Long] = {
     // generated columns (X205) fill BEFORE the schema gate: the common
     // writer supplies business columns only, the table derives the rest
     val (df, flushQuarantine, expMetrics) = expectationGate(
-      generatedAlign(dfIn, path, "appendSnapshot"), path, gateOp, txn)
+      generatedAlign(dfIn, path, "appendSnapshot"), path, "appendSnapshot", txn)
     val spark = df.sparkSession
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1581,35 +1292,15 @@ object Warehouse {
             .map(st => s"v=$base/${st.getPath.getName}").sorted
           (names, None, None)
       }
-    // an empty batch commits nothing — probed BEFORE the identity hwm
-    // resolution (review r11: an empty streaming batch must not pay a
-    // manifest read, let alone the lost-manifest max scan, for ids it
-    // will never mint). The schema gate below is skipped for empty
-    // batches by construction — there are no rows it could protect.
+    // an empty batch commits nothing. The schema gate below is skipped
+    // for empty batches by construction — there are no rows it could
+    // protect.
     // A batch EMPTIED by triage still delivers its quarantine rows:
     // "nothing committed" is that ingest's correct main-table outcome.
     if (df.isEmpty) { flushQuarantine(); return None }
-    val committed0: Option[StructType] = baseSchema.orElse(
-      if (base == 0L) None
-      else Some(spark.read.parquet(baseEntries.map(entryPath(path, _)): _*).schema))
-    // identity minting (X210) BEFORE the schema gate: the batch gains
-    // the column the committed schema carries; the hwm is the BASE
-    // manifest's record (scan fallback when it cannot answer), so
-    // appended ids land above everything the lineage committed. A
-    // declared-but-never-backfilled column (committed schema lacks it,
-    // review r11) does NOT mint on a plain append — the batch must
-    // match the committed schema; backfill via a full write, or append
-    // with evolveSchema to land it as an evolution column.
-    val dfI = identityRule(fs, path) match {
-      case Some((c, _)) if !df.columns.contains(c) && base != 0L &&
-        !committed0.exists(_.fieldNames.contains(c)) && !evolveSchema => df
-      case _ => identityAlign(df, path, "appendSnapshot", {
-        val (c, st) = identityRule(fs, path).get
-        reuse.flatMap { case (m, _) => identityHwm(Some(m), c, st) }
-          .getOrElse(identityHwmAt(spark, fs, path, base, c, st))
-      })
-    }
-    val committed = committed0.getOrElse(dfI.schema)
+    val committed: StructType = baseSchema.getOrElse(
+      if (base == 0L) df.schema
+      else spark.read.parquet(baseEntries.map(entryPath(path, _)): _*).schema)
     val want = committed.fields.map(f => f.name -> f.dataType).toMap
     // the version's schema: exact-match gate by default (silent casts
     // here would corrupt the log a stream tail replays forever);
@@ -1623,18 +1314,18 @@ object Warehouse {
     val tombstones = reuse.map { case (mm, _) => droppedColumnsOf(mm) }.getOrElse(Seq.empty)
     val (target: StructType, minted: Map[String, String]) =
       if (!evolveSchema) {
-        val got = dfI.schema.fields.map(f => f.name -> f.dataType).toMap
+        val got = df.schema.fields.map(f => f.name -> f.dataType).toMap
         require(got == want,
           s"appendSnapshot($path): batch schema must match the committed schema exactly; " +
-            s"committed=${committed.simpleString} batch=${dfI.schema.simpleString}")
+            s"committed=${committed.simpleString} batch=${df.schema.simpleString}")
         (committed, Map.empty[String, String])
       } else {
-        val drift = dfI.schema.fields
+        val drift = df.schema.fields
           .filter(f => want.get(f.name).exists(_ != f.dataType))
           .map(f => s"${f.name}: committed ${want(f.name).simpleString} vs batch ${f.dataType.simpleString}")
         require(drift.isEmpty,
           s"appendSnapshot($path): shared columns changed type (${drift.mkString("; ")})")
-        val fresh = dfI.schema.fields.filterNot(f => want.contains(f.name))
+        val fresh = df.schema.fields.filterNot(f => want.contains(f.name))
           .map(_.copy(nullable = true))
         // resurrection guard (X196): a fresh column whose name matches
         // a PHYSICAL name still frozen in carried files (renamed-away
@@ -1648,8 +1339,8 @@ object Warehouse {
         }._1
         (StructType(committed.fields ++ fresh), m)
       }
-    val aligned = dfI.select(target.fields.map(f =>
-      if (dfI.columns.contains(f.name)) col(f.name)
+    val aligned = df.select(target.fields.map(f =>
+      if (df.columns.contains(f.name)) col(f.name)
       else lit(null).cast(f.dataType).as(f.name)).toIndexedSeq: _*)
     val tag = java.util.UUID.randomUUID().toString.take(8)
     val staging = new org.apache.hadoop.fs.Path(s"$path/_staging-$tag")
@@ -1664,7 +1355,7 @@ object Warehouse {
     expMetrics.arm()
     val expCounts =
       try {
-        toPhysical(constraintGuard(aligned, path, "appendSnapshot"), cmap)
+        toPhysical(aligned, cmap)
           .write.mode(SaveMode.ErrorIfExists).parquet(staging.toString)
         expMetrics.collect()
       } catch { case t: Throwable => expMetrics.disarm(); throw t }
@@ -1697,54 +1388,22 @@ object Warehouse {
       orphanGraceMs = orphanGraceMs, txn = txn,
       dv = reuse.flatMap { case (m, _) => readDvState(m) },
       columnMap = if (minted.isEmpty) None else Some(cmap),
-      cdfStaging = cdfStaging, expectations = expCounts, ref = ref)
+      cdfStaging = cdfStaging, expectations = expCounts)
     flushQuarantine()
     Some(next)
   }
 
-  /** STREAMING TAIL of the snapshot warehouse — the table as a
-    * Structured Streaming SOURCE (the Delta "streaming from a table"
-    * shape): each committed version's NEW data files become stream
-    * input as they appear, so an [[appendSnapshot]] log is consumed
-    * row-exactly-once end-to-end (Spark's file-source offset log +
-    * the sink's checkpoint give restart-safe progress; run with
-    * `Trigger.AvailableNow` for catch-up batches, continuous triggers
-    * for a live tail). Built on the built-in parquet file source over
-    * the `v=*` layout rather than a custom DSv2 source: version dirs
-    * appear atomically (staging + rename) and carried-by-reference
-    * files create no new paths, so "new file" = "newly committed
-    * rows" exactly when history is APPEND-ONLY.
-    *
-    * Contract: valid for append-only histories ([[writeSnapshot]] /
-    * [[commitSnapshot]] initial load + [[appendSnapshot]] batches).
-    * A file-sharing REWRITE version ([[deleteWhere]] /
-    * [[updateWhere]] / compactSnapshot) re-emits its rewritten files'
-    * surviving rows — the same restriction Delta's source has before
-    * `skipChangeCommits`; [[rollbackSnapshot]] emits nothing (its
-    * version holds no files). [[snapshotHistory]]'s `file_sharing`
-    * column audits whether a history is tail-safe. Schema is pinned
-    * to the CURRENT committed schema at call time (streams need a
-    * static schema); the table must have at least one version.
+  /** Driver-side scan cache (review r11): manifests are immutable and
+    * an appId's stamp only moves FORWARD, so each call needs to parse
+    * only the versions that appeared since the last scan — without
+    * this, an idle stream (empty batches never stamp) re-read the
+    * whole version history's manifests on every trigger. Keyed
+    * (path, appId) -> (scanned-through version, last epoch); a cold
+    * cache or another driver's writes degrade to the full scan, never
+    * to a wrong answer.
     */
-  def readSnapshotStream(spark: SparkSession, path: String,
-                         maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val schema = readSnapshot(spark, path).schema
-    // mapped table (X195): the files carry the physical layout — tail
-    // physically, alias back to the committed logical names (a
-    // map-ignorant physical tail would read renamed columns as NULLs)
-    val fsv = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cmap = readManifest(fsv, path, currentSnapshot(spark, path))
-      .map(columnMapOf).getOrElse(Map.empty)
-    val r = spark.readStream.schema(physicalize(schema, cmap))
-    // the glob matches DATA FILES directly (no partition inference:
-    // `v` stays a layout detail, not a column); `_partial`/`_SUCCESS`
-    // markers and root-level `_staging-*`/`_latest`/`_tag-*`/manifest
-    // protocol files all fall outside `v=*/part-*`
-    maxFilesPerTrigger.fold(r)(n => r.option("maxFilesPerTrigger", n.toString))
-      .parquet(s"$path/v=*/part-*")
-      .select(toLogicalCols(schema, cmap): _*)
-  }
+  private val epochScanCache =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), (Long, Option[Long])]()
 
   /** The highest epoch writer `appId` has committed to the table
     * (None if it never committed): the read half of the Delta-style
@@ -1758,18 +1417,6 @@ object Warehouse {
     * maximum replay horizon (one version, for Spark's foreachBatch
     * replay-last-batch-on-restart contract).
     */
-  /** Driver-side scan cache (review r11): manifests are immutable and
-    * an appId's stamp only moves FORWARD, so each call needs to parse
-    * only the versions that appeared since the last scan — without
-    * this, an idle stream (empty batches never stamp) re-read the
-    * whole version history's manifests on every trigger. Keyed
-    * (path, appId) -> (scanned-through version, last epoch); a cold
-    * cache or another driver's writes degrade to the full scan, never
-    * to a wrong answer.
-    */
-  private val epochScanCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), (Long, Option[Long])]()
-
   def lastCommittedEpoch(spark: SparkSession, path: String, appId: String): Option[Long] = {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1831,8 +1478,7 @@ object Warehouse {
   }
 
   /** One exactly-once streaming micro-batch into the table — the body
-    * [[writeSnapshotStream]] runs per epoch, factored out so the
-    * replay path is directly testable. Skips when `epoch` is already
+    * a [[batchSink]] runs per epoch. Skips when `epoch` is already
     * committed by `appId` (foreachBatch replays the last batch after a
     * restart); otherwise appends under the CAS, retrying
     * [[SnapshotConflictException]] against the fresh version so a
@@ -1866,15 +1512,11 @@ object Warehouse {
       // let the zombie re-append an already-committed epoch
       if (lastCommittedEpoch(spark, path, appId).exists(_ >= epoch)) {
         rollForwardStamped(spark, path, appId)
-        mainWriteBase(spark, path)
+        latestVersion(spark, path)
       } else {
-        // content base = the MAIN lineage (review r11: currentSnapshot
-        // includes unpublished branch heads — a stream basing itself on
-        // one would silently publish it); version number allocated above
-        // every live version
-        val base = mainWriteBase(spark, path)
-        appendVersionFrom(batch, path, base, nextVersionAbove(spark, path, base),
-          orphanGraceMs, Commit.MainRef, changeFeed, txn = Some((appId, epoch)))
+        val (base, next) = writeBase(spark, path)
+        appendVersionFrom(batch, path, base, next,
+          orphanGraceMs, changeFeed, txn = Some((appId, epoch)))
           .getOrElse(base) // empty batch: no commit
       }
     }
@@ -1889,38 +1531,12 @@ object Warehouse {
     */
   private def rollForwardStamped(spark: SparkSession, path: String, appId: String): Unit = {
     val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val base = mainWriteBase(spark, path)
+    val base = latestVersion(spark, path)
     snapshots(spark, path).reverseIterator.takeWhile(_ > base)
       .find(v => readManifest(fs, path, v).exists(m =>
         m.has("txnApp") && m.get("txnApp").asText == appId))
       .foreach(Commit.advancePointer(fs, path, _))
   }
-
-  /** STREAMING SINK into the snapshot warehouse — [[readSnapshotStream]]'s
-    * write-side twin, closing the loop: a Structured Streaming query
-    * lands each micro-batch as one [[appendSnapshot]] version,
-    * EXACTLY-ONCE end-to-end. Spark's checkpoint gives at-least-once
-    * epochs (the last batch replays after a crash); idempotence comes
-    * from the Delta txn shape — the (appId, epoch) pair rides the
-    * version's own manifest, so a replayed epoch is recognized and
-    * skipped no matter where the crash fell. Table versions become the
-    * stream's batch log: tail it with [[readSnapshotStream]], audit it
-    * with [[snapshotHistory]], expire it with the same retention as
-    * any table (keeping ≥ the replay horizon, see
-    * [[lastCommittedEpoch]]).
-    *
-    * Returns the configured writer — caller picks trigger and calls
-    * `.start()`; `appId` must be unique per logical stream into the
-    * table (two streams sharing an id would skip each other's epochs).
-    */
-  def writeSnapshotStream(source: DataFrame, path: String, checkpoint: String,
-                          appId: String, changeFeed: Boolean = false,
-                          maintainEvery: Int = 0,
-                          maintainPolicy: MaintenancePolicy = MaintenancePolicy())
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    batchSink(source, path, checkpoint, maintainEvery, maintainPolicy) { (batch, epoch) =>
-      commitStreamBatch(batch, path, appId, epoch, changeFeed); ()
-    }
 
   /** The `foreachBatch` loop every snapshot sink shares: `commit` lands
     * each micro-batch, then every `maintainEvery` epochs (0 = never) the
@@ -1976,55 +1592,17 @@ object Warehouse {
       // stamped but unpublished version — see [[commitStreamBatch]]
       if (lastCommittedEpoch(spark, path, appId).exists(_ >= epoch)) {
         rollForwardStamped(spark, path, appId)
-        mainWriteBase(spark, path)
+        latestVersion(spark, path)
       } else mergeIntoSnapshot(spark, path, batch, keys, clauses,
         orphanGraceMs, changeFeed = changeFeed, txn = Some((appId, epoch)))
     }
   }
 
-  /** REPLICA APPLY — close the CDC loop: take the recorded change feed
-    * of `src` for versions `fromVersion..toVersion` and apply it to
-    * `dst` as ONE file-grain merge, so a downstream replica catches up
-    * across N commits reading only the feeds and rewriting only the
-    * files its keys live in — never rescanning either table. Feed rows
-    * fold to per-key LAST state first (delete/update/insert vocabulary,
-    * `_commit_version` then change-type rank orders same-version
-    * delete+insert pairs), then one [[mergeIntoSnapshot]]: delete rows
-    * drop, everything else upserts. Requires per-version key
-    * uniqueness on `src` (the standing CDC contract) and a recorded
-    * feed for every version in the range ([[readChangeFeed]]'s gap
-    * rule). Law, spec-pinned: if `dst` ≡ `src@(fromVersion-1)`, then
-    * after replication `dst` ≡ `src@toVersion`.
-    */
-  def replicateChanges(spark: SparkSession, src: String, dst: String,
-                       keys: Seq[String], fromVersion: Long, toVersion: Long,
-                       orphanGraceMs: Long = 600000L): Long = {
-    val feed = readChangeFeed(spark, src, fromVersion, toVersion)
-      .filter(col("_change_type") =!= "update_preimage")
-    // last state per key across the range: later commit wins; within a
-    // commit a delete can only co-exist with a later re-insert of the
-    // same key via a SEPARATE version (per-version key uniqueness), so
-    // (_commit_version, insert/update over delete) is a total order
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(keys.map(col): _*)
-      .orderBy(col("_commit_version").desc,
-        when(col("_change_type") === "delete", 0).otherwise(1).desc)
-    val last = feed
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn", "_commit_version")
-    val schemaCols = last.columns.filterNot(_ == "_change_type")
-    mergeIntoSnapshot(spark, dst, last, keys, Seq(
-      DeleteWhen(col("s._change_type") === "delete"),
-      UpdateWhen(lit(true),
-        schemaCols.filterNot(keys.contains).map(c => c -> col(s"s.$c")).toMap),
-      InsertWhen(col("s._change_type") =!= "delete")),
-      orphanGraceMs)
-  }
-
   /** Publish a pointer file by OVERWRITING rename — the destination is
     * never absent, so concurrent readers see old-or-new, not a
     * FileNotFoundException window (advice r10: the delete-then-rename
-    * publish made a tag briefly absent, failing concurrent reads and
-    * aborting the loser of two concurrent retags). Local FS gets the
+    * publish made a pointer briefly absent, failing concurrent reads
+    * and aborting the loser of two concurrent publishes). Local FS gets the
     * genuinely atomic `Files.move(ATOMIC_MOVE, REPLACE_EXISTING)`;
     * elsewhere `FileContext.rename(OVERWRITE)` (atomic on HDFS); the
     * last-resort delete+rename is retried once so a racing publisher
@@ -2087,30 +1665,19 @@ object Warehouse {
   private def manifestPath(path: String, v: Long) =
     new org.apache.hadoop.fs.Path(s"$path/_manifest-v$v")
 
-  /** Resolve one manifest file entry to its full path. Entries are
-    * root-relative when they contain a `/` (a [[deleteWhere]] version
-    * carrying an untouched file of an EARLIER version forward by
-    * reference — `v=3/part-…`), plain file names otherwise (all files
-    * live in this version's own dir — the only form pre-r10 manifests
-    * ever wrote, so old manifests read unchanged).
+  /** Resolve one manifest file entry to its full path. Every entry
+    * lives under the table root: root-relative when it contains a `/`
+    * (a [[deleteWhere]] version carrying an untouched file of an
+    * EARLIER version forward by reference — `v=3/part-…`), a plain
+    * file name otherwise (all files live in this version's own dir —
+    * the only form pre-r10 manifests ever wrote, so old manifests read
+    * unchanged).
     */
   private def resolveEntry(path: String, v: Long, entry: String): String =
-    if (isAbsoluteEntry(entry)) entry
-    else if (entry.contains("/")) s"$path/$entry" else s"$path/v=$v/$entry"
+    if (entry.contains("/")) s"$path/$entry" else s"$path/v=$v/$entry"
 
-  /** An ABSOLUTE manifest entry — a rooted path or full URI pointing
-    * OUTSIDE the table root, written only by [[cloneSnapshot]] (the
-    * shallow-clone form): the clone's manifest references the source
-    * table's bytes in place. Root-relative entries stay the norm;
-    * absolute ones resolve verbatim everywhere entries resolve.
-    */
-  private def isAbsoluteEntry(e: String): Boolean =
-    e.startsWith("/") || e.contains("://")
-
-  /** Root-relative entry `e` of table `path` resolved to a readable
-    * path — identity for absolute (clone) entries. */
-  private def entryPath(path: String, e: String): String =
-    if (isAbsoluteEntry(e)) e else s"$path/$e"
+  /** Root-relative entry `e` of table `path` resolved to a readable path. */
+  private def entryPath(path: String, e: String): String = s"$path/$e"
 
   /** The manifest's file entries, in committed order. */
   private def manifestEntries(m: com.fasterxml.jackson.databind.JsonNode): Seq[String] = {
@@ -2122,7 +1689,7 @@ object Warehouse {
 
   /** The manifest's entries NORMALIZED to root-relative form (plain
     * names become `v=<v>/name`) — the single copy of the rule every
-    * cross-version consumer (deleteWhere/rollback/diff/expire) keys on.
+    * cross-version consumer (deleteWhere/diff/expire) keys on.
     */
   private def normEntries(m: com.fasterxml.jackson.databind.JsonNode,
                           v: Long): Seq[String] =
@@ -2165,8 +1732,8 @@ object Warehouse {
   // ---------------------------------------------------------------------------
 
   /** The manifest's deletion-vector state: `refs` names the `_dv`
-    * sidecar dirs whose positions apply (root-relative `v=<n>/_dv`, or
-    * absolute for a [[cloneSnapshot]] reference), `files` the touched
+    * sidecar dirs whose positions apply (root-relative `v=<n>/_dv`),
+    * `files` the touched
     * entries with their LIVE deleted-position count. Stale positions
     * (referencing since-rewritten paths) may persist inside kept refs;
     * they are inert in the anti-join and excluded from this count.
@@ -2290,23 +1857,15 @@ object Warehouse {
     org.apache.spark.sql.types.StructField("pos", org.apache.spark.sql.types.LongType)))
 
   /** The live position frame of `refs`, resolved to (`__p` scheme-less
-    * absolute path, `__pos`). Each ref's rows are relative to the root
-    * that RECORDED them — the table root for `v=<n>/_dv` refs, the ref's
-    * own grandparent for an absolute (clone) ref — so positions keep
-    * matching after a table is cloned or relocated.
+    * absolute path, `__pos`). Recorded positions name their file
+    * root-relative, so they keep matching after a table is relocated:
+    * the path resolves against the table root `q` of this read.
     */
   private def dvFrame(spark: SparkSession, path: String, q: String,
                       refs: Seq[String]): DataFrame =
     refs.map { ref =>
-      val root =
-        if (!isAbsoluteEntry(ref))
-          q
-        else new org.apache.hadoop.fs.Path(ref).getParent.getParent.toString
       spark.read.schema(dvRowSchema).parquet(entryPath(path, ref))
-        .select(
-          when(col("file").startsWith("/"), col("file"))
-            .otherwise(concat(lit(root + "/"), col("file"))).as("__p"),
-          col("pos").as("__pos"))
+        .select(concat(lit(q + "/"), col("file")).as("__p"), col("pos").as("__pos"))
     }.reduce(_ unionAll _)
 
   /** Stamp each scanned row's physical identity: `__p` (normalized
@@ -2318,14 +1877,12 @@ object Warehouse {
     scan.withColumn("__p", stripSchemeCol(col("_metadata.file_path")))
       .withColumn("__pos", col("_metadata.row_index"))
 
-  /** Normalize a scheme-less physical path back to entry form:
-    * root-relative inside the table (`v=<n>/part-…`), scheme-less
-    * absolute for clone references — the inverse of [[entryPath]]
-    * under root `q`, shared by the DV recorder and the bloom indexer.
+  /** Normalize a scheme-less physical path under root `q` back to
+    * entry form (`v=<n>/part-…`) — the inverse of [[entryPath]],
+    * shared by the DV recorder and the bloom indexer.
     */
   private def entryFormCol(q: String, p: Column): Column =
-    when(p.startsWith(q + "/"), p.substr(lit(q.length + 2), lit(Int.MaxValue)))
-      .otherwise(p)
+    p.substr(lit(q.length + 2), lit(Int.MaxValue))
 
   /** Subtract the DV positions from `scan` (which must sit DIRECTLY
     * over a parquet file source — `_metadata` is stamped here). The
@@ -2578,33 +2135,13 @@ object Warehouse {
     // IN-COMMIT timestamp (X209, the Delta inCommitTimestamps shape):
     // the commit instant rides the commit record itself, so time
     // travel and history survive anything that refreshes file mtimes
-    // (a distcp/rsync table copy, an FS migration). Always the WRITE
-    // time — a restore/rollback is a NEW commit at its own instant,
-    // never the restored version's.
+    // (a distcp/rsync table copy, an FS migration). Always the WRITE time.
     node.put("committedAtMs", System.currentTimeMillis())
     // rowCount is the version's EFFECTIVE count: physical footer rows
     // minus live deletion-vector positions — [[snapshotRowCount]] stays
     // an O(1) truthful answer on a merge-on-read table
     node.put("rowCount", infos.map(_._2).sum - dv.map(_.rows).getOrElse(0L))
     node.put("bytes", infos.map(_._1).sum)
-    // identity high-water mark (X210): derived from the SAME per-file
-    // stats this manifest records — zero extra jobs; the max over all
-    // committed files (fresh footers + carried reuse) bounds every id
-    // actually written, minted or supplied
-    identityRule(fs, path).foreach { case (c, startAt) =>
-      val effMap = columnMap
-        .orElse(reuseFrom.map { case (m, _) => columnMapOf(m) })
-        .getOrElse(Map.empty)
-      val phys = physicalName(effMap, c)
-      val fromStats = infos.foldLeft(startAt - 1L) { (acc, i) =>
-        Option(i._3.get(phys)).flatMap(s => Option(s.get("max")))
-          .map(mx => math.max(acc, mx.asLong)).getOrElse(acc)
-      }
-      val carried = reuseFrom
-        .flatMap { case (m, _) => Option(m.get("idHwm")).map(_.asLong) }
-        .getOrElse(startAt - 1L)
-      node.put("idHwm", math.max(fromStats, carried))
-    }
     // Delta txn-action shape: the writer's (appId, epoch) rides the
     // COMMIT itself, so idempotence survives any crash window — there
     // is no separate marker whose loss could double-apply a batch
@@ -3158,7 +2695,7 @@ object Warehouse {
   }
 
   /** Read a snapshot: the pinned `version`, or the main ref's target
-    * ([[mainWriteBase]]) when absent. `_latest` is swapped by an
+    * ([[latestVersion]]) when absent. `_latest` is swapped by an
     * overwriting rename, so once written it is never absent; the
     * listing fallback to max(v=*) serves a table whose first commit
     * died between its promote and its pointer write (and a table from
@@ -3168,7 +2705,7 @@ object Warehouse {
   private def resolveVersion(spark: SparkSession, path: String,
                              version: Option[Long]): Long =
     version.getOrElse {
-      val v = mainWriteBase(spark, path)
+      val v = latestVersion(spark, path)
       if (v == 0L) sys.error(s"no _latest pointer or v=* versions under $path")
       v
     }
@@ -3246,9 +2783,9 @@ object Warehouse {
     * everything a table declares and carries: version accounting from
     * the manifest (zero data I/O), the committed schema, the column
     * map and tombstones, deletion-vector and bloom-index state, reader
-    * features, CHECK constraints, generated/identity rules, tags and
-    * branches. The operational "what am I looking at" answer the
-    * scattered readers individually provide — composed, never
+    * features, expectations and generated-column rules. The
+    * operational "what am I looking at" answer the scattered readers
+    * individually provide — composed, never
     * recomputed (every line comes from an existing metadata surface).
     */
   def describeSnapshot(spark: SparkSession, path: String,
@@ -3339,18 +2876,10 @@ object Warehouse {
         }
       }
     }
-    snapshotConstraints(spark, path).toSeq.sortBy(_._1).foreach { case (n, sql) =>
-      rows += ((s"constraint.$n", sql)) }
     snapshotExpectations(spark, path).toSeq.sortBy(_._1).foreach { case (n, (sql, a)) =>
       rows += ((s"expectation.$n", s"$a: $sql")) }
     snapshotGenerated(spark, path).toSeq.sortBy(_._1).foreach { case (c, sql) =>
       rows += ((s"generated.$c", sql)) }
-    snapshotIdentity(spark, path).foreach { case (c, st) =>
-      rows += (("identity", s"$c (starts at $st)")) }
-    snapshotTags(spark, path).foreach { case (n, tv, live) =>
-      rows += ((s"tag.$n", s"v=$tv${if (live) "" else " (expired)"}")) }
-    snapshotBranches(spark, path).foreach { case (n, bv, live) =>
-      rows += ((s"branch.$n", s"v=$bv${if (live) "" else " (expired)"}")) }
     rows.toSeq.toDF("property", "value")
   }
 
@@ -3432,387 +2961,6 @@ object Warehouse {
       case _: java.io.IOException | _: com.fasterxml.jackson.core.JacksonException => None
     }
 
-  /** [[readSnapshot]] pinned to [[snapshotVersionAt]]'s resolution. */
-  def readSnapshotAt(spark: SparkSession, path: String, tsMillis: Long): DataFrame =
-    readSnapshot(spark, path, Some(snapshotVersionAt(spark, path, tsMillis)))
-
-  /** Named snapshot TAG (Iceberg-tag shape): `_tag-<name>` pins a
-    * version under a stable name — "prod", "eval-2024-08" — so readers
-    * address meaning, not numbers. Written via tmp + atomic rename
-    * (last tag wins, like `_latest`); retagging moves the pin. A tag
-    * does NOT protect its version from [[expireSnapshots]] — retention
-    * is by version count, and a read through a dangling tag fails with
-    * the version's own clear error; [[snapshotTags]] lists dangling
-    * tags for cleanup.
-    */
-  private def requireTagName(name: String): Unit =
-    require(name.matches("[A-Za-z0-9._-]+"),
-      s"tag name must be [A-Za-z0-9._-]+, got '$name'")
-
-  def tagSnapshot(spark: SparkSession, path: String, name: String,
-                  version: Option[Long] = None): Long = {
-    requireTagName(name)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = version.getOrElse(currentSnapshot(spark, path))
-    require(snapshots(spark, path).contains(v),
-      s"tagSnapshot($path): no live snapshot v=$v to tag")
-    // overwriting publish (advice r10): a retag must never leave the
-    // tag absent mid-swap, and two concurrent retags must both land
-    // (last wins), not abort the loser
-    Commit.writePointerFile(fs, path, new org.apache.hadoop.fs.Path(s"$path/_tag-$name"), v,
-      s"cannot publish tag '$name' for $path")
-    v
-  }
-
-  /** All tags: (name, version, live) — `live` false when the tagged
-    * version has been expired out from under the tag.
-    */
-  def snapshotTags(spark: SparkSession, path: String): Seq[(String, Long, Boolean)] = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Seq.empty
-    val live = snapshots(spark, path).toSet
-    fs.listStatus(root).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("_tag-")).sorted.flatMap { n =>
-        // a tag listed a moment ago may have been dropped since — skip
-        // it, don't crash the listing
-        Commit.readPointerFile(fs, new org.apache.hadoop.fs.Path(root, n))
-          .map(v => (n.stripPrefix("_tag-"), v, live.contains(v)))
-      }
-  }
-
-  /** [[readSnapshot]] through a [[tagSnapshot tag]] — one GET of the
-    * tag file, not a listing of every tag.
-    */
-  def readSnapshotTag(spark: SparkSession, path: String, name: String): DataFrame = {
-    requireTagName(name)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tag = new org.apache.hadoop.fs.Path(s"$path/_tag-$name")
-    // one retry on absent (advice r10): publishes are overwriting-atomic
-    // on local FS/HDFS, but the last-resort delete+rename fallback (and
-    // any pre-r11 writer) has a brief absent window — re-read once
-    // before concluding the tag does not exist
-    val v = Commit.readPointerFile(fs, tag).orElse(Commit.readPointerFile(fs, tag))
-      .getOrElse(sys.error(s"no tag '$name' under $path"))
-    readSnapshot(spark, path, Some(v))
-  }
-
-  /** Remove a tag (the version stays). Returns whether it existed.
-    * Name validated like [[tagSnapshot]] — an unvalidated name with
-    * path segments would turn the delete into an arbitrary-file
-    * delete under the table root (review r10).
-    */
-  def dropSnapshotTag(spark: SparkSession, path: String, name: String): Boolean = {
-    requireTagName(name)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/_tag-$name"), false)
-  }
-
-  // ---------------------------------------------------------------------------
-  // Branches — WRITE-AUDIT-PUBLISH (Iceberg branch / WAP shape).
-  //
-  // The version history is ONE global sequence (every commit — main,
-  // branch, restore — claims the next number through the same
-  // [[Commit]] claim, so no two commits ever share a number or a
-  // file path); `_latest` and `_branch-<name>` are NAMED REFS into
-  // that sequence, exactly git refs over one object store. A branch
-  // commit is therefore a full first-class version — manifest,
-  // history row, pinned-readable — that unaudited readers simply
-  // never see, because [[readSnapshot]] resolves through `_latest`.
-  //
-  // The WAP discipline this enables: stage tonight's batch on a
-  // branch ([[commitToBranch]]/[[appendToBranch]]), run the audit
-  // queries against [[readSnapshotBranch]], then [[publishBranch]] —
-  // ONE pointer write — to make it the table, or [[dropBranch]] to
-  // abandon it with nothing to clean up (retention ages the orphaned
-  // versions out normally). While a branch is ahead of main, route
-  // ALL writes through branches: a main-side
-  // [[commitSnapshot]]/[[appendSnapshot]] CASes against
-  // `expectedVersion + 1`, which a branch commit may already hold —
-  // the writer fails with a retryable conflict (never corruption),
-  // but the clean pattern is branch-everything, publish-to-promote.
-  // [[readSnapshotStream]]'s "new file = new main rows" equivalence
-  // also assumes no branch is being written concurrently — a branch
-  // commit's files land under `v=*` before any audit passes.
-  // ---------------------------------------------------------------------------
-
-  private def branchFile(path: String, name: String) =
-    new org.apache.hadoop.fs.Path(s"$path/_branch-$name")
-
-  /** The branch's LINEAGE anchor (review r11): the main version the
-    * branch's pending work is based on — written at create, advanced
-    * to the published head on every publish. [[publishBranch]] guards
-    * on THIS, not on version numbers: main commits made after the
-    * branch point can carry numbers below the branch head, and a
-    * numeric `mainV <= head` check would silently un-publish them.
-    */
-  private def branchBaseFile(path: String, name: String) =
-    new org.apache.hadoop.fs.Path(s"$path/_branchbase-$name")
-
-  private def writeBranchBase(fs: org.apache.hadoop.fs.FileSystem, path: String,
-                              name: String, v: Long): Unit =
-    Commit.writePointerFile(fs, path, branchBaseFile(path, name), v,
-      s"cannot record base for branch '$name' under $path")
-
-  /** Create branch `name` at `fromVersion` (default: the `_latest`
-    * target). Fails if the branch already exists — a branch is a
-    * lineage, not a tag; re-pointing it silently would orphan
-    * in-flight audit work. Exclusive create (O_EXCL through the same
-    * local-FS path the [[Commit]] claim uses) so two concurrent creates
-    * cannot both win.
-    */
-  def createBranch(spark: SparkSession, path: String, name: String,
-                   fromVersion: Option[Long] = None): Long = {
-    requireTagName(name)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = fromVersion.getOrElse(resolveVersion(spark, path, None))
-    require(snapshots(spark, path).contains(v),
-      s"createBranch($path): no live snapshot v=$v to branch from")
-    val dest = branchFile(path, name)
-    val created =
-      if (dest.toUri.getScheme == null || dest.toUri.getScheme == "file")
-        try {
-          java.nio.file.Files.write(java.nio.file.Paths.get(dest.toUri.getPath),
-            v.toString.getBytes("UTF-8"),
-            java.nio.file.StandardOpenOption.CREATE_NEW)
-          true
-        } catch { case _: java.nio.file.FileAlreadyExistsException => false }
-      else
-        try {
-          val out = fs.create(dest, false)
-          out.write(v.toString.getBytes("UTF-8")); out.close(); true
-        } catch {
-          // only exists-already means exists-already (review r11): a
-          // transient I/O or permission failure misreported as "branch
-          // exists" sends the operator to drop a branch that was never
-          // created — let the real error surface
-          case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-          case _: java.nio.file.FileAlreadyExistsException => false
-        }
-    require(created, s"createBranch($path): branch '$name' already exists")
-    // the lineage anchor publishBranch guards on; creation was
-    // exclusive, so this write has no competitor
-    writeBranchBase(fs, path, name, v)
-    v
-  }
-
-  /** The branch's current head version. */
-  def branchHead(spark: SparkSession, path: String, name: String): Long = {
-    requireTagName(name)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // same one-retry-on-absent as readSnapshotTag: the advance swap is
-    // overwriting-atomic, but tolerate a last-resort-fallback window
-    Commit.readPointerFile(fs, branchFile(path, name))
-      .orElse(Commit.readPointerFile(fs, branchFile(path, name)))
-      .getOrElse(sys.error(s"no branch '$name' under $path"))
-  }
-
-  /** All branches: (name, head version, live). */
-  def snapshotBranches(spark: SparkSession, path: String): Seq[(String, Long, Boolean)] = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Seq.empty
-    val live = snapshots(spark, path).toSet
-    fs.listStatus(root).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("_branch-")).sorted.flatMap { n =>
-        Commit.readPointerFile(fs, new org.apache.hadoop.fs.Path(root, n))
-          .map(v => (n.stripPrefix("_branch-"), v, live.contains(v)))
-      }
-  }
-
-  /** [[readSnapshot]] at the branch head — the audit query's input. */
-  def readSnapshotBranch(spark: SparkSession, path: String, name: String): DataFrame =
-    readSnapshot(spark, path, Some(branchHead(spark, path, name)))
-
-  /** Full-content commit onto a branch: `df` becomes the branch's new
-    * head, `_latest` untouched. Optimistic concurrency at TWO levels:
-    * the global [[Commit]] claim allocates the version number
-    * (loser → retryable conflict, like every commit), and
-    * `expectedBranchVersion` is the branch-lineage CAS — the head the
-    * writer read before deriving `df`; a branch that moved since
-    * fails the same way. One writer per branch is the intended
-    * discipline (WAP stages are serial); the branch-pointer re-check
-    * before the swap narrows, not closes, a simultaneous-advance race
-    * two disciplined writers never enter.
-    */
-  def commitToBranch(df: DataFrame, path: String, name: String,
-                     expectedBranchVersion: Long,
-                     orphanGraceMs: Long = 600000L): Long = {
-    val spark = df.sparkSession
-    val head = branchHead(spark, path, name)
-    if (head != expectedBranchVersion)
-      throw new SnapshotConflictException(path, head)
-    // branch commits validate like EVERY row-writing path (review
-    // r11): the WAP stage is where validation is supposed to happen —
-    // skipping the CHECK/generated gates here would let publishBranch
-    // promote unvalidated rows to main. Identity alignment included
-    // (review r12): the mint's high-water mark reads the BRANCH head
-    // (the content lineage this commit extends).
-    commitFull(df, path, head, currentSnapshot(spark, path) + 1, "commitToBranch",
-      orphanGraceMs, Commit.BranchRef(name, expectedBranchVersion))
-  }
-
-  /** [[appendSnapshot]] onto a branch: content extends the BRANCH
-    * head (files carried by reference), while the version number is
-    * allocated globally — the two are decoupled here exactly because
-    * main may have advanced past the branch point. Same contracts as
-    * [[appendSnapshot]] (exact schema gate, empty batch = no commit,
-    * load-bearing manifest) plus the branch-lineage CAS of
-    * [[commitToBranch]].
-    */
-  def appendToBranch(df: DataFrame, path: String, name: String,
-                     expectedBranchVersion: Long,
-                     orphanGraceMs: Long = 600000L): Long = {
-    val spark = df.sparkSession
-    val head = branchHead(spark, path, name)
-    if (head != expectedBranchVersion)
-      throw new SnapshotConflictException(path, head)
-    appendVersionFrom(df, path, base = head, next = currentSnapshot(spark, path) + 1,
-      orphanGraceMs, Commit.BranchRef(name, expectedBranchVersion),
-      gateOp = "appendToBranch")
-      .getOrElse(head) // empty batch: branch unchanged
-  }
-
-  /** PUBLISH — the one-pointer-write promote that completes
-    * write-audit-publish: `_latest` fast-forwards to the branch head,
-    * and every audited version the branch accumulated becomes the
-    * table's history in one atomic swap. The branch stays (publish
-    * again after more commits, or [[dropBranch]] when done). Fails
-    * loudly if `_latest` is AHEAD of the branch head — someone wrote
-    * main directly since the branch point; re-branch from latest and
-    * replay rather than silently un-publishing their commit
-    * (`_latest` advances forward only, so the swap would no-op).
-    */
-  def publishBranch(spark: SparkSession, path: String, name: String): Long = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val head = branchHead(spark, path, name)
-    val mainV = resolveVersion(spark, path, None)
-    // LINEAGE guard, not a numeric one (review r11): the branch's work
-    // extends its recorded base; if main moved off that base since —
-    // regardless of the version NUMBERS involved — fast-forwarding
-    // would silently un-publish main's commit. Legacy branches without
-    // a base record fall back to the numeric check.
-    Commit.readPointerFile(fs, branchBaseFile(path, name)) match {
-      case Some(base) =>
-        require(mainV == base || mainV == head,
-          s"publishBranch($path): main moved to v=$mainV since branch '$name' " +
-            s"based itself on v=$base — publishing head v=$head would un-publish " +
-            "main's commit; re-branch from latest and replay the branch's changes")
-      case None =>
-        require(mainV <= head,
-          s"publishBranch($path): _latest is at v=$mainV, ahead of branch '$name' " +
-            s"head v=$head — re-branch from latest and replay the branch's changes")
-    }
-    Commit.advancePointer(fs, path, head)
-    // future publishes of this branch extend from the published head
-    writeBranchBase(fs, path, name, head)
-    head
-  }
-
-  /** Remove a branch pointer (versions stay; retention ages them out
-    * once unreferenced). Returns whether it existed.
-    */
-  def dropBranch(spark: SparkSession, path: String, name: String): Boolean = {
-    requireTagName(name)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(branchBaseFile(path, name), false)
-    fs.delete(branchFile(path, name), false)
-  }
-
-  /** ROLLBACK / RESTORE (Delta `RESTORE TABLE ... TO VERSION` shape):
-    * commits a NEW version whose content is exactly `toVersion`'s —
-    * the undo for a bad write that keeps history linear and auditable
-    * (nothing is deleted; the bad version stays pinned-readable until
-    * retention ages it out). ZERO-COPY via the file-sharing machinery:
-    * the new version dir holds only the `_partial` marker and its
-    * manifest references the target's files (root-relative entries),
-    * with per-file accounting reused — a 100 TB restore costs one
-    * manifest write. Same CAS concurrency as every commit; the target
-    * must be a LIVE version (not expired). A manifest-less target
-    * (pre-manifest table) restores by reference to its directory
-    * listing, paying one footer pass to build the new manifest.
-    */
-  def rollbackSnapshot(spark: SparkSession, path: String, toVersion: Long,
-                       orphanGraceMs: Long = 600000L): Long = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = mainWriteBase(spark, path)
-    require(snapshots(spark, path).contains(toVersion),
-      s"rollbackSnapshot($path): no live snapshot v=$toVersion to restore")
-    if (toVersion == v) return v
-    val (entries, schemaJson, reuse) = readManifest(fs, path, toVersion) match {
-      case Some(m) =>
-        (manifestEntries(m).map(e => if (e.contains("/")) e else s"v=$toVersion/$e"),
-          m.get("schema").toString, Some((m, toVersion)))
-      case None =>
-        // same fences as readSnapshot's listing fallback: a rollback
-        // racing expireSnapshots (liveness checked a moment ago, sweep
-        // started since) must fail loudly, never restore from a
-        // half-swept directory (review r10)
-        require(!fs.exists(new org.apache.hadoop.fs.Path(s"$path/_expired-v$toVersion")),
-          s"rollbackSnapshot($path): v=$toVersion was expired mid-call")
-        require(!fs.exists(new org.apache.hadoop.fs.Path(s"$path/v=$toVersion/_partial")),
-          s"rollbackSnapshot($path): v=$toVersion is a file-sharing version with no readable manifest")
-        val names = fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/v=$toVersion")).toSeq
-          .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-            !st.getPath.getName.startsWith("."))
-          .map(st => s"v=$toVersion/${st.getPath.getName}").sorted
-        (names, spark.read.parquet(s"$path/v=$toVersion").schema.json, None)
-    }
-    val next = nextVersionAbove(spark, path, v)
-    val tag = java.util.UUID.randomUUID().toString.take(8)
-    val staging = new org.apache.hadoop.fs.Path(s"$path/_staging-$tag")
-    fs.mkdirs(staging)
-    fs.create(new org.apache.hadoop.fs.Path(staging, "_partial"), true).close()
-    // PRE-ADVANCE expiry fence (advice r10): the manifest-present path
-    // reuses per-file bytes/rows/stats from the target manifest, so
-    // writeManifest never stats the referenced files — a concurrent
-    // expireSnapshots dropping toVersion between the liveness check
-    // above and the manifest publish would let the restore commit a current
-    // version whose manifest points at files the sweep just deleted,
-    // silent until scans fail. From the manifest-publish instant the
-    // new version's references are visible to expire's reachability
-    // pass, so a clean re-check here (expire stamps `_expired-v` FIRST,
-    // before touching any file) means the referenced files survive.
-    // The manifest-less fallback re-checks the same marker before
-    // listing; this closes the asymmetry on the reuse path. A restore
-    // references the target's files verbatim, so its deletion-vector
-    // state (X189) restores with them.
-    commitStagedVersion(spark, fs, path, staging, next, schemaJson,
-      entries, reuse, op = "rollbackSnapshot",
-      orphanGraceMs = orphanGraceMs,
-      dv = reuse.flatMap { case (m, _) => readDvState(m) },
-      preAdvance = () => fenceRestoreAgainstExpiry(fs, path, toVersion, next))
-    next
-  }
-
-  /** [[rollbackSnapshot]]'s post-publish fence, factored for direct
-    * spec coverage (the race it guards cannot be interleaved
-    * deterministically through the public API): if the restore target
-    * carries an `_expired-v` marker or its version dir is gone, the
-    * freshly published restore version is UNWOUND — manifest first
-    * (readers degrade to the no-such-version error, never a scan of
-    * the dead file list), then dir, then CAS marker — and the call
-    * fails loudly before `_latest` ever points at it.
-    */
-  private[store] def fenceRestoreAgainstExpiry(
-      fs: org.apache.hadoop.fs.FileSystem, path: String,
-      toVersion: Long, next: Long): Unit = {
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/_expired-v$toVersion")) ||
-        !fs.exists(new org.apache.hadoop.fs.Path(s"$path/v=$toVersion"))) {
-      Commit.unwindVersion(fs, path, next)
-      sys.error(s"rollbackSnapshot($path): v=$toVersion was expired mid-call; " +
-        s"restore v=$next unwound")
-    }
-  }
-
   /** Table history — the DESCRIBE HISTORY analog, one row per LIVE
     * version, ascending: (version, committed_at, row_count, bytes,
     * n_files, file_sharing). Driver-side from commit markers (the CAS
@@ -3843,30 +2991,13 @@ object Warehouse {
       "file_sharing", "expectations")
   }
 
-  /** Drop every version older than `keepLast` versions back (never the
-    * latest). Readers pinned to an expired version fail on next scan —
-    * the standard retention contract.
-    *
-    * REACHABILITY-AWARE ([[deleteWhere]] file sharing): a retained
-    * version's manifest may reference files physically living in an
-    * expired version's dir (`v=3/part-…` entries). Those files are the
-    * retained version's DATA — deleting them would corrupt a live
-    * snapshot — so an expiring dir sheds only its unreferenced files;
-    * if shared files remain, the dir stays behind under an
-    * `_expired-v<n>` marker (excluded from [[snapshots]], refused by
-    * [[readSnapshot]]) and is swept again on later expire runs, until
-    * nothing references it and it vanishes. The manifest is deleted
-    * FIRST (r9 advice): a concurrent reader loses the manifest before
-    * any file goes, failing over to the clear no-such-version error
-    * instead of planning a scan of deleted files.
-    */
   /** Age-based retention — the Delta `delta.logRetentionDuration` /
     * Iceberg `expire_snapshots(older_than)` shape: expire versions
     * whose COMMIT INSTANT (CAS-marker mtime; dir mtime for
     * marker-less versions) is older than `maxAgeMs`, always keeping
     * at least `keepLast`. The call reduces to [[expireSnapshots]]
-    * with a suffix length — inheriting every fence (branch-head
-    * roots, reachability, unreadable-manifest hard stop) rather than
+    * with a suffix length — inheriting every fence (reachability,
+    * unreadable-manifest hard stop) rather than
     * duplicating the sweep. Commit instants are NOT assumed monotone
     * in version order (review r12): a slow commit can claim version N
     * yet stamp its manifest after N+1 published, so a suffix
@@ -3876,7 +3007,7 @@ object Warehouse {
     * instead, and the kept suffix starts at the OLDEST young version
     * — over-retaining the (rare) old-instant versions sitting above
     * it, which is the safe direction for a retention sweep. The time
-    * policy a streaming-ingest table wants: [[writeSnapshotStream]]
+    * policy a streaming-ingest table wants: a [[batchSink]]
     * makes version COUNT meaningless (one per micro-batch), but
     * "7 days of replay/time-travel" is a contract humans can hold.
     */
@@ -3896,19 +3027,29 @@ object Warehouse {
     expireSnapshots(spark, path, math.max(keepLast, math.max(1, young)))
   }
 
+  /** Drop every version older than `keepLast` versions back (never the
+    * latest). Readers pinned to an expired version fail on next scan —
+    * the standard retention contract.
+    *
+    * REACHABILITY-AWARE ([[deleteWhere]] file sharing): a retained
+    * version's manifest may reference files physically living in an
+    * expired version's dir (`v=3/part-…` entries). Those files are the
+    * retained version's DATA — deleting them would corrupt a live
+    * snapshot — so an expiring dir sheds only its unreferenced files;
+    * if shared files remain, the dir stays behind under an
+    * `_expired-v<n>` marker (excluded from [[snapshots]], refused by
+    * [[readSnapshot]]) and is swept again on later expire runs, until
+    * nothing references it and it vanishes. The manifest is deleted
+    * FIRST (r9 advice): a concurrent reader loses the manifest before
+    * any file goes, failing over to the clear no-such-version error
+    * instead of planning a scan of deleted files.
+    */
   def expireSnapshots(spark: SparkSession, path: String, keepLast: Int = 2): Seq[Long] = {
     require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val all = snapshots(spark, path)
-    // branch heads are RETENTION ROOTS (unlike tags, which dangle by
-    // design): a branch is unpublished in-flight work — expiring its
-    // head out from under the audit would silently lose the staged
-    // batch. Intermediate branch versions age out normally; the head's
-    // manifest references keep any files it still needs alive below.
-    val branchHeads = snapshotBranches(spark, path)
-      .collect { case (_, v, true) => v }.toSet
-    val drop = all.dropRight(keepLast).filterNot(branchHeads)
+    val drop = all.dropRight(keepLast)
     val dropSet = drop.toSet
     val retained = all.filterNot(dropSet)
     // HARD STOP before anything is touched: a RETAINED file-sharing
@@ -3935,8 +3076,8 @@ object Warehouse {
     val referenced: Set[String] = retained.flatMap(rv =>
       readManifest(fs, path, rv).toSeq.flatMap(m =>
         manifestEntries(m).filter(_.contains("/")) ++
-          readDvState(m).toSeq.flatMap(_.refs.filterNot(isAbsoluteEntry)) ++
-          readIdxState(m).map(_.ref).filterNot(isAbsoluteEntry))).toSet
+          readDvState(m).toSeq.flatMap(_.refs) ++
+          readIdxState(m).map(_.ref))).toSet
     def sweepDir(v: Long): Unit = {
       val dir = new org.apache.hadoop.fs.Path(s"$path/v=$v")
       // idempotent teardown of the version's commit records — also
@@ -4171,7 +3312,7 @@ object Warehouse {
     * outside the predicate would silently survive the NEXT reload of
     * the same predicate. Batch schema must match the committed schema
     * exactly (names and types; this is a reload, not an evolution).
-    * CHECK constraints, the column map, deletion vectors (matched
+    * Generated columns, the column map, deletion vectors (matched
     * rows already dv-deleted don't double-count; rewritten files
     * materialize their positions), and `scanBound` discovery pruning
     * all compose exactly as in [[deleteWhere]]/[[updateWhere]]. A
@@ -4198,7 +3339,7 @@ object Warehouse {
       // metrics handle unused: the reload batch lands inside
       // rewriteMatchingFiles' rewrite commit, whose manifest plumbing
       // is the row-level family's — the X221 counts cover the
-      // row-LANDING ingest paths (write/append/branch/commit)
+      // row-LANDING ingest paths (write/append/commit)
       val (b, fl, _) = expectationGate(generatedAlign(batch, path, "replaceWhere"),
         path, "replaceWhere")
       flushQuarantine = fl
@@ -4245,7 +3386,7 @@ object Warehouse {
                                    txn: Option[(String, Long)] = None): Long = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = mainWriteBase(spark, path)
+    val (v, next) = writeBase(spark, path)
     require(v >= 1, s"$op($path): no committed snapshot")
     // the version's committed entries, root-relative; manifest when
     // present, dir listing for pre-manifest versions
@@ -4340,30 +3481,12 @@ object Warehouse {
       val rem = d.files.filterNot { case (f, _) => touched(f) }
       if (rem.isEmpty) None else Some(DvState(d.refs, rem))
     }
-    val next = nextVersionAbove(spark, path, v)
     def touchedDf: DataFrame =
       if (touched.isEmpty) spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
       else liveScanWithFile(touched.toSeq.sorted)
         .select(schema.fieldNames.map(col).toIndexedSeq: _*)
-    val kept0 = constraintGuard(
-      generatedRederive(rewrite(touchedDf, schema), path, op), path, op)
-    // identity NULL guard (X210): rewritten rows carry their committed
-    // ids, but a merge INSERT clause that doesn't set the identity
-    // column lands NULL — which silently breaks id uniqueness
-    // downstream. Mint via append instead, or supply ids explicitly
-    // (BY DEFAULT semantics). Schema-lacking tables skip (declared but
-    // never backfilled — no fill may drift a rewritten file's schema).
-    val kept = identityRule(fs, path) match {
-      case Some((c, _)) if kept0.columns.contains(c) =>
-        kept0.filter(when(col(c).isNull,
-          raise_error(concat(
-            lit(s"$op($path): identity column '$c' is NULL in a written row — " +
-              "merge inserts must supply ids (or land new rows via append) "),
-            to_json(struct(kept0.columns.map(col).toIndexedSeq: _*)))))
-          .otherwise(lit(true)))
-      case _ => kept0
-    }
+    val kept = generatedRederive(rewrite(touchedDf, schema), path, op)
     // no matching files AND nothing created (insert clauses that all
     // miss): no empty commit — the isEmpty probe runs only on the
     // cheap no-touched path (source-side rows only)
@@ -4445,10 +3568,8 @@ object Warehouse {
                                   droppedColumns: Option[Seq[String]] = None,
                                   cdfStaging: Option[org.apache.hadoop.fs.Path] = None,
                                   expectations: Option[Map[String, (String, Long)]] = None,
-                                  policy: Commit.ManifestPolicy = Commit.LoadBearing,
-                                  ref: Commit.Ref = Commit.MainRef,
-                                  preAdvance: () => Unit = () => ()): Seq[String] =
-    Commit(fs, path, staging, next, op, orphanGraceMs, policy, ref, cdfStaging, preAdvance) {
+                                  policy: Commit.ManifestPolicy = Commit.LoadBearing): Seq[String] =
+    Commit(fs, path, staging, next, op, orphanGraceMs, policy, cdfStaging) {
       fresh =>
         writeManifest(fs, spark.sparkContext.hadoopConfiguration, path, next,
           schemaJson, Some(fresh ++ carried), reuseFrom = reuseFrom, txn = txn,
@@ -4485,10 +3606,7 @@ object Warehouse {
     * rows (X172) from the matched files only. Requires a readable
     * manifest (the DV record rides it) — on a manifest-less table use
     * [[deleteWhere]]. [[snapshotRowCount]] stays truthful (the
-    * manifest's rowCount is EFFECTIVE rows); a [[readSnapshotStream]]
-    * tail sees no event for a dv commit (deletes are invisible to an
-    * append-only consumer — the restriction rewrite versions already
-    * carry, in the opposite direction).
+    * manifest's rowCount is EFFECTIVE rows).
     */
   def deleteWhereDv(spark: SparkSession, path: String, predicate: Column,
                     orphanGraceMs: Long = 600000L,
@@ -4496,7 +3614,7 @@ object Warehouse {
                     changeFeed: Boolean = false): Long = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = mainWriteBase(spark, path)
+    val (v, next) = writeBase(spark, path)
     require(v >= 1, s"deleteWhereDv($path): no committed snapshot")
     val m = readManifest(fs, path, v).getOrElse(sys.error(
       s"deleteWhereDv($path): v=$v has no readable manifest — the DV record rides the " +
@@ -4515,8 +3633,7 @@ object Warehouse {
     if (candidates.isEmpty) return v
     val q = qualifiedRoot(fs, path)
     def liveWithId(es: Seq[String]): DataFrame = dvLiveWithId(spark, path, m, schema, es)
-    // matched positions, normalized back to entry form (root-relative
-    // inside the table, scheme-less absolute for clone references)
+    // matched positions, normalized back to root-relative entry form
     val matched = liveWithId(candidates).where(predicate).select(
       entryFormCol(q, col("__p")).as("file"),
       col("__pos").as("pos"))
@@ -4559,7 +3676,6 @@ object Warehouse {
     val entrySet = entries.toSet
     perFile.foreach { case (f, _) => require(entrySet.contains(f),
       s"deleteWhereDv($path): matched file $f not in committed entry list") }
-    val next = nextVersionAbove(spark, path, v)
     val merged: Seq[(String, Long)] = {
       val base = dvState.map(_.files).getOrElse(Seq.empty).toMap
       val add = perFile.toMap
@@ -4607,8 +3723,8 @@ object Warehouse {
     * Same contracts as [[deleteWhereDv]]: positions accumulate and
     * materialize on rewrite, `scanBound` prunes discovery via manifest
     * stats, no-match is a no-op (no empty commit), requires a readable
-    * manifest, CHECK constraints validate the post-image rows inside
-    * their write plan, and the column map applies (SET names logical
+    * manifest, generated columns re-derive on the post-image rows
+    * inside their write plan, and the column map applies (SET names logical
     * columns; the fresh file lands physical). The effective rowCount
     * is conserved by construction: the fresh file's footer rows equal
     * the new positions. `changeFeed = true` records the Delta-CDF
@@ -4622,13 +3738,6 @@ object Warehouse {
     * projections of that k-row frame (previously each consumer
     * re-scanned the matched files). The predicate must be
     * deterministic, as for every discovery-based write.
-    *
-    * Streaming-tail caveat: an append-only [[readSnapshotStream]]
-    * consumer sees this version's FRESH post-image file as new rows
-    * (the dv'd old copies are invisible to it) — the same restriction
-    * rewrite versions carry; the version is `_partial`-marked, so
-    * [[snapshotHistory]]'s `file_sharing` column audits tail safety
-    * here exactly as for the file-grain writes.
     */
   def updateWhereDv(spark: SparkSession, path: String, predicate: Column,
                     set: Map[String, Column],
@@ -4638,7 +3747,7 @@ object Warehouse {
     require(set.nonEmpty, "updateWhereDv needs at least one SET column")
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = mainWriteBase(spark, path)
+    val (v, next) = writeBase(spark, path)
     require(v >= 1, s"updateWhereDv($path): no committed snapshot")
     val m = readManifest(fs, path, v).getOrElse(sys.error(
       s"updateWhereDv($path): v=$v has no readable manifest — the DV record rides the " +
@@ -4717,10 +3826,8 @@ object Warehouse {
         .select(schema.fieldNames.map(col).toIndexedSeq: _*)
     }
     val post = applySet(matchedRows)
-    toPhysical(constraintGuard(
-      generatedRederive(post, path, "updateWhereDv"), path, "updateWhereDv"), cmap)
+    toPhysical(generatedRederive(post, path, "updateWhereDv"), cmap)
       .write.mode(SaveMode.Append).parquet(staging.toString)
-    val next = nextVersionAbove(spark, path, v)
     val merged: Seq[(String, Long)] = {
       val base = dvState.map(_.files).getOrElse(Seq.empty).toMap
       val add = perFile.toMap
@@ -4761,7 +3868,7 @@ object Warehouse {
                          orphanGraceMs: Long = 600000L): Option[(Long, Int)] = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = mainWriteBase(spark, path)
+    val (v, next) = writeBase(spark, path)
     require(v >= 1, s"materializeDeletes($path): no committed snapshot")
     val m = readManifest(fs, path, v).getOrElse(return None)
     val dvState = readDvState(m).getOrElse(return None)
@@ -4777,7 +3884,6 @@ object Warehouse {
       .write.mode(SaveMode.ErrorIfExists).parquet(staging.toString)
     if (untouched.nonEmpty)
       fs.create(new org.apache.hadoop.fs.Path(staging, "_partial"), true).close()
-    val next = nextVersionAbove(spark, path, v)
     val fresh = commitStagedVersion(spark, fs, path, staging, next,
       m.get("schema").toString, untouched, Some((m, v)),
       op = "materializeDeletes", orphanGraceMs = orphanGraceMs)
@@ -4810,9 +3916,9 @@ object Warehouse {
     * Known sharp edges, loud by construction: [[readChangeFeed]]
     * ACROSS a rename fails on the recorded feeds' schema mismatch
     * (each feed carries its commit-time names — replay per schema era,
-    * or pull via the bridged diff), and a [[setSnapshotConstraint]]
-    * naming the old column fails analysis at the next write —
-    * re-declare it under the new name. The bloom index survives: an
+    * or pull via the bridged diff), and a generated-column rule or an
+    * expectation naming the old column fails analysis at the next
+    * write — re-declare it under the new name. The bloom index survives: an
     * index on the renamed column is re-keyed to the new logical name
     * in the same commit.
     */
@@ -4823,7 +3929,7 @@ object Warehouse {
       s"renameSnapshotColumn: invalid target name '$to'")
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = mainWriteBase(spark, path)
+    val (v, next) = writeBase(spark, path)
     require(v >= 1, s"renameSnapshotColumn($path): no committed snapshot")
     val m = readManifest(fs, path, v).getOrElse(sys.error(
       s"renameSnapshotColumn($path): v=$v has no readable manifest — the column map " +
@@ -4838,21 +3944,10 @@ object Warehouse {
     val newMap = (cmap - from) + (to -> physicalName(cmap, from))
     val newSchema = StructType(schema.fields.map(f =>
       if (f.name == from) f.copy(name = to) else f))
-    val committed = commitMetadataOnly(spark, path, v, m, newSchema,
+    commitMetadataOnly(spark, path, v, next, m, newSchema,
       columnMap = Some(newMap),
       idx = readIdxState(m).map(s => if (s.column == from) s.copy(column = to) else s),
       op = "renameSnapshotColumn", orphanGraceMs = orphanGraceMs)
-    // the identity rule (X210) re-keys with the column, like the bloom
-    // index above — a rule left on the stale name would mint a ROGUE
-    // column under it at the next write (review r11). After the
-    // version commit: the rule rides a root file, not the manifest, so
-    // the re-key is keyed to the rename's success.
-    identityRule(fs, path).foreach { case (c, st) =>
-      if (c == from) withDdlLock(fs, path) {
-        writeRulesFile(fs, path, "_identity", Map(to -> st.toString))
-      }
-    }
-    committed
   }
 
   /** ALTER TABLE DROP COLUMN without rewriting a byte (X196) — the
@@ -4871,14 +3966,14 @@ object Warehouse {
     * otherwise re-bind the name to the frozen bytes) and clear on full
     * rewrites: after [[commitSnapshot]]/[[compactSnapshot]] no live
     * file carries the bytes. A bloom index on the dropped column is
-    * dropped with it; a CHECK constraint naming it fails analysis at
-    * the next write — re-declare or drop the constraint.
+    * dropped with it; an expectation naming it fails analysis at the
+    * next write — re-declare or drop the expectation.
     */
   def dropSnapshotColumn(spark: SparkSession, path: String, name: String,
                          orphanGraceMs: Long = 600000L): Long = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = mainWriteBase(spark, path)
+    val (v, next) = writeBase(spark, path)
     require(v >= 1, s"dropSnapshotColumn($path): no committed snapshot")
     val m = readManifest(fs, path, v).getOrElse(sys.error(
       s"dropSnapshotColumn($path): v=$v has no readable manifest — the column map " +
@@ -4889,14 +3984,9 @@ object Warehouse {
       s"dropSnapshotColumn($path): no column '$name' in the committed schema")
     require(schema.size > 1,
       s"dropSnapshotColumn($path): cannot drop the only column '$name'")
-    // a dropped identity column would leave a rule that re-mints it at
-    // the next write (review r11) — the rule goes first, explicitly
-    require(!identityRule(fs, path).exists(_._1 == name),
-      s"dropSnapshotColumn($path): '$name' is the identity column — " +
-        "dropIdentityColumn first")
     val cmap = columnMapOf(m)
     val idx0 = readIdxState(m)
-    commitMetadataOnly(spark, path, v, m,
+    commitMetadataOnly(spark, path, v, next, m,
       StructType(schema.fields.filterNot(_.name == name)),
       columnMap = Some(cmap - name),
       droppedColumns = Some(droppedColumnsOf(m) :+ physicalName(cmap, name)),
@@ -4919,7 +4009,7 @@ object Warehouse {
                         orphanGraceMs: Long = 600000L): Long = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = mainWriteBase(spark, path)
+    val (v, next) = writeBase(spark, path)
     require(v >= 1, s"addSnapshotColumn($path): no committed snapshot")
     val m = readManifest(fs, path, v).getOrElse(sys.error(
       s"addSnapshotColumn($path): v=$v has no readable manifest — the column map " +
@@ -4931,7 +4021,7 @@ object Warehouse {
     val cmap = columnMapOf(m)
     val used = usedPhysicalNames(schema, cmap, droppedColumnsOf(m))
     val newMap = if (used(name)) cmap + (name -> mintPhysical(name, used)) else cmap
-    commitMetadataOnly(spark, path, v, m,
+    commitMetadataOnly(spark, path, v, next, m,
       StructType(schema.fields :+ org.apache.spark.sql.types.StructField(
         name, dataType, nullable = true)),
       columnMap = Some(newMap),
@@ -4945,7 +4035,7 @@ object Warehouse {
     * data commit. DV state always carries (positions are column-
     * agnostic). Returns the committed version.
     */
-  private def commitMetadataOnly(spark: SparkSession, path: String, v: Long,
+  private def commitMetadataOnly(spark: SparkSession, path: String, v: Long, next: Long,
                                  m: com.fasterxml.jackson.databind.JsonNode,
                                  newSchema: StructType,
                                  columnMap: Option[Map[String, String]] = None,
@@ -4961,7 +4051,6 @@ object Warehouse {
     val staging = new org.apache.hadoop.fs.Path(s"$path/_staging-$tag")
     fs.mkdirs(staging)
     fs.create(new org.apache.hadoop.fs.Path(staging, "_partial"), true).close()
-    val next = nextVersionAbove(spark, path, v)
     commitStagedVersion(spark, fs, path, staging, next, newSchema.json,
       entries, Some((m, v)), op = op, orphanGraceMs = orphanGraceMs,
       dv = readDvState(m), idx = idx, idxDrop = idxDrop,
@@ -4982,7 +4071,7 @@ object Warehouse {
   // estimate is BIT-IDENTICAL to running kmvDistinct over the whole
   // table, while costing only a read of the (files × k)-row side
   // table. The synopsis is a pure function of the immutable file, so
-  // it survives appends, compaction carries, time travel, clones and
+  // it survives appends, compaction carries, time travel and
   // column RENAMES (rows key on the frozen PHYSICAL name) — analyze
   // is append-only maintenance, never invalidation.
 
@@ -5076,7 +4165,7 @@ object Warehouse {
     require(k >= 3, s"k must be >= 3 for the (k-1)/u_k estimator, got $k")
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = mainWriteBase(spark, path)
+    val v = latestVersion(spark, path)
     require(v >= 1, s"analyzeSnapshot($path): no committed snapshot")
     val m = readManifest(fs, path, v).getOrElse(sys.error(
       s"analyzeSnapshot($path): v=$v has no readable manifest — synopses ride its entry list"))
@@ -5262,7 +4351,7 @@ object Warehouse {
     require(bins >= 1, s"bins must be >= 1, got $bins")
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = mainWriteBase(spark, path)
+    val v = latestVersion(spark, path)
     require(v >= 1, s"analyzeHistogram($path): no committed snapshot")
     val m = readManifest(fs, path, v).getOrElse(sys.error(
       s"analyzeHistogram($path): v=$v has no readable manifest"))
@@ -5490,7 +4579,7 @@ object Warehouse {
     import spark.implicits._
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = mainWriteBase(spark, path)
+    val v = latestVersion(spark, path)
     require(v >= 1, s"compactAnalyzeSidecars($path): no committed snapshot")
     val m = readManifest(fs, path, v).getOrElse(sys.error(
       s"compactAnalyzeSidecars($path): v=$v has no readable manifest"))
@@ -5618,7 +4707,7 @@ object Warehouse {
     // by the SAME tick instead of decaying until the next one. The
     // threshold decision costs two manifest fields.
     val dvPurged = {
-      val v = mainWriteBase(spark, path)
+      val v = latestVersion(spark, path)
       val m = if (v >= 1) readManifest(fs, path, v) else None
       m.flatMap(readDvState).filter { s =>
         val positions = s.files.map(_._2).sum
@@ -5631,7 +4720,7 @@ object Warehouse {
     // refresh only an EXISTING index: whether a table wants one is a
     // schema-design decision, not a maintenance default
     val hasIndex = {
-      val v = mainWriteBase(spark, path)
+      val v = latestVersion(spark, path)
       v >= 1 && readManifest(fs, path, v).flatMap(readIdxState).isDefined
     }
     val indexRefreshed = if (hasIndex) refreshIndexSnapshot(spark, path) else None
@@ -5678,7 +4767,7 @@ object Warehouse {
     require(mBits > 0, s"mBits must be positive, got $mBits")
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = mainWriteBase(spark, path)
+    val (v, next) = writeBase(spark, path)
     require(v >= 1, s"indexSnapshot($path): no committed snapshot")
     val m = readManifest(fs, path, v).getOrElse(sys.error(
       s"indexSnapshot($path): v=$v has no readable manifest — the index record rides it"))
@@ -5703,7 +4792,6 @@ object Warehouse {
     val staging = new org.apache.hadoop.fs.Path(s"$path/_staging-$tag")
     idxRows.write.mode(SaveMode.ErrorIfExists).parquet(s"$staging/_idx")
     fs.create(new org.apache.hadoop.fs.Path(staging, "_partial"), true).close()
-    val next = nextVersionAbove(spark, path, v)
     commitStagedVersion(spark, fs, path, staging, next,
       m.get("schema").toString, entries, Some((m, v)),
       op = "indexSnapshot", orphanGraceMs = orphanGraceMs,
@@ -5735,7 +4823,7 @@ object Warehouse {
                            orphanGraceMs: Long = 600000L): Option[Long] = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = mainWriteBase(spark, path)
+    val (v, next) = writeBase(spark, path)
     require(v >= 1, s"refreshIndexSnapshot($path): no committed snapshot")
     val m = readManifest(fs, path, v).getOrElse(sys.error(
       s"refreshIndexSnapshot($path): v=$v has no readable manifest"))
@@ -5767,7 +4855,6 @@ object Warehouse {
     val staging = new org.apache.hadoop.fs.Path(s"$path/_staging-$tag")
     idxRows.write.mode(SaveMode.ErrorIfExists).parquet(s"$staging/_idx")
     fs.create(new org.apache.hadoop.fs.Path(staging, "_partial"), true).close()
-    val next = nextVersionAbove(spark, path, v)
     commitStagedVersion(spark, fs, path, staging, next,
       m.get("schema").toString, entries, Some((m, v)),
       op = "refreshIndexSnapshot", orphanGraceMs = orphanGraceMs,
@@ -5973,90 +5060,6 @@ object Warehouse {
           }
         }.toIndexedSeq ++ Seq(col("_change_type"), col("_commit_version")): _*)
       }.reduce(_ unionByName _)
-  }
-
-  /** The change feed as a Structured Streaming SOURCE — the
-    * continuous-consumption twin of [[readChangeFeed]], and the CDC
-    * counterpart of [[readSnapshotStream]] (which tails ROWS of an
-    * append-only history; this tails CHANGES of any recorded history,
-    * deletes and updates included). Same construction and the same
-    * exactly-once/restart contract: the parquet file source over
-    * `_cdf/v=*`, new commit = new files, offsets in the stream
-    * checkpoint. Feed a downstream replica by applying each
-    * micro-batch with [[applyChangeFeed]] in `foreachBatch`.
-    *
-    * Schema-era GATE (r12, closes the stream-side half of X202): the
-    * stream pins the CURRENT schema at call time, and the parquet
-    * file source cannot bridge per-file — a feed file recorded before
-    * a column RENAME carries the old name, so the pinned read would
-    * deliver that column as all-NULL to a continuous CDC consumer:
-    * silently wrong rows, the exact hazard the batch
-    * [[readChangeFeed]] era-bridges. So stream CONSTRUCTION resolves
-    * every recorded feed version's schema era from its manifest
-    * (driver-side, zero data I/O — the X202 machinery) and REFUSES
-    * loudly when any feed's era would misread under the pinned
-    * schema: a renamed column (current physical name lives under a
-    * different logical name in that era) or a retyped one. Eras that
-    * differ only bridgeably are NOT refused — a column added after an
-    * old feed reads NULL there (the bridge's own answer) and a
-    * dropped column is simply ignored by the pinned schema. Versions
-    * with unreadable manifests fall back to the feed FILES' own
-    * schemas under a stricter rule (same names ∧ same types or
-    * refusal — without the column map, a rename is indistinguishable
-    * from a drop+add). Catch up across a refused backlog with the
-    * batch [[readChangeFeed]], then start the stream's checkpoint at
-    * the post-change versions. A rename committed AFTER the stream
-    * starts is out of this gate's reach (the source is already
-    * running) — restart the stream to re-gate, which the refusal
-    * message of the next cold start enforces.
-    */
-  def readChangeFeedStream(spark: SparkSession, path: String,
-                           maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val base = readSnapshot(spark, path).schema
-    val recorded = changeFeedVersions(spark, path)
-    if (recorded.nonEmpty) {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val curMap = readManifest(fs, path, resolveVersion(spark, path, None))
-        .map(columnMapOf).getOrElse(Map.empty)
-      def eraOf(m: com.fasterxml.jackson.databind.JsonNode): (StructType, Map[String, String]) =
-        (org.apache.spark.sql.types.DataType
-          .fromJson(m.get("schema").toString).asInstanceOf[StructType], columnMapOf(m))
-      val offEra = recorded.filter { v =>
-        readManifest(fs, path, v).map(eraOf) match {
-          case Some((fromSchema, fromMap)) =>
-            val physToLogicalFrom = physToLogical(fromSchema, fromMap)
-            base.fields.exists { f =>
-              physToLogicalFrom.get(physicalName(curMap, f.name)) match {
-                case Some(old) =>
-                  old != f.name || fromSchema(old).dataType != f.dataType
-                case None => false // added after this era: NULL is the bridge's answer too
-              }
-            }
-          case None =>
-            // no manifest: the feed files' own schema decides, strictly
-            val fileFields = spark.read.parquet(cdfDir(path, v).toString).schema.fields
-              .filterNot(f => f.name == "_change_type" || f.name == "_commit_version")
-              .map(f => f.name -> f.dataType).toMap
-            fileFields.exists { case (n, dt) =>
-              !base.fieldNames.contains(n) || base(n).dataType != dt
-            }
-        }
-      }
-      require(offEra.isEmpty,
-        s"readChangeFeedStream($path): recorded feed version(s) ${offEra.mkString(", ")} " +
-          "were committed under an earlier schema era that the stream's pinned schema " +
-          "would misread (a renamed column reads as all-NULL through a parquet file " +
-          "source — it cannot bridge per-file). Catch up across the schema change with " +
-          "the batch readChangeFeed (which bridges eras), then start the stream's " +
-          "checkpoint at the post-change versions.")
-    }
-    val schema = base
-      .add("_change_type", org.apache.spark.sql.types.StringType)
-      .add("_commit_version", org.apache.spark.sql.types.LongType)
-    val r = spark.readStream.schema(schema)
-    maxFilesPerTrigger.fold(r)(n => r.option("maxFilesPerTrigger", n.toString))
-      .parquet(s"$path/_cdf/v=*/part-*")
   }
 
   /** O(1) global MIN/MAX from the manifest (X203) — the
@@ -6523,29 +5526,6 @@ object Warehouse {
   def readCsv(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.option("header", "true").schema(schema).csv(path)
 
-  /** S7's optional connector (SURVEY §2.1): scan a JDBC table — the
-    * direct analogue of the reference's `pd.read_sql` over SQLite
-    * (dag_btc_daily.py), kept thin over `spark.read.jdbc` because
-    * that source already does the two things that matter:
-    * filter/column pushdown into the remote query (verified in
-    * WarehouseSpec against an embedded Derby — `PushedFilters` reach
-    * the JDBCRelation scan) and, when a `partitionColumn` is given,
-    * a partition-parallel read (numPartitions range-predicate queries
-    * instead of one single-threaded cursor — the only shape that
-    * survives a big table; an unpartitioned JDBC scan is a one-task
-    * bottleneck by construction).
-    */
-  def readJdbc(spark: SparkSession, url: String, table: String,
-               partitionColumn: Option[String] = None,
-               lowerBound: Long = 0L, upperBound: Long = 0L,
-               numPartitions: Int = 1,
-               properties: java.util.Properties = new java.util.Properties()): DataFrame =
-    partitionColumn match {
-      case Some(pc) =>
-        spark.read.jdbc(url, table, pc, lowerBound, upperBound, numPartitions, properties)
-      case None => spark.read.jdbc(url, table, properties)
-    }
-
   /** JSONL (newline-delimited JSON) sink — the interchange format
     * training corpora ship in; one JSON object per line, splittable,
     * partition-parallel.
@@ -6657,7 +5637,7 @@ object Warehouse {
                       targetFileBytes: Long = 128L << 20,
                       clusterCols: Seq[String] = Seq.empty): (Long, Int) = {
     require(targetFileBytes > 0, s"targetFileBytes must be positive, got $targetFileBytes")
-    val v = mainWriteBase(spark, path)
+    val v = latestVersion(spark, path)
     require(v >= 1, s"compactSnapshot($path): no committed snapshot")
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -6684,10 +5664,9 @@ object Warehouse {
   /** Metadata table — the Iceberg `table$files` analog: one row per
     * committed data file of `version`, straight from the manifest
     * (zero data I/O): (file, bytes, rows, shared), `shared` marking
-    * entries carried from another version (or another table — a
-    * [[cloneSnapshot]] reference) rather than owned by this version's
-    * dir. NULL bytes/rows for pre-accounting manifests. The input
-    * [[optimizeSnapshot]]'s policy reads and the audit for clone/
+    * entries carried from another version rather than owned by this
+    * version's dir. NULL bytes/rows for pre-accounting manifests. The
+    * input [[optimizeSnapshot]]'s policy reads and the audit for
     * file-sharing provenance.
     */
   def snapshotFiles(spark: SparkSession, path: String,
@@ -6710,7 +5689,7 @@ object Warehouse {
           (e,
             bytes.map(_.get(i).asLong),
             rows.map(_.get(i).asLong),
-            isAbsoluteEntry(e) || (e.contains("/") && !e.startsWith(s"v=$v/")),
+            e.contains("/") && !e.startsWith(s"v=$v/"),
             dvByFile.getOrElse(norm, 0L))
         }.toDF("file", "bytes", "rows", "shared", "dv_rows")
       case None =>
@@ -6761,108 +5740,6 @@ object Warehouse {
     }
   }
 
-  /** SHALLOW CLONE — Delta `CREATE TABLE ... SHALLOW CLONE` / Iceberg
-    * snapshot-ref shape: a NEW table at `dst` whose v=1 manifest
-    * references the source version's files IN PLACE (absolute
-    * entries), with per-file accounting copied — cloning a 100 TB
-    * table costs ONE manifest write and zero data bytes. The
-    * dev/test-on-prod move: the clone is a fully independent table —
-    * appends, row-level writes, optimize, branches, its own history —
-    * whose NEW versions write into `dst` while untouched source bytes
-    * stay referenced; the source never sees any of it.
-    *
-    * The shallow-clone caveat, same as Delta's: the SOURCE's retention
-    * does not know about clones — `expireSnapshots`/`vacuum` on the
-    * source can delete bytes a clone still references, after which the
-    * clone's affected reads fail with missing-file errors (loud, never
-    * silent). Pin the source version with a tag/branch for the clone's
-    * lifetime, or materialize the clone (one `compactSnapshot(dst)`
-    * rewrites it self-contained, severing all source references).
-    * Stream-sink idempotence records (`txnApp`/`txnEpoch`) are
-    * deliberately NOT copied — the clone is a different table and
-    * sinks into it start their own epoch history. `version` pins a
-    * historical source version (time-travel clone).
-    */
-  def cloneSnapshot(spark: SparkSession, src: String, dst: String,
-                    version: Option[Long] = None,
-                    orphanGraceMs: Long = 600000L): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val srcFs = new org.apache.hadoop.fs.Path(src).getFileSystem(conf)
-    val fs = new org.apache.hadoop.fs.Path(dst).getFileSystem(conf)
-    // same-filesystem fence (review r12): absolute entries are stored
-    // SCHEME-LESS (rooted paths) and resolve against whatever
-    // filesystem reads the CLONE — if src and dst lived on different
-    // stores (or different authorities/buckets), every entry would
-    // resolve against the wrong one: missing-file errors at best,
-    // reads of an unrelated table at worst. Refuse loudly up front;
-    // cross-store cloning is a copy (distcp + deep clone), not a
-    // reference.
-    require(srcFs.getUri == fs.getUri,
-      s"cloneSnapshot: source (${srcFs.getUri}) and destination (${fs.getUri}) live on " +
-        "different filesystems — a shallow clone references the source's bytes in " +
-        "place, which only resolves within one filesystem; copy the data instead")
-    val v = resolveVersion(spark, src, version)
-    require(snapshots(spark, dst).isEmpty,
-      s"cloneSnapshot: destination $dst already holds a committed table")
-    def absolutize(e: String): String =
-      srcFs.makeQualified(new org.apache.hadoop.fs.Path(resolveEntry(src, v, e)))
-        .toUri.getPath
-    val srcManifest = readManifest(srcFs, src, v)
-    // a manifest-less source version must be self-contained to be
-    // cloneable (same rule as every reader of the listing fallback)
-    require(srcManifest.isDefined ||
-        !srcFs.exists(new org.apache.hadoop.fs.Path(s"$src/v=$v/_partial")),
-      s"cloneSnapshot($src): v=$v is a file-sharing version with no readable manifest")
-    val tag = java.util.UUID.randomUUID().toString.take(8)
-    val staging = new org.apache.hadoop.fs.Path(s"$dst/_staging-$tag")
-    fs.mkdirs(staging)
-    fs.create(new org.apache.hadoop.fs.Path(staging, "_partial"), true).close()
-    Commit(fs, dst, staging, 1L, "cloneSnapshot", orphanGraceMs, Commit.LoadBearing,
-      Commit.MainRef) { _ => srcManifest match {
-      case Some(m) =>
-        // copy the source manifest VERBATIM — files absolutized in
-        // committed order so the stats/fileBytes/fileRows arrays stay
-        // parallel — and publish with the same tmp+rename protocol
-        val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-        val node = m.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]
-        node.put("version", 1L)
-        // the clone is a NEW commit at its own instant (X209) — the
-        // verbatim copy must not inherit the source's commit time
-        node.put("committedAtMs", System.currentTimeMillis())
-        node.remove("txnApp"); node.remove("txnEpoch")
-        // the bloom index (X193) does NOT clone: its rows name
-        // source-root-relative files the clone's entries no longer
-        // match. Dropping it is purely conservative (unpruned reads
-        // stay correct); re-index the clone to restore pruning.
-        node.remove("idxCol"); node.remove("idxBits")
-        node.remove("idxRef"); node.remove("idxFiles")
-        val arr = mapper.createArrayNode()
-        manifestEntries(m).foreach(e => arr.add(absolutize(e)))
-        node.set[com.fasterxml.jackson.databind.JsonNode]("files", arr)
-        // deletion-vector state (X189) clones by reference too: refs
-        // and touched entries absolutize (dvFileRows deep-copied in
-        // order stays parallel); positions inside an absolutized ref
-        // resolve against ITS root, so they keep matching the
-        // absolutized file paths
-        readDvState(m).foreach { d =>
-          val ra = mapper.createArrayNode(); d.refs.foreach(r => ra.add(absolutize(r)))
-          node.set[com.fasterxml.jackson.databind.JsonNode]("dvRefs", ra)
-          val fa = mapper.createArrayNode()
-          d.files.foreach { case (f, _) => fa.add(absolutize(f)) }
-          node.set[com.fasterxml.jackson.databind.JsonNode]("dvFiles", fa)
-        }
-        publishManifest(fs, dst, 1L, mapper.writeValueAsBytes(node))
-      case None =>
-        val names = srcFs.listStatus(new org.apache.hadoop.fs.Path(s"$src/v=$v")).toSeq
-          .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-            !st.getPath.getName.startsWith("."))
-          .map(st => s"v=$v/${st.getPath.getName}").sorted
-        writeManifest(fs, conf, dst, 1L,
-          spark.read.parquet(s"$src/v=$v").schema.json, Some(names.map(absolutize)))
-    }}
-    1L
-  }
-
   /** Small-file OPTIMIZE — the Delta `OPTIMIZE` bin-packing shape, and
     * the auto-compaction policy in one: coalesce ONLY the current
     * version's files smaller than `targetFileBytes / 2`, carrying
@@ -6870,7 +5747,7 @@ object Warehouse {
     * DECISION costs zero I/O (per-file bytes come from the manifest
     * accounting X162 already records) and the REWRITE costs the small
     * files' bytes — never the table. This is the maintenance loop a
-    * streaming-ingest table needs: [[writeSnapshotStream]] lands one
+    * streaming-ingest table needs: a [[batchSink]] lands one
     * version per micro-batch (small files by construction), and a
     * periodic `optimizeSnapshot` folds them into target-sized files
     * while [[compactSnapshot]]'s full rewrite stays reserved for
@@ -6897,7 +5774,7 @@ object Warehouse {
     require(targetFileBytes > 0, s"targetFileBytes must be positive, got $targetFileBytes")
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = mainWriteBase(spark, path)
+    val (v, next) = writeBase(spark, path)
     require(v >= 1, s"optimizeSnapshot($path): no committed snapshot")
     val (entries, bytes, schemaJson, reuse) = readManifest(fs, path, v) match {
       case Some(m) if m.has("fileBytes") =>
@@ -6948,7 +5825,6 @@ object Warehouse {
       .write.mode(SaveMode.ErrorIfExists).parquet(staging.toString)
     if (carried.nonEmpty)
       fs.create(new org.apache.hadoop.fs.Path(staging, "_partial"), true).close()
-    val next = nextVersionAbove(spark, path, v)
     val fresh = commitStagedVersion(spark, fs, path, staging, next,
       schemaJson, carried, reuse, op = "optimizeSnapshot",
       orphanGraceMs = orphanGraceMs, dv = packedDv)

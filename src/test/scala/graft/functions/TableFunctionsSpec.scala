@@ -93,21 +93,11 @@ class TableFunctionsSpec extends SparkSpec {
       s"SELECT count(*) AS n FROM graft_history('$root')").head().getLong(0) === 3L)
   }
 
-  test("stats-pruned, tag and branch reads from SQL ≡ their Scala twins") {
+  test("stats-pruned reads from SQL ≡ their Scala twins") {
     val root = tmpRoot("graft_tvf7")
     base(root)
-    Warehouse.tagSnapshot(spark, root, "rel1")
     Warehouse.appendSnapshot(
       spark.range(100, 120).toDF("id").withColumn("grp", col("id") % 5), root, 1L)
-    Warehouse.createBranch(spark, root, "audit")
-    Warehouse.commitToBranch(
-      spark.range(0, 10).toDF("id").withColumn("grp", col("id") % 5),
-      root, "audit", 2L)
-
-    assert(spark.sql(s"SELECT * FROM graft_snapshot_tag('$root', 'rel1')")
-      .count() === 100, "tag pins the pre-append version")
-    assert(spark.sql(s"SELECT * FROM graft_snapshot_branch('$root', 'audit')")
-      .count() === 10, "branch head is the WAP commit, main untouched")
     assert(spark.sql(s"SELECT * FROM graft_snapshot('$root')").count() === 120)
 
     val pruned = spark.sql(
@@ -200,19 +190,15 @@ class TableFunctionsSpec extends SparkSpec {
 
   test("graft_describe surfaces the table's declarations and accounting") {
     val root = tmpRoot("graft_tvf11")
-    Warehouse.setSnapshotConstraint(spark, root, "pos_id", "id >= 0")
-    Warehouse.setIdentityColumn(spark, root, "rid")
+    Warehouse.setSnapshotExpectation(spark, root, "pos_id", "id >= 0")
     base(root)
     Warehouse.deleteWhereDv(spark, root, col("id") === 3)
-    Warehouse.tagSnapshot(spark, root, "rel")
     val d = spark.sql(s"SELECT * FROM graft_describe('$root')")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(d("version") === "2")
     assert(d("row_count") === "99", "dv-effective count")
     assert(d("deletion_vectors.rows") === "1")
-    assert(d("constraint.pos_id") === "id >= 0")
-    assert(d("identity").startsWith("rid"))
-    assert(d("tag.rel") === "v=2")
+    assert(d("expectation.pos_id") === "abort: id >= 0")
     assert(d("schema").contains("grp"))
   }
 

@@ -2,10 +2,9 @@ package graft.store
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** X172 persisted change data feed — recorded at commit, consumed as
-  * batch ranges or a streaming tail.
+  * batch ranges.
   */
 class ChangeFeedSpec extends SparkSpec {
   import spark.implicits._
@@ -68,34 +67,6 @@ class ChangeFeedSpec extends SparkSpec {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(!fs.listStatus(new org.apache.hadoop.fs.Path(root)).toSeq
       .exists(_.getPath.getName.contains("cdf")), "staged change files must be unwound")
-  }
-
-  test("readChangeFeedStream tails recorded commits exactly-once across restarts") {
-    val dir = tmp("graft_cdf_stream")
-    val root = s"$dir/t"
-    Warehouse.writeSnapshot(frame(root), root)
-    Warehouse.appendSnapshot(Seq((1000L, 1L)).toDF("id", "v"), root, 1L, changeFeed = true)
-    Warehouse.deleteWhere(spark, root, col("id") === 3L, changeFeed = true)
-    def drain(): Unit = {
-      val q = Warehouse.readChangeFeedStream(spark, root).writeStream
-        .format("parquet").option("path", s"$dir/out")
-        .option("checkpointLocation", s"$dir/ckpt")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    drain()
-    val first = spark.read.parquet(s"$dir/out")
-    assert(first.count() === 2)
-    assert(first.select("_change_type").as[String].collect().sorted === Array("delete", "insert"))
-    // later commits arrive incrementally — no replay of consumed feeds
-    Warehouse.updateWhere(spark, root, col("id") === 5L, Map("v" -> lit(0L)), changeFeed = true)
-    drain()
-    val second = spark.read.parquet(s"$dir/out")
-    assert(second.count() === 4) // update post-image + its preimage
-    assert(second.where(col("_change_type") === "update")
-      .select("_commit_version").as[Long].head() === 4L)
-    assert(second.where(col("_change_type") === "update_preimage")
-      .select("v").as[Long].head() === 50L)
   }
 
   test("expireSnapshots ages recorded feeds out with their versions") {

@@ -108,33 +108,6 @@ class ColumnMapSpec extends SparkSpec {
     assert(Warehouse.readSnapshot(spark, root).columns.toSeq === Seq("id", "amount"))
   }
 
-  test("streaming tail of a mapped table yields logical names") {
-    val root = tmpRoot("graft_cm5")
-    Warehouse.writeSnapshot(
-      spark.range(0, 10).toDF("id").withColumn("val", col("id")), root)
-    Warehouse.renameSnapshotColumn(spark, root, "val", "amount")
-    assert(Warehouse.readSnapshotStream(spark, root).schema.fieldNames.toSeq
-      === Seq("id", "amount"))
-  }
-
-  test("shallow clone carries the column map (and tombstones) verbatim") {
-    val root = tmpRoot("graft_cm7")
-    Warehouse.writeSnapshot(
-      spark.range(0, 40).toDF("id").withColumn("val", col("id") * 3)
-        .withColumn("w", lit(1L)), root)
-    Warehouse.renameSnapshotColumn(spark, root, "val", "amount")
-    Warehouse.dropSnapshotColumn(spark, root, "w")
-    val dst = tmpRoot("graft_cm7dst")
-    Warehouse.cloneSnapshot(spark, root, dst)
-    val got = Warehouse.readSnapshot(spark, dst)
-    assert(got.columns.toSeq === Seq("id", "amount"))
-    assert(got.agg(sum("amount")).as[Long].head() === (0L until 40L).map(_ * 3).sum,
-      "a dropped map would read the renamed column as all-NULL")
-    // tombstone carried: re-adding 'w' on the CLONE must not resurrect
-    Warehouse.addSnapshotColumn(spark, dst, "w", org.apache.spark.sql.types.LongType)
-    assert(Warehouse.readSnapshot(spark, dst).where(col("w").isNotNull).count() === 0)
-  }
-
   test("refusals: duplicate target, missing source, manifest-less table") {
     val root = tmpRoot("graft_cm6")
     Warehouse.writeSnapshot(

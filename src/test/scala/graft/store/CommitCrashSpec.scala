@@ -2,14 +2,19 @@ package graft.store
 
 import graft.SparkSpec
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.functions.col
 
 /** Crash windows of the [[Commit]] core. For a full-content commit
-  * (`commitSnapshot`) and a file-sharing one (`appendSnapshot` with a
-  * change feed), a fault thrown after each named step must leave:
+  * (`commitSnapshot`), a file-sharing one (`appendSnapshot` with a
+  * change feed), a deletion-vector delete (`deleteWhereDv`) and a
+  * copy-on-write delete (`deleteWhere`), a fault thrown after each
+  * named step must leave:
   * (1) unpinned readers on exactly the old rows or exactly the new rows;
-  * (2) a writer that retries through the txn protocol (skip when its
-  *     epoch already landed, else commit against the current version
-  *     with `orphanGraceMs = 0`) with the new rows as the newest
+  * (2) a writer that retries until its write has landed (the txn
+  *     protocol for the commits: skip when its epoch already landed,
+  *     else commit against the current version with `orphanGraceMs =
+  *     0`; the deletes carry no txn stamp, so they re-run while the
+  *     deleted rows are still visible) with the new rows as the newest
   *     version — an append promoted without its manifest is refused
   *     loudly until `vacuum` reaps it;
   * (3) no `_staging-*` debris after `vacuum`.
@@ -29,9 +34,14 @@ class CommitCrashSpec extends SparkSpec {
     fs.listStatus(new Path(root)).toSeq.map(_.getPath.getName).filter(_.startsWith("_staging-"))
   }
 
-  /** `write(root, expectedVersion, orphanGraceMs)` commits the batch
-    * once, stamped with epoch `App`; `fresh` is the content after it. */
-  private def crashCase(kind: String, step: Commit.Step, fresh: Seq[Long])
+  private def epochLanded(root: String): Boolean =
+    Warehouse.lastCommittedEpoch(spark, root, App._1).contains(App._2)
+
+  /** `write(root, expectedVersion, orphanGraceMs)` runs the write once;
+    * `fresh` is the content after it, and `landed(root)` tells a retry
+    * that the write already took effect. */
+  private def crashCase(kind: String, step: Commit.Step, fresh: Seq[Long],
+                        landed: String => Boolean = epochLanded)
                        (write: (String, Long, Long) => Long): Unit = {
     val root = java.nio.file.Files.createTempDirectory(s"graft_crash_$kind").toString + "/t"
     Warehouse.commitSnapshot(spark.range(0, 10).toDF("id"), root, 0L)
@@ -43,8 +53,7 @@ class CommitCrashSpec extends SparkSpec {
     assert(seen == old || seen == fresh, s"$kind after $step: torn read $seen")
 
     def retry(): Unit = Warehouse.retryOnConflict() {
-      if (!Warehouse.lastCommittedEpoch(spark, root, App._1).contains(App._2))
-        write(root, Warehouse.currentSnapshot(spark, root), 0L)
+      if (!landed(root)) write(root, Warehouse.currentSnapshot(spark, root), 0L)
     }
     Thread.sleep(5) // the claim and staging leases compare mtimes in ms
     val torn = kind == "appendSnapshot" &&
@@ -76,6 +85,17 @@ class CommitCrashSpec extends SparkSpec {
         (root, expected, grace) =>
           Warehouse.appendSnapshot(spark.range(100, 120).toDF("id"), root, expected,
             orphanGraceMs = grace, changeFeed = true, txn = Some(App))
+      }
+    }
+    def deleted(root: String): Boolean = !rows(root).exists(_ < 5L)
+    test(s"deleteWhereDv crashing after $step: old or new rows, a retry commits, vacuum clears staging") {
+      crashCase("deleteWhereDv", step, 5L until 10L, deleted) { (root, _, grace) =>
+        Warehouse.deleteWhereDv(spark, root, col("id") < 5L, orphanGraceMs = grace)
+      }
+    }
+    test(s"deleteWhere crashing after $step: old or new rows, a retry commits, vacuum clears staging") {
+      crashCase("deleteWhere", step, 5L until 10L, deleted) { (root, _, grace) =>
+        Warehouse.deleteWhere(spark, root, col("id") < 5L, orphanGraceMs = grace)
       }
     }
   }

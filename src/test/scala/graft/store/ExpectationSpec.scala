@@ -105,14 +105,13 @@ class ExpectationSpec extends SparkSpec {
       "a refused ingest must leave no quarantine debris")
   }
 
-  test("branch appends stamp their own op in quarantine provenance (review r11)") {
+  test("appends stamp their own op in quarantine provenance (review r11)") {
     val root = tmpRoot("graft_exp6")
     Warehouse.writeSnapshot(Seq(1L).toDF("x"), root)
     Warehouse.setSnapshotExpectation(spark, root, "pos", "x > 0", "quarantine")
-    Warehouse.createBranch(spark, root, "wap")
-    Warehouse.appendToBranch(Seq(-5L, 7L).toDF("x"), root, "wap", 1L)
+    Warehouse.appendSnapshot(Seq(-5L, 7L).toDF("x"), root, 1L)
     val q = Warehouse.readSnapshot(spark, Warehouse.quarantinePath(root))
-    assert(q.select("_violating_op").head().getString(0) === "appendToBranch")
+    assert(q.select("_violating_op").head().getString(0) === "appendSnapshot")
   }
 
   test("a streaming epoch whose batch was fully triaged never double-quarantines (review r11)") {
@@ -125,9 +124,11 @@ class ExpectationSpec extends SparkSpec {
     val mem = MemoryStream[Long]
     val dir = java.nio.file.Files.createTempDirectory("graft_exp7ck").toString
     def drain(ck: String): Unit = {
-      val q = Warehouse.writeSnapshotStream(
-        mem.toDF().withColumnRenamed("value", "x"), root, s"$dir/$ck",
-        appId = "exp-spec").trigger(Trigger.AvailableNow()).start()
+      val q = Warehouse.batchSink(
+          mem.toDF().withColumnRenamed("value", "x"), root, s"$dir/$ck",
+          0, Warehouse.MaintenancePolicy()) { (batch, epoch) =>
+          Warehouse.commitStreamBatch(batch, root, "exp-spec", epoch); ()
+        }.trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
     }
     mem.addData(-1L, -2L) // the WHOLE batch violates: main table no-op

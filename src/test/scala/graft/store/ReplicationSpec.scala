@@ -3,61 +3,9 @@ package graft.store
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** X184 streaming merge sink + X185 replicateChanges — the CDC loop
-  * closed: feeds recorded on one table replay onto another as one
-  * file-grain merge; streaming upserts land exactly-once.
-  */
+/** X184 streaming merge sink: streaming upserts land exactly-once. */
 class ReplicationSpec extends SparkSpec {
   import spark.implicits._
-
-  test("replica catches up across a mixed write range from feeds alone; law holds") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_repl").toString
-    val src = s"$dir/src"
-    val dst = s"$dir/dst"
-    val base = spark.range(0, 500).toDF("id").withColumn("v", col("id") * 3)
-      .repartitionByRange(4, col("id"))
-    Warehouse.writeSnapshot(base, src) // v1
-    Warehouse.writeSnapshot(base, dst) // replica starts identical
-    // v2 update, v3 delete, v4 merge, v5 append — all feed-recorded;
-    // churn is confined to low ids so the replica's upper range files
-    // have no feed keys and must carry by reference
-    Warehouse.updateWhere(spark, src, col("id") === 7,
-      Map("v" -> lit(-7L)), changeFeed = true)
-    Warehouse.deleteWhere(spark, src, col("id") < 20, changeFeed = true)
-    Warehouse.mergeIntoSnapshot(spark, src,
-      Seq((30L, 0L), (9000L, 90L)).toDF("id", "v"), Seq("id"), Seq(
-        Warehouse.DeleteWhen(col("s.id") === 30L),
-        Warehouse.UpdateWhen(lit(true), Map("v" -> col("s.v"))),
-        Warehouse.InsertWhen(lit(true))), changeFeed = true)
-    Warehouse.appendSnapshot(Seq((9001L, 91L)).toDF("id", "v"), src, 4L,
-      changeFeed = true)
-    // one replication call over the whole range
-    Warehouse.replicateChanges(spark, src, dst, Seq("id"), 2L, 5L)
-    val want = Warehouse.readSnapshot(spark, src)
-    val got = Warehouse.readSnapshot(spark, dst)
-    assert(got.count() === want.count())
-    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
-    // file-grain: untouched replica files carried by reference
-    assert(got.inputFiles.exists(_.contains("/v=1/")),
-      "replica files without feed keys must carry, not rewrite")
-  }
-
-  test("same-key churn across versions folds to last state (delete wins, then re-insert)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_repl2").toString
-    val src = s"$dir/src"
-    val dst = s"$dir/dst"
-    Warehouse.writeSnapshot(Seq((1L, 10L), (2L, 20L)).toDF("id", "v"), src)
-    Warehouse.writeSnapshot(Seq((1L, 10L), (2L, 20L)).toDF("id", "v"), dst)
-    Warehouse.deleteWhere(spark, src, col("id") === 1L, changeFeed = true)      // v2
-    Warehouse.appendSnapshot(Seq((1L, 99L)).toDF("id", "v"), src, 2L,
-      changeFeed = true)                                                        // v3: re-insert
-    Warehouse.updateWhere(spark, src, col("id") === 2L, Map("v" -> lit(-2L)),
-      changeFeed = true)                                                        // v4
-    Warehouse.deleteWhere(spark, src, col("id") === 2L, changeFeed = true)      // v5: dies anyway
-    Warehouse.replicateChanges(spark, src, dst, Seq("id"), 2L, 5L)
-    val got = Warehouse.readSnapshot(spark, dst).as[(Long, Long)].collect().toSet
-    assert(got === Set((1L, 99L)))
-  }
 
   test("streaming merge sink: replayed epoch skipped (the non-idempotent replay hazard)") {
     val dir = java.nio.file.Files.createTempDirectory("graft_smerge").toString

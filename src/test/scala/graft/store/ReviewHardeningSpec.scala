@@ -3,77 +3,14 @@ package graft.store
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** r11 self-review regressions: branch/main lineage isolation, sidecar
-  * reachability in vacuum, probe-representation parity, WAP gates.
+/** r11 self-review regressions: the DDL lock, sidecar reachability in
+  * vacuum, probe-representation parity.
   */
 class ReviewHardeningSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmpRoot(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString + "/t"
-
-  test("a stream batch landing while a branch is ahead bases on MAIN, never the branch") {
-    val root = tmpRoot("graft_rh1")
-    Warehouse.writeSnapshot(
-      spark.range(0, 10).toDF("id").withColumn("src", lit("main")), root)   // v1
-    Warehouse.createBranch(spark, root, "audit")
-    Warehouse.appendToBranch(
-      Seq((100L, "branch")).toDF("id", "src"), root, "audit", 1L)           // v2 (staged)
-    // the stream fires on main
-    val v = Warehouse.commitStreamBatch(
-      Seq((200L, "stream")).toDF("id", "src"), root, "app-rh1", 0L)
-    assert(v === 3L)
-    val main = Warehouse.readSnapshot(spark, root)
-    assert(main.where(col("src") === "branch").count() === 0,
-      "unaudited branch rows must NOT publish through a main-side stream commit")
-    assert(main.where(col("src") === "stream").count() === 1)
-    assert(main.count() === 11)
-    // the branch still sees its own lineage (base v1 + its append)
-    val br = Warehouse.readSnapshotBranch(spark, root, "audit")
-    assert(br.where(col("src") === "branch").count() === 1)
-    assert(br.where(col("src") === "stream").count() === 0)
-  }
-
-  test("publishBranch refuses when main moved off the branch's base — lineage, not numbers") {
-    val root = tmpRoot("graft_rh2")
-    Warehouse.writeSnapshot(
-      spark.range(0, 5).toDF("id").withColumn("src", lit("main")), root)    // v1
-    Warehouse.createBranch(spark, root, "audit")
-    Warehouse.appendToBranch(
-      Seq((100L, "branch")).toDF("id", "src"), root, "audit", 1L)           // v2
-    // main moves to v3 (content main+stream) while the branch head is v2:
-    // the NUMERIC check (mainV <= head) would pass and un-publish this
-    Warehouse.commitStreamBatch(
-      Seq((200L, "stream")).toDF("id", "src"), root, "app-rh2", 0L)          // v3
-    intercept[IllegalArgumentException] {
-      Warehouse.publishBranch(spark, root, "audit")
-    }
-    assert(Warehouse.readSnapshot(spark, root)
-      .where(col("src") === "stream").count() === 1, "main's commit survived")
-    // the clean flow still publishes, and repeated publish extends
-    val root2 = tmpRoot("graft_rh2b")
-    Warehouse.writeSnapshot(spark.range(0, 5).toDF("id"), root2)
-    Warehouse.createBranch(spark, root2, "a")
-    Warehouse.appendToBranch(Seq(100L).toDF("id"), root2, "a", 1L)
-    assert(Warehouse.publishBranch(spark, root2, "a") === 2L)
-    Warehouse.appendToBranch(Seq(101L).toDF("id"), root2, "a", 2L)
-    assert(Warehouse.publishBranch(spark, root2, "a") === 3L)
-    assert(Warehouse.readSnapshot(spark, root2).count() === 7)
-  }
-
-  test("commitToBranch enforces CHECK constraints — WAP validates before publish") {
-    val root = tmpRoot("graft_rh3")
-    Warehouse.writeSnapshot(spark.range(1, 5).toDF("id").withColumn("v", col("id")), root)
-    Warehouse.setSnapshotConstraint(spark, root, "pos", "v > 0")
-    Warehouse.createBranch(spark, root, "audit")
-    intercept[Exception] {
-      Warehouse.commitToBranch(
-        Seq((9L, -1L)).toDF("id", "v"), root, "audit", 1L)
-    }
-    assert(Warehouse.branchHead(spark, root, "audit") === 1L, "branch unmoved")
-    // the DDL lock is released after constraint ops
-    assert(!new java.io.File(root, "_ddl-lock").exists())
-  }
 
   test("a stale DDL lock is rename-claim broken; no breaker debris left (review r12)") {
     val root = tmpRoot("graft_rh_lock")
@@ -83,8 +20,8 @@ class ReviewHardeningSpec extends SparkSpec {
     assert(lock.createNewFile())
     assert(lock.setLastModified(1000L))
     // the next ALTER must break it (rename-claimed) and proceed
-    Warehouse.setSnapshotConstraint(spark, root, "pos", "v > 0")
-    assert(Warehouse.snapshotConstraints(spark, root).contains("pos"))
+    Warehouse.setSnapshotExpectation(spark, root, "pos", "v > 0")
+    assert(Warehouse.snapshotExpectations(spark, root).contains("pos"))
     assert(!lock.exists(), "lock released after the ALTER")
     val debris = new java.io.File(root).listFiles()
       .map(_.getName).filter(_.startsWith("_ddl-lock"))

@@ -211,39 +211,6 @@ class SchemaEvolveSpec extends SparkSpec {
     assert(one.select("id").as[Long].collect().toSeq === Seq(200L))
   }
 
-  test("readChangeFeedStream era gate: rename-spanning backlog refuses loudly, bridgeable eras pass") {
-    val root = tmpRoot("graft_se11")
-    Warehouse.writeSnapshot(
-      spark.range(0, 20).toDF("id").withColumn("val", col("id")), root)   // v1
-    Warehouse.appendSnapshot(Seq((100L, 1L)).toDF("id", "val"), root, 1L,
-      changeFeed = true)                                                  // v2 (old era)
-    // single era: the gate lets construction through untouched
-    val ok = Warehouse.readChangeFeedStream(spark, root)
-    assert(ok.isStreaming && ok.columns.contains("val"))
-    Warehouse.renameSnapshotColumn(spark, root, "val", "amount")          // v3
-    Warehouse.appendSnapshot(Seq((200L, 2L)).toDF("id", "amount"), root, 3L,
-      changeFeed = true)                                                  // v4 (new era)
-    // the backlog now spans the rename: the pinned schema would read
-    // v2's `amount` as all-NULL — construction must refuse, naming the
-    // batch catch-up path, instead of NULL-filling silently
-    val e = intercept[IllegalArgumentException] {
-      Warehouse.readChangeFeedStream(spark, root)
-    }
-    assert(e.getMessage.contains("batch readChangeFeed") && e.getMessage.contains("2"),
-      s"refusal must name the bridging catch-up path and the off-era version, got: ${e.getMessage}")
-    // a later-ADDED column is bridgeable (old feeds read it as NULL —
-    // the batch bridge's own answer): after the old-era feed expires,
-    // an add-only history must NOT refuse
-    Warehouse.expireSnapshots(spark, root, keepLast = 2) // drops v2's feed
-    Warehouse.addSnapshotColumn(spark, root, "extra", LongType)           // v5
-    Warehouse.appendSnapshot(
-      Seq((300L, 3L, 9L)).toDF("id", "amount", "extra"), root, 5L,
-      changeFeed = true)                                                  // v6 (adds only)
-    val bridged = Warehouse.readChangeFeedStream(spark, root)
-    assert(bridged.isStreaming && bridged.columns.contains("extra"),
-      "add-only era history is NULL-bridgeable; the gate must not refuse it")
-  }
-
   test("refusals: only column, missing column, existing name") {
     val root = tmpRoot("graft_se7")
     Warehouse.writeSnapshot(spark.range(0, 10).toDF("id"), root)

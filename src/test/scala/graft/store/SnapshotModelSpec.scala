@@ -83,12 +83,14 @@ class SnapshotModelSpec extends SparkSpec {
         case "vacuum" =>
           Warehouse.vacuum(spark, root, graceMs = 0L)
         case "rollback" =>
-          // restore a random still-live historical version zero-copy
+          // restore a random still-live historical version: a full
+          // commit of its pinned read (restoring the live one is a no-op)
           val targets = history.keys.toSeq.sorted
           val target = targets(rnd.nextInt(targets.length))
-          val v = Warehouse.rollbackSnapshot(spark, root, target)
-          if (target == live) assert(v === live, s"step $step: self-restore is a no-op")
-          else {
+          if (target != live) {
+            val v = Warehouse.commitSnapshot(
+              Warehouse.readSnapshot(spark, root, Some(target)), root, live)
+            assert(v === live + 1, s"step $step: a restore must commit a new version")
             model = history(target)
             live = v; history += live -> model
           }

@@ -5,13 +5,20 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 
-/** X174 writeSnapshotStream — the exactly-once streaming sink into
-  * the snapshot warehouse (readSnapshotStream's write-side twin): one
+/** X174 the exactly-once streaming sink into the snapshot warehouse
+  * (`batchSink` running `commitStreamBatch` per epoch): one
   * appendSnapshot version per micro-batch, idempotent on the
   * (appId, epoch) pair the version's manifest carries.
   */
 class SnapshotSinkSpec extends SparkSpec {
   import spark.implicits._
+
+  private def sink(source: org.apache.spark.sql.DataFrame, root: String, ckpt: String,
+                   appId: String, maintainEvery: Int = 0,
+                   policy: Warehouse.MaintenancePolicy = Warehouse.MaintenancePolicy()) =
+    Warehouse.batchSink(source, root, ckpt, maintainEvery, policy) { (batch, epoch) =>
+      Warehouse.commitStreamBatch(batch, root, appId, epoch); ()
+    }
 
   test("stream lands each micro-batch as a version; restart appends only new data") {
     val dir = java.nio.file.Files.createTempDirectory("graft_sink").toString
@@ -20,7 +27,7 @@ class SnapshotSinkSpec extends SparkSpec {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val mem = MemoryStream[Long]
     def drain(): Unit = {
-      val q = Warehouse.writeSnapshotStream(mem.toDF().withColumnRenamed("value", "id"),
+      val q = sink(mem.toDF().withColumnRenamed("value", "id"),
         root, ckpt, appId = "sink-spec").trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
     }
@@ -45,10 +52,10 @@ class SnapshotSinkSpec extends SparkSpec {
     val mem = MemoryStream[Long]
     val policy = Warehouse.MaintenancePolicy(analyzeColumns = Seq("id"), analyzeK = 16)
     def drain(): Unit = {
-      val q = Warehouse.writeSnapshotStream(
+      val q = sink(
           mem.toDF().withColumnRenamed("value", "id").repartition(1),
           root, ckpt, appId = "sink-maint",
-          maintainEvery = 2, maintainPolicy = policy)
+          maintainEvery = 2, policy = policy)
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
     }

@@ -2,11 +2,8 @@ package graft.store
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
-/** X168 appendSnapshot (zero-rewrite append commit) and X169
-  * readSnapshotStream (the table as a Structured Streaming source).
-  */
+/** X168 appendSnapshot: the zero-rewrite append commit. */
 class SnapshotTailSpec extends SparkSpec {
   import spark.implicits._
 
@@ -79,38 +76,5 @@ class SnapshotTailSpec extends SparkSpec {
     assert(Warehouse.snapshots(spark, root) === Seq(3L))
     // v=3's manifest still references v=1 and v=2 files — all rows live
     assert(Warehouse.readSnapshot(spark, root).count() === 120)
-  }
-
-  test("readSnapshotStream: exactly-once tail of an append-only history, restart-safe") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tail").toString
-    val root = s"$dir/t"
-    val out = s"$dir/out"
-    val ckpt = s"$dir/ckpt"
-    Warehouse.writeSnapshot(spark.range(0, 50).toDF("id"), root)
-    Warehouse.appendSnapshot(spark.range(1000, 1010).toDF("id"), root, 1L)
-    def drain(): Unit = {
-      val q = Warehouse.readSnapshotStream(spark, root).writeStream
-        .format("parquet").option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    drain()
-    val first = spark.read.parquet(out).as[Long].collect().sorted
-    assert(first.toSeq === ((0L until 50L) ++ (1000L until 1010L)))
-    // new versions after the stream stopped: a restart from the same
-    // checkpoint emits ONLY the new rows — no replay of old files
-    Warehouse.appendSnapshot(spark.range(2000, 2005).toDF("id"), root, 2L)
-    Warehouse.appendSnapshot(spark.range(3000, 3005).toDF("id"), root, 3L)
-    drain()
-    val second = spark.read.parquet(out).as[Long].collect().sorted
-    assert(second.length === 70 && second.distinct.length === 70,
-      "restart must deliver each appended row exactly once")
-    assert(second.toSeq.takeRight(10) ===
-      ((2000L until 2005L) ++ (3000L until 3005L)).sorted)
-    // a zero-copy rollback version holds no files: the tail sees nothing new
-    Warehouse.rollbackSnapshot(spark, root, 2L)
-    drain()
-    assert(spark.read.parquet(out).count() === 70)
   }
 }

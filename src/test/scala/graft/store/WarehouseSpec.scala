@@ -295,39 +295,6 @@ class WarehouseSpec extends SparkSpec {
     intercept[Exception] { Warehouse.readSnapshot(spark, root, Some(1L)).collect() }
   }
 
-  test("readJdbc: embedded Derby scan, filter pushdown, partition-parallel read") {
-    val url = s"jdbc:derby:memory:graftjdbc${System.nanoTime()};create=true"
-    val conn = java.sql.DriverManager.getConnection(url)
-    try {
-      val st = conn.createStatement()
-      st.execute("CREATE TABLE prices (id BIGINT, asset VARCHAR(16), price DOUBLE)")
-      val ps = conn.prepareStatement("INSERT INTO prices VALUES (?, ?, ?)")
-      (1 to 100).foreach { i =>
-        ps.setLong(1, i.toLong); ps.setString(2, if (i % 2 == 0) "BTC" else "ETH")
-        ps.setDouble(3, 100.0 + i); ps.executeUpdate()
-      }
-      // plain scan reads everything
-      val all = Warehouse.readJdbc(spark, url, "prices")
-      assert(all.count() === 100)
-      // predicate + projection reach the remote query, not a post-scan
-      // filter over a full fetch
-      val filtered = all.filter($"asset" === "BTC").select("id", "price")
-      val plan = filtered.queryExecution.executedPlan.toString
-      // Derby upcases unquoted identifiers, hence EqualTo(ASSET,BTC)
-      assert(plan.contains("PushedFilters") && plan.toUpperCase.contains("EQUALTO(ASSET"),
-        s"expected asset filter pushed into the JDBC scan:\n$plan")
-      assert(filtered.count() === 50)
-      // partitioned read: range predicates split the scan into
-      // parallel cursors and the union is still exactly the table
-      val par = Warehouse.readJdbc(spark, url, "prices",
-        partitionColumn = Some("id"), lowerBound = 1L, upperBound = 101L, numPartitions = 4)
-      assert(par.rdd.getNumPartitions === 4)
-      assert(par.count() === 100)
-      assert(par.agg(org.apache.spark.sql.functions.sum($"price")).head().getDouble(0) ===
-        all.agg(org.apache.spark.sql.functions.sum($"price")).head().getDouble(0))
-    } finally conn.close()
-  }
-
   test("commitSnapshot: stale writer fails retry-able; no lost update") {
     val root = java.nio.file.Files.createTempDirectory("graft_cas").toString + "/t"
     val v1 = Warehouse.commitSnapshot(Seq((1L, "base")).toDF("id", "x"), root, 0L)
@@ -457,20 +424,6 @@ class WarehouseSpec extends SparkSpec {
     }
   }
 
-  test("appendEvolving + readEvolving: widened schema reads back, old rows NULL-filled") {
-    val root = java.nio.file.Files.createTempDirectory("graft_evolve").toString + "/t"
-    Warehouse.appendEvolving(Seq((1, "x")).toDF("id", "a"), root)
-    Warehouse.appendEvolving(Seq((2, "y", 0.5)).toDF("id", "a", "quality"), root)
-    val back = Warehouse.readEvolving(spark, root)
-    assert(back.columns.toSet === Set("id", "a", "quality"))
-    val byId = back.collect().map(r => r.getInt(0) -> Option(r.get(2))).toMap
-    assert(byId === Map(1 -> None, 2 -> Some(0.5)))
-    // type drift on a shared column fails fast at WRITE time
-    intercept[IllegalArgumentException] {
-      Warehouse.appendEvolving(Seq((3L, "z")).toDF("id", "a"), root)
-    }
-  }
-
   test("diffFrames: insert/update/delete feed, unchanged rows absent, null-safe compare") {
     val oldSt = Seq((1, Some(10.0), "a"), (2, Some(20.0), "b"), (3, None: Option[Double], "c"))
       .toDF("k", "v", "tag")
@@ -557,10 +510,11 @@ class WarehouseSpec extends SparkSpec {
     // pruned plan: each side reads only its non-shared file (1+1), not
     // both versions in full (3+3)
     assert(feed.inputFiles.length === 2, s"expected 2 scanned files, got ${feed.inputFiles.toSeq}")
-    // a rollback's diff against its target is file-identical → EMPTY
-    // feed from an EMPTY scan
-    val v3 = Warehouse.rollbackSnapshot(spark, root, 1L)
-    val rb = Warehouse.snapshotDiff(spark, root, 1L, v3, Seq("id"))
+    // a bloom-index commit carries every data file by reference, so its
+    // diff against its base is file-identical → EMPTY feed from an
+    // EMPTY scan
+    val v3 = Warehouse.indexSnapshot(spark, root, "id")
+    val rb = Warehouse.snapshotDiff(spark, root, 2L, v3, Seq("id"))
     assert(rb.isEmpty && rb.inputFiles.isEmpty)
   }
 
@@ -607,7 +561,8 @@ class WarehouseSpec extends SparkSpec {
     Thread.sleep(1100) // local-FS mtime can be second-granular
     Warehouse.commitSnapshot(Seq((1, "v2")).toDF("k", "v"), root, 1L)
     assert(Warehouse.snapshotVersionAt(spark, root, between) === 1L)
-    assert(Warehouse.readSnapshotAt(spark, root, between).collect().head.getString(1) === "v1")
+    assert(Warehouse.readSnapshot(spark, root, Some(Warehouse.snapshotVersionAt(spark, root, between)))
+      .collect().head.getString(1) === "v1")
     assert(Warehouse.snapshotVersionAt(spark, root, System.currentTimeMillis()) === 2L)
     intercept[IllegalArgumentException] { // before the first commit: no as-of version
       Warehouse.snapshotVersionAt(spark, root, 0L)
@@ -631,8 +586,8 @@ class WarehouseSpec extends SparkSpec {
     assert(Warehouse.snapshotVersionAt(spark, root, between) === 1L,
       "mtime-based resolution would see no version at or before `between`")
     assert(Warehouse.snapshotVersionAt(spark, root, between, ceil = true) === 2L)
-    // restore commits at its OWN instant, not the restored version's
-    Warehouse.rollbackSnapshot(spark, root, 1L)
+    // re-committing v1's content lands at its OWN instant, not v1's
+    Warehouse.commitSnapshot(Warehouse.readSnapshot(spark, root, Some(1L)), root, 2L)
     assert(Warehouse.snapshotVersionAt(spark, root, System.currentTimeMillis()) === 3L)
     assert(Warehouse.snapshotVersionAt(spark, root, between) === 1L)
   }
@@ -1165,120 +1120,25 @@ class WarehouseSpec extends SparkSpec {
     }
   }
 
-  test("snapshot tags: named pins, retag moves, dangling after expiry, drop") {
-    import org.apache.spark.sql.functions._
-    val root = java.nio.file.Files.createTempDirectory("graft_tags").toString + "/t"
-    Warehouse.writeSnapshot(spark.range(0, 10).toDF("id"), root)
-    Warehouse.writeSnapshot(spark.range(0, 20).toDF("id"), root)
-    assert(Warehouse.tagSnapshot(spark, root, "prod", Some(1L)) === 1L)
-    assert(Warehouse.readSnapshotTag(spark, root, "prod").count() === 10)
-    // retag moves the pin; tagging a dead version refuses
-    assert(Warehouse.tagSnapshot(spark, root, "prod") === 2L) // defaults to current
-    assert(Warehouse.readSnapshotTag(spark, root, "prod").count() === 20)
-    intercept[IllegalArgumentException] { Warehouse.tagSnapshot(spark, root, "x", Some(9L)) }
-    intercept[IllegalArgumentException] { Warehouse.tagSnapshot(spark, root, "bad name!") }
-    // a tag does not protect its version: expiry leaves it dangling
-    Warehouse.tagSnapshot(spark, root, "old", Some(1L))
-    Warehouse.expireSnapshots(spark, root, keepLast = 1)
-    assert(Warehouse.snapshotTags(spark, root).toSet ===
-      Set(("old", 1L, false), ("prod", 2L, true)))
-    intercept[Exception] { Warehouse.readSnapshotTag(spark, root, "old").collect() }
-    assert(Warehouse.dropSnapshotTag(spark, root, "old"))
-    assert(!Warehouse.dropSnapshotTag(spark, root, "old"))
-    assert(Warehouse.snapshotTags(spark, root).map(_._1) === Seq("prod"))
-    // name validation on EVERY tag entry point: a path-segment name
-    // would otherwise delete/read arbitrary files under the table root
-    intercept[IllegalArgumentException] {
-      Warehouse.dropSnapshotTag(spark, root, "x/../_latest")
-    }
-    intercept[IllegalArgumentException] {
-      Warehouse.readSnapshotTag(spark, root, "x/../_latest")
-    }
-    assert(hfs(root).exists(new org.apache.hadoop.fs.Path(s"$root/_latest")))
-  }
-
-  test("rollbackSnapshot: zero-copy restore; history stays linear; composes with delete/expire") {
-    import org.apache.spark.sql.functions._
-    val root = java.nio.file.Files.createTempDirectory("graft_rollback").toString + "/t"
-    Warehouse.writeSnapshot(
-      spark.range(0, 300).toDF("id").repartitionByRange(3, col("id")), root)
-    Warehouse.writeSnapshot(spark.range(0, 5).toDF("id"), root) // the "bad write"
-    val v3 = Warehouse.rollbackSnapshot(spark, root, toVersion = 1L)
-    assert(v3 === 3L)
-    val restored = Warehouse.readSnapshot(spark, root)
-    assert(restored.count() === 300)
-    // ZERO-COPY: the restore version holds no data files of its own
-    val fs = hfs(root)
-    assert(fs.listStatus(new org.apache.hadoop.fs.Path(s"$root/v=3"))
-      .filter(_.isFile).map(_.getPath.getName).toSet === Set("_partial"))
-    // nothing deleted: the bad write stays pinned-readable
-    assert(Warehouse.readSnapshot(spark, root, Some(2L)).count() === 5)
-    // restore-to-current is a no-op; dead targets refuse
-    assert(Warehouse.rollbackSnapshot(spark, root, 3L) === 3L)
-    intercept[IllegalArgumentException] { Warehouse.rollbackSnapshot(spark, root, 99L) }
-    // composes: a delete on the restored state, then expiry — the
-    // shared v=1 files survive exactly as long as live manifests need
-    Warehouse.deleteWhere(spark, root, col("id") === 5)
-    assert(Warehouse.readSnapshot(spark, root).count() === 299)
-    Warehouse.expireSnapshots(spark, root, keepLast = 1)
-    assert(Warehouse.readSnapshot(spark, root).count() === 299)
-    assert(Warehouse.snapshots(spark, root) === Seq(4L))
-  }
-
-  test("rollbackSnapshot post-publish fence: a restore racing expiry unwinds, never advances (advice r10)") {
+  test("pointer publish has no absent window: concurrent reads during an advance storm never miss (advice r10)") {
     import org.apache.hadoop.fs.Path
-    val root = java.nio.file.Files.createTempDirectory("graft_rbfence").toString + "/t"
+    val root = java.nio.file.Files.createTempDirectory("graft_ptratomic").toString + "/t"
     Warehouse.writeSnapshot(spark.range(0, 10).toDF("id"), root)
-    Warehouse.writeSnapshot(spark.range(0, 20).toDF("id"), root)
     val fs = hfs(root)
-    // construct the mid-call state the fence guards (the interleaving
-    // cannot be hit deterministically through the public API): a
-    // restore of v=1 has published v=3's dir/marker/manifest but not
-    // yet advanced `_latest`, and expiry has just stamped v=1
-    fs.mkdirs(new Path(s"$root/v=3"))
-    fs.create(new Path(s"$root/v=3/_partial"), true).close()
-    fs.create(new Path(s"$root/_commit-v3"), true).close()
-    val mOut = fs.create(new Path(s"$root/_manifest-v3"), true)
-    mOut.write("{}".getBytes("UTF-8")); mOut.close()
-    fs.create(new Path(s"$root/_expired-v1"), true).close()
-    val e = intercept[RuntimeException] {
-      Warehouse.fenceRestoreAgainstExpiry(fs, root, 1L, 3L)
-    }
-    assert(e.getMessage.contains("expired mid-call"))
-    // unwound completely: no manifest pointing at dead files, no dir,
-    // no CAS marker — and the table is untouched at v=2
-    assert(!fs.exists(new Path(s"$root/_manifest-v3")))
-    assert(!fs.exists(new Path(s"$root/v=3")))
-    assert(!fs.exists(new Path(s"$root/_commit-v3")))
-    assert(Warehouse.currentSnapshot(spark, root) === 2L)
-    assert(Warehouse.readSnapshot(spark, root).count() === 20)
-    // and when the target is alive, the fence is a no-op
-    fs.delete(new Path(s"$root/_expired-v1"), false)
-    Warehouse.fenceRestoreAgainstExpiry(fs, root, 1L, 3L)
-    assert(Warehouse.currentSnapshot(spark, root) === 2L)
-  }
-
-  test("tag publish has no absent window: concurrent reads during retag storms never miss (advice r10)") {
-    import org.apache.hadoop.fs.Path
-    val root = java.nio.file.Files.createTempDirectory("graft_tagatomic").toString + "/t"
-    Warehouse.writeSnapshot(spark.range(0, 10).toDF("id"), root)
-    Warehouse.writeSnapshot(spark.range(0, 20).toDF("id"), root)
-    Warehouse.tagSnapshot(spark, root, "prod", Some(1L))
-    val fs = hfs(root)
-    val tagFile = new Path(s"$root/_tag-prod")
+    val ptr = new Path(s"$root/_latest")
     val missed = new java.util.concurrent.atomic.AtomicInteger(0)
     val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
     val probe = new Thread(() => {
-      while (!stop.get()) if (!fs.exists(tagFile)) missed.incrementAndGet()
+      while (!stop.get()) if (!fs.exists(ptr)) missed.incrementAndGet()
     })
     probe.start()
-    // a retag storm: pre-r11 each retag deleted the tag before
+    // an advance storm: pre-r11 each swap deleted the pointer before
     // renaming the replacement in, so the probe would observe absence
-    for (i <- 1 to 201) Warehouse.tagSnapshot(spark, root, "prod", Some(1L + (i % 2)))
+    for (i <- 2 to 202) Commit.advancePointer(fs, root, i.toLong)
     stop.set(true); probe.join()
-    assert(missed.get() === 0, s"tag was absent ${missed.get()} times mid-retag")
-    // the swap also lands: the final pin (i=201 → v=2) resolves and reads
-    assert(Warehouse.readSnapshotTag(spark, root, "prod").count() === 20)
+    assert(missed.get() === 0, s"_latest was absent ${missed.get()} times mid-advance")
+    // the swap also lands: the final advance is the pointer's value
+    assert(Commit.readPointerFile(fs, ptr) === Some(202L))
   }
 
   test("snapshotDiff pruneShared=false: correct under duplicate keys where the pruned feed phantoms (advice r10)") {

@@ -175,58 +175,85 @@ object CorpusPipeline {
     * refreshes — the survivor set as an eagerly-materialized frame,
     * factored out so [[frontDoorSink]] can land its corpus append
     * BETWEEN the screens and the index refreshes (the ordering
-    * exactly-once needs; see there).
+    * exactly-once needs; see there). Five SQL executions: the batch
+    * checkpoint, the gated checkpoint, the text screen's signature
+    * checkpoint, the IVF probe collect and the survivor checkpoint,
+    * whose joins all broadcast their batch-bounded side. The returned
+    * frame carries its row count, which bounds the refreshes' joins.
     */
   def screenFrontDoor(batch: DataFrame, shingleIdxPath: String,
                       vectorIdxPath: String, cfg: Config = Config(),
                       jaccard: Double = 0.8, cosine: Double = 0.95,
                       nprobe: Int = 4, screenK: Int = 8): DataFrame = {
     val spark = batch.sparkSession
-    val indexed = graft.store.Warehouse
-      .readSnapshot(spark, shingleIdxPath).select("doc_id").distinct()
-    val gated = hygieneGate(
-      batch.select(col("doc_id"), col("text"), col("embedding"))
-        .join(indexed, Seq("doc_id"), "left_anti"), cfg)
-      .localCheckpoint(true) // consumed by both screens, the batch-id
-      // exclusion sets, and the survivor build
-    val batchIds = gated.select("doc_id")
+    // the batch, materialized once and counted on the same job: that
+    // count bounds every join below, so each batch-side frame is
+    // broadcast and no index column is shuffled against the batch
+    val (in, seen) = PersistedIndex.countedCheckpoint(
+      batch.select(col("doc_id"), col("text"), col("embedding")))
+    val bound = Some(seen.getLong(0))
+    // gated: consumed by both screens, the batch-id exclusion sets,
+    // and the survivor build
+    val (gated, _) = PersistedIndex.countedCheckpoint(hygieneGate(
+      ShingleIndex.notIndexed(in, shingleIdxPath), cfg))
+    def batchIds(as: String) =
+      PersistedIndex.broadcastUnder(gated.select(col("doc_id").as(as)), bound)
     // text screen: pairs (a = indexed, b = batch); exclude pairs whose
     // catalog side is a batch-mate (only possible on replay, when the
     // crashed attempt's refresh already indexed them)
     val textDups = ShingleIndex
       .nearDupAgainstShingleIndex(gated.select("doc_id", "text"),
         shingleIdxPath, jaccard)
-      .join(batchIds.withColumnRenamed("doc_id", "a"), Seq("a"), "left_anti")
-      .select(col("b").as("doc_id")).distinct()
+      .join(batchIds("a"), Seq("a"), "left_anti")
+      .select(col("b").as("doc_id"))
     // embedding screen: top-k probed neighbors, batch-mates excluded,
     // best surviving similarity decides
     val embDups = VectorIndex
       .ivfTopKIndexed(gated.select(col("doc_id").as("vec_id"), col("embedding")),
         vectorIdxPath, k = screenK, nprobe = nprobe)
-      .join(batchIds.withColumnRenamed("doc_id", "neighbor_id"),
-        Seq("neighbor_id"), "left_anti")
+      .join(batchIds("neighbor_id"), Seq("neighbor_id"), "left_anti")
       .groupBy(col("query_id").as("doc_id")).agg(max(col("sim")).as("best"))
       .filter(col("best") >= cosine)
       .select("doc_id")
-    gated
-      .join(textDups, Seq("doc_id"), "left_anti")
-      .join(embDups, Seq("doc_id"), "left_anti")
-      .localCheckpoint(true) // consumed by two refreshes AND the caller
+    // both dup sets hold batch ids (the text set once per indexed
+    // partner of a pair, a handful at this jaccard), so they broadcast
+    // under the batch's bound; the survivors are consumed by two
+    // refreshes AND the caller, which read their count as their bound
+    PersistedIndex.countedCheckpoint(gated
+      .join(PersistedIndex.broadcastUnder(textDups, bound), Seq("doc_id"), "left_anti")
+      .join(PersistedIndex.broadcastUnder(embDups, bound), Seq("doc_id"), "left_anti"))._1
   }
 
   /** The refresh half of the cycle: vector index first, shingle index
     * LAST — the id gate reads the shingle index, so its refresh landing
-    * marks the batch fully ingested on the index side.
+    * marks the batch fully ingested on the index side. The vector
+    * refresh runs on a thread of its own (created here, so it inherits
+    * the caller's job properties) while the shingle refresh computes its
+    * increment; the shingle append starts only once the vector append
+    * has committed, and not at all if it failed. The vector refresh's
+    * drift-ledger fold, advisory and read by no probe, then runs beside
+    * the shingle append. Both refreshes are done when this returns.
     */
   private def refreshFrontDoorIndexes(survivors: DataFrame,
                                       shingleIdxPath: String,
                                       vectorIdxPath: String): Unit = {
-    VectorIndex.refreshIvfIndex(
-      survivors.filter(col("embedding").isNotNull)
-        .select(col("doc_id").as("vec_id"), col("embedding")), vectorIdxPath)
-    ShingleIndex.refreshShingleIndex(
-      survivors.select("doc_id", "text"), shingleIdxPath)
-    ()
+    val vectorLanded = scala.concurrent.Promise[Unit]()
+    val vector = new Thread(() =>
+      scala.util.Try(VectorIndex.appendIvfIncrement(
+        survivors.filter(col("embedding").isNotNull)
+          .select(col("doc_id").as("vec_id"), col("embedding")), vectorIdxPath)) match {
+        case scala.util.Success(appended) =>
+          vectorLanded.success(())
+          appended.foreach { case (_, foldLedger) => foldLedger() }
+        case scala.util.Failure(e) => vectorLanded.failure(e)
+      }, "graft-front-door-vector-refresh")
+    vector.start()
+    def landed(): Unit = scala.concurrent.Await.result(vectorLanded.future,
+      scala.concurrent.duration.Duration.Inf)
+    try ShingleIndex.refreshShingleIndexAfter(survivors.select("doc_id", "text"),
+      shingleIdxPath, () => landed())
+    finally vector.join()
+    landed() // a failed vector refresh fails the cycle, whatever the shingle side did
   }
 
   /** THE CRAWL FRONT DOOR, one call per ingest batch (r16, the r15
@@ -252,6 +279,20 @@ object CorpusPipeline {
     *     indexed non-batch neighbor reaches `cosine`;
     *  5. REFRESH: vector index first, shingle index LAST — both
     *     anti-join-idempotent.
+    *
+    * Job cost per cycle. The batch is checkpointed once and counted
+    * on that same job; the count bounds every batch-side join, so each
+    * is planned as a broadcast: the id gate and each refresh's "not yet
+    * indexed" anti-join semi-join the index's id column against the
+    * broadcast batch ids (the index streams once, never shuffled
+    * against the batch), and the text-dup and embedding-dup id sets
+    * broadcast into the survivor anti-joins. No step probes emptiness:
+    * checkpoints and appends count their own rows as observed metrics,
+    * and the text screen's bucket set rides its checkpoint the same
+    * way. With the text refresh, a warm 20-doc cycle is 15 SQL
+    * executions and 39 jobs (23 and 57 before; docs/SCALE.md). The
+    * two refreshes overlap as far as their order allows (see
+    * `refreshFrontDoorIndexes`).
     *
     * REPLAY CONSISTENCY (the design's load-bearing property): both
     * screens exclude flags raised BY THIS BATCH's own doc ids, so a

@@ -1,7 +1,9 @@
 package graft.ext
 
 import graft.store.Warehouse
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, count, lit}
+import org.apache.spark.sql.graftx.PlanStats
 import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** The lifecycle the four persisted index families share —
@@ -126,5 +128,66 @@ final case class PersistedIndex(
       layoutForced(maintainPolicy)) { (batch, _) =>
       refresh(batch, path); ()
     }
+  }
+}
+
+/** Batch-bounded planning for the ingest and refresh paths. A front
+  * door or refresh step costs its batch, never its index, only if
+  * every join with a batch-bounded side broadcasts that side: the
+  * index side then streams past a hash table of batch keys instead of
+  * being shuffled against the batch. Checkpointed frames carry no size
+  * estimate, so the planner cannot see that on its own; a
+  * [[countedCheckpoint]] records the row count its own job observed,
+  * and joins broadcast under [[BroadcastMaxRows]] of that count (the
+  * rule `Warehouse`'s deletion-vector anti-join follows with the
+  * manifest's count). Past the bound, or without a count, the planner
+  * and adaptive execution choose.
+  */
+object PersistedIndex {
+
+  /** Rows under which a batch-bounded join side is broadcast. */
+  private[ext] val BroadcastMaxRows = 262144L
+
+  /** Materialize `df` once (an eager local checkpoint) and read
+    * `aggs` — the row count first, then any extra aggregates — off
+    * the same job as an observed metric. The returned frame carries
+    * the count in its plan statistics, where [[notIndexed]] finds it
+    * (`PlanStats.rowBound`) through projections and filters.
+    */
+  private[ext] def countedCheckpoint(df: DataFrame, aggs: Column*): (DataFrame, Row) = {
+    val seen = org.apache.spark.sql.Observation()
+    val cp = df.observe(seen, count(lit(1)).as("rows"), aggs: _*).localCheckpoint(true)
+    val got = scala.concurrent.Await.result(seen.future,
+      scala.concurrent.duration.Duration(60, "s"))
+    // an empty metrics row: adaptive execution found the plan empty
+    val row = if (got.length > 0) got else Row.fromSeq(0L +: aggs.map(_ => null))
+    (PlanStats.withRowCount(cp, row.getLong(0)), row)
+  }
+
+  /** `side`, hinted for broadcast when `rows` is within the bound. */
+  private[ext] def broadcastUnder(side: DataFrame, rows: Option[Long]): DataFrame =
+    if (rows.exists(_ <= BroadcastMaxRows)) broadcast(side) else side
+
+  /** `batch`'s rows whose `key` the index does not hold yet (`index`:
+    * the index table). The index's key column is semi-joined against
+    * the broadcast batch keys, so the index streams once, unshuffled.
+    * The keys that matched are at most the batch's rows × `rowsPerKey`
+    * (the index's rows per key: a bound, or for postings their mean);
+    * within the bound they are broadcast into the anti-join as they
+    * are. Past it, or with no per-key figure, they are deduplicated
+    * first — a shuffle of the matched keys only — and broadcast under
+    * the batch's bound, the count of the [[countedCheckpoint]] that
+    * `batch` reads.
+    */
+  private[ext] def notIndexed(batch: DataFrame, key: String, index: DataFrame,
+                              rowsPerKey: Option[Double]): DataFrame = {
+    val bound = PlanStats.rowBound(batch)
+    val hits = index.select(key)
+      .join(broadcastUnder(batch.select(key), bound), Seq(key), "left_semi")
+    val hitRows = for (n <- bound; r <- rowsPerKey) yield math.ceil(n * math.max(r, 1.0)).toLong
+    val build =
+      if (hitRows.exists(_ <= BroadcastMaxRows)) broadcast(hits)
+      else broadcastUnder(hits.distinct(), bound)
+    batch.join(build, Seq(key), "left_anti")
   }
 }

@@ -129,14 +129,14 @@ object PostingIndex {
     // conflict — anti-join included, so a racing refresh's docs are
     // re-excluded; see [[Warehouse.retryOnConflict]]'s contract
     Warehouse.retryOnConflict() {
-      val existing = Warehouse.readSnapshot(spark, path).select("doc_id").distinct()
-      val fresh = docs.select(col("doc_id"), col("text"))
-        .join(existing, Seq("doc_id"), "left_anti")
-        .localCheckpoint(true) // consumed by the emptiness probe AND the append
-      if (fresh.isEmpty) None
-      else Some(Warehouse.appendSnapshot(
+      // consumed by the append's range sampling and its write
+      val (fresh, seen) = PersistedIndex.countedCheckpoint(
+        PersistedIndex.notIndexed(docs.select(col("doc_id"), col("text")), "doc_id",
+          Warehouse.readSnapshot(spark, path), rowsPerKey = None))
+      if (seen.getLong(0) == 0L) None
+      else Warehouse.appendSnapshotIfAny(
         layout(spark, postingRows(fresh, meta.n, meta.nb), meta.nb),
-        path, Warehouse.currentSnapshot(spark, path)))
+        path, Warehouse.currentSnapshot(spark, path))
     }
   }
 

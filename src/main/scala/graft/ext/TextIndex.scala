@@ -268,6 +268,12 @@ object TextIndex {
     meta
   }
 
+  /** Postings per indexed doc, on average: distinct tokens, at most the
+    * mean document length; a doc without postings keeps one sentinel.
+    */
+  private def meanPostings(meta: Meta): Option[Double] =
+    if (meta.nDl == 0L) None else Some(meta.sumDl.toDouble / meta.nDl)
+
   /** Tokenize and append ONLY docs not yet indexed, folding their
     * (count, Σdl) into the meta scalars exactly — the X200 refresh:
     * the tick costs the new docs' bytes, never a corpus re-tokenize.
@@ -293,24 +299,23 @@ object TextIndex {
   def refreshTextIndex(docs: DataFrame, path: String): Option[Long] = {
     val spark = docs.sparkSession
     val meta = readMeta(spark, path)
+    val dlExpr = size(TextAnalysis.tokens(col("text"))).cast("long")
     val appended = Warehouse.retryOnConflict() {
-      val existing = Warehouse.readSnapshot(spark, path).select("doc_id").distinct()
-      val fresh = docs.select(col("doc_id"), col("text"))
-        .join(existing, Seq("doc_id"), "left_anti")
-        .localCheckpoint(true) // consumed by the emptiness probe, the append AND the stats fold
-      if (fresh.isEmpty) None
+      // consumed by the append's range sampling and its write; the
+      // increment's (count, Σdl) for the meta fold ride the same job
+      val (fresh, s) = PersistedIndex.countedCheckpoint(
+        PersistedIndex.notIndexed(docs.select(col("doc_id"), col("text")), "doc_id",
+          Warehouse.readSnapshot(spark, path), meanPostings(meta)),
+        count(dlExpr).as("ndl"), sum(dlExpr).as("sdl"))
+      if (s.getLong(0) == 0L) None
       else {
         val base = Warehouse.currentSnapshot(spark, path)
-        val v = Warehouse.appendSnapshot(
+        Warehouse.appendSnapshotIfAny(
           layout(spark, postingRows(fresh, meta.nb), meta.nb),
-          path, base, txn = Some((RefreshApp, base + 1)))
-        Some((v, fresh))
+          path, base, txn = Some((RefreshApp, base + 1))).map((_, s))
       }
     }
-    appended.map { case (v, fresh) =>
-      val dlExpr = size(TextAnalysis.tokens(col("text"))).cast("long")
-      val s = fresh.agg(count(lit(1)).as("n"), count(dlExpr).as("ndl"),
-        sum(dlExpr).as("sdl")).head()
+    appended.map { case (v, s) =>
       val (dn, dndl, dsl) =
         (s.getLong(0), s.getLong(1), if (s.isNullAt(2)) 0L else s.getLong(2))
       import spark.implicits._
@@ -352,11 +357,17 @@ object TextIndex {
     * this repair for — r16). Exact because every doc carries ≥1
     * posting row (the presence sentinel) and each row carries the
     * doc's dl; `synced_seq` re-pins to the highest stamped postings
-    * commit, closing the window. Returns the new meta version.
+    * commit, closing the window. A refresh that died after its
+    * postings manifest but before the pointer advance left a complete
+    * version readers do not see yet: it is published first, so the
+    * scalars are derived from the very version the pin names (a replay
+    * then finds its docs indexed, instead of appending them twice).
+    * Returns the new meta version.
     */
   def repairTextIndexMeta(spark: SparkSession, path: String): Long = {
     val meta = readMetaRow(spark, path) // NOT the probe-grade read: the
     // window this repairs would make readMeta refuse
+    Warehouse.rollForwardStamped(spark, path, RefreshApp)
     val perDoc = Warehouse.readSnapshot(spark, path)
       .groupBy("doc_id").agg(first(col("dl")).as("dl"))
       .agg(count(lit(1)).as("n"), count(col("dl")).as("ndl"),

@@ -187,22 +187,31 @@ object VectorIndex {
     * best-effort — a failure after the index append logs and leaves
     * stats stale, never the index wrong.
     */
-  def refreshIvfIndex(corpus: DataFrame, path: String): Option[Long] = {
+  def refreshIvfIndex(corpus: DataFrame, path: String): Option[Long] =
+    appendIvfIncrement(corpus, path).map { case (v, foldLedger) => foldLedger(); v }
+
+  /** [[refreshIvfIndex]]'s append, with its drift-ledger fold handed
+    * back instead of run: the fold is advisory, so a caller with other
+    * work to do may run it beside that work ([[CorpusPipeline]]'s
+    * refreshes run it beside the shingle append).
+    */
+  private[ext] def appendIvfIncrement(corpus: DataFrame, path: String)
+      : Option[(Long, () => Unit)] = {
     val spark = corpus.sparkSession
     val (cents, mode, nlist) = readCentroids(spark, path)
     // CAS-retried end to end (r16): the whole assign-and-append re-runs
     // per conflict — anti-join included, so a racing refresh's vectors
     // are re-excluded; see [[Warehouse.retryOnConflict]]'s contract
     val appended = Warehouse.retryOnConflict() {
-      val existing = Warehouse.readSnapshot(spark, path).select("vec_id")
       // attrs ride the refresh exactly as they rode the build — the
       // warehouse schema gate refuses an increment whose attr set
       // drifted from the indexed schema (r16)
       val attrs = attrCols(corpus)
-      val fresh = corpus.select(col("vec_id") +: col("embedding") +: attrs: _*)
-        .join(existing, Seq("vec_id"), "left_anti")
-        .localCheckpoint(true) // consumed by the emptiness probe, the append AND the ledger
-      if (fresh.isEmpty) None
+      // consumed by the append's range sampling, its write AND the ledger
+      val (fresh, seen) = PersistedIndex.countedCheckpoint(PersistedIndex.notIndexed(
+        corpus.select(col("vec_id") +: col("embedding") +: attrs: _*), "vec_id",
+        Warehouse.readSnapshot(spark, path), rowsPerKey = Some(1.0)))
+      if (seen.getLong(0) == 0L) None
       else {
         val assigned =
           if (mode == BucketedMode)
@@ -213,26 +222,25 @@ object VectorIndex {
             fresh.select(col("vec_id") +: col("embedding") +: attrs :+
               element_at(assign1, 1).as("cell"): _*)
           }
-        val v = Warehouse.appendSnapshot(
+        Warehouse.appendSnapshotIfAny(
           assigned.repartitionByRange(layoutParts(spark, nlist),
             col("cell"), col("vec_id")),
-          path, Warehouse.currentSnapshot(spark, path))
-        Some((v, assigned))
+          path, Warehouse.currentSnapshot(spark, path)).map((_, assigned))
       }
     }
     appended.map { case (v, assigned) =>
       // the ledger fold re-reads the centroids row at ITS current
       // version inside recordIncrementStats, so a conflict retry there
       // is a clean re-read-modify-write
-      try Warehouse.retryOnConflict() {
-        recordIncrementStats(spark, path, assigned, mode, cents)
-      }
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[graft] drift-ledger update on $path failed " +
-            s"(stats stale until the next refresh; the index append committed): ${e.getMessage}")
-      }
-      v
+      (v, () =>
+        try Warehouse.retryOnConflict() {
+          recordIncrementStats(spark, path, assigned, mode, cents)
+        }
+        catch {
+          case scala.util.control.NonFatal(e) =>
+            System.err.println(s"[graft] drift-ledger update on $path failed " +
+              s"(stats stale until the next refresh; the index append committed): ${e.getMessage}")
+        })
     }
   }
 
@@ -586,20 +594,19 @@ object VectorIndex {
     Warehouse.retryOnConflict() {
       val codes = Warehouse.readSnapshot(spark, side)
       val p = codes.select("m", "kc").head()
-      val fresh = Warehouse.readSnapshot(spark, path)
+      // consumed by the append's range sampling and its write; the
+      // vector width rides the same job
+      val (fresh, seen) = PersistedIndex.countedCheckpoint(Warehouse.readSnapshot(spark, path)
         .select("cell", "vec_id", "embedding")
-        .join(codes.select("vec_id"), Seq("vec_id"), "left_anti")
-        .localCheckpoint(true) // consumed by the emptiness probe AND the append
-      if (fresh.isEmpty) None
-      else {
-        val dim = fresh.select(size(col("embedding")).as("d")).head().getInt(0)
-        Some(Warehouse.appendSnapshot(
-          encodePqRows(fresh, p.getInt(0), p.getInt(1), dim)
-            .repartitionByRange(layoutParts(spark, nlist),
-              col("cell"), col("vec_id")),
-          side, Warehouse.currentSnapshot(spark, side),
-          txn = Some((PqApp, Warehouse.currentSnapshot(spark, path)))))
-      }
+        .join(codes.select("vec_id"), Seq("vec_id"), "left_anti"),
+        max(size(col("embedding"))).as("d"))
+      if (seen.getLong(0) == 0L) None
+      else Warehouse.appendSnapshotIfAny(
+        encodePqRows(fresh, p.getInt(0), p.getInt(1), seen.getInt(1))
+          .repartitionByRange(layoutParts(spark, nlist),
+            col("cell"), col("vec_id")),
+        side, Warehouse.currentSnapshot(spark, side),
+        txn = Some((PqApp, Warehouse.currentSnapshot(spark, path))))
     }
   }
 

@@ -888,8 +888,9 @@ object Warehouse {
     * observed values off the write action via a QueryExecutionListener
     * so the commit can persist them into its manifest. `arm()` must be
     * called immediately BEFORE the batch's write action and not
-    * earlier: a prior partial action (appendVersionFrom's `isEmpty`
-    * limit-1 probe) would report partial counts. Metrics delivery is
+    * earlier: a prior partial action (appendVersionFrom's limit-1
+    * emptiness probe on a schema-gate mismatch) would report partial
+    * counts. Metrics delivery is
     * best-effort by construction (the manifest itself is) — a listener
     * that never fires yields None, never a blocked commit.
     */
@@ -1236,18 +1237,38 @@ object Warehouse {
     * ADDITIVE evolution: the batch's new columns extend the committed
     * schema (nullable — carried files read them as null), committed
     * columns missing from the batch fill with typed nulls, shared
-    * columns must keep their exact type. An EMPTY `df` returns the
-    * current version — no empty commit. Appending to an EMPTY table
+    * columns must keep their exact type. Appending to an EMPTY table
     * (expectedVersion 0) commits a self-contained v=1.
+    *
+    * An EMPTY `df` returns the current version — no empty commit. No
+    * job asks whether the batch is empty: the staged write counts its
+    * own rows (an observed metric placed above any exchange of the
+    * caller's, so a range partitioner's sampling pass is not counted),
+    * and a count of 0 drops the staging dir instead of committing.
+    * The schema gate protects rows, so an empty batch never trips it:
+    * only when the batch's schema fails the gate is emptiness probed
+    * (one limit-1 job), and an empty batch then returns like any other.
     */
   def appendSnapshot(df: DataFrame, path: String, expectedVersion: Long,
                      orphanGraceMs: Long = 600000L,
                      changeFeed: Boolean = false,
                      txn: Option[(String, Long)] = None,
                      evolveSchema: Boolean = false): Long =
+    appendSnapshotIfAny(df, path, expectedVersion, orphanGraceMs, changeFeed, txn,
+      evolveSchema).getOrElse(currentSnapshot(df.sparkSession, path))
+
+  /** [[appendSnapshot]] that reports an empty batch as None instead of
+    * the current version — for callers whose next step depends on
+    * whether rows landed (the index refreshes), so they need no
+    * emptiness probe of their own.
+    */
+  def appendSnapshotIfAny(df: DataFrame, path: String, expectedVersion: Long,
+                          orphanGraceMs: Long = 600000L,
+                          changeFeed: Boolean = false,
+                          txn: Option[(String, Long)] = None,
+                          evolveSchema: Boolean = false): Option[Long] =
     appendVersionFrom(df, path, base = expectedVersion, next = expectedVersion + 1,
       orphanGraceMs, changeFeed, txn, evolveSchema)
-      .getOrElse(currentSnapshot(df.sparkSession, path)) // empty batch: no commit
 
   /** Shared core of [[appendSnapshot]] and [[commitStreamBatch]]:
     * commit version `next` whose content is version `base`'s rows plus
@@ -1292,12 +1313,6 @@ object Warehouse {
             .map(st => s"v=$base/${st.getPath.getName}").sorted
           (names, None, None)
       }
-    // an empty batch commits nothing. The schema gate below is skipped
-    // for empty batches by construction — there are no rows it could
-    // protect.
-    // A batch EMPTIED by triage still delivers its quarantine rows:
-    // "nothing committed" is that ingest's correct main-table outcome.
-    if (df.isEmpty) { flushQuarantine(); return None }
     val committed: StructType = baseSchema.getOrElse(
       if (base == 0L) df.schema
       else spark.read.parquet(baseEntries.map(entryPath(path, _)): _*).schema)
@@ -1312,19 +1327,17 @@ object Warehouse {
     // versions keep their own manifests' narrower schema.
     val cmap0 = reuse.map { case (mm, _) => columnMapOf(mm) }.getOrElse(Map.empty)
     val tombstones = reuse.map { case (mm, _) => droppedColumnsOf(mm) }.getOrElse(Seq.empty)
-    val (target: StructType, minted: Map[String, String]) =
+    val (target: StructType, minted: Map[String, String], refusal: Option[String]) =
       if (!evolveSchema) {
         val got = df.schema.fields.map(f => f.name -> f.dataType).toMap
-        require(got == want,
-          s"appendSnapshot($path): batch schema must match the committed schema exactly; " +
-            s"committed=${committed.simpleString} batch=${df.schema.simpleString}")
-        (committed, Map.empty[String, String])
+        (committed, Map.empty[String, String],
+          if (got == want) None
+          else Some(s"appendSnapshot($path): batch schema must match the committed schema exactly; " +
+            s"committed=${committed.simpleString} batch=${df.schema.simpleString}"))
       } else {
         val drift = df.schema.fields
           .filter(f => want.get(f.name).exists(_ != f.dataType))
           .map(f => s"${f.name}: committed ${want(f.name).simpleString} vs batch ${f.dataType.simpleString}")
-        require(drift.isEmpty,
-          s"appendSnapshot($path): shared columns changed type (${drift.mkString("; ")})")
         val fresh = df.schema.fields.filterNot(f => want.contains(f.name))
           .map(_.copy(nullable = true))
         // resurrection guard (X196): a fresh column whose name matches
@@ -1337,8 +1350,19 @@ object Warehouse {
             if (!used(n)) (acc, used + n)
             else { val p = mintPhysical(n, used); (acc + (n -> p), used + p) }
         }._1
-        (StructType(committed.fields ++ fresh), m)
+        (StructType(committed.fields ++ fresh), m,
+          if (drift.isEmpty) None
+          else Some(s"appendSnapshot($path): shared columns changed type (${drift.mkString("; ")})"))
       }
+    // an empty batch commits nothing, and the schema gate has no rows
+    // to protect in it: a mismatch refuses only a batch that has rows,
+    // so only a mismatch pays an emptiness probe. A batch EMPTIED by
+    // triage still delivers its quarantine rows: "nothing committed" is
+    // that ingest's correct main-table outcome.
+    if (refusal.isDefined) {
+      if (df.isEmpty) { flushQuarantine(); return None }
+      throw new IllegalArgumentException(s"requirement failed: ${refusal.get}")
+    }
     val aligned = df.select(target.fields.map(f =>
       if (df.columns.contains(f.name)) col(f.name)
       else lit(null).cast(f.dataType).as(f.name)).toIndexedSeq: _*)
@@ -1348,17 +1372,28 @@ object Warehouse {
     // layout (evolution columns map per the minting above — identity
     // unless the name collides with frozen bytes)
     val cmap = cmap0 ++ minted
-    // armed here, AFTER the isEmpty probe above — its limit-1 action
-    // would otherwise deliver partial triage counts; collected right
-    // after the observed write so a throwing gate or a later CAS
+    // the row count rides the write, observed at the top of the plan:
+    // above the caller's exchange, so a range partitioner's sampling
+    // job (which re-runs the plan below it) adds nothing to it
+    val (counted, rows) = observeCount(toPhysical(aligned, cmap))
+    val rootIsNew = !fs.exists(root) // the staged write creates it
+    // armed here, AFTER the schema gate's emptiness probe — its limit-1
+    // action would otherwise deliver partial triage counts; collected
+    // right after the observed write so a throwing gate or a later CAS
     // conflict never leaves the listener armed
     expMetrics.arm()
     val expCounts =
       try {
-        toPhysical(aligned, cmap)
-          .write.mode(SaveMode.ErrorIfExists).parquet(staging.toString)
+        counted.write.mode(SaveMode.ErrorIfExists).parquet(staging.toString)
         expMetrics.collect()
       } catch { case t: Throwable => expMetrics.disarm(); throw t }
+    if (rows() == 0L) {
+      fs.delete(staging, true)
+      // a first append that landed nothing leaves no table behind
+      if (rootIsNew) try fs.delete(root, false) catch { case _: java.io.IOException => () }
+      flushQuarantine()
+      return None
+    }
     // file-sharing marker BEFORE the dir becomes visible (when there
     // is a base to share — an append onto empty is self-contained)
     if (baseEntries.nonEmpty)
@@ -1527,9 +1562,10 @@ object Warehouse {
     * advance. Only versions above `_latest` are read, so a table whose
     * last commit completed costs no manifest read. The advance is
     * forward-only: when a foreign main commit has already moved
-    * `_latest` past that version, the pointer stays where it is.
+    * `_latest` past that version, the pointer stays where it is. The
+    * replay of a stream epoch and the text index's meta repair call it.
     */
-  private def rollForwardStamped(spark: SparkSession, path: String, appId: String): Unit = {
+  def rollForwardStamped(spark: SparkSession, path: String, appId: String): Unit = {
     val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val base = latestVersion(spark, path)
     snapshots(spark, path).reverseIterator.takeWhile(_ > base)

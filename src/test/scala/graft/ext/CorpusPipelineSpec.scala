@@ -125,4 +125,80 @@ class CorpusPipelineSpec extends SparkSpec {
       assert(perSplit.count(_ < 3L) <= 1, s"split $sp packs: $perSplit")
     }
   }
+
+  test("a warm front-door ingest + text refresh of a 20-doc batch is at most 15 SQL executions, none a SortMergeJoin") {
+    // the floor of one ingest cycle: the emptiness probes are gone, and
+    // every join with a batch-bounded side is planned as a broadcast
+    // (23 executions, four of the survivor build's joins sort-merge,
+    // before that). A session of its own: its listener hears only this
+    // test's queries.
+    val session = spark.newSession()
+    val rnd = new scala.util.Random(7)
+    val vocab = (0 until 400).map(i => s"w${i}x${rnd.nextInt(1000)}")
+    def text() = Seq.fill(30 + rnd.nextInt(40))(vocab(rnd.nextInt(vocab.size))).mkString(" ")
+    def emb() = Array.fill(16)(rnd.nextGaussian().toFloat)
+    var nextId = 0L
+    def fresh() = { nextId += 1; (nextId, text(), emb()) }
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+      "doc_id bigint, text string, embedding array<float>")
+    def frame(ds: Seq[(Long, String, Array[Float])]) =
+      session.createDataFrame(session.sparkContext.parallelize(ds.map { case (i, t, e) =>
+        org.apache.spark.sql.Row(i, t, e.toSeq) }, 4), schema)
+    val corpus = Seq.fill(200)(fresh())
+    val dir = java.nio.file.Files.createTempDirectory("front_door_floor").toString
+    val (troot, vroot, sroot) = (s"$dir/text", s"$dir/ivf", s"$dir/shingle")
+    val docs = frame(corpus).localCheckpoint(true)
+    TextIndex.buildTextIndex(docs.select("doc_id", "text"), troot)
+    VectorIndex.buildIvfIndex(docs.select(col("doc_id").as("vec_id"), col("embedding")), vroot,
+      nlist = 16, bucketed = true)
+    ShingleIndex.buildShingleIndex(docs.select("doc_id", "text"), sroot)
+    // 14 fresh docs, 3 exact copies and 3 near copies (one token
+    // changed, embedding nudged) of corpus docs, under new ids
+    def batch() = {
+      val exact = Seq.fill(3) { val s = corpus(rnd.nextInt(corpus.size)); nextId += 1; s.copy(_1 = nextId) }
+      val near = Seq.fill(3) {
+        val s = corpus(rnd.nextInt(corpus.size))
+        val toks = s._2.split(" ")
+        toks(rnd.nextInt(toks.length)) = vocab(rnd.nextInt(vocab.size))
+        nextId += 1
+        (nextId, toks.mkString(" "), s._3.map(_ + 0.002f * rnd.nextGaussian().toFloat))
+      }
+      (Seq.fill(14)(fresh()) ++ exact ++ near, exact.map(_._1).toSet)
+    }
+    def ingest(b: Seq[(Long, String, Array[Float])]): Set[Long] = {
+      val survivors = CorpusPipeline.ingestFrontDoor(frame(b), sroot, vroot)
+      TextIndex.refreshTextIndex(survivors.select("doc_id", "text"), troot)
+      survivors.select("doc_id").collect().map(_.getLong(0)).toSet
+    }
+    ingest(batch()._1)
+    // warm: each index's side rows are memoized at their committed
+    // version, as a serving loop's probes leave them between ingests
+    Seq(TextIndex.lifecycle -> troot, VectorIndex.lifecycle -> vroot,
+      ShingleIndex.lifecycle -> sroot).foreach { case (l, p) => l.sideRows(session, p) }
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[
+      (String, org.apache.spark.sql.execution.QueryExecution)]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    ns: Long): Unit = plans.add(f -> qe)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    e: Exception): Unit = plans.add(f -> qe)
+    }
+    session.listenerManager.register(listener)
+    try {
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+      plans.clear()
+      val (b, exact) = batch()
+      val admitted = ingest(b)
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+      assert(exact.forall(id => !admitted(id)), s"exact copies admitted: ${exact.filter(admitted)}")
+      import scala.jdk.CollectionConverters._
+      val seen = plans.asScala.toSeq
+      assert(seen.size <= 15, s"${seen.size} SQL executions: ${seen.map(_._1).mkString(", ")}")
+      // the planner's own choice, before adaptive execution converts
+      // anything: the survivor checkpoint included, no join sort-merges
+      val smj = seen.filter(_._2.sparkPlan.exists(
+        _.isInstanceOf[org.apache.spark.sql.execution.joins.SortMergeJoinExec]))
+      assert(smj.isEmpty, s"planned as a SortMergeJoin:\n${smj.map(_._2.sparkPlan).mkString("\n")}")
+    } finally session.listenerManager.unregister(listener)
+  }
 }

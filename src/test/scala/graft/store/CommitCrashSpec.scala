@@ -18,6 +18,11 @@ import org.apache.spark.sql.functions.col
   *     version — an append promoted without its manifest is refused
   *     loudly until `vacuum` reaps it;
   * (3) no `_staging-*` debris after `vacuum`.
+  * A `TextIndex` refresh killed after each step of its postings append
+  * must leave the probe on the old snapshot or refusing with a message
+  * that names `repairTextIndexMeta`; `vacuum`, that repair when it was
+  * named, and a replayed refresh then converge to the postings and
+  * corpus scalars of a refresh that was never interrupted.
   */
 class CommitCrashSpec extends SparkSpec {
   import spark.implicits._
@@ -111,5 +116,76 @@ class CommitCrashSpec extends SparkSpec {
     Warehouse.commitStreamBatch(epoch(0), root, "stream", 0L) // the replay
     Warehouse.commitStreamBatch(epoch(1), root, "stream", 1L)
     assert(rows(root) == (0L until 10L) ++ (100L until 110L) ++ (200L until 210L))
+  }
+
+  // ---- the crash windows of an index refresh (TextIndex postings append) ----
+
+  private val textDoc = (i: Int) =>
+    (i.toLong, s"note $i on topic${i % 7} with terms w${i % 11} w${i % 13} and alpha beta")
+  private val textQueries: Seq[(Int, Seq[String])] = Seq(1 -> Seq("topic3", "w5"), 2 -> Seq("alpha", "w7"))
+  // the refresh batch overlaps the built corpus: its anti-join drops 25..30
+  private def textIncrement = (25 to 40).map(textDoc).toDF("doc_id", "text")
+
+  private def builtTextIndex(tag: String): String = {
+    val root = java.nio.file.Files.createTempDirectory(s"graft_crash_$tag").toString + "/t"
+    graft.ext.TextIndex.buildTextIndex((1 to 30).map(textDoc).toDF("doc_id", "text"), root,
+      bucketCount = 8)
+    root
+  }
+
+  private def postings(root: String): Seq[(Int, String, Long, Long, Long)] =
+    Warehouse.readSnapshot(spark, root).select("bucket", "token", "doc_id", "tf", "dl")
+      .as[(Int, String, Long, Long, Long)].collect().toSeq.sorted
+
+  private def corpusScalars(root: String): (Long, Long, Long) =
+    Warehouse.readSnapshot(spark, graft.ext.TextIndex.metaPath(root))
+      .select("n_docs", "n_dl", "sum_dl").as[(Long, Long, Long)].head()
+
+  private lazy val uninterrupted = {
+    val root = builtTextIndex("text_ref")
+    graft.ext.TextIndex.refreshTextIndex(textIncrement, root)
+    (postings(root), corpusScalars(root))
+  }
+
+  for (step <- Commit.Step.all) {
+    test(s"refreshTextIndex crashing after $step: old snapshot or a refusal naming the repair; vacuum and a replay converge") {
+      // a refusal should come at once: no live refresh is in flight
+      spark.conf.set("graft.textindex.syncGraceMs", "0")
+      try {
+        val root = builtTextIndex("text")
+        def probe() = graft.ext.TextIndex.bm25TopKIndexed(spark, root, textQueries, k = 5)
+          .collect().map(_.toString).toSet
+        val old = probe()
+        Commit.afterStep = (p, s) => if (p == root && s == step) throw new Crash(s)
+        try intercept[Crash](graft.ext.TextIndex.refreshTextIndex(textIncrement, root))
+        finally Commit.afterStep = (_, _) => ()
+        val refused =
+          try { assert(probe() === old, s"after $step: the probe must serve the old snapshot"); false }
+          catch {
+            case e: IllegalArgumentException =>
+              assert(e.getMessage.contains("repairTextIndexMeta"), e.getMessage)
+              true
+          }
+        Thread.sleep(5) // the staging leases compare mtimes in ms
+        Warehouse.vacuum(spark, root, 0L)
+        if (refused) graft.ext.TextIndex.repairTextIndexMeta(spark, root)
+        if (step == Commit.Step.Claim || step == Commit.Step.Backoff) {
+          // the dead refresh's claim keeps its version reserved for the
+          // orphan lease (10 minutes by default): a replay inside it
+          // loses the claim retry-ably; past it the version is re-claimed
+          intercept[Warehouse.SnapshotConflictException](
+            graft.ext.TextIndex.refreshTextIndex(textIncrement, root))
+          val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+          fs.listStatus(new Path(root)).map(_.getPath)
+            .filter(m => m.getName.startsWith("_commit-v") &&
+              !fs.exists(new Path(root, "v=" + m.getName.stripPrefix("_commit-v"))))
+            .foreach(m => fs.setTimes(m, System.currentTimeMillis() - 601000L, -1L))
+        }
+        graft.ext.TextIndex.refreshTextIndex(textIncrement, root)
+        assert(postings(root) === uninterrupted._1, s"after $step: postings diverge")
+        assert(corpusScalars(root) === uninterrupted._2, s"after $step: corpus scalars diverge")
+        assert(staging(root).isEmpty)
+      } finally spark.conf.unset("graft.textindex.syncGraceMs")
+    }
   }
 }

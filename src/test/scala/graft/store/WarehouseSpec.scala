@@ -1190,4 +1190,107 @@ class WarehouseSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException] { Warehouse.diffFrames(a, b, Seq("k")) }
     assert(e.getMessage.contains("names/types differ"))
   }
+
+  // ---- the empty-append contract of the write-then-check append ----
+
+  private def tableDebris(root: String): Seq[String] =
+    new java.io.File(root).listFiles().map(_.getName).toSeq
+      .filter(n => n.startsWith("_staging-") || n.startsWith("_commit-v")).sorted
+
+  private def versionDirs(root: String): Seq[String] =
+    new java.io.File(root).listFiles().map(_.getName).toSeq.filter(_.startsWith("v=")).sorted
+
+  test("appendSnapshot: an empty batch returns the current version, no v= dir, staging dir or commit marker") {
+    import org.apache.spark.sql.functions._
+    val root = java.nio.file.Files.createTempDirectory("graft_empty_append").toString + "/t"
+    Warehouse.commitSnapshot(spark.range(0, 10).toDF("id"), root, 0L)
+    val (dirs, debris) = (versionDirs(root), tableDebris(root))
+    // statically empty (a local relation, an empty range), emptied by a
+    // filter at run time, and emptied under a range exchange (the index
+    // refreshes' layout)
+    Seq(Seq.empty[Long].toDF("id"), spark.range(0).toDF("id"),
+      spark.range(0, 10).toDF("id").filter(col("id") > 100),
+      spark.range(0, 10).toDF("id").filter(col("id") > 100).repartitionByRange(4, col("id")))
+      .foreach { empty =>
+        assert(Warehouse.appendSnapshot(empty, root, 1L) === 1L)
+        assert(Warehouse.appendSnapshotIfAny(empty, root, 1L) === None)
+      }
+    assert(versionDirs(root) === dirs)
+    assert(tableDebris(root) === debris, "no staging dir, no commit marker")
+    assert(Warehouse.currentSnapshot(spark, root) === 1L)
+    // a first append that lands nothing leaves no table behind
+    val fresh = java.nio.file.Files.createTempDirectory("graft_empty_first").toString + "/t"
+    assert(Warehouse.appendSnapshotIfAny(spark.range(0).toDF("id"), fresh, 0L) === None)
+    assert(!new java.io.File(fresh).exists())
+  }
+
+  test("appendSnapshot: an empty batch whose schema fails the gate returns instead of throwing") {
+    val root = java.nio.file.Files.createTempDirectory("graft_empty_schema").toString + "/t"
+    Warehouse.commitSnapshot(spark.range(0, 10).toDF("id"), root, 0L)
+    val debris = tableDebris(root)
+    val wrong = Seq.empty[(String, Int)].toDF("name", "n")
+    assert(Warehouse.appendSnapshot(wrong, root, 1L) === 1L)
+    assert(Warehouse.appendSnapshotIfAny(wrong, root, 1L, evolveSchema = true) === None)
+    assert(Warehouse.appendSnapshot(Seq.empty[String].toDF("id"), root, 1L,
+      evolveSchema = true) === 1L, "a type change refuses rows, not an empty batch")
+    assert(versionDirs(root) === Seq("v=1") && tableDebris(root) === debris)
+    // the gate still refuses a batch that has rows
+    val e = intercept[IllegalArgumentException](
+      Warehouse.appendSnapshot(Seq(("a", 1)).toDF("name", "n"), root, 1L))
+    assert(e.getMessage.contains("must match the committed schema exactly"), e.getMessage)
+  }
+
+  test("appendSnapshot: a batch emptied by a quarantine expectation still flushes its quarantine rows") {
+    val root = java.nio.file.Files.createTempDirectory("graft_empty_quarantine").toString + "/t"
+    Warehouse.commitSnapshot(spark.range(0, 10).toDF("x"), root, 0L)
+    Warehouse.setSnapshotExpectation(spark, root, "small", "x < 100", "quarantine")
+    // a statically empty batch returns at once: the triage counts still
+    // arrive (0), so nothing waits out the metrics listener's timeout
+    val t0 = System.nanoTime()
+    assert(Warehouse.appendSnapshotIfAny(Seq.empty[Long].toDF("x"), root, 1L) === None)
+    assert(System.nanoTime() - t0 < 20L * 1000 * 1000 * 1000, "an empty batch waited on its metrics")
+    assert(Warehouse.appendSnapshotIfAny(spark.range(200, 211).toDF("x"), root, 1L) === None)
+    assert(Warehouse.currentSnapshot(spark, root) === 1L, "nothing committed to the main table")
+    val q = Warehouse.readSnapshot(spark, Warehouse.quarantinePath(root))
+    assert(q.select("x").as[Long].collect().sorted.toSeq === (200L to 210L))
+  }
+
+  test("commitStreamBatch: an empty epoch stamps nothing") {
+    val root = java.nio.file.Files.createTempDirectory("graft_empty_epoch").toString + "/t"
+    Warehouse.commitSnapshot(spark.range(0, 10).toDF("id"), root, 0L)
+    val debris = tableDebris(root)
+    assert(Warehouse.commitStreamBatch(spark.range(0).toDF("id"), root, "empty-app", 0L) === 1L)
+    assert(Warehouse.lastCommittedEpoch(spark, root, "empty-app") === None)
+    assert(versionDirs(root) === Seq("v=1") && tableDebris(root) === debris)
+    // the next epoch with rows stamps and lands as usual
+    assert(Warehouse.commitStreamBatch(spark.range(10, 12).toDF("id"), root, "empty-app", 1L) === 2L)
+    assert(Warehouse.lastCommittedEpoch(spark, root, "empty-app") === Some(1L))
+  }
+
+  test("appendSnapshot: the observed row count equals the rows the new version adds, under a range exchange") {
+    import org.apache.spark.sql.functions._
+    val root = java.nio.file.Files.createTempDirectory("graft_append_count").toString + "/t"
+    Warehouse.commitSnapshot(spark.range(0, 100).toDF("id"), root, 0L)
+    val session = spark.newSession() // its listener hears only this append
+    val counts = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        qe.observedMetrics.values.filter(_.schema.fieldNames.toSeq == Seq("rows"))
+          .foreach(r => counts.add(r.getLong(0)))
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    e: Exception): Unit = ()
+    }
+    session.listenerManager.register(listener)
+    try {
+      // the range exchange's sampling job re-runs the plan below it
+      val batch = session.range(1000, 6000, 1, 8).toDF("id").repartitionByRange(4, col("id"))
+      assert(Warehouse.appendSnapshotIfAny(batch, root, 1L) === Some(2L))
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+    } finally session.listenerManager.unregister(listener)
+    val added = Warehouse.snapshotRowCount(spark, root, Some(2L)).get -
+      Warehouse.snapshotRowCount(spark, root, Some(1L)).get
+    assert(added === 5000L)
+    import scala.jdk.CollectionConverters._
+    assert(counts.asScala.toSeq === Seq(added))
+  }
 }

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Per-op Spark job timeline of one traced perfbench run.
 
-    python3 tools/op_timeline.py --workload corpus_retrieval --seed 11 --seconds 8
+    python3 tools/op_timeline.py --workload corpus_retrieval --seed 11 --seconds 8 [--kind write]
 
 It builds the program and the harness with perfbench/build.py and runs
 one traced op loop with perfbench/run.py's run_jvm, in a fresh directory
@@ -12,11 +12,15 @@ count), then its jobs in start order: the gap from the previous job's
 end (the op start for the first job; negative when jobs overlap), the
 job's duration and, per stage, its task count ("skipped" for a stage
 whose shuffle output an earlier job already wrote), and last the op's
-driver time that no job covered.
+driver time that no job covered. --kind read|write prints that op kind
+only. The output closes with one line per printed kind: its median wall
+ms, jobs and SQL executions, so a parent/change comparison of one op
+kind reads in one line each.
 """
 import argparse
 import os
 import shutil
+import statistics
 import sys
 import tempfile
 
@@ -26,7 +30,7 @@ from build import BUILD_DIR, build, spark_jars  # noqa: E402
 from run import run_jvm  # noqa: E402
 
 
-def timeline(raw):
+def timeline(raw, kind=None):
     tr = raw["trace"]
     stages = {s["stage"]: s for s in tr["stages"]}
     jobs, queries = {}, {}
@@ -34,10 +38,13 @@ def timeline(raw):
         jobs.setdefault(j["tag"], []).append(j)
     for q in tr["queries"]:
         queries[q["tag"]] = queries.get(q["tag"], 0) + 1
-    lines = []
+    lines, per_kind = [], {}
     for op in raw["ops"]:
+        if kind and op["kind"] != kind:
+            continue
         tag = "pb-op-%d" % op["id"]
         own = sorted(jobs.get(tag, []), key=lambda j: (j["start_ms"], j["job"]))
+        per_kind.setdefault(op["kind"], []).append((op["ms"], len(own), queries.get(tag, 0)))
         lines.append("op %d %s %s: %.0f ms, %d jobs, %d queries"
                      % (op["id"], op["kind"], op["name"], op["ms"], len(own), queries.get(tag, 0)))
         prev = op["start_ms"]
@@ -54,6 +61,10 @@ def timeline(raw):
             last_end = j["end_ms"] if last_end is None else max(last_end, j["end_ms"])
             prev = j["end_ms"]
         lines.append("  driver time outside jobs: %.0f ms" % max(op["ms"] - covered, 0.0))
+    for k, ops in sorted(per_kind.items()):
+        lines.append("%s: median %.0f ms, %g jobs, %g SQL executions (%d ops)"
+                     % (k, statistics.median(o[0] for o in ops), statistics.median(o[1] for o in ops),
+                        statistics.median(o[2] for o in ops), len(ops)))
     return lines
 
 
@@ -62,6 +73,7 @@ def main():
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=int, default=8)
+    ap.add_argument("--kind", choices=("read", "write"), help="print this op kind only")
     ap.add_argument("--keep", help="copy the run's out.json here")
     args = ap.parse_args()
     args.trace = 1
@@ -76,7 +88,7 @@ def main():
             shutil.copy(os.path.join(run_dir, "out.json"), args.keep)
     finally:
         shutil.rmtree(run_dir, ignore_errors=True)
-    print("\n".join(timeline(raw)))
+    print("\n".join(timeline(raw, args.kind)))
 
 
 if __name__ == "__main__":

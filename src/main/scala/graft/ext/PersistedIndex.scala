@@ -152,15 +152,19 @@ object PersistedIndex {
     * `aggs` — the row count first, then any extra aggregates — off
     * the same job as an observed metric. The returned frame carries
     * the count in its plan statistics, where [[notIndexed]] finds it
-    * (`PlanStats.rowBound`) through projections and filters.
+    * (`PlanStats.rowBound`) through projections and filters. The metric
+    * is read from the checkpoint's own execution, at once; an
+    * `Observation` would also do, but it attaches a manager to the
+    * session that makes the session unserializable for closures that
+    * capture it (Spark ML model summaries do).
     */
   private[ext] def countedCheckpoint(df: DataFrame, aggs: Column*): (DataFrame, Row) = {
-    val seen = org.apache.spark.sql.Observation()
-    val cp = df.observe(seen, count(lit(1)).as("rows"), aggs: _*).localCheckpoint(true)
-    val got = scala.concurrent.Await.result(seen.future,
-      scala.concurrent.duration.Duration(60, "s"))
-    // an empty metrics row: adaptive execution found the plan empty
-    val row = if (got.length > 0) got else Row.fromSeq(0L +: aggs.map(_ => null))
+    val name = s"graft-counted-${java.util.UUID.randomUUID()}"
+    val observed = df.observe(name, count(lit(1)).as("rows"), aggs: _*)
+    val cp = observed.localCheckpoint(true)
+    // no metrics row: adaptive execution found the plan empty
+    val row = observed.queryExecution.observedMetrics.get(name).filter(_.length > 0)
+      .getOrElse(Row.fromSeq(0L +: aggs.map(_ => null)))
     (PlanStats.withRowCount(cp, row.getLong(0)), row)
   }
 

@@ -614,6 +614,40 @@ object Warehouse {
     } finally fs.delete(staging, true)
   }
 
+  /** Run `write` over `df` with a row counter observed at the top of
+    * its plan, and return the rows it wrote — no job of its own. The
+    * count is read off the write's own execution by a listener rather
+    * than through an `Observation`, whose manager, once created, makes
+    * the session unserializable for closures that capture it (Spark ML
+    * model summaries do). Like [[observeCount]], an absent metrics row
+    * (adaptive execution dropped the empty branch) reads as 0 and a
+    * count that never arrives fails loudly after 60 s.
+    */
+  private def writeCounted(df: DataFrame)(write: DataFrame => Unit): Long = {
+    val spark = df.sparkSession
+    val name = s"graft-rows-${java.util.UUID.randomUUID()}"
+    val seen = new java.util.concurrent.CompletableFuture[Long]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             durationNs: Long): Unit =
+        if (qe.logical.exists {
+              case c: org.apache.spark.sql.catalyst.plans.logical.CollectMetrics => c.name == name
+              case _ => false
+            })
+          seen.complete(qe.observedMetrics.get(name).filter(_.length > 0)
+            .map(_.getLong(0)).getOrElse(0L))
+      override def onFailure(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      write(df.observe(name, count(lit(1)).as("rows")))
+      seen.get(60, java.util.concurrent.TimeUnit.SECONDS)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   /** `df` plus a row counter that rides on whichever action next runs
     * it — a `Dataset.observe` metric, so the count costs no job of its
     * own. Read the count only after that action; a count whose metrics
@@ -1372,22 +1406,22 @@ object Warehouse {
     // layout (evolution columns map per the minting above — identity
     // unless the name collides with frozen bytes)
     val cmap = cmap0 ++ minted
-    // the row count rides the write, observed at the top of the plan:
-    // above the caller's exchange, so a range partitioner's sampling
-    // job (which re-runs the plan below it) adds nothing to it
-    val (counted, rows) = observeCount(toPhysical(aligned, cmap))
     val rootIsNew = !fs.exists(root) // the staged write creates it
     // armed here, AFTER the schema gate's emptiness probe — its limit-1
     // action would otherwise deliver partial triage counts; collected
     // right after the observed write so a throwing gate or a later CAS
     // conflict never leaves the listener armed
     expMetrics.arm()
-    val expCounts =
+    val (rows, expCounts) =
       try {
-        counted.write.mode(SaveMode.ErrorIfExists).parquet(staging.toString)
-        expMetrics.collect()
+        // the row count rides the write, observed at the top of the
+        // plan: above the caller's exchange, so a range partitioner's
+        // sampling job (which re-runs the plan below it) adds nothing
+        val n = writeCounted(toPhysical(aligned, cmap))(
+          _.write.mode(SaveMode.ErrorIfExists).parquet(staging.toString))
+        (n, expMetrics.collect())
       } catch { case t: Throwable => expMetrics.disarm(); throw t }
-    if (rows() == 0L) {
+    if (rows == 0L) {
       fs.delete(staging, true)
       // a first append that landed nothing leaves no table behind
       if (rootIsNew) try fs.delete(root, false) catch { case _: java.io.IOException => () }
